@@ -22,12 +22,19 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = {
+      val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      raw.trim.toIntOption.filter(_ > 0).getOrElse {
+        System.err.println(
+          s"usage: SPARK_GRAFT_CPUS must be a positive integer core count (got '$raw')")
+        sys.exit(2)
+      }
+    }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.catalog.lance", "graft.sources.lance.LanceCatalog")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       // single-file testdata tables: split scans at row-group grain so a
       // 10x-SF table still fans out across cores (at cluster scale the
       // many-files default of 128m is right; this knob matches the

@@ -433,8 +433,8 @@ object Fts {
     bm25TopK(p, df, nDocs, totalLen, terms, k)
   }
 
-  /** Delete-aware search of a persisted index (the ANN
-    * `ivfSearchPersistedLive` contract applied to FTS): postings store a
+  /** Delete-aware search of a persisted index (the liveness mask of the
+    * ANN `ivfSearchCombinedLive` applied to FTS): postings store a
     * COPY of the term statistics, so a document deleted from `sourcePath`
     * after the build would otherwise still rank. The probe over-fetches a
     * bounded candidate set, verifies liveness against the source with a
@@ -454,7 +454,7 @@ object Fts {
 
   /** The liveness mask shared by [[searchPersistedLive]] and
     * [[searchCombinedLive]] (the ANN
-    * [[graft.operators.Similarity.ivfSearchPersistedLive]] shape): the
+    * [[graft.operators.Similarity.ivfSearchCombinedLive]] shape): the
     * source joins the broadcast candidate set `(doc_id, score)`, and the
     * lance scan's SupportsRuntimeV2Filtering receives the realized
     * candidate ids as an IN-list zone filter once the broadcast
@@ -509,7 +509,7 @@ object Fts {
       .select("term").collect().map(_.getString(0)).toSeq
     val (nDocs, totalLen) = statsOf(spark, indexPath)
     if (matched.isEmpty)
-      searchWithStats(spark, indexPath, nDocs, totalLen, Seq(" "), k)
+      searchWithStats(spark, indexPath, nDocs, totalLen, Seq("\u0000"), k)
     else searchWithStats(spark, indexPath, nDocs, totalLen, matched, k)
   }
 

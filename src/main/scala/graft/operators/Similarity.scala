@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.Lru
 
 /** Vector similarity-search operators over `ArrayType(FloatType)` columns
   * (SURVEY §2.5): brute-force exact top-k as the baseline, LSH-bucketed
@@ -183,23 +184,18 @@ object Similarity {
     (sums, counts)
   }
 
-  /** Seeded full-dimension Lloyd k-means on a driver-side sample (the
-    * coarse-quantizer twin of [[pqTrain]]'s per-subspace loop); the
-    * per-iteration pass runs through the parallel [[lloydPass]]. Empty
-    * clusters keep their previous centroid; if the sample has fewer than
-    * k points, the table pads with clones of centroid 0 (never nearest
-    * except on exact ties, which keep the lower index). */
-  private[operators] def lloydFit(sample: Array[Array[Float]], k: Int,
-                                  iters: Int, seed: Long): Array[Array[Double]] = {
-    require(sample.nonEmpty, "lloydFit needs a non-empty sample")
-    val dim = sample.head.length
-    val kk = math.min(k, sample.length)
-    val rnd = new scala.util.Random(seed)
-    val centroids = rnd.shuffle(sample.indices.toList).take(kk)
-      .map(i => sample(i).map(_.toDouble)).toArray
-    // widen once: float→double is exact, so the distance/sum math is
-    // bit-identical to subtracting the floats in-loop
-    val pts = sample.map(v => v.map(_.toDouble))
+  /** Seeded Lloyd k-means over `pts`, seeded from one shuffle drawn
+    * from `rnd`; the per-iteration pass runs through the parallel
+    * [[lloydPass]]. Shared by the coarse quantizer ([[lloydFit]]) and
+    * [[pqTrain]]'s per-subspace codebooks. Empty clusters keep their
+    * previous centroid; if there are fewer than k points, the table pads
+    * with clones of centroid 0 (never nearest except on exact ties,
+    * which keep the lower index). */
+  private def lloyd(pts: Array[Array[Double]], k: Int, iters: Int,
+                    rnd: scala.util.Random): Array[Array[Double]] = {
+    val dim = pts.head.length
+    val kk = math.min(k, pts.length)
+    val centroids = rnd.shuffle(pts.indices.toList).take(kk).map(pts(_).clone).toArray
     var it = 0
     while (it < iters) {
       val (sums, counts) = lloydPass(pts, centroids)
@@ -217,6 +213,16 @@ object Similarity {
     else centroids
   }
 
+  /** Seeded full-dimension Lloyd k-means on a driver-side sample: the
+    * coarse quantizer. */
+  private[operators] def lloydFit(sample: Array[Array[Float]], k: Int,
+                                  iters: Int, seed: Long): Array[Array[Double]] = {
+    require(sample.nonEmpty, "lloydFit needs a non-empty sample")
+    // widen once: float→double is exact, so the distance/sum math is
+    // bit-identical to subtracting the floats in-loop
+    lloyd(sample.map(v => v.map(_.toDouble)), k, iters, new scala.util.Random(seed))
+  }
+
   /** Build-once/probe-many IVF: the index (list assignments + centroids) is
     * memoized per (session, key) — the declared e06 query measures PROBING,
     * the production-relevant cost; at 100 TB the build is an offline job
@@ -230,30 +236,19 @@ object Similarity {
       else { val id = java.util.UUID.randomUUID().toString; sessionIds.put(s, id); id }
     }
 
-  private val ivfCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (DataFrame, Array[Array[Double]])](16, 0.75f, true) {
-      // bounded LRU: a long-lived JVM hosting many sessions must not
-      // accumulate one cached index per (session, key) forever
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (DataFrame, Array[Array[Double]])]): Boolean =
-        size() > 32
-    })
+  // bounded LRU: a long-lived JVM hosting many sessions must not
+  // accumulate one cached index per (session, key) forever
+  private val ivfCache = new Lru[(DataFrame, Array[Array[Double]])](32)
   def ivfIndexCached(df: DataFrame, idCol: String, vecCol: String,
                      nLists: Int, key: String): (DataFrame, Array[Array[Double]]) = {
     // reference-keyed session ids: identityHashCode (used before round 8)
     // can collide across sessions in one JVM; a weak map keyed on the
     // session OBJECT cannot, and lets dead sessions' ids be collected
     val cacheKey = s"${sessionId(df.sparkSession)}:$key:$nLists"
-    // double-checked: the (seconds-long) build runs OUTSIDE the cache
-    // lock so concurrent sessions' hits never block on another build; a
-    // rare duplicate build under a race is harmless (last put wins)
-    val hit = ivfCache.get(cacheKey)
-    if (hit != null) hit
-    else {
-      val v = ivfIndex(df, idCol, vecCol, nLists)
-      ivfCache.put(cacheKey, v)
-      v
-    }
+    // the (seconds-long) build runs OUTSIDE the cache lock so concurrent
+    // sessions' hits never block on another build; a rare duplicate
+    // build under a race is harmless (last put wins)
+    ivfCache.getOrLoad(cacheKey)(ivfIndex(df, idCol, vecCol, nLists))
   }
 
   /** IVF search: probe the `nProbe` lists whose centroids are closest to
@@ -261,266 +256,277 @@ object Similarity {
     * cosine top-k inside them via the codegen kernel. */
   def ivfCosineTopK(indexed: DataFrame, centroids: Array[Array[Double]],
                     idCol: String, vecCol: String, query: Seq[Float],
-                    k: Int, nProbe: Int): DataFrame = {
+                    k: Int, nProbe: Int): DataFrame =
+    indexed.filter(col("list_id").isin(probeLists(centroids, query, nProbe): _*))
+      .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("cos"))
+      .orderBy(col("cos").desc, col(idCol))
+      .limit(k)
+
+  /** The `nProbe` lists whose centroids are nearest the query by L2,
+    * picked driver-side (centroids are tiny); ties keep list order. */
+  private def probeLists(centroids: Array[Array[Double]], query: Seq[Float],
+                         nProbe: Int): Seq[Int] = {
     val qd = query.map(_.toDouble).toArray
     def dist2(c: Array[Double]): Double = {
       var s = 0.0; var i = 0
       while (i < math.min(c.length, qd.length)) { val d = c(i) - qd(i); s += d * d; i += 1 }
       s
     }
-    val probeLists = centroids.zipWithIndex.sortBy(p => dist2(p._1)).take(nProbe).map(_._2)
-    indexed.filter(col("list_id").isin(probeLists.toIndexedSeq: _*))
-      .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    centroids.indices.sortBy(i => dist2(centroids(i))).take(nProbe)
   }
 
   // ---- persisted IVF index (lance-index analogue) ------------------------
 
-  /** Build the IVF index and PERSIST it as two lance datasets under
-    * `indexPath`: `vectors.lance` (corpus + `list_id`, range-partitioned by
-    * list so each fragment covers few lists — the manifest's per-fragment
-    * [min,max] stats then let a probe prune whole fragments without opening
-    * them) and `centroids.lance` (tiny). A fresh session pays only the
-    * centroid read (~ms) instead of a KMeans fit; at 100 TB this is the
-    * offline index build, and probes read `nProbe/nLists` of the data.
-    * Also registers the index for the `ORDER BY graft_cosine(...) DESC
-    * LIMIT k` planner rewrite ([[graft.plans.GraftAnn]]). */
+  /** A persisted IVF index flavor — IVF plus a flat or a product
+    * sub-quantizer, as lance-index splits it. Build, publish, update and
+    * sidecar load have one body each; a flavor holds only what differs:
+    * its dataset names and its per-row index columns.
+    *
+    * Layout under `indexPath` (names never overlap, so both flavors can
+    * share one directory). Each index dataset is range-partitioned and
+    * sorted by `list_id`, so a probe's `list_id IN (...)` prunes whole
+    * fragments by their manifest [min,max] stats.
+    *  - `Flat`: `vectors.lance` = corpus rows + `list_id` (a COPY of the
+    *    vectors); `centroids.lance` = (list_id, centroid, default_nprobe —
+    *    the build's probe width, so a fresh JVM's SQL-rewrite registration
+    *    restores it, never a probe call's); `meta.lance`.
+    *  - `Pq`: `pq.lance` = (id, list_id, pq_code int64 — 8-byte ADC codes;
+    *    the corpus is NOT copied, re-rank point-reads the source);
+    *    `pq_centroids.lance` = (list_id, centroid), separate so a PQ
+    *    rebuild never overwrites the centroids `vectors.lance`'s list
+    *    assignments depend on; `pq_codebooks.lance` = (sub, code, float
+    *    centroid); `pq_meta.lance`.
+    *
+    * Pins: the meta is the one publish point, written only by the Lance
+    * build and the update — one row of (built_version = the covered source
+    * version, vectors_version = the index-dataset pin, centroids_version
+    * [, codebooks_version] = the sidecar pins). Probes take every pin from
+    * ONE meta read, so neither an update that crashed before its meta
+    * write (an orphaned index commit) nor a rebuild that crashed after
+    * overwriting a sidecar (new centroids/codebooks against old pinned
+    * rows: wrong probe lists, garbage ADC scores) is visible; the next
+    * update restores both back before applying. A missing pin column reads
+    * as head, and a legacy 1-column meta upgrades to the pinned schema at
+    * its first update, before any index mutation. A DataFrame-built index
+    * has no meta: probes read head; the update and combined faces refuse
+    * it. */
+  private sealed abstract class Flavor(val dataName: String,
+                                       val centroidsName: String,
+                                       val codebooksName: Option[String],
+                                       val metaName: String,
+                                       val lanceBuild: String) {
+    /** The index dataset and sidecars, in meta pin-column order. */
+    def datasets: Seq[String] = Seq(dataName, centroidsName) ++ codebooksName
+    /** The per-row index columns of corpus rows carrying `list_id`: the
+      * whole row for `Flat`. */
+    def rows(assigned: DataFrame, idCol: String, vecCol: String,
+             codebooks: Array[Array[Array[Double]]]): DataFrame = assigned
+  }
+  private case object Flat extends Flavor("vectors.lance", "centroids.lance",
+      None, "meta.lance", "ivfBuildPersistLance")
+  private case object Pq extends Flavor("pq.lance", "pq_centroids.lance",
+      Some("pq_codebooks.lance"), "pq_meta.lance", "ivfPqBuildPersistLance") {
+    override def rows(assigned: DataFrame, idCol: String, vecCol: String,
+                      codebooks: Array[Array[Array[Double]]]): DataFrame =
+      assigned.select(col(idCol), col("list_id"),
+        graft.functions.ArrayKernels.pqEncode(col(vecCol),
+          typedlit(codebooks.flatMap(_.map(_.toSeq)).toSeq)).as("pq_code"))
+  }
+
+  /** Build the IVF index from a DataFrame and persist it under `indexPath`
+    * (`Flat` in [[Flavor]]); writes no meta. Also registers the index for
+    * the `ORDER BY graft_cosine(...) DESC LIMIT k` planner rewrite
+    * ([[graft.plans.GraftAnn]]) at width `nProbe`. */
   def ivfBuildPersist(df: DataFrame, idCol: String, vecCol: String,
-                      nLists: Int, indexPath: String, nProbe: Int = DefaultNProbe): Unit = {
-    val (indexed, centroids) = ivfIndex(df, idCol, vecCol, nLists)
-    // persist across the write: RangePartitioning SAMPLES its child to
-    // pick bounds, so without this the nearest-centroid assignment pass
-    // runs twice over the corpus (once to sample, once to write)
-    val assigned = indexed.persist()
-    try {
-      assigned
-        .repartitionByRange(math.max(nLists / 2, 1), col("list_id"))
-        .sortWithinPartitions("list_id")
-        .write.format("lance").mode("overwrite").save(s"$indexPath/vectors.lance")
-    } finally assigned.unpersist(false)
+                      nLists: Int, indexPath: String, nProbe: Int = DefaultNProbe): Unit =
+    buildIndex(df, idCol, vecCol, nLists, indexPath, Flat, Some(nProbe), Array.empty)
+
+  /** Build the IVF_PQ index from a DataFrame and persist it under
+    * `indexPath` (`Pq` in [[Flavor]]; ~2-3% of the data at 100 TB): `m`
+    * codebook subspaces trained on up to `sampleN` rows. Writes no meta. */
+  def ivfPqBuildPersist(df: DataFrame, idCol: String, vecCol: String,
+                        nLists: Int, indexPath: String, m: Int = 8,
+                        sampleN: Int = 16384): Unit = {
+    // hash-gated like ivfIndex's coarse sample: a plain limit() takes the
+    // FIRST fragments' rows, which on sorted/partitioned corpora trains
+    // the codebooks on one corner of the distribution. A gated draw that
+    // cannot FILL sampleN means the corpus is tiny (< 4*sampleN rows);
+    // there the 256-entry-per-subspace codebooks need every row they can
+    // get (a quartered sample underfits them), so fall back to ungated.
+    val gated = df.select(col(vecCol))
+      .where(pmod(xxhash64(col(idCol)), lit(4)) === 0)
+      .limit(sampleN).collect()
+    val sampled = if (gated.length >= sampleN) gated
+                  else df.select(col(vecCol)).limit(sampleN).collect()
+    // rounded to float once, here: the sidecar stores floats, so the
+    // build's encoding, the write-through cache, a fresh process's read
+    // and a later update's tail encoding all use one table
+    val codebooks = pqTrain(sampled.map(_.getSeq[Float](0).toArray), m)
+      .map(_.map(_.map(_.toFloat.toDouble)))
+    buildIndex(df, idCol, vecCol, nLists, indexPath, Pq, None, codebooks)
+  }
+
+  /** The one build body: train the coarse quantizer, write the index
+    * dataset and sidecars (`width` = the persisted probe width, `Flat`
+    * only), and write the sidecars through to the in-process cache. */
+  private def buildIndex(df: DataFrame, idCol: String, vecCol: String,
+                         nLists: Int, indexPath: String, f: Flavor,
+                         width: Option[Int],
+                         codebooks: Array[Array[Array[Double]]]): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    // the build-time probe width rides along in the sidecar
-    // (`default_nprobe`, same value every row): a fresh JVM's
-    // registerIfAbsent then restores the width the index was BUILT with,
-    // so declarative SQL results never depend on process history across
-    // restarts (they did when the first imperative touch registered the
-    // global default)
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq, nProbe) }.toSeq
-      .toDF("list_id", "centroid", "default_nprobe").coalesce(1)
-      .write.format("lance").mode("overwrite").save(s"$indexPath/centroids.lance")
-    centroidCache.put(s"$indexPath@-1", (centroids, nProbe))
-    graft.plans.GraftAnn.register(s"$indexPath/vectors.lance", centroids, nProbe)
-  }
-
-  import graft.functions.Lru
-
-  /** (centroids, build-time default nProbe) per index path — a fresh
-    * session fills this with one tiny lance read, never a KMeans fit. */
-  private val centroidCache = new Lru[(Array[Array[Double]], Int)](32)
-
-  /** Test hook: simulate a fresh session (forces the centroid and
-    * vectors-pin re-reads). */
-  private[graft] def clearCentroidCache(): Unit = {
-    centroidCache.clear()
-    metaCache.clear()
-  }
-
-  private def centroidsAndWidth(spark: org.apache.spark.sql.SparkSession,
-                                indexPath: String,
-                                pin: Option[Long] = None): (Array[Array[Double]], Int) =
-    // cache per (path, pin): the pinned read of a crashed-rebuild window
-    // must not serve a head read cached before the crash, or vice versa
-    centroidCache.getOrLoad(s"$indexPath@${pin.getOrElse(-1L)}") {
-      val base = spark.read.format("lance")
-      val df = pin.fold(base)(v => base.option("versionAsOf", v))
-        .load(s"$indexPath/centroids.lance")
-      val rows = df.orderBy("list_id").collect()
-      val cents = rows.map(_.getSeq[Double](1).toArray)
-      // indexes persisted before the width column existed fall back to
-      // the session default (documented restart caveat, now closed for
-      // every index this build writes)
-      val w =
-        if (df.schema.fieldNames.contains("default_nprobe") && rows.nonEmpty)
-          rows.head.getInt(rows.head.fieldIndex("default_nprobe"))
-        else DefaultNProbe
-      (cents, w)
+    val (indexed, centroids) = ivfIndex(df, idCol, vecCol, nLists)
+    // persist across the write: RangePartitioning SAMPLES its child to
+    // pick bounds, so without this the assignment (and encode) kernels
+    // run twice over the corpus (once to sample, once to write)
+    val rows = f.rows(indexed, idCol, vecCol, codebooks).persist()
+    try {
+      rows
+        .repartitionByRange(math.max(nLists / 2, 1), col("list_id"))
+        .sortWithinPartitions("list_id")
+        .write.format("lance").mode("overwrite").save(s"$indexPath/${f.dataName}")
+    } finally rows.unpersist(false)
+    val cents = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("list_id", "centroid")
+    width.fold(cents)(w => cents.withColumn("default_nprobe", lit(w)))
+      .coalesce(1).write.format("lance").mode("overwrite")
+      .save(s"$indexPath/${f.centroidsName}")
+    f.codebooksName.foreach { name =>
+      codebooks.zipWithIndex.flatMap { case (cb, s) =>
+        cb.zipWithIndex.map { case (cent, b) => (s, b, cent.map(_.toFloat).toSeq) }
+      }.toSeq.toDF("sub", "code", "centroid").coalesce(1)
+        .write.format("lance").mode("overwrite").save(s"$indexPath/$name")
     }
+    sidecarCache.put(sidecarKey(indexPath, f, None, None),
+      Sidecars(centroids, width.getOrElse(DefaultNProbe), codebooks))
+    width.foreach(w =>
+      graft.plans.GraftAnn.register(s"$indexPath/${f.dataName}", centroids, w))
+  }
 
-  def ivfCentroids(spark: org.apache.spark.sql.SparkSession,
-                   indexPath: String): Array[Array[Double]] =
-    centroidsAndWidth(spark, indexPath)._1
-
-  /** The probe width persisted at build time (falls back to
-    * [[DefaultNProbe]] for pre-width sidecars). */
-  def ivfDefaultNProbe(spark: org.apache.spark.sql.SparkSession,
-                       indexPath: String): Int =
-    centroidsAndWidth(spark, indexPath)._2
-
-  /** Probe a persisted IVF index: centroid read (cached), driver-side
-    * probe-list pick, fragment-pruned scan of the probed lists, codegen
-    * cosine top-k. No KMeans, no full scan. */
-  def ivfSearchPersisted(spark: org.apache.spark.sql.SparkSession,
-                         indexPath: String, idCol: String, vecCol: String,
-                         query: Seq[Float], k: Int, nProbe: Int = DefaultNProbe): DataFrame =
-    // the SQL-rewrite registration (inside the interior) uses the width
-    // PERSISTED by the build — this call's nProbe is a per-query
-    // parameter and must not leak into later SQL rewrites. The probe
-    // pins vectors.lance at the meta-published version for updated
-    // indexes, so a crashed ivfUpdateIndex's orphaned commit is
-    // invisible here (the declarative GraftAnn face scans the head: its
-    // relation IS the user-visible table, and orphan rows are real
-    // corpus rows).
-    ivfSearchPersistedAt(spark, indexPath, idCol, vecCol, query, k, nProbe,
-      metaOf(spark, indexPath))
-
-  /** Build the persisted IVF index FOR a lance dataset, recording the
-    * source head version in the centroid sidecar (`built_version`
-    * column). [[ivfSearchCombined]] uses it to brute-force the unindexed
-    * append tail — the crate's behavior for fragments not covered by the
-    * index.
-    */
+  /** Build the persisted IVF index FOR a lance dataset and publish its
+    * meta, recording the source head version as `built_version`: the
+    * combined search brute-forces the rows appended after it, and
+    * [[ivfUpdateIndex]] covers them. Returns the recorded version. */
   def ivfBuildPersistLance(spark: org.apache.spark.sql.SparkSession,
                            sourcePath: String, idCol: String, vecCol: String,
                            nLists: Int, indexPath: String,
-                           nProbe: Int = DefaultNProbe): Long = {
+                           nProbe: Int = DefaultNProbe): Long =
+    buildIndexLance(spark, sourcePath, indexPath, Flat)(
+      ivfBuildPersist(_, idCol, vecCol, nLists, indexPath, nProbe))
+
+  /** [[ivfBuildPersistLance]] for the IVF_PQ flavor. */
+  def ivfPqBuildPersistLance(spark: org.apache.spark.sql.SparkSession,
+                             sourcePath: String, idCol: String, vecCol: String,
+                             nLists: Int, indexPath: String,
+                             m: Int = 8): Long =
+    buildIndexLance(spark, sourcePath, indexPath, Pq)(
+      ivfPqBuildPersist(_, idCol, vecCol, nLists, indexPath, m))
+
+  private def buildIndexLance(spark: org.apache.spark.sql.SparkSession,
+                              sourcePath: String, indexPath: String,
+                              f: Flavor)(build: DataFrame => Unit): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val builtV = datasetHead(conf, sourcePath)
     // pin the snapshot: a concurrent append between version read and scan
     // must not leak half-indexed rows past the recorded version
-    val df = spark.read.format("lance")
-      .option("versionAsOf", builtV).load(sourcePath)
-    ivfBuildPersist(df, idCol, vecCol, nLists, indexPath, nProbe)
-    // the meta is written with the FULL pinned schema from day one
-    // (round-16 review): the vectors pin makes a crashed update's orphan
-    // invisible, and the CENTROIDS pin closes the crashed-REBUILD window
-    // — a rebuild overwrites centroids.lance before this meta publish,
-    // and without the pin, probes would pair old pinned rows with new
-    // head centroids (wrong probe lists). Legacy 1-column metas on disk
-    // still upgrade at first update.
-    import spark.implicits._
-    Seq((builtV, datasetHead(conf, s"$indexPath/vectors.lance"),
-         datasetHead(conf, s"$indexPath/centroids.lance")))
-      .toDF("built_version", "vectors_version", "centroids_version")
-      .coalesce(1).write.format("lance").mode("overwrite")
-      .save(s"$indexPath/meta.lance")
-    // a rebuild resets the publish pin: vectors.lance head IS the build
-    metaCache.remove(s"$indexPath/meta.lance")
+    build(spark.read.format("lance").option("versionAsOf", builtV).load(sourcePath))
+    publish(spark, indexPath, f, builtV, heads(conf, indexPath, f))
     builtV
   }
 
   /** Incrementally extend a persisted IVF index over the rows appended
     * to `sourcePath` after the recorded build version — the crate's
-    * `optimize_indices` for a vector index, O(tail), NO re-train: tail
-    * vectors are assigned to the EXISTING centroids (one codegen
-    * NearestCentroid pass over the post-build fragments only) and land
-    * in `vectors.lance` through ONE mergeInsert commit keyed on `idCol`,
-    * so a row deleted-then-re-appended since the build REPLACES its
-    * stale indexed copy instead of shadowing it (the crate gets the same
-    * effect from its deletion bitmap). New fragments are range-sorted by
-    * `list_id`, so probe pruning keeps working; centroids never change,
-    * so every cached centroid read stays valid.
-    *
-    * Publish protocol (the [[graft.operators.ScalarIndex.update]]
-    * pattern): probes pin `vectors.lance` at the version `meta.lance`
-    * records, so the meta overwrite below is the only publish — a crash
-    * between the mergeInsert commit and the meta write leaves an
-    * orphaned index version that pinned probes never see (combined
-    * search still brute-forces the tail, so nothing double-counts), and
-    * the next update sweeps it by restoring to the recorded version
-    * before re-applying. Deltas that contain ONLY deletions advance the
-    * covered version without index writes (deletion masking stays a
-    * query-time concern — the Live faces).
-    *
-    * Returns the covered source version. */
+    * `optimize_indices`, O(tail), NO re-train: one codegen pass assigns
+    * the post-build fragments to the EXISTING centroids (and, for IVF_PQ,
+    * encodes them with the EXISTING codebooks), landing in the index
+    * dataset through ONE mergeInsert commit keyed on `idCol`, so a row
+    * deleted-then-re-appended since the build REPLACES its stale indexed
+    * copy (the crate's deletion bitmap). Sidecars never change, so every
+    * cached sidecar read stays valid; the meta write publishes
+    * ([[Flavor]]). Deletion-only deltas advance the covered version
+    * without index writes (the combined faces mask deletions at query
+    * time). Returns the covered source version. */
   def ivfUpdateIndex(spark: org.apache.spark.sql.SparkSession,
                      sourcePath: String, indexPath: String,
                      idCol: String, vecCol: String,
-                     writePartitions: Int = 2): Long = {
-    import graft.sources.lance.{LanceFormat, LanceMaintenance, MaintenanceLock}
+                     writePartitions: Int = 2): Long =
+    updateIndex(spark, sourcePath, indexPath, idCol, vecCol, writePartitions, Flat)
+
+  /** [[ivfUpdateIndex]] for the IVF_PQ flavor. */
+  def ivfPqUpdateIndex(spark: org.apache.spark.sql.SparkSession,
+                       sourcePath: String, indexPath: String,
+                       idCol: String, vecCol: String,
+                       writePartitions: Int = 2): Long =
+    updateIndex(spark, sourcePath, indexPath, idCol, vecCol, writePartitions, Pq)
+
+  private def updateIndex(spark: org.apache.spark.sql.SparkSession,
+                          sourcePath: String, indexPath: String,
+                          idCol: String, vecCol: String,
+                          writePartitions: Int, f: Flavor): Long = {
+    import graft.sources.lance.{LanceMaintenance, MaintenanceLock}
     val conf = spark.sessionState.newHadoopConf()
     MaintenanceLock.withLock(indexPath, conf) {
-      val vecPath = s"$indexPath/vectors.lance"
-      val centsPath = s"$indexPath/centroids.lance"
-      val meta = spark.read.format("lance").load(s"$indexPath/meta.lance")
-      val mRow = meta.head()
-      val builtV = mRow.getLong(0)
-      def headOf(path: String): Long = datasetHead(conf, path)
-      def pinOf(name: String): Option[Long] =
-        if (meta.schema.fieldNames.contains(name))
-          Some(mRow.getLong(mRow.fieldIndex(name)))
-        else None
-      // sweep a crashed update's orphaned index commit BEFORE touching
-      // anything: the recorded vectors version is the last published
-      // state. A legacy 1-column meta (built, never updated) first
-      // UPGRADES to the pinned schema at the current heads — published
-      // BEFORE any index mutation, so even the first update's crash
-      // window is covered (an orphan after a legacy meta would otherwise
-      // be invisible to the sweep and visible to unpinned probes).
-      val (vv0, cv0) = (pinOf("vectors_version"), pinOf("centroids_version")) match {
-        case (Some(v), c) => (v, c.getOrElse(headOf(centsPath)))
-        case _ =>
-          val (cur, curC) = (headOf(vecPath), headOf(centsPath))
-          import spark.implicits._
-          Seq((builtV, cur, curC))
-            .toDF("built_version", "vectors_version", "centroids_version")
-            .coalesce(1).write.format("lance").mode("overwrite")
-            .save(s"$indexPath/meta.lance")
-          metaCache.remove(s"$indexPath/meta.lance")
-          (cur, curC)
+      def headOf(name: String): Long = datasetHead(conf, s"$indexPath/$name")
+      val m0 = metaOf(spark, indexPath, f, recheck = true)
+        .getOrElse(throw noMeta(indexPath, f))
+      // a legacy 1-column meta (built, never updated) first UPGRADES to
+      // the pinned schema at the current heads — published BEFORE any
+      // index mutation, so even the first update's crash window is
+      // covered (an orphan after a legacy meta would otherwise be
+      // invisible to the sweep and visible to unpinned probes)
+      val pins =
+        if (m0.vecPin.isEmpty) {
+          val hs = heads(conf, indexPath, f)
+          publish(spark, indexPath, f, m0.built, hs)
+          hs
+        } else Seq(m0.vecPin, m0.centsPin, m0.cbsPin).zip(f.datasets)
+          .map { case (pin, name) => pin.getOrElse(headOf(name)) }
+      // sweep a crashed update's orphaned index commit AND a crashed
+      // rebuild's sidecar overwrite BEFORE anything: the recorded
+      // versions are the last published state, and assigning or encoding
+      // the tail with drifted sidecars would publish an index mixing two
+      // centroid sets or codes no single LUT can score
+      f.datasets.zip(pins).foreach { case (name, v) =>
+        if (headOf(name) != v) LanceMaintenance.restore(spark, s"$indexPath/$name", v)
       }
-      if (headOf(vecPath) != vv0)
-        LanceMaintenance.restore(spark, vecPath, vv0)
-      // a crashed REBUILD's sidecar overwrite also sweeps: the rows being
-      // extended carry list_ids from the PINNED centroids, so assigning
-      // the tail (or probing) with drifted head centroids would publish
-      // an index mixing two centroid sets
-      if (headOf(centsPath) != cv0)
-        LanceMaintenance.restore(spark, centsPath, cv0)
-      val cvPub = headOf(centsPath)
-      val headV = headOf(sourcePath)
-      val publishedVv =
-        if (headV == builtV) headOf(vecPath)
-        else {
-          val centroids = centroidsAndWidth(spark, indexPath, Some(cvPub))._1
-          val cLit = typedlit(centroids.map(_.toSeq).toSeq)
-          // the index schema is the source row + list_id (mergeInsert
-          // requires the exact column set); the window pins at headV so
-          // a concurrent append past the read cannot leak half-covered
-          // rows into a version the meta then claims
-          val idxCols = spark.read.format("lance").load(vecPath)
-            .schema.fieldNames
-          // persist the assigned tail: mergeInsert consumes its source
-          // several times (emptiness check, matched-key semi-join,
-          // staging) and repartitionByRange SAMPLES its child — without
-          // this the NearestCentroid kernel re-runs over the tail four
-          // to five times (the ivfBuildPersist lesson)
-          val assigned = spark.read.format("lance")
-            .option("fromVersion", builtV).option("versionAsOf", headV)
-            .load(sourcePath)
-            .withColumn("list_id",
-              graft.functions.ArrayKernels.nearestCentroid(col(vecCol), cLit))
-            .select(idxCols.map(col).toIndexedSeq: _*)
-            .persist()
-          try {
-            LanceMaintenance.mergeInsert(spark, vecPath,
-              assigned
-                .repartitionByRange(math.max(writePartitions, 1), col("list_id"))
-                .sortWithinPartitions("list_id"),
-              Seq(idCol))
-          } finally assigned.unpersist(false)
-          headOf(vecPath)
-        }
-      import spark.implicits._
-      Seq((headV, publishedVv, cvPub))
-        .toDF("built_version", "vectors_version", "centroids_version")
-        .coalesce(1).write.format("lance").mode("overwrite")
-        .save(s"$indexPath/meta.lance")
-      metaCache.remove(s"$indexPath/meta.lance")
+      val sidecarPins = f.datasets.tail.map(headOf)
+      val headV = datasetHead(conf, sourcePath)
+      if (headV != m0.built) {
+        val sc = sidecars(spark, indexPath, f, Some(sidecarPins.head),
+          sidecarPins.lift(1))
+        val dataPath = s"$indexPath/${f.dataName}"
+        // the index schema (mergeInsert requires the exact column set);
+        // the window pins at headV so a concurrent append past the read
+        // cannot leak half-covered rows into a version the meta then claims
+        val idxCols = spark.read.format("lance").load(dataPath).schema.fieldNames
+        val assigned = spark.read.format("lance")
+          .option("fromVersion", m0.built).option("versionAsOf", headV)
+          .load(sourcePath)
+          .withColumn("list_id", graft.functions.ArrayKernels.nearestCentroid(
+            col(vecCol), typedlit(sc.centroids.map(_.toSeq).toSeq)))
+        // persist the tail rows: mergeInsert consumes its source several
+        // times (emptiness check, matched-key semi-join, staging) and
+        // repartitionByRange SAMPLES its child — without this the kernels
+        // re-run over the tail four to five times
+        val rows = f.rows(assigned, idCol, vecCol, sc.codebooks)
+          .select(idxCols.map(col).toIndexedSeq: _*)
+          .persist()
+        try {
+          LanceMaintenance.mergeInsert(spark, dataPath,
+            rows
+              .repartitionByRange(math.max(writePartitions, 1), col("list_id"))
+              .sortWithinPartitions("list_id"),
+            Seq(idCol))
+        } finally rows.unpersist(false)
+      }
+      publish(spark, indexPath, f, headV, headOf(f.dataName) +: sidecarPins)
       headV
     }
   }
+
+  private def noMeta(indexPath: String, f: Flavor): IllegalStateException =
+    new IllegalStateException(
+      s"$indexPath has no ${f.metaName} — build with ${f.lanceBuild}")
 
   /** Manifest head version of a lance dataset — shared by the meta
     * reads, the build, and the update (one idiom, one place to change
@@ -532,41 +538,52 @@ object Similarity {
     LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None)).version
   }
 
-  /** One atomically-read publish record of an index's meta sidecar:
-    * the covered source version, the pin of the index dataset
-    * (vectors.lance / pq.lance), and the pins of the centroid/codebook
-    * sidecars a rebuild overwrites (round-16 review: the index-dataset
-    * pin alone left a window where a rebuild crashing after its sidecar
-    * writes but before its meta publish would hand pinned probes NEW
-    * centroids/codebooks against OLD pinned rows — garbage ADC scores /
-    * wrong probe lists — and the next update would encode the tail under
-    * the drifted sidecars and publish the mix). A None pin means "head"
-    * (legacy metas without the column; never-updated plain builds). */
+  private def heads(conf: org.apache.hadoop.conf.Configuration,
+                    indexPath: String, f: Flavor): Seq[Long] =
+    f.datasets.map(name => datasetHead(conf, s"$indexPath/$name"))
+
+  /** The one meta writer: (built_version, then `pins` in `f.datasets`
+    * order) replaces the flavor's meta; the in-process copy drops. */
+  private def publish(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                      f: Flavor, built: Long, pins: Seq[Long]): Unit = {
+    val vals = built +: pins
+    val schema = StructType(
+      Seq("built_version", "vectors_version", "centroids_version", "codebooks_version")
+        .take(vals.length).map(StructField(_, LongType, nullable = false)))
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row.fromSeq(vals)), schema)
+      .coalesce(1).write.format("lance").mode("overwrite")
+      .save(s"$indexPath/${f.metaName}")
+    metaCache.remove(s"$indexPath/${f.metaName}")
+  }
+
+  /** One atomically-read publish record of an index's meta sidecar (see
+    * [[Flavor]]): the covered source version and the pins of the index
+    * dataset and its sidecars. A None pin means "head". */
   private[graft] case class IdxMeta(built: Long, vecPin: Option[Long],
                                     centsPin: Option[Long],
                                     cbsPin: Option[Long])
 
-  /** The [[IdxMeta]] of an index's meta sidecar, read ATOMICALLY: every
-    * field always comes from the same meta version (a fresh built_version
-    * paired with a stale cached pin would make the combined faces drop
-    * rows a cross-process update had just folded in — empty tail AND
-    * pre-update index). Values cache per meta MANIFEST version; a call on
-    * an index with meta pays only a manifest-head read (plain file IO, no
-    * Spark job) to detect cross-process publishes. The no-meta result
-    * (plain [[ivfBuildPersist]] indexes) caches as None — no per-probe
-    * existence check on that hot path; [[ivfBuildPersistLance]] (the
-    * only way meta appears) invalidates in-process. */
+  /** The [[IdxMeta]] of an index's meta sidecar (None without one), read
+    * ATOMICALLY: every field always comes from the same meta version (a
+    * fresh built_version paired with a stale cached pin would make the
+    * combined faces drop rows a cross-process update had just folded in —
+    * empty tail AND pre-update index). Values cache per meta MANIFEST
+    * version, so a call on an index with meta pays only a manifest-head
+    * read (plain file IO, no Spark job) to detect cross-process publishes.
+    * The no-meta answer (DataFrame-built indexes) caches as None — no
+    * per-probe existence check on that hot path; [[publish]] invalidates
+    * in-process, and `recheck` (the update's lock-held read) ignores it.
+    * The cache key is the meta dataset path, so the two flavors of one
+    * index directory never collide. */
   private val metaCache = new Lru[Option[(Long, IdxMeta)]](32)
   private def metaOf(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String,
-                     metaName: String = "meta.lance"): Option[IdxMeta] = {
+                     indexPath: String, f: Flavor,
+                     recheck: Boolean = false): Option[IdxMeta] = {
     import graft.sources.lance.LanceFormat
     val conf = spark.sessionState.newHadoopConf()
-    // cache key = the meta dataset path, so the IVF and PQ flavors of one
-    // index directory (each with its own meta sidecar) never collide
-    val metaPath = s"$indexPath/$metaName"
+    val metaPath = s"$indexPath/${f.metaName}"
     metaCache.get(metaPath) match {
-      case Some(None) => None // cached no-meta index
+      case Some(None) if !recheck => None
       case cached =>
         val (fs, mp) = LanceFormat.fileSystem(metaPath, conf)
         if (!fs.exists(mp)) { metaCache.put(metaPath, None); None }
@@ -591,79 +608,118 @@ object Similarity {
     }
   }
 
+  /** An index's quantizer state as its sidecars hold it: the coarse
+    * centroids, the build-time probe width (`Flat`; [[DefaultNProbe]] for
+    * `Pq` and for sidecars persisted before the width column existed),
+    * and the PQ codebooks [m][256][dim/m] (empty for `Flat`). Cached per
+    * (index path, flavor, pins) — a fresh session pays tiny lance reads,
+    * never a KMeans fit; the key carries the pins so the pinned read of a
+    * crashed-rebuild window never serves a head read cached before the
+    * crash, or vice versa. */
+  private final case class Sidecars(centroids: Array[Array[Double]], nProbe: Int,
+                                    codebooks: Array[Array[Array[Double]]])
+  private val sidecarCache = new Lru[Sidecars](32)
+  private def sidecarKey(indexPath: String, f: Flavor, centsPin: Option[Long],
+                         cbsPin: Option[Long]): String =
+    s"$indexPath/${f.centroidsName}@${centsPin.getOrElse(-1L)}@${cbsPin.getOrElse(-1L)}"
+
+  private def sidecars(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                       f: Flavor, centsPin: Option[Long],
+                       cbsPin: Option[Long]): Sidecars =
+    sidecarCache.getOrLoad(sidecarKey(indexPath, f, centsPin, cbsPin)) {
+      def read(name: String, pin: Option[Long]): DataFrame = {
+        val base = spark.read.format("lance")
+        pin.fold(base)(v => base.option("versionAsOf", v)).load(s"$indexPath/$name")
+      }
+      val cdf = read(f.centroidsName, centsPin)
+      val rows = cdf.orderBy("list_id").collect()
+      val width =
+        if (cdf.schema.fieldNames.contains("default_nprobe") && rows.nonEmpty)
+          rows.head.getInt(rows.head.fieldIndex("default_nprobe"))
+        else DefaultNProbe
+      val codebooks = f.codebooksName.fold(Array.empty[Array[Array[Double]]]) { name =>
+        read(name, cbsPin).orderBy("sub", "code").collect()
+          .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+          .map(_._2.map(_.getSeq[Float](2).map(_.toDouble).toArray)).toArray
+      }
+      Sidecars(rows.map(_.getSeq[Double](1).toArray), width, codebooks)
+    }
+
+  /** The index dataset and sidecars a probe reads, all pinned by ONE
+    * publish record (head without one) — see [[Flavor]]. */
+  private def pinnedIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                          f: Flavor, meta: Option[IdxMeta]): (DataFrame, Sidecars) = {
+    val base = spark.read.format("lance")
+    val data = meta.flatMap(_.vecPin).fold(base)(v => base.option("versionAsOf", v))
+      .load(s"$indexPath/${f.dataName}")
+    (data, sidecars(spark, indexPath, f, meta.flatMap(_.centsPin),
+      meta.flatMap(_.cbsPin)))
+  }
+
+  /** Test hook: simulate a fresh process (sidecar and meta re-reads). */
+  private[graft] def clearIndexCaches(): Unit = {
+    sidecarCache.clear()
+    metaCache.clear()
+  }
+
+  /** Head centroids of a persisted IVF index. */
+  def ivfCentroids(spark: org.apache.spark.sql.SparkSession,
+                   indexPath: String): Array[Array[Double]] =
+    sidecars(spark, indexPath, Flat, None, None).centroids
+
+  /** Head codebooks of a persisted IVF_PQ index. */
+  def pqCodebooks(spark: org.apache.spark.sql.SparkSession,
+                  indexPath: String): Array[Array[Array[Double]]] =
+    sidecars(spark, indexPath, Pq, None, None).codebooks
+
+  /** Probe a persisted IVF index: centroid read (cached), driver-side
+    * probe-list pick, fragment-pruned scan of the probed lists, codegen
+    * cosine top-k. No KMeans, no full scan. Reads at the meta pins when
+    * the index has a meta ([[Flavor]]); the declarative GraftAnn face
+    * scans the head instead — its relation IS the user-visible table. */
+  def ivfSearchPersisted(spark: org.apache.spark.sql.SparkSession,
+                         indexPath: String, idCol: String, vecCol: String,
+                         query: Seq[Float], k: Int, nProbe: Int = DefaultNProbe): DataFrame =
+    ivfSearchPersistedAt(spark, indexPath, idCol, vecCol, query, k, nProbe,
+      metaOf(spark, indexPath, Flat))
+
   /** The probe interior with the explicit publish record — the combined
-    * faces resolve the WHOLE [[IdxMeta]] in ONE [[metaOf]] read and pass
-    * it here so the tail bound, the vectors pin AND the centroids pin
-    * can never tear. Pinning the centroids alongside the rows matters
-    * for the crashed-rebuild window: a rebuild overwrites
-    * centroids.lance before its meta publish, and probing OLD pinned
-    * rows (whose list_ids came from the OLD centroids) with NEW head
-    * centroids would pick the wrong lists. */
+    * face resolves the WHOLE [[IdxMeta]] in ONE [[metaOf]] read and passes
+    * it here so the tail bound and the pins can never tear. */
   private def ivfSearchPersistedAt(spark: org.apache.spark.sql.SparkSession,
                                    indexPath: String, idCol: String,
                                    vecCol: String, query: Seq[Float],
                                    k: Int, nProbe: Int,
                                    meta: Option[IdxMeta]): DataFrame = {
-    val (centroids, builtWidth) =
-      centroidsAndWidth(spark, indexPath, meta.flatMap(_.centsPin))
+    val (indexed, sc) = pinnedIndex(spark, indexPath, Flat, meta)
+    // the SQL-rewrite registration uses the width PERSISTED by the build
+    // — this call's nProbe is a per-query parameter and must not leak
+    // into later SQL rewrites
     graft.plans.GraftAnn.registerIfAbsent(
-      s"$indexPath/vectors.lance", centroids, builtWidth)
-    val base = spark.read.format("lance")
-    val indexed = meta.flatMap(_.vecPin).fold(base)(v => base.option("versionAsOf", v))
-      .load(s"$indexPath/vectors.lance")
-    ivfCosineTopK(indexed, centroids, idCol, vecCol, query, k, nProbe)
-  }
-
-  /** Combined search (crate semantics for a stale index): probe the
-    * persisted index for rows it covers AND brute-force the rows appended
-    * to `sourcePath` after the recorded build version (a `fromVersion`
-    * CDC scan plans ONLY the new fragments — the tail stays a sliver of
-    * the corpus until the next index rebuild), then merge the two top-k
-    * streams. The tail side reads the live dataset, so deletions among
-    * appended rows are masked for free; deletions of INDEXED rows need
-    * [[ivfSearchPersistedLive]] (compose when both apply).
-    */
-  def ivfSearchCombined(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String, sourcePath: String,
-                        idCol: String, vecCol: String,
-                        query: Seq[Float], k: Int,
-                        nProbe: Int = DefaultNProbe): DataFrame = {
-    // ONE atomic meta read: the tail bound and the index pin must come
-    // from the same publish, or a cross-process update between two reads
-    // would empty the tail while probing the pre-update index
-    val meta = metaOf(spark, indexPath).getOrElse(
-      throw new IllegalStateException(
-        s"$indexPath has no meta.lance — build with ivfBuildPersistLance"))
-    val idxTop = ivfSearchPersistedAt(spark, indexPath, idCol, vecCol,
-      query, k, nProbe, Some(meta))
-    val tail = spark.read.format("lance")
-      .option("fromVersion", meta.built).load(sourcePath)
-    val tailTop = cosineTopK(tail, idCol, vecCol, query, k)
-    idxTop.unionByName(tailTop)
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+      s"$indexPath/${Flat.dataName}", sc.centroids, sc.nProbe)
+    ivfCosineTopK(indexed, sc.centroids, idCol, vecCol, query, k, nProbe)
   }
 
   /** The full crate search contract on a STALE index — appends AND
-    * deletions since the build, composed from the two specialized paths:
-    * the indexed side probes through [[ivfSearchPersistedLive]] (liveness
-    * masked via the runtime-filter join against the current source, so
-    * deleted-but-indexed rows drop), the tail side brute-forces only the
-    * fragments appended after the recorded build version (deletions
-    * among appended rows are masked by the scan itself), and the two
-    * top-k streams merge. This is what `dataset.search()` does in the
-    * crate between index rebuilds: index hits minus the deletion bitmap,
-    * plus an unindexed-tail flat scan. */
+    * deletions since the build: the indexed side probes with liveness
+    * masked via the runtime-filter join against the current source (the
+    * plain index stores a COPY of the vectors, so deleted-but-indexed rows
+    * would otherwise surface), the tail side brute-forces only the
+    * fragments appended after the recorded build version (a `fromVersion`
+    * CDC scan; deletions among appended rows are masked by the scan
+    * itself), and the two top-k streams merge. This is what
+    * `dataset.search()` does in the crate between index rebuilds: index
+    * hits minus the deletion bitmap, plus an unindexed-tail flat scan. */
   def ivfSearchCombinedLive(spark: org.apache.spark.sql.SparkSession,
                             indexPath: String, sourcePath: String,
                             idCol: String, vecCol: String,
                             query: Seq[Float], k: Int,
                             nProbe: Int = DefaultNProbe): DataFrame = {
-    // ONE atomic meta read (see ivfSearchCombined): tail bound + pins
-    // from the same publish
-    val meta = metaOf(spark, indexPath).getOrElse(
-      throw new IllegalStateException(
-        s"$indexPath has no meta.lance — build with ivfBuildPersistLance"))
+    // ONE atomic meta read: the tail bound and the pins must come from
+    // the same publish, or a cross-process update between two reads
+    // would empty the tail while probing the pre-update index
+    val meta = metaOf(spark, indexPath, Flat)
+      .getOrElse(throw noMeta(indexPath, Flat))
     val tail = spark.read.format("lance")
       .option("fromVersion", meta.built).load(sourcePath)
     val tailTop = cosineTopK(tail, idCol, vecCol, query, k)
@@ -679,7 +735,29 @@ object Similarity {
     // k+1..2k that outrank tail rows.
     val cands = ivfSearchPersistedAt(spark, indexPath, idCol, vecCol,
       query, 2 * k, nProbe, Some(meta))
-    val idxLive = liveMask(spark, sourcePath, idCol, cands)
+    // Liveness mask via Spark's runtime-filter path, no driver collect:
+    // the source joins the broadcast candidate set, and because the lance
+    // scan implements SupportsRuntimeV2Filtering (with idCol among its
+    // filterAttributes) the optimizer's PartitionPruning rule attaches a
+    // dynamic-pruning subquery that reuses the candidate broadcast — once
+    // the ≤2k candidates materialize, their realized ids reach the
+    // source scan as an IN-list zone filter (bounded point reads — O(k)
+    // like the crate's per-candidate deletion-bitmap check, never a
+    // corpus scan). The probe subtree appears ONCE in the plan and its
+    // broadcast is shared between the join build side and the pruning
+    // subquery, so the probe executes once; the whole result stays a lazy
+    // distributed plan. LivenessJoinSpec pins that the runtime filter
+    // actually reaches the source scan and prunes fragments.
+    //
+    // grouped first-win: the inner join emits one row per matching SOURCE
+    // row, so a source holding duplicate ids (update-by-append) would
+    // repeat a candidate. Grouping on the id alone (instead of an
+    // all-columns distinct) keeps the exchange keyed on ≤2k ids after
+    // map-side partial aggregation, and under duplicate ids in the INDEX
+    // itself deterministically keeps the best-scoring copy.
+    val idxLive = spark.read.format("lance").load(sourcePath).select(col(idCol))
+      .join(broadcast(cands), Seq(idCol), "inner")
+      .groupBy(col(idCol)).agg(max(col("cos")).as("cos"))
     // Realize the retired ids as a ≤2k set FIRST: tail ids semi-join the
     // SAME broadcast candidate set (retiring on the candidate-id superset
     // equals retiring on live-candidate ids — idxLive's ids are a subset
@@ -701,78 +779,8 @@ object Similarity {
       .limit(k)
   }
 
-  /** Delete-aware probe of a persisted IVF index — the crate's semantics:
-    * deletions on the BASE dataset mask index hits at query time. The
-    * plain IVF index stores a COPY of the vectors, so a row deleted from
-    * `sourcePath` after the build would otherwise still surface. Here the
-    * probe over-fetches 2k candidates, verifies the bounded candidate id
-    * set's liveness against the source with a pushed IN-list (zone-pruned
-    * point reads — O(k) like the crate's per-candidate deletion-bitmap
-    * check, never a corpus scan), and returns the top k live survivors
-    * (fewer only if deletions gutted the over-fetch margin).
-    *
-    * The PQ path ([[ivfPqSearch]]) needs none of this: its exact re-rank
-    * reads the source, where deletion vectors already mask dead rows.
-    */
-  def ivfSearchPersistedLive(spark: org.apache.spark.sql.SparkSession,
-                             indexPath: String, sourcePath: String,
-                             idCol: String, vecCol: String,
-                             query: Seq[Float], k: Int,
-                             nProbe: Int = DefaultNProbe): DataFrame =
-    ivfLiveCandidates(spark, indexPath, sourcePath, idCol, vecCol,
-        query, 2 * k, nProbe, metaOf(spark, indexPath))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
-
-  /** The liveness-masked candidate set BEFORE any top-k cut: up to
-    * `fetch` index hits that still exist in `sourcePath`, as `(idCol,
-    * cos)`. [[ivfSearchPersistedLive]] cuts this to k;
-    * [[ivfSearchCombinedLive]] first retires tail-reappearing ids from
-    * the FULL over-fetch so retired hits refill from candidates ranked
-    * below k instead of consuming top-k slots. */
-  private[graft] def ivfLiveCandidates(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, sourcePath: String,
-      idCol: String, vecCol: String,
-      query: Seq[Float], fetch: Int, nProbe: Int,
-      meta: Option[IdxMeta]): DataFrame =
-    liveMask(spark, sourcePath, idCol,
-      ivfSearchPersistedAt(spark, indexPath, idCol, vecCol,
-        query, fetch, nProbe, meta))
-
-  /** The liveness join interior, parameterized on an already-built
-    * candidate plan so [[ivfSearchCombinedLive]] can reuse ONE candidate
-    * subtree (and thus one broadcast exchange) for both the liveness mask
-    * and the retirement semi-join. */
-  private def liveMask(spark: org.apache.spark.sql.SparkSession,
-                       sourcePath: String, idCol: String,
-                       candsDf: DataFrame): DataFrame = {
-    // Liveness mask via Spark's runtime-filter path, no driver collect:
-    // the source joins the broadcast candidate set, and because the lance
-    // scan implements SupportsRuntimeV2Filtering (with idCol among its
-    // filterAttributes) the optimizer's PartitionPruning rule attaches a
-    // dynamic-pruning subquery that reuses the candidate broadcast — once
-    // the ≤fetch candidates materialize, their realized ids reach the
-    // source scan as an IN-list zone filter (bounded point reads — O(k)
-    // like the crate's per-candidate deletion-bitmap check, never a
-    // corpus scan). The probe subtree appears ONCE in the plan and its
-    // broadcast is shared between the join build side and the pruning
-    // subquery, so the probe executes once; the whole result stays a lazy
-    // distributed plan. LivenessJoinSpec pins that the runtime filter
-    // actually reaches the source scan and prunes fragments.
-    val src = spark.read.format("lance").load(sourcePath).select(col(idCol))
-    // grouped first-win: the inner join emits one row per matching SOURCE
-    // row, so a source holding duplicate ids (update-by-append) would
-    // repeat a candidate. Grouping on the id alone (instead of an
-    // all-columns distinct) keeps the exchange keyed on ≤fetch ids after
-    // map-side partial aggregation, and under duplicate ids in the INDEX
-    // itself deterministically keeps the best-scoring copy.
-    src.join(broadcast(candsDf), Seq(idCol), "inner")
-      .groupBy(col(idCol)).agg(max(col("cos")).as("cos"))
-  }
-
   // ---- IVF_PQ: product-quantized persisted index (lance-index IVF_PQ
-  // analogue — /root/reference/Cargo.lock: lance-index) -------------------
+  // analogue) --------------------------------------------------------------
 
   /** Train per-subspace PQ codebooks (Jégou/Douze/Schmid PQ, PAMI 2011)
     * with seeded Lloyd k-means on a bounded sample. Codebook training is
@@ -789,252 +797,14 @@ object Similarity {
     require(dim % m == 0, s"pqTrain: dim $dim not divisible by $m subspaces")
     require(m >= 1 && m <= 8, s"pqTrain: m=$m must be in [1,8] (codes pack into int64)")
     val dsub = dim / m
+    // one generator across subspaces: each subspace's seeding shuffle
+    // continues the previous subspace's draws
     val rnd = new scala.util.Random(seed)
     Array.tabulate(m) { s =>
-      val subs = sample.map(v => Array.tabulate(dsub)(d => v(s * dsub + d).toDouble))
-      val k = math.min(256, subs.length)
-      val centroids = rnd.shuffle(subs.indices.toList).take(k)
-        .map(subs(_).clone).toArray
-      var it = 0
-      while (it < iters) {
-        val (sums, counts) = lloydPass(subs, centroids)
-        var c = 0
-        while (c < k) {
-          if (counts(c) > 0) {
-            var d = 0
-            while (d < dsub) { centroids(c)(d) = sums(c)(d) / counts(c); d += 1 }
-          }
-          c += 1
-        }
-        it += 1
-      }
-      if (k < 256) centroids ++ Array.fill(256 - k)(centroids(0).clone)
-      else centroids
+      lloyd(sample.map(v => Array.tabulate(dsub)(d => v(s * dsub + d).toDouble)),
+        256, iters, rnd)
     }
   }
-
-  /** Build and persist an IVF_PQ index under `indexPath`:
-    * `pq.lance` holds (id, list_id, pq_code int64) — 8-byte codes instead
-    * of dim*4-byte vectors, range-partitioned by list so fragment stats
-    * prune unprobed lists — plus tiny `pq_centroids.lance` (coarse) and
-    * `pq_codebooks.lance` sidecars. Unlike [[ivfBuildPersist]] the corpus
-    * is NOT copied: at 100 TB the index is ~2-3% of the data, and re-rank
-    * reads the original table for just the candidate ids. */
-  def ivfPqBuildPersist(df: DataFrame, idCol: String, vecCol: String,
-                        nLists: Int, indexPath: String, m: Int = 8,
-                        sampleN: Int = 16384): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val (indexed, centroids) = ivfIndex(df, idCol, vecCol, nLists)
-    // hash-gated like ivfIndex's coarse sample: a plain limit() takes the
-    // FIRST fragments' rows, which on sorted/partitioned corpora trains
-    // the codebooks on one corner of the distribution. A gated draw that
-    // cannot FILL sampleN means the corpus is tiny (< 4*sampleN rows);
-    // there the 256-entry-per-subspace codebooks need every row they can
-    // get (a quartered sample underfits them), so fall back to ungated.
-    val gated = df.select(col(vecCol))
-      .where(pmod(xxhash64(col(idCol)), lit(4)) === 0)
-      .limit(sampleN).collect()
-    val rows = if (gated.length >= sampleN) gated
-               else df.select(col(vecCol)).limit(sampleN).collect()
-    val sample = rows.map(_.getSeq[Float](0).toArray)
-    val codebooks = pqTrain(sample, m)
-    val cbLit = typedlit(codebooks.flatMap(_.map(_.toSeq)).toSeq)
-    // persist across the write: the range sampling would otherwise run
-    // the assignment + PQ-encode kernels twice over the corpus (the
-    // ivfBuildPersist lesson; these codes are 8 B/row — cheap to hold)
-    val coded = indexed
-      .select(col(idCol), col("list_id"),
-        graft.functions.ArrayKernels.pqEncode(col(vecCol), cbLit).as("pq_code"))
-      .persist()
-    try {
-      coded
-        .repartitionByRange(math.max(nLists / 2, 1), col("list_id"))
-        .sortWithinPartitions("list_id")
-        .write.format("lance").mode("overwrite").save(s"$indexPath/pq.lance")
-    } finally coded.unpersist(false)
-    // the PQ index's coarse centroids live in their OWN sidecar
-    // (`pq_centroids.lance`): the plain-IVF `centroids.lance` that
-    // `vectors.lance`'s persisted list assignments depend on is never
-    // overwritten by a PQ rebuild at the same path — consistency between
-    // the two index flavors no longer rests on the Lloyd fit being
-    // bit-identical across builds
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("list_id", "centroid").coalesce(1)
-      .write.format("lance").mode("overwrite").save(s"$indexPath/pq_centroids.lance")
-    // float storage halves the sidecar; training precision stays double
-    codebooks.zipWithIndex.flatMap { case (cb, s) =>
-      cb.zipWithIndex.map { case (cent, b) => (s, b, cent.map(_.toFloat).toSeq) }
-    }.toSeq.toDF("sub", "code", "centroid").coalesce(1)
-      .write.format("lance").mode("overwrite").save(s"$indexPath/pq_codebooks.lance")
-    pqCentroidCache.put(s"$indexPath@-1", centroids)
-    pqCbCache.put(s"$indexPath@-1", codebooks)
-  }
-
-  /** Build the persisted IVF_PQ index FOR a lance dataset, recording the
-    * source head version like [[ivfBuildPersistLance]] does for the plain
-    * flavor. The PQ meta lives in its OWN sidecar (`pq_meta.lance`) so the
-    * two index flavors can share one directory without stomping each
-    * other's publish points (the same reasoning that gave the PQ coarse
-    * centroids their own `pq_centroids.lance`). The meta is written with
-    * the pinned schema from day one — (built_version, vectors_version
-    * = pq.lance head) — so PQ probes are crash-window-safe from the first
-    * build, no legacy upgrade path needed. Returns the recorded source
-    * version. */
-  def ivfPqBuildPersistLance(spark: org.apache.spark.sql.SparkSession,
-                             sourcePath: String, idCol: String, vecCol: String,
-                             nLists: Int, indexPath: String,
-                             m: Int = 8): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val builtV = datasetHead(conf, sourcePath)
-    // pin the snapshot (see ivfBuildPersistLance): a concurrent append
-    // between version read and scan must not leak half-indexed rows
-    val df = spark.read.format("lance")
-      .option("versionAsOf", builtV).load(sourcePath)
-    ivfPqBuildPersist(df, idCol, vecCol, nLists, indexPath, m)
-    // the publish record pins pq.lance AND both sidecars (round-16
-    // review): a rebuild overwrites pq_centroids/pq_codebooks before
-    // this meta write, so without sidecar pins a crash in that window
-    // would hand pinned probes NEW codebooks against OLD pinned codes —
-    // garbage ADC scores. vectors_version keeps its name for the shared
-    // metaOf reader (it is the pq.lance pin here).
-    import spark.implicits._
-    Seq((builtV, datasetHead(conf, s"$indexPath/pq.lance"),
-         datasetHead(conf, s"$indexPath/pq_centroids.lance"),
-         datasetHead(conf, s"$indexPath/pq_codebooks.lance")))
-      .toDF("built_version", "vectors_version",
-            "centroids_version", "codebooks_version")
-      .coalesce(1).write.format("lance").mode("overwrite")
-      .save(s"$indexPath/pq_meta.lance")
-    metaCache.remove(s"$indexPath/pq_meta.lance")
-    builtV
-  }
-
-  /** Incrementally extend a persisted IVF_PQ index over the rows appended
-    * to `sourcePath` after the recorded build version — [[ivfUpdateIndex]]
-    * for the PQ flavor (the crate's `optimize_indices` covers IVF_PQ the
-    * same way): tail vectors assign to the EXISTING coarse centroids and
-    * encode with the EXISTING codebooks (no re-train of either — one
-    * codegen NearestCentroid + PqEncode pass over the post-build
-    * fragments only), landing in `pq.lance` through ONE mergeInsert
-    * commit keyed on `idCol`, so a deleted-then-re-appended row REPLACES
-    * its stale code. Same publish protocol as the plain flavor: probes
-    * pin `pq.lance` at the `pq_meta.lance`-recorded version, a crash
-    * between the mergeInsert and the meta write leaves an orphan pinned
-    * probes never see, and the next update restores-then-reapplies.
-    * Returns the covered source version. */
-  def ivfPqUpdateIndex(spark: org.apache.spark.sql.SparkSession,
-                       sourcePath: String, indexPath: String,
-                       idCol: String, vecCol: String,
-                       writePartitions: Int = 2): Long = {
-    import graft.sources.lance.{LanceFormat, LanceMaintenance, MaintenanceLock}
-    val conf = spark.sessionState.newHadoopConf()
-    MaintenanceLock.withLock(indexPath, conf) {
-      val pqPath = s"$indexPath/pq.lance"
-      val centsPath = s"$indexPath/pq_centroids.lance"
-      val cbsPath = s"$indexPath/pq_codebooks.lance"
-      val metaPath = s"$indexPath/pq_meta.lance"
-      val (fs, mp) = LanceFormat.fileSystem(metaPath, conf)
-      require(fs.exists(mp),
-        s"$indexPath has no pq_meta.lance — build with ivfPqBuildPersistLance")
-      val mdf = spark.read.format("lance").load(metaPath)
-      val r = mdf.head()
-      val builtV = r.getLong(0)
-      val vv0 = r.getLong(r.fieldIndex("vectors_version"))
-      def pinOf(name: String, path: String): Long =
-        if (mdf.schema.fieldNames.contains(name))
-          r.getLong(r.fieldIndex(name))
-        else datasetHead(conf, path) // pre-sidecar-pin meta: head
-      // sweep a crashed update's orphaned index commit AND a crashed
-      // rebuild's sidecar overwrite BEFORE anything: the recorded
-      // versions are the last published state, and encoding the tail
-      // with drifted codebooks would publish codes no single LUT can
-      // score
-      if (datasetHead(conf, pqPath) != vv0)
-        LanceMaintenance.restore(spark, pqPath, vv0)
-      Seq((centsPath, pinOf("centroids_version", centsPath)),
-          (cbsPath, pinOf("codebooks_version", cbsPath))).foreach {
-        case (p, v) =>
-          if (datasetHead(conf, p) != v) LanceMaintenance.restore(spark, p, v)
-      }
-      val (cvPub, cbPub) = (datasetHead(conf, centsPath), datasetHead(conf, cbsPath))
-      val headV = datasetHead(conf, sourcePath)
-      val publishedVv =
-        if (headV == builtV) datasetHead(conf, pqPath)
-        else {
-          val cLit = typedlit(
-            pqCentroids(spark, indexPath, Some(cvPub)).map(_.toSeq).toSeq)
-          val cbLit = typedlit(
-            pqCodebooks(spark, indexPath, Some(cbPub)).flatMap(_.map(_.toSeq)).toSeq)
-          val idxCols = spark.read.format("lance").load(pqPath)
-            .schema.fieldNames
-          // persist the encoded tail: mergeInsert consumes its source
-          // several times and repartitionByRange samples its child — the
-          // ivfUpdateIndex lesson, which measured the kernels re-running
-          // four to five times without this
-          val assigned = spark.read.format("lance")
-            .option("fromVersion", builtV).option("versionAsOf", headV)
-            .load(sourcePath)
-            .withColumn("list_id",
-              graft.functions.ArrayKernels.nearestCentroid(col(vecCol), cLit))
-            .withColumn("pq_code",
-              graft.functions.ArrayKernels.pqEncode(col(vecCol), cbLit))
-            .select(idxCols.map(col).toIndexedSeq: _*)
-            .persist()
-          try {
-            LanceMaintenance.mergeInsert(spark, pqPath,
-              assigned
-                .repartitionByRange(math.max(writePartitions, 1), col("list_id"))
-                .sortWithinPartitions("list_id"),
-              Seq(idCol))
-          } finally assigned.unpersist(false)
-          datasetHead(conf, pqPath)
-        }
-      import spark.implicits._
-      Seq((headV, publishedVv, cvPub, cbPub))
-        .toDF("built_version", "vectors_version",
-              "centroids_version", "codebooks_version")
-        .coalesce(1).write.format("lance").mode("overwrite").save(metaPath)
-      metaCache.remove(metaPath)
-      headV
-    }
-  }
-
-  private val pqCbCache = new Lru[Array[Array[Array[Double]]]](32)
-  private val pqCentroidCache = new Lru[Array[Array[Double]]](32)
-
-  /** Test hook: simulate a fresh session for the PQ path (includes the
-    * meta cache — the PQ probe pin reads through it). */
-  private[graft] def clearPqCache(): Unit = {
-    pqCbCache.clear(); pqCentroidCache.clear(); metaCache.clear()
-  }
-
-  /** Coarse centroids of the PQ index (its own sidecar — see
-    * [[ivfPqBuildPersist]]), optionally pinned at a meta-recorded
-    * sidecar version (cache key carries the pin: a crashed-rebuild
-    * window's pinned read must not serve a pre-crash head read). */
-  def pqCentroids(spark: org.apache.spark.sql.SparkSession,
-                  indexPath: String,
-                  pin: Option[Long] = None): Array[Array[Double]] =
-    pqCentroidCache.getOrLoad(s"$indexPath@${pin.getOrElse(-1L)}") {
-      val base = spark.read.format("lance")
-      pin.fold(base)(v => base.option("versionAsOf", v))
-        .load(s"$indexPath/pq_centroids.lance")
-        .orderBy("list_id").collect()
-        .map(_.getSeq[Double](1).toArray)
-    }
-
-  def pqCodebooks(spark: org.apache.spark.sql.SparkSession,
-                  indexPath: String,
-                  pin: Option[Long] = None): Array[Array[Array[Double]]] =
-    pqCbCache.getOrLoad(s"$indexPath@${pin.getOrElse(-1L)}") {
-      val base = spark.read.format("lance")
-      pin.fold(base)(v => base.option("versionAsOf", v))
-        .load(s"$indexPath/pq_codebooks.lance")
-        .orderBy("sub", "code").collect()
-        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-        .map(_._2.map(_.getSeq[Float](2).map(_.toDouble).toArray)).toArray
-    }
 
   /** Probe an IVF_PQ index: pick `nProbe` lists driver-side, scan only
     * their fragments of `pq.lance`, score codes with the one-lookup-per-
@@ -1049,9 +819,9 @@ object Similarity {
                   query: Seq[Float], k: Int, nProbe: Int = DefaultNProbe,
                   rerank: Int = 4): DataFrame = {
     val cand = ivfPqCandidates(spark, indexPath, idCol, query, k, nProbe, rerank)
-    // Exact re-rank with NO driver collect (the ivfSearchPersistedLive
-    // shape): the corpus semi-joins the broadcast ADC top-(k·rerank)
-    // candidate ids, and when the corpus is a lance scan its
+    // Exact re-rank with NO driver collect (the liveness-join shape): the
+    // corpus semi-joins the broadcast ADC top-(k·rerank) candidate ids,
+    // and when the corpus is a lance scan its
     // SupportsRuntimeV2Filtering receives the realized ids as an IN-list
     // zone filter through the PartitionPruning subquery that REUSES the
     // candidate broadcast — bounded point reads of candidate rows, never
@@ -1073,22 +843,12 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       idCol: String, query: Seq[Float], k: Int, nProbe: Int,
       rerank: Int): DataFrame = {
-    // ONE atomic publish-record read covers codes AND sidecars: inside a
-    // crashed-rebuild window the head sidecars already hold the NEW
-    // codebooks while the pin still points at OLD codes — scoring one
-    // with the other would be garbage, so all three reads pin together
-    val pqMeta = metaOf(spark, indexPath, "pq_meta.lance")
-    val cents = pqCentroids(spark, indexPath, pqMeta.flatMap(_.centsPin))
-    val cbs = pqCodebooks(spark, indexPath, pqMeta.flatMap(_.cbsPin))
+    val (codes, sc) = pinnedIndex(spark, indexPath, Pq,
+      metaOf(spark, indexPath, Pq))
+    val cbs = sc.codebooks
     val m = cbs.length
     val dsub = cbs(0)(0).length
     val qd = query.map(_.toDouble).toArray
-    def dist2(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < math.min(c.length, qd.length)) { val d = c(i) - qd(i); s += d * d; i += 1 }
-      s
-    }
-    val probeLists = cents.zipWithIndex.sortBy(p => dist2(p._1)).take(nProbe).map(_._2)
     // ADC lookup table: dot(query_s, code) and |code|^2 per (subspace, code)
     val lut = new Array[Double](2 * m * 256)
     var s = 0
@@ -1105,17 +865,8 @@ object Similarity {
       s += 1
     }
     val qNorm = math.sqrt(qd.map(x => x * x).sum)
-    // Publish pin (the ivfSearchPersistedAt discipline for the PQ
-    // flavor): an index built through ivfPqBuildPersistLance carries a
-    // pq_meta.lance whose vectors_version records the last PUBLISHED
-    // pq.lance state, so a crashed ivfPqUpdateIndex's orphaned commit is
-    // invisible to probes. No-meta indexes (plain ivfPqBuildPersist on a
-    // DataFrame) read head, as before.
-    val base = spark.read.format("lance")
-    val pinned = pqMeta.flatMap(_.vecPin)
-      .fold(base)(v => base.option("versionAsOf", v))
-    pinned.load(s"$indexPath/pq.lance")
-      .filter(col("list_id").isin(probeLists.toIndexedSeq: _*))
+    codes
+      .filter(col("list_id").isin(probeLists(sc.centroids, query, nProbe): _*))
       .select(col(idCol),
         (graft.functions.ArrayKernels.pqAdcScore(col("pq_code"), typedlit(lut.toSeq))
           / lit(qNorm)).as("acos"))
@@ -1149,10 +900,8 @@ object Similarity {
                               query: Seq[Float], k: Int,
                               nProbe: Int = DefaultNProbe,
                               rerank: Int = 4): DataFrame = {
-    val builtV = metaOf(spark, indexPath, "pq_meta.lance").getOrElse(
-      throw new IllegalStateException(
-        s"$indexPath has no pq_meta.lance — build with ivfPqBuildPersistLance"))
-      .built
+    val builtV = metaOf(spark, indexPath, Pq)
+      .getOrElse(throw noMeta(indexPath, Pq)).built
     val live = spark.read.format("lance").load(sourcePath)
     val idxTop = ivfPqSearch(spark, indexPath, live, idCol, vecCol,
       query, k, nProbe, rerank)

@@ -375,13 +375,32 @@ class LanceProcedureSpec extends AnyFunSuite {
       s"CALL lance.optimize_ivf_index('$ds', 'vec_id', 'embedding', '$ix')")
       .as[Long].head()
     assert(covered == 2L) // build at v1, append made v2
-    graft.operators.Similarity.clearCentroidCache()
+    graft.operators.Similarity.clearIndexCaches()
     val q = spark.read.format("lance").load(ds)
       .filter(col("vec_id") === 45L).select("embedding").head().getSeq[Float](0)
     val top = graft.operators.Similarity.ivfSearchPersisted(
       spark, ix, "vec_id", "embedding", q, k = 1, nProbe = 4)
       .select("vec_id").as[Long].head()
     assert(top == 45L)
+  }
+
+  test("optimize_ivf_index on an index without meta names the build to run") {
+    val base = java.nio.file.Files.createTempDirectory("graft-proc-ivfnometa").toString
+    val ds = s"$base/vecs.lance"
+    val rnd = new scala.util.Random(17)
+    val rows = (1L to 40L).map(i => (i, Array.fill(8)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+    rows.write.format("lance").mode("overwrite").save(ds)
+    val ix = s"$base/ivf"
+    // a DataFrame build writes no meta.lance
+    graft.operators.Similarity.ivfBuildPersist(rows, "vec_id", "embedding",
+      nLists = 4, indexPath = ix)
+    val e = intercept[Exception] {
+      spark.sql(s"CALL lance.optimize_ivf_index('$ds', 'vec_id', 'embedding', '$ix')")
+        .collect()
+    }
+    assert((e.getMessage + String.valueOf(e.getCause)).contains(
+      s"$ix has no meta.lance — build with ivfBuildPersistLance"))
   }
 
   test("create_ivf_pq_index + optimize_ivf_pq_index cover the append tail") {
@@ -404,7 +423,7 @@ class LanceProcedureSpec extends AnyFunSuite {
       s"CALL lance.optimize_ivf_pq_index('$ds', 'vec_id', 'embedding', '$ix')")
       .as[Long].head()
     assert(covered == 2L) // build at v1, append made v2
-    graft.operators.Similarity.clearPqCache()
+    graft.operators.Similarity.clearIndexCaches()
     // the appended row is now a candidate, and exact re-rank tops it out
     val q = spark.read.format("lance").load(ds)
       .filter(col("vec_id") === 45L).select("embedding").head().getSeq[Float](0)

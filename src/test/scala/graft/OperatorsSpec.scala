@@ -391,9 +391,8 @@ class SimilaritySpec extends AnyFunSuite {
     emb.filter(col("vec_id") > 0).write.format("lance")
       .option("sortBy", "vec_id").option("writePartitions", "8")
       .mode("overwrite").save(src)
-    val corpus = spark.read.format("lance").load(src)
-    Similarity.ivfBuildPersist(corpus, "vec_id", "embedding", nLists = 16,
-      indexPath = dir)
+    Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
+      nLists = 16, indexPath = dir)
 
     val before = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
       query, k = 10, nProbe = 6).select("vec_id").as[Long].collect().toSeq
@@ -406,7 +405,7 @@ class SimilaritySpec extends AnyFunSuite {
       query, k = 10, nProbe = 6).select("vec_id").as[Long].collect().toSeq
     assert(gone.forall(stale.contains), "plain probe reads the index copy")
 
-    val liveDf = Similarity.ivfSearchPersistedLive(spark, dir, src,
+    val liveDf = Similarity.ivfSearchCombinedLive(spark, dir, src,
       "vec_id", "embedding", query, k = 10, nProbe = 6)
     // collect liveDf ITSELF (not a derived frame): the plan assertions
     // below inspect the executed scan instances of this QueryExecution
@@ -461,7 +460,7 @@ class SimilaritySpec extends AnyFunSuite {
     emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0)
       .write.format("lance").mode("append").save(src)
 
-    val combined = Similarity.ivfSearchCombined(spark, dir, src,
+    val combined = Similarity.ivfSearchCombinedLive(spark, dir, src,
       "vec_id", "embedding", query, k = 10, nProbe = 6)
       .select("vec_id").as[Long].collect().toSeq
     assert(combined.length == 10)
@@ -539,11 +538,15 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
     val updLabel = srcDf.filter(col("vec_id") === updId)
       .select("label").head().getInt(0)
-    // duplicate id: a second source row under the top hit's id — the
-    // liveness inner join must still return each candidate ONCE
+    // duplicate id: a second source row under the top hit's id, indexed by
+    // a rebuild so both copies are live candidates and the tail is empty
+    // (a tail copy would retire the id through the anti-join instead) —
+    // the liveness inner join must still return each candidate ONCE
     dupRow.toSeq.toDF("vec_id", "embedding", "label")
       .write.format("lance").mode("append").save(src)
-    val live = Similarity.ivfSearchPersistedLive(spark, dir, src,
+    Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
+      nLists = 16, indexPath = dir)
+    val live = Similarity.ivfSearchCombinedLive(spark, dir, src,
       "vec_id", "embedding", query, k = 10, nProbe = 6)
       .select("vec_id").as[Long].collect().toSeq
     assert(live.distinct == live, s"duplicate source id repeated a candidate: $live")
@@ -577,7 +580,7 @@ class SimilaritySpec extends AnyFunSuite {
     val inSession = Similarity.ivfSearchPersisted(spark, idx, "vec_id", "embedding",
       query, k = 10, nProbe = 6).select("vec_id").as[Long].collect().toSeq
     // fresh "session": centroid cache dropped -> reload from centroids.lance
-    Similarity.clearCentroidCache()
+    Similarity.clearIndexCaches()
     val fresh = Similarity.ivfSearchPersisted(spark, idx, "vec_id", "embedding",
       query, k = 10, nProbe = 6).select("vec_id").as[Long].collect().toSeq
     assert(fresh == inSession && fresh.length == 10)
@@ -624,13 +627,29 @@ class SimilaritySpec extends AnyFunSuite {
     val exact = Similarity.cosineTopK(rest, "vec_id", "embedding", query, 10)
       .select("vec_id").as[Long].collect().toSet
     // fresh-session path: caches dropped -> codebooks/centroids reload
-    Similarity.clearCentroidCache()
-    Similarity.clearPqCache()
+    Similarity.clearIndexCaches()
     val approx = Similarity.ivfPqSearch(spark, idx, rest, "vec_id", "embedding",
         query, k = 10, nProbe = 10, rerank = 8)
       .select("vec_id").as[Long].collect().toSet
     val recall = exact.intersect(approx).size / 10.0
     assert(recall >= 0.9, s"IVF_PQ recall $recall: $exact vs $approx")
+  }
+
+  test("IVF_PQ: in-session ADC scores equal a fresh process's, exactly") {
+    // the build's write-through codebooks and the float sidecar a fresh
+    // process reads must be one table: any precision gap between them
+    // shifts the ADC scores of every candidate
+    val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
+    val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
+    val idx = java.nio.file.Files.createTempDirectory("ivfpq_prec").toString
+    Similarity.ivfPqBuildPersist(emb.filter(col("vec_id") > 0), "vec_id", "embedding",
+      nLists = 16, indexPath = idx)
+    def scores(): Seq[(Long, Double)] = Similarity.ivfPqCandidates(spark, idx, "vec_id",
+        query, k = 10, nProbe = 16, rerank = 8)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val inSession = scores()
+    Similarity.clearIndexCaches()
+    assert(scores() == inSession)
   }
 
   test("IVF_PQ probe on fixture embeddings reaches 0.9 recall vs exact") {
@@ -748,7 +767,7 @@ class SimilaritySpec extends AnyFunSuite {
 
     val covered = Similarity.ivfUpdateIndex(spark, src, dir, "vec_id", "embedding")
     // fresh session: pins and centroids reload from the sidecars
-    Similarity.clearCentroidCache()
+    Similarity.clearIndexCaches()
     val got = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
       query, k = 10, nProbe = 16).select("vec_id").as[Long].collect().toSeq
     val exact = Similarity.cosineTopK(spark.read.format("lance").load(src),
@@ -757,7 +776,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == exact, s"full-width probe after update != exact: $got vs $exact")
     // the combined search's tail is now empty — same answer, and the
     // recorded version advanced to the covered head
-    val comb = Similarity.ivfSearchCombined(spark, dir, src, "vec_id", "embedding",
+    val comb = Similarity.ivfSearchCombinedLive(spark, dir, src, "vec_id", "embedding",
       query, k = 10, nProbe = 16).select("vec_id").as[Long].collect().toSeq
     assert(comb == exact)
     assert(spark.read.format("lance").load(s"$dir/meta.lance")
@@ -784,7 +803,7 @@ class SimilaritySpec extends AnyFunSuite {
       .write.format("lance").mode("append").save(src)
 
     Similarity.ivfUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearCentroidCache()
+    Similarity.clearIndexCaches()
     // the mergeInsert keyed on vec_id REPLACED the stale high-cos copy:
     // a plain probe must not serve it, and no id may rank twice
     val got = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
@@ -823,13 +842,13 @@ class SimilaritySpec extends AnyFunSuite {
       .select(spark.read.format("lance").load(s"$dir/vectors.lance")
         .schema.fieldNames.map(col).toIndexedSeq: _*)
     junk.write.format("lance").mode("append").save(s"$dir/vectors.lance")
-    Similarity.clearCentroidCache() // fresh session: pin re-reads from meta
+    Similarity.clearIndexCaches() // fresh session: pin re-reads from meta
     val pinned = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
       query, k = 10, nProbe = 16).select("vec_id").as[Long].collect().toSeq
     assert(pinned == expect, s"orphaned commit leaked into a pinned probe: $pinned")
     // the next update sweeps the orphan before covering new rows
     Similarity.ivfUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearCentroidCache()
+    Similarity.clearIndexCaches()
     val swept = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
       query, k = 10, nProbe = 16).select("vec_id").as[Long].collect().toSeq
     assert(swept == expect && !swept.contains(999999L))
@@ -860,7 +879,7 @@ class SimilaritySpec extends AnyFunSuite {
         col("default_nprobe"))
       .coalesce(1).write.format("lance").mode("overwrite")
       .save(s"$dir/centroids.lance")
-    Similarity.clearCentroidCache() // fresh session: pins re-read from meta
+    Similarity.clearIndexCaches() // fresh session: pins re-read from meta
     val pinned = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
       query, k = 10, nProbe = 4).select("vec_id").as[Long].collect().toSeq
     assert(pinned == expect,
@@ -870,7 +889,7 @@ class SimilaritySpec extends AnyFunSuite {
     emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0)
       .write.format("lance").mode("append").save(src)
     Similarity.ivfUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearCentroidCache()
+    Similarity.clearIndexCaches()
     val sweptCents = spark.read.format("lance").load(s"$dir/centroids.lance")
       .orderBy("list_id").collect().map(_.getSeq[Double](1))
     assert(sweptCents.toSeq == goodCents.toSeq, "sweep did not restore the sidecar")
@@ -892,7 +911,7 @@ class SimilaritySpec extends AnyFunSuite {
     // simulate an index persisted by a pre-pin build: built_version only
     Seq(Tuple1(builtV)).toDF("built_version")
       .coalesce(1).write.format("lance").mode("overwrite").save(s"$dir/meta.lance")
-    Similarity.clearCentroidCache()
+    Similarity.clearIndexCaches()
     emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0)
       .write.format("lance").mode("append").save(src)
     val covered = Similarity.ivfUpdateIndex(spark, src, dir, "vec_id", "embedding")
@@ -900,7 +919,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(m.schema.fieldNames.toSet ==
       Set("built_version", "vectors_version", "centroids_version"))
     assert(m.head().getLong(0) == covered)
-    Similarity.clearCentroidCache()
+    Similarity.clearIndexCaches()
     val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
     val got = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
       query, k = 10, nProbe = 16).select("vec_id").as[Long].collect().toSeq
@@ -931,7 +950,7 @@ class SimilaritySpec extends AnyFunSuite {
 
     val covered = Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
     // fresh session: pin, centroids and codebooks reload from the sidecars
-    Similarity.clearPqCache()
+    Similarity.clearIndexCaches()
     val got = Similarity.ivfPqSearch(spark, dir, corpus, "vec_id", "embedding",
       query, k = 10, nProbe = 16, rerank = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -961,7 +980,7 @@ class SimilaritySpec extends AnyFunSuite {
       .write.format("lance").mode("append").save(src)
 
     Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearPqCache()
+    Similarity.clearIndexCaches()
     // the mergeInsert keyed on vec_id REPLACED the stale code: the
     // published index holds exactly one row for the id, and its ADC score
     // reflects the negated vector (a stale code would ADC-score ~1.0 and
@@ -1003,13 +1022,13 @@ class SimilaritySpec extends AnyFunSuite {
         graft.functions.ArrayKernels.pqEncode(col("embedding"), cbLit))
       .select(idxCols.map(col).toIndexedSeq: _*)
       .write.format("lance").mode("append").save(s"$dir/pq.lance")
-    Similarity.clearPqCache() // fresh session: pin re-reads from pq_meta
+    Similarity.clearIndexCaches() // fresh session: pin re-reads from pq_meta
     val pinned = Similarity.ivfPqCandidates(spark, dir, "vec_id",
       query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
     assert(pinned == expect, s"orphaned pq commit leaked into a pinned probe: $pinned")
     // the next update sweeps the orphan before publishing
     Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearPqCache()
+    Similarity.clearIndexCaches()
     val swept = Similarity.ivfPqCandidates(spark, dir, "vec_id",
       query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
     assert(swept == expect && !swept.contains(999999L))
@@ -1027,9 +1046,6 @@ class SimilaritySpec extends AnyFunSuite {
       nLists = 16, indexPath = dir)
     val expect = Similarity.ivfPqCandidates(spark, dir, "vec_id",
       query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
-    // read the baseline from DISK (the build's write-through cache holds
-    // full-precision training doubles; the sidecar stores floats)
-    Similarity.clearPqCache()
     val goodCbs = Similarity.pqCodebooks(spark, dir).map(_.map(_.toSeq).toSeq).toSeq
 
     // simulate a REBUILD that crashed after overwriting the codebook
@@ -1041,14 +1057,14 @@ class SimilaritySpec extends AnyFunSuite {
         org.apache.spark.sql.functions.transform(col("centroid"), x => -x).as("centroid"))
       .coalesce(1).write.format("lance").mode("overwrite")
       .save(s"$dir/pq_codebooks.lance")
-    Similarity.clearPqCache() // fresh session: pins re-read from pq_meta
+    Similarity.clearIndexCaches() // fresh session: pins re-read from pq_meta
     val pinned = Similarity.ivfPqCandidates(spark, dir, "vec_id",
       query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
     assert(pinned == expect,
       s"drifted head codebooks leaked into a pinned ADC probe: $pinned vs $expect")
     // the next update (even with no new rows) sweeps the drifted sidecar
     Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearPqCache()
+    Similarity.clearIndexCaches()
     val swept = Similarity.pqCodebooks(spark, dir).map(_.map(_.toSeq).toSeq).toSeq
     assert(swept == goodCbs, "sweep did not restore the codebook sidecar")
     val after = Similarity.ivfPqCandidates(spark, dir, "vec_id",
@@ -1084,7 +1100,7 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding", "label")
       .write.format("lance").mode("append").save(src)
 
-    Similarity.clearPqCache()
+    Similarity.clearIndexCaches()
     val got = Similarity.ivfPqSearchCombinedLive(spark, dir, src,
       "vec_id", "embedding", query, k = 10, nProbe = 16, rerank = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -1103,7 +1119,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.9, s"combined-live recall $recall: $exact vs $got")
     // after an incremental update the tail empties and the answer holds
     Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearPqCache()
+    Similarity.clearIndexCaches()
     val after = Similarity.ivfPqSearchCombinedLive(spark, dir, src,
       "vec_id", "embedding", query, k = 10, nProbe = 16, rerank = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -1141,7 +1157,7 @@ class SimilaritySpec extends AnyFunSuite {
     // no driver-side collect: the exact re-rank's corpus scan must have
     // received the REALIZED ADC candidate id set (exactly, not a
     // superset) as a runtime IN-list zone filter — the
-    // ivfSearchPersistedLive contract applied to the PQ path
+    // liveness-join contract of ivfSearchCombinedLive applied to the PQ path
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -1223,7 +1239,7 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.ivfBuildPersist(corpus, "vec_id", "embedding", nLists = 16,
       indexPath = idxW, nProbe = 12)
     graft.plans.GraftAnn.clear()
-    Similarity.clearCentroidCache() // simulate the restart
+    Similarity.clearIndexCaches() // simulate the restart
     Similarity.ivfSearchPersisted(spark, idxW, "vec_id", "embedding",
       query, k = 10, nProbe = 3).collect()
     assert(graft.plans.GraftAnn.lookup(s"$idxW/vectors.lance").get.nProbe == 12,
