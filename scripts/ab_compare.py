@@ -16,12 +16,16 @@ def load(paths):
             per[k] = min(per.get(k, 1e18), v)
     return per, totals
 
-i = sys.argv.index("--")
-old, old_totals = load(sys.argv[1:i])
-new, new_totals = load(sys.argv[i + 1:])
+args = sys.argv[1:]
+i = args.index("--") if "--" in args else -1
+if i < 1 or i == len(args) - 1:
+    print(__doc__.strip(), file=sys.stderr)
+    sys.exit(2)
+old, old_totals = load(args[:i])
+new, new_totals = load(args[i + 1:])
 keys = sorted(set(old) & set(new), key=lambda k: -(abs(new[k] - old[k])))
-print(f"old totals: {old_totals}  min-sum {sum(old.values()):.2f}")
-print(f"new totals: {new_totals}  min-sum {sum(new.values()):.2f}")
+print(f"old: per-run totals {old_totals}  min-per-query sum {sum(old.values()):.2f}")
+print(f"new: per-run totals {new_totals}  min-per-query sum {sum(new.values()):.2f}")
 print(f"{'query':<28} {'old':>7} {'new':>7} {'delta':>7} {'ratio':>6}")
 for k in keys[:40]:
     d = new[k] - old[k]

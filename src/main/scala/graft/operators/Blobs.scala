@@ -1,10 +1,10 @@
 package graft.operators
 
+import graft.sources.lance.SessionConf
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 
 /** Lazy blob access for large binary columns (the lance blob /
   * `storage_class` analogue, re-expressed for this connector's layout).
@@ -42,7 +42,7 @@ object Blobs {
     * order hit mostly-sequential ranges when the scan order is preserved. */
   def fetch(df: DataFrame, refCol: String, outCol: String = "bytes"): DataFrame = {
     val spark = df.sparkSession
-    val serConf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    val serConf = SessionConf.broadcast(spark)
     val outSchema = df.schema.add(outCol, BinaryType, nullable = true)
     val refIdx = df.schema.fieldIndex(refCol)
     df.mapPartitions { rows =>
@@ -59,7 +59,7 @@ object Blobs {
             val path = ref.getString(0)
             val in = cache.getOrElseUpdate(path, {
               val p = new org.apache.hadoop.fs.Path(path)
-              p.getFileSystem(serConf.value).open(p)
+              p.getFileSystem(serConf.value.value).open(p)
             })
             val b = new Array[Byte](ref.getLong(2).toInt)
             in.readFully(ref.getLong(1), b)

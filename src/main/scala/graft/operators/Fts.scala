@@ -170,7 +170,7 @@ object Fts {
     * overwrites stats.lance, advancing that version, and invalidates
     * here too. A null key marks a transient store failure: the lookup
     * bypasses the cache (fresh read) and nothing is cached. */
-  private val statsCache = new graft.functions.Lru[(Any, (Long, Long))](32)
+  private val statsCache = new graft.functions.Lru[String, (Any, (Long, Long))](32)
 
   /** stats.lance's head version boxed as the pinless freshness key, or
     * null on a transient store failure (callers bypass the cache). */
@@ -218,7 +218,7 @@ object Fts {
   /** Cached pins, keyed by the built.lance head version they were read
     * at — a cross-process publish advances that version, so the next
     * [[pinsOf]] call picks it up (one manifest stat per read, no TTL). */
-  private val pinsCache = new graft.functions.Lru[(Long, Option[Pins])](32)
+  private val pinsCache = new graft.functions.Lru[String, (Long, Option[Pins])](32)
 
   /** Last-known pins per index path, NON-evicting by design: this map
     * backs only the transient-store-failure fallback in [[pinsOf]], whose

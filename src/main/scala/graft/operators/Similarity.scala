@@ -238,7 +238,7 @@ object Similarity {
 
   // bounded LRU: a long-lived JVM hosting many sessions must not
   // accumulate one cached index per (session, key) forever
-  private val ivfCache = new Lru[(DataFrame, Array[Array[Double]])](32)
+  private val ivfCache = new Lru[String, (DataFrame, Array[Array[Double]])](32)
   def ivfIndexCached(df: DataFrame, idCol: String, vecCol: String,
                      nLists: Int, key: String): (DataFrame, Array[Array[Double]]) = {
     // reference-keyed session ids: identityHashCode (used before round 8)
@@ -575,7 +575,7 @@ object Similarity {
     * in-process, and `recheck` (the update's lock-held read) ignores it.
     * The cache key is the meta dataset path, so the two flavors of one
     * index directory never collide. */
-  private val metaCache = new Lru[Option[(Long, IdxMeta)]](32)
+  private val metaCache = new Lru[String, Option[(Long, IdxMeta)]](32)
   private def metaOf(spark: org.apache.spark.sql.SparkSession,
                      indexPath: String, f: Flavor,
                      recheck: Boolean = false): Option[IdxMeta] = {
@@ -618,7 +618,7 @@ object Similarity {
     * crash, or vice versa. */
   private final case class Sidecars(centroids: Array[Array[Double]], nProbe: Int,
                                     codebooks: Array[Array[Array[Double]]])
-  private val sidecarCache = new Lru[Sidecars](32)
+  private val sidecarCache = new Lru[String, Sidecars](32)
   private def sidecarKey(indexPath: String, f: Flavor, centsPin: Option[Long],
                          cbsPin: Option[Long]): String =
     s"$indexPath/${f.centroidsName}@${centsPin.getOrElse(-1L)}@${cbsPin.getOrElse(-1L)}"

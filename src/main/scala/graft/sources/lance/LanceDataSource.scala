@@ -4,6 +4,7 @@ import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -13,6 +14,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -1016,11 +1018,9 @@ class LanceScan(path: String, full: StructType, required: StructType,
     // filters before building the reader factory, so page-level zone
     // pruning sees them too (and an earlier-built factory just prunes less)
     val zf = allZoneFilters.flatMap(z => byName.get(z.colName).map(f => (f.id, z)))
-    // ship the session's Hadoop conf to executors (object-store credentials,
-    // fs settings) — a bare `new Configuration()` there would only see
-    // defaults, breaking any non-local filesystem
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
+    // the session's Hadoop conf reaches executors as one broadcast per
+    // session (see SessionConf), not a copy inside every task binary
+    val conf = SessionConf.broadcast(SparkSession.active)
     // Spark requires every partition of a scan to agree on columnar vs
     // row-based — one deleted fragment (or one fragment predating an added
     // column, which the row reader null-fills) forces the scan row-based
@@ -1039,7 +1039,7 @@ class LanceScan(path: String, full: StructType, required: StructType,
     // Spark requires all partitions of a scan to agree row-vs-columnar
     val anySplit = limit.isEmpty && splitRows > 0 &&
       manifest.fragments.exists(_.physicalRows > splitRows)
-    new LanceReaderFactory(cols.toArray, serConf, zf, rowAddrPos,
+    new LanceReaderFactory(cols.toArray, conf, zf, rowAddrPos,
       anyDeletions || anyMissing || anySplit, addrFilters, rowIdPos)
   }
 }
@@ -1126,7 +1126,7 @@ object ColSpec {
 }
 
 class LanceReaderFactory(colSpecs: Array[ColSpec],
-                         conf: org.apache.spark.util.SerializableConfiguration,
+                         conf: Broadcast[SerializableConfiguration],
                          zf: Seq[(Int, ZoneFilter)] = Nil,
                          rowAddrPos: Int = -1,
                          anyDeletions: Boolean = false,
@@ -1135,7 +1135,7 @@ class LanceReaderFactory(colSpecs: Array[ColSpec],
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[LanceInputPartition]
-    new LancePartitionReader(p, colSpecs, zf, conf.value, rowAddrPos, addrFilters,
+    new LancePartitionReader(p, colSpecs, zf, conf.value.value, rowAddrPos, addrFilters,
                              rowIdPos)
   }
 
@@ -1158,7 +1158,7 @@ class LanceReaderFactory(colSpecs: Array[ColSpec],
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[LanceInputPartition]
-    new LanceColumnarReader(p, colSpecs, zf, conf.value)
+    new LanceColumnarReader(p, colSpecs, zf, conf.value.value)
   }
 }
 
@@ -1607,8 +1607,8 @@ private[lance] final class FragmentPages(part: LanceInputPartition,
 /** Columnar reader: one ColumnarBatch PER PAGE, decoded straight into
   * OnHeapColumnVectors ([[LanceVectorDecoder]] — no boxed intermediates). */
 class LanceColumnarReader(part: LanceInputPartition, colSpecs: Array[ColSpec],
-                          zoneFilters: Seq[(Int, ZoneFilter)] = Nil,
-                          conf: Configuration = new Configuration())
+                          zoneFilters: Seq[(Int, ZoneFilter)],
+                          conf: Configuration)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -1760,8 +1760,8 @@ class LanceColumnarReader(part: LanceInputPartition, colSpecs: Array[ColSpec],
 /** Row reader (list/struct projections): pages decode lazily one at a
   * time; resident memory is one page's boxed values per column. */
 class LancePartitionReader(part: LanceInputPartition, colSpecs: Array[ColSpec],
-                           zoneFilters: Seq[(Int, ZoneFilter)] = Nil,
-                           conf: Configuration = new Configuration(),
+                           zoneFilters: Seq[(Int, ZoneFilter)],
+                           conf: Configuration,
                            rowAddrPos: Int = -1,
                            addrFilters: Seq[AddrFilter] = Nil,
                            rowIdPos: Int = -1)

@@ -140,7 +140,7 @@ object LanceMaintenance {
     val grpIdx = outSchema.fieldIndex("__grp")
     val dataIdxs = schema.fieldNames.map(outSchema.fieldIndex)
     val dataTypes = schema.fields.map(_.dataType)
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val serConf = SessionConf.broadcast(spark)
     val pathStr = path
     val fslB = fsl
 
@@ -174,7 +174,7 @@ object LanceMaintenance {
           fname = s"${java.util.UUID.randomUUID()}.lance"
           val fp = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(
             new org.apache.hadoop.fs.Path(pathStr), "data"), fname)
-          os = fp.getFileSystem(serConf.value).create(fp, true)
+          os = fp.getFileSystem(serConf.value.value).create(fp, true)
           writer = new LanceFragmentWriter(os, org.apache.spark.sql.types.StructType(
             schema.fields), fsl = fslB)
           rows = 0L
@@ -277,7 +277,7 @@ object LanceMaintenance {
     val delDir = new org.apache.hadoop.fs.Path(p, "_deletions")
     fs.mkdirs(delDir)
     val delDirStr = delDir.toString
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val serConf = SessionConf.broadcast(spark)
     val readVersion = manifest.version
     // tiny closure state: fragId -> existing deletion file to merge, and
     // the valid fragment ids (a matched addr outside them means the scan
@@ -296,7 +296,7 @@ object LanceMaintenance {
         java.util.Arrays.sort(offs)
         val merged = existing.get(frag) match {
           case Some(name) =>
-            val bs = DeletionFiles.read(s"$delDirStr/$name", serConf.value)
+            val bs = DeletionFiles.read(s"$delDirStr/$name", serConf.value.value)
             offs.foreach(bs.set)
             val out = new Array[Int](bs.cardinality())
             var i = bs.nextSetBit(0); var k = 0
@@ -314,7 +314,7 @@ object LanceMaintenance {
         val id = new java.security.SecureRandom().nextInt(Int.MaxValue).toLong
         val meta = LanceFormat.DeletionFileMeta(readVersion, id, 1, merged.length.toLong)
         val (dfs, dp) = LanceFormat.fileSystem(
-          s"$delDirStr/${meta.fileName(frag)}", serConf.value)
+          s"$delDirStr/${meta.fileName(frag)}", serConf.value.value)
         val out = dfs.create(dp, true)
         try out.write(Roaring.serialize(merged)) finally out.close()
         (frag, id, merged.length.toLong)
@@ -379,7 +379,7 @@ object LanceMaintenance {
       .join(right.withColumnRenamed(rightOn, "__k"), Seq("__k"), "left")
       .drop("__k")
     val physRows = manifest.fragments.map(fr => fr.id -> fr.physicalRows).toMap
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val serConf = SessionConf.broadcast(spark)
     val pathStr = path
     val prepared = joined
       .withColumn("__frag", expr("shiftrightunsigned(__addr, 32)"))
@@ -416,7 +416,7 @@ object LanceMaintenance {
           fname = s"${java.util.UUID.randomUUID()}.lance"
           val fp = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(
             new org.apache.hadoop.fs.Path(pathStr), "data"), fname)
-          os = fp.getFileSystem(serConf.value).create(fp, true)
+          os = fp.getFileSystem(serConf.value.value).create(fp, true)
           writer = new LanceFragmentWriter(os, sliceSchema)
           nextOff = 0L
         }

@@ -69,9 +69,9 @@ class LanceMicroBatchStream(path: String, colSpecs: Array[ColSpec],
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
     // deletions may appear on any batch's fragments: stay row-based
-    new LanceReaderFactory(colSpecs, serConf, Nil, -1, anyDeletions = true)
+    new LanceReaderFactory(colSpecs, SessionConf.broadcast(SparkSession.active), Nil, -1,
+      anyDeletions = true)
   }
 
   override def commit(end: Offset): Unit = ()

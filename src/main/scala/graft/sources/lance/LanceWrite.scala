@@ -4,6 +4,7 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
@@ -190,15 +191,14 @@ class LanceBatchWrite(path: String, schema: StructType, truncate: Boolean,
                       bucketBy: Option[(Int, String)] = None)
     extends BatchWrite {
 
-  private val hadoopConf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  private val hadoopConf = SessionConf.broadcast(org.apache.spark.sql.SparkSession.active)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new LanceDataWriterFactory(path, schema, hadoopConf, fsl, codec, partitionBy,
       bucketBy)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = hadoopConf.value
+    val conf = hadoopConf.value.value
     val dataset = new Path(path)
     val fs = dataset.getFileSystem(conf)
     val specs = messages.toSeq.collect { case LanceCommitMessage(fr) => fr }
@@ -296,7 +296,7 @@ class LanceBatchWrite(path: String, schema: StructType, truncate: Boolean,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = hadoopConf.value
+    val conf = hadoopConf.value.value
     val dataset = new Path(path)
     val fs = dataset.getFileSystem(conf)
     messages.collect { case LanceCommitMessage(frags) =>
@@ -307,7 +307,7 @@ class LanceBatchWrite(path: String, schema: StructType, truncate: Boolean,
 }
 
 class LanceDataWriterFactory(path: String, schema: StructType,
-                             conf: SerializableConfiguration,
+                             conf: Broadcast[SerializableConfiguration],
                              fsl: Map[String, Int] = Map.empty,
                              codec: String = "",
                              partitionBy: Seq[String] = Nil,
@@ -316,9 +316,9 @@ class LanceDataWriterFactory(path: String, schema: StructType,
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     bucketBy match {
       case Some((n, c)) =>
-        new LanceBucketedDataWriter(path, schema, conf.value, fsl, codec, n, c)
+        new LanceBucketedDataWriter(path, schema, conf.value.value, fsl, codec, n, c)
       case None =>
-        new LanceDataWriter(path, schema, conf.value, fsl, codec, partitionBy)
+        new LanceDataWriter(path, schema, conf.value.value, fsl, codec, partitionBy)
     }
 }
 

@@ -131,6 +131,29 @@ class LanceSpec extends AnyFunSuite {
     assert(sum == 199999L * 200000 / 2)
   }
 
+  test("reader and writer factories stay small: the Hadoop conf is not in the task binary") {
+    val ds = tmpDs()
+    val df = spark.range(100).selectExpr("id", "CAST(id AS DOUBLE) AS v")
+    df.coalesce(1).write.format("lance").mode("append").save(ds)
+    def javaBytes(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o)
+      out.close()
+      bytes.size()
+    }
+    val readers = spark.read.format("lance").load(ds).queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.readerFactory
+    }
+    assert(readers.size == 1)
+    val writer = new graft.sources.lance.LanceBatchWrite(ds, df.schema, truncate = false)
+      .createBatchWriterFactory(null)
+    for (f <- readers :+ writer) {
+      val n = javaBytes(f)
+      assert(n < 16 * 1024, s"${f.getClass.getSimpleName} serializes to $n bytes")
+    }
+  }
+
   test("take path: _rowaddr predicates prune fragments and pages") {
     val ds = tmpDs()
     // 4 single-page fragments of 1000 rows each (fragment ids 0..3)

@@ -3,7 +3,9 @@ package graft.sources.lance
 import java.net.URI
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataOutputStream, FileAlreadyExistsException,
+  Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
 
 /** Test-only Hadoop filesystem under the `strictfs://` scheme with
   * object-store/HDFS-like rename semantics: rename onto an existing
@@ -24,6 +26,19 @@ class StrictFs extends RawLocalFileSystem {
 /** FileContext binding (`fs.AbstractFileSystem.strictfs.impl`). */
 class StrictAbstractFs(uri: URI, conf: Configuration)
   extends DelegateToFileSystem(uri, new StrictFs, conf, "strictfs", false)
+
+/** [[StrictFs]] under a second scheme, `latefs://`, that a test registers
+  * only AFTER the session has already shipped its Hadoop conf to
+  * executors — so reaching it from a task proves the task saw the new
+  * conf. */
+class LateFs extends StrictFs {
+  override def getScheme: String = "latefs"
+  override def getUri: URI = URI.create("latefs:///")
+}
+
+/** FileContext binding (`fs.AbstractFileSystem.latefs.impl`). */
+class LateAbstractFs(uri: URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new LateFs, conf, "latefs", false)
 
 /** Test-only filesystem under `s3like://` modeling the WORST object-store
   * rename semantics: rename lands even when the destination exists
@@ -50,6 +65,24 @@ class OverwritingFs extends RawLocalFileSystem {
     * so an mtime "heartbeat" that relies on setTimes visibly fails here
     * (MaintenanceLock heartbeats by re-PUTting the entry instead). */
   override def setTimes(p: Path, mtime: Long, atime: Long): Unit = ()
+
+  /** The create-no-overwrite PUT that create-mode commits rely on is a
+    * conditional write (If-None-Match), atomic on the store. RawLocal's is
+    * an exists check followed by an open, so two committers racing for one
+    * version could both "win" and one manifest silently replace the other.
+    * Claim the path with an exclusive (O_EXCL) create first. */
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    if (!overwrite) {
+      mkdirs(f.getParent)
+      try java.nio.file.Files.createFile(pathToFile(f).toPath)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          throw new FileAlreadyExistsException(s"File already exists: $f")
+      }
+    }
+    super.create(f, true, bufferSize, replication, blockSize, progress)
+  }
 }
 
 /** FileContext binding that skips the client-side dest-existence check —

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the [[StrictFs]] object-store stand-in): every path in the connector
   * that resolves a FileSystem from a path + Hadoop conf must work when
   * the scheme is not the default local one — including from executors,
-  * which see the conf only through SerializableConfiguration.
+  * which see the conf only through the session's conf broadcast
+  * ([[SessionConf]]), re-broadcast whenever the conf's content changes.
   */
 class StrictFsSpec extends AnyFunSuite {
   lazy val spark = {
@@ -244,6 +245,34 @@ class StrictFsSpec extends AnyFunSuite {
       assert(graft.operators.ScalarIndex.lookup(spark, ds, ix, Seq(3))
         .count() == 14)
     } finally hc.unset("graft.lance.commit.mode")
+  }
+
+  test("a scheme registered after the conf was broadcast reaches executors") {
+    val dir = java.nio.file.Files.createTempDirectory("lance_latefs")
+    // a file:// round-trip first: the session's conf is now broadcast
+    val local = s"file://$dir/local.lance"
+    spark.range(10).selectExpr("id", "CAST(id AS DOUBLE) AS v")
+      .coalesce(1).write.format("lance").mode("append").save(local)
+    assert(spark.read.format("lance").load(local).filter("v >= 5.0").count() == 5)
+
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.latefs.impl", "fs.AbstractFileSystem.latefs.impl",
+      "fs.latefs.impl.disable.cache")
+    hc.set(keys(0), classOf[LateFs].getName)
+    hc.set(keys(1), classOf[LateAbstractFs].getName)
+    // uncached, so a task holding the old conf cannot borrow an instance
+    // resolved elsewhere in the JVM: it must find the scheme in its own conf
+    hc.setBoolean(keys(2), true)
+    try {
+      val ds = s"latefs://$dir/ds.lance"
+      spark.range(100).selectExpr("id", "CAST(id AS DOUBLE) AS v")
+        .coalesce(2).write.format("lance").mode("append").save(ds)
+      def sumIds() = spark.read.format("lance").load(ds)
+        .agg(sum("id")).head.getLong(0)
+      assert(sumIds() == 4950L)
+      LanceMaintenance.deleteWhere(spark, ds, "id % 10 = 0")
+      assert(sumIds() == 4950L - (0 until 100 by 10).sum)
+    } finally keys.foreach(hc.unset)
   }
 
   test("strictfs refuses rename-onto-existing (the semantics under test)") {
