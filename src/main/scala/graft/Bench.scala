@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession.{jstr, rootLine}
 
 /** Per-round benchmark main (driver contract): runs every declared query
   * on SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -11,52 +11,10 @@ import org.apache.spark.sql.SparkSession
   * startup isn't attributed to the first query.
   */
 object Bench {
-  /** First line of the outermost exception — the root cause a human needs,
-    * kept to one line so the driver's ~2000-char stdout tail preserves it. */
-  private def rootLine(e: Throwable): String = {
-    val msg = Option(e.getMessage).getOrElse("").linesIterator.take(2).mkString(" ").take(300)
-    s"${e.getClass.getSimpleName}: $msg"
-  }
-  private def jstr(s: String): String =
-    "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      raw.trim.toIntOption.filter(_ > 0).getOrElse {
-        System.err.println(
-          s"usage: SPARK_GRAFT_CPUS must be a positive integer core count (got '$raw')")
-        sys.exit(2)
-      }
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.catalog.lance", "graft.sources.lance.LanceCatalog")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      // single-file testdata tables: split scans at row-group grain so a
-      // 10x-SF table still fans out across cores (at cluster scale the
-      // many-files default of 128m is right; this knob matches the
-      // sandbox's one-file-per-table layout)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // dev knob: SPARK_GRAFT_AQE=false to measure AQE's fixed per-query
-      // cost; the graded default stays ON (runtime coalescing + skew-join
-      // are the 100 TB posture)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode floor trims: no locality wait (single host), no shuffle
-      // compression (tmpfs-fast disks; the codec CPU is the bottleneck)
-      .config("spark.locality.wait", "0")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
 
     // warmup: load all fixture views + run one small query end to end.
     // NON-FATAL: a warmup failure (e.g. a fixture schema drift, round-5's

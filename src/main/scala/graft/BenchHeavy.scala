@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession.{jstr, rootLine}
 
 /** Scale-decade smoke for the heavy families (dedup / sketch / FTS /
   * lance-lifecycle): runs each query at TWO scale factors with the same
@@ -60,9 +60,6 @@ object BenchHeavy {
     "l24_incremental_matview", "l25_ndv_sidecar", "l26_days_partitioned",
     "l27_joined_matview")
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfSmall = if (args.length > 0) args(0) else "localdata/sf1"
     val sfBig   = if (args.length > 1) args(1) else "localdata/sf10"
@@ -78,34 +75,9 @@ object BenchHeavy {
         allHeavy.filter(want.contains) // keep canonical (fixture-building) order
       case None => allHeavy
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.catalog.lance", "graft.sources.lance.LanceCatalog")
-      // at sf100 the default 32 shuffle partitions put ~5M census rows
-      // in ONE sort buffer — raise via env for the biggest SFs exactly
-      // as a cluster deployment scales partitions with data (AQE then
-      // coalesces small stages back down)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.locality.wait", "0")
-      // UNLIKE Bench's sf0.1 config: decade queries are DISK-bound (d28's
-      // declared-quadratic pair dump sorts ~560M rows at sf10 — the
-      // uncompressed spill exhausted this sandbox's disk), so shuffle and
-      // spill compression stay ON here. At sf0.1 the codec CPU dominates
-      // and Bench keeps them off.
-      .config("spark.shuffle.compress", "true")
-      .config("spark.shuffle.spill.compress", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // UNLIKE Bench: decade queries are disk-bound, so shuffle and spill
+    // compression stay ON here
+    val spark = GraftSession.local(GraftSession.cpus(32), compressShuffle = true)
 
     def runOnce(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
@@ -160,8 +132,7 @@ object BenchHeavy {
             if (warmOnce.contains(n) && passes < 2) runOnce(n, dir)
             Right((1 to passes).map(_ => runOnce(n, dir)))
           }
-          catch { case e: Throwable =>
-            Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}") }
+          catch { case e: Throwable => Left(rootLine(e)) }
         println(f"[heavy] $dir $n%-26s ${r.fold(identity, ts => f"${ts.min}%8.3f s  (runs: ${ts.map(t => f"$t%.2f").mkString(", ")})")}")
         n -> r
       }.toMap

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scales the driver's synthetic testdata to a larger scale factor by
@@ -65,13 +65,8 @@ object DataGen {
     val Array(srcDir, dstDir, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
     val dirMode = args.length > 3 && args(3) == "dir"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-datagen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // generation is write- and disk-bound (15 GB at sf100): compress
+    val spark = GraftSession.local(GraftSession.cpus(32), compressShuffle = true)
     new java.io.File(dstDir).mkdirs()
 
     // SPARK_GRAFT_ONLY_TABLES=embeddings[,documents,...]: generate just

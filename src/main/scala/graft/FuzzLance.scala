@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Connector-differential fuzzing: every generated SQL query
   * (scripts/fuzzgen.py) runs once against the parquet fixtures and once
   * against a LANCE ROUND-TRIP of the same tables, per storage layout —
@@ -35,24 +33,8 @@ object FuzzLance {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, queryFile) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val txt = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(queryFile)), "UTF-8")
-    val qs = """"(fz[^"]+)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(txt)
-      .map(m => m.group(1) ->
-        m.group(2).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq.sortBy(_._1)
-    require(qs.nonEmpty, s"no fz* queries parsed from $queryFile")
+    val spark = GraftSession.local(GraftSession.cpus(8))
+    val qs = FuzzVerify.readQueries(queryFile)
 
     // ground truth off the parquet fixtures
     Tables.register(spark, sfDir)
@@ -77,8 +59,7 @@ object FuzzLance {
       qs.foreach { case (n, sql) =>
         val got = try spark.sql(sql).collect().toSeq catch {
           case e: Throwable =>
-            System.err.println(s"[fuzz-lance] $layout/$n threw: " +
-              s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
+            System.err.println(s"[fuzz-lance] $layout/$n threw: ${GraftSession.rootLine(e)}")
             null
         }
         if (got == null || got != expect(n)) {

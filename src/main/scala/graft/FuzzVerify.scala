@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession.{jstr, rootLine}
+import scala.jdk.CollectionConverters._
 
 /** Differential-fuzzing runner: executes a generated common-subset SQL set
   * (scripts/fuzzgen.py) through `spark.sql` and dumps results in the same
@@ -17,30 +18,24 @@ import org.apache.spark.sql.SparkSession
   *   python3 scripts/selfcheck.py /root/testdata/sf0.01 /tmp/fuzzout
   */
 object FuzzVerify {
+  /** The `fz*` queries of a fuzzgen.py file (a flat {"name": "sql"} JSON
+    * object), sorted by name; fails when there are none. */
+  def readQueries(queryFile: String): Seq[(String, String)] = {
+    val all = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(new java.io.File(queryFile), classOf[java.util.Map[String, Object]])
+    val qs = all.asScala.toSeq.collect {
+      case (name, sql: String) if name.startsWith("fz") => name -> sql
+    }.sortBy(_._1)
+    require(qs.nonEmpty, s"no fz* queries parsed from $queryFile")
+    qs
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, queryFile) = (args(0), args(1), args(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus(8))
     Tables.register(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-
-    // the file is a flat {"name": "sql"} object written by fuzzgen.py —
-    // parse with the same no-extra-deps regex convention Bench uses
-    val txt = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(queryFile)), "UTF-8")
-    val qs = """"(fz[^"]+)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(txt)
-      .map(m => m.group(1) ->
-        m.group(2).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq.sortBy(_._1)
-    require(qs.nonEmpty, s"no fz* queries parsed from $queryFile")
+    val qs = readQueries(queryFile)
 
     var failed = 0
     qs.foreach { case (name, sql) =>
@@ -48,19 +43,14 @@ object FuzzVerify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         failed += 1
-        System.err.println(s"[fuzz] $name failed: ${e.getClass.getSimpleName}: " +
-          Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(200))
+        System.err.println(s"[fuzz] $name failed: ${rootLine(e)}")
       }
     }
     // oracle_sql.json: identity — the query IS its own oracle
-    val esc = qs.map { case (n, s) =>
-      "\"" + n + "\": \"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => " "; case c => c.toString
-      } + "\""
-    }.mkString("{\n", ",\n", "\n}")
+    val json = qs.map { case (n, s) => s"${jstr(n)}: ${jstr(s)}" }
+      .mkString("{\n", ",\n", "\n}")
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, "oracle_sql.json"), esc.getBytes("UTF-8"))
+      java.nio.file.Paths.get(outDir, "oracle_sql.json"), json.getBytes("UTF-8"))
     println(s"[fuzz] ran ${qs.size} queries, $failed spark-side failures")
     spark.stop()
     if (failed > 0) sys.exit(1)

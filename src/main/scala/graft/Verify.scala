@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession.{jstr, rootLine}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,24 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // extra args (local iteration only): run just the named queries
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.catalog.lance", "graft.sources.lance.LanceCatalog")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // single-file testdata tables: split scans at row-group grain so a
-      // 10x-SF table still fans out across cores (at cluster scale the
-      // many-files default of 128m is right; this knob matches the
-      // sandbox's one-file-per-table layout)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
@@ -32,29 +15,15 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        // class + first message line + first cause line — getMessage alone
-        // can be empty (e.g. wrapped analysis errors), which made the
-        // round-5 regression undiagnosable from driver logs
-        def line(t: Throwable): String =
-          s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").linesIterator.take(2).mkString(" ").take(300)}"
-        val cause = Option(e.getCause).map(c => s" <- ${line(c)}").getOrElse("")
-        System.err.println(s"[verify] $name failed: ${line(e)}$cause")
+        // root line + first cause line — getMessage alone can be empty
+        // (e.g. wrapped analysis errors), which left the round-5
+        // regression undiagnosable from the logs
+        val cause = Option(e.getCause).map(c => s" <- ${rootLine(c)}").getOrElse("")
+        System.err.println(s"[verify] $name failed: ${rootLine(e)}$cause")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

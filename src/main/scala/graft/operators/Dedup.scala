@@ -695,8 +695,6 @@ object Dedup {
       converged = newSum == prevSum
       prevSum = newSum
       iter += 1
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        println(s"[cc] iter=$iter sum=$newSum converged=$converged")
     }
     edges.unpersist(false) // final labels checkpoint stands alone
     labels.select(col("u").as(idCol), col("label").as("keep_id"))

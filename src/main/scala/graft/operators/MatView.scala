@@ -216,17 +216,6 @@ object MatView {
     v
   }
 
-  /** Advance the view to the source's head via the change feed; returns
-    * the source version the view now reflects. Work ∝ |change set|. */
-  // dev-only phase timing (GRAFT_MV_TIMING=1)
-  private def mvTime[A](label: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_MV_TIMING")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[mv] $label%-24s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-      r
-    }
-
   /** Sibling sessions tuned for DELTA-SIZED work: AQE off (each adaptive
     * stage otherwise materializes as its own serial job — pure overhead
     * when every stage is a few thousand rows) and few shuffle
@@ -273,6 +262,8 @@ object MatView {
       q
     }
 
+  /** Advance the view to the source's head via the change feed; returns
+    * the source version the view now reflects. Work ∝ |change set|. */
   def refresh(spark0: SparkSession, mvPath: String): Long = {
     val (spec, mvHead) = loadSpec(spark0, mvPath)
     val conf = spark0.sessionState.newHadoopConf()
@@ -416,14 +407,12 @@ object MatView {
         //  - negative merged count (inconsistent feed — such a group
         //    matches neither branch and would silently survive;
         //    round-7 ADVICE)
-        val st = mvTime("stats-probe") {
-          resolved.select(
-            sum(when(keyNull, 1L).otherwise(0L)).as("nulls"),
-            sum(when(col("_newCnt") < 0, 1L).otherwise(0L)).as("neg"),
-            sum(when(col("_newCnt") > 0, 1L).otherwise(0L)).as("ups"),
-            sum(when(col("_newCnt") === 0, 1L).otherwise(0L)).as("zeros")
-          ).head()
-        }
+        val st = resolved.select(
+          sum(when(keyNull, 1L).otherwise(0L)).as("nulls"),
+          sum(when(col("_newCnt") < 0, 1L).otherwise(0L)).as("neg"),
+          sum(when(col("_newCnt") > 0, 1L).otherwise(0L)).as("ups"),
+          sum(when(col("_newCnt") === 0, 1L).otherwise(0L)).as("zeros")
+        ).head()
         def n(i: Int) = if (st.isNullAt(i)) 0L else st.getLong(i)
         require(n(0) == 0,
           s"matview: NULL group key in change feed of ${spec.src} — keys " +
@@ -439,39 +428,32 @@ object MatView {
           writeSpec(spark, mvPath, spec.copy(lastVersion = srcHead), mvHead)
           return srcHead
         }
-        val committed = mvTime("upsertWithDeletes") {
-          LanceMaintenance.upsertWithDeletes(
-            spark, mvPath, upserts, spec.keys, zeros,
-            srcEmptyHint = Some(n(2) == 0),
-            // ~4M group rows per staged fragment, known exactly from the
-            // stats probe — a tiny delta stages ONE fragment, not one
-            // micro-fragment per cached partition
-            stagePartitions = Some(
-              math.min(32L, n(2) / 4000000L + 1L).toInt),
-            // CAS on the view version captured at loadSpec: a racing
-            // refresh of the same interval must conflict loudly (an
-            // insert-only twin would otherwise pass the lenient rebase
-            // and double-apply the delta)
-            expectedVersion = Some(mvHead))
-        }
+        val committed = LanceMaintenance.upsertWithDeletes(
+          spark, mvPath, upserts, spec.keys, zeros,
+          srcEmptyHint = Some(n(2) == 0),
+          // ~4M group rows per staged fragment, known exactly from the
+          // stats probe — a tiny delta stages ONE fragment, not one
+          // micro-fragment per cached partition
+          stagePartitions = Some(
+            math.min(32L, n(2) / 4000000L + 1L).toInt),
+          // CAS on the view version captured at loadSpec: a racing
+          // refresh of the same interval must conflict loudly (an
+          // insert-only twin would otherwise pass the lenient rebase
+          // and double-apply the delta)
+          expectedVersion = Some(mvHead))
         writeSpec(spark, mvPath, spec.copy(lastVersion = srcHead), committed)
       } else {
         // recompute mode: `upserts` includes recomputed groups that are
         // NOT rows of `resolved`, so the guards run on the union
-        mvTime("nullkey-probe") {
-          requireKeysNonNull(upserts.select(spec.keys.map(col): _*),
-            spec.keys, s"change feed of ${spec.src}")
-        }
-        require(mvTime("neg-probe")(
-            resolved.filter(col("_newCnt") < 0).limit(1).isEmpty),
+        requireKeysNonNull(upserts.select(spec.keys.map(col): _*),
+          spec.keys, s"change feed of ${spec.src}")
+        require(resolved.filter(col("_newCnt") < 0).limit(1).isEmpty,
           s"matview $mvPath: merged group count went negative — the " +
             "change feed is inconsistent with the stored view (source " +
             "modified outside lance-tracked commits?); re-create the view")
-        val committed = mvTime("upsertWithDeletes") {
-          LanceMaintenance.upsertWithDeletes(
-            spark, mvPath, upserts, spec.keys, zeros,
-            expectedVersion = Some(mvHead))
-        }
+        val committed = LanceMaintenance.upsertWithDeletes(
+          spark, mvPath, upserts, spec.keys, zeros,
+          expectedVersion = Some(mvHead))
         writeSpec(spark, mvPath, spec.copy(lastVersion = srcHead), committed)
       }
     } finally {

@@ -4,18 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.catalog.lance", "graft.sources.lance.LanceCatalog")
-    .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(8)
 
   val sfDir = "/root/testdata/sf0.001"
 }
