@@ -41,8 +41,17 @@ import org.apache.spark.sql.types._
   * `floor(w * 1e6 + 0.5)`, and the per-doc score is the SUM of those longs
   * — associative, order-independent, bit-identical between a distributed
   * Spark aggregation and DuckDB's single-node oracle.
+  *
+  * A lance-attached index ([[buildIndexLance]]) is a published index
+  * ([[graft.sources.lance.IndexStore]]): `built.lance` holds
+  * (built_version, id_col, text_col, postings_version, terms_version,
+  * stats_version), and every reader takes the sidecar pins and the source
+  * version from one record. A plain-build index has no publish point and
+  * reads sidecar heads.
   */
 object Fts {
+  import graft.sources.lance.{IndexStore, LanceFormat, MaintenanceLock}
+  import IndexStore.Published
 
   val K1 = 1.2
   val B  = 0.75
@@ -109,8 +118,7 @@ object Fts {
     // racing an update) would interleave sidecar overwrites — readers
     // pin, so they stay consistent, but the LOSER's sidecars could end
     // up published under the winner's tombstone/pins
-    graft.sources.lance.MaintenanceLock.withLock(indexPath,
-        spark.sessionState.newHadoopConf()) {
+    MaintenanceLock.withLock(indexPath, spark.sessionState.newHadoopConf()) {
       buildIndexFromPostingsLocked(spark, p, indexPath, writePartitions)
     }
 
@@ -135,220 +143,78 @@ object Fts {
     // publish point ITSELF, not just this JVM's cache: built.lance pins
     // the OLD sidecar versions and any other process would keep reading
     // them. Retire = overwrite with a TOMBSTONE row (every version field
-    // = NoBuilt), NOT a delete: deleting resets the dataset's version
-    // counter to 1 on the next publish, and a remote pins cache keyed at
-    // (1, oldPins) would treat that republished version-1 head as
-    // already-seen — stale pins forever. The tombstone keeps the publish
-    // point's version strictly monotonic across rebuilds, and [[pinsOf]]
-    // reads it as "unpinned" (sidecar heads are authoritative).
+    // = NoBuilt, which reads as "no pin"), NOT a delete: deleting resets
+    // the dataset's version counter to 1 on the next publish, and a remote
+    // cache keyed at (1, old record) would treat that republished
+    // version-1 head as already-seen — stale pins forever. The tombstone
+    // keeps the publish point's version strictly monotonic across rebuilds.
     try {
-      import graft.sources.lance.LanceFormat
-      val (bfs, bp) = LanceFormat.fileSystem(s"$indexPath/built.lance",
+      val (bfs, bp) = LanceFormat.fileSystem(builtPath(indexPath),
         spark.sessionState.newHadoopConf())
-      if (bfs.exists(bp)) {
-        spark.createDataFrame(
-            Seq((NoBuilt, "", "", NoBuilt, NoBuilt, NoBuilt)))
-          .toDF("built_version", "id_col", "text_col",
-                "postings_version", "terms_version", "stats_version")
-          .coalesce(1).write.format("lance").mode("overwrite")
-          .save(s"$indexPath/built.lance")
-      }
-    } catch { case _: Exception => () } // best-effort; pinsOf stats per read
-    val headAfter =
-      try builtHeadVersion(spark, indexPath) catch { case _: Exception => NoBuilt }
-    putPins(indexPath, headAfter, None)
-    val sk = statsHeadKey(spark, indexPath)
-    if (sk != null) statsCache.put(indexPath, (sk, readStats(spark, indexPath)))
+      if (bfs.exists(bp))
+        IndexStore.publish(spark, builtPath(indexPath), None,
+          "built_version" -> NoBuilt, "id_col" -> "", "text_col" -> "",
+          "postings_version" -> NoBuilt, "terms_version" -> NoBuilt,
+          "stats_version" -> NoBuilt)
+    } catch { case _: Exception => () } // best-effort; readers stat per read
   }
 
-  /** Corpus stats cached per index, validated against a freshness key.
-    * PUBLISHED (built.lance) indexes key on the current pins — a publish,
-    * local or cross-process, changes the pins and invalidates the entry.
-    * PINLESS (plain-build) indexes have no publish point whose version a
-    * rebuild would advance, so they key on stats.lance's OWN head version
-    * instead (one manifest stat per read) — a cross-process rebuild
-    * overwrites stats.lance, advancing that version, and invalidates
-    * here too. A null key marks a transient store failure: the lookup
-    * bypasses the cache (fresh read) and nothing is cached. */
-  private val statsCache = new graft.functions.Lru[String, (Any, (Long, Long))](32)
-
-  /** stats.lance's head version boxed as the pinless freshness key, or
-    * null on a transient store failure (callers bypass the cache). */
-  private def statsHeadKey(spark: SparkSession, indexPath: String): Any =
-    try java.lang.Long.valueOf(headVersion(
-      spark.sessionState.newHadoopConf(), s"$indexPath/stats.lance"))
-    catch { case _: Exception => null }
-
-  private def statsOf(spark: SparkSession, indexPath: String): (Long, Long) = {
-    val key: Any = pinsOf(spark, indexPath) match {
-      case sp @ Some(_) => sp
-      case None         => statsHeadKey(spark, indexPath)
-    }
-    val c = statsCache.get(indexPath).orNull
-    if (key != null && c != null && c._1 == key) c._2
-    else {
-      val s = readStats(spark, indexPath)
-      if (key != null) statsCache.put(indexPath, (key, s))
-      s
-    }
-  }
-
-  private def readStats(spark: SparkSession, indexPath: String): (Long, Long) = {
-    val r = sidecar(spark, indexPath, "stats").head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  /** Published sidecar versions. `built.lance` is the index's ONE atomic
-    * publish point: it records the exact postings/terms/stats versions a
-    * reader may see, so the multi-dataset update sequence in
-    * [[updateIndex]] is all-or-nothing — a fence-aborted (or crashed)
-    * updater leaves only UNREFERENCED sidecar versions behind, which the
-    * next updater sweeps (postings: [[graft.sources.lance.LanceMaintenance.restore]]
-    * back to the published version before re-appending) or simply never
-    * reads (terms/stats overwrites read their pinned inputs). Without the
-    * pins, a fence abort between sidecar commits left a half-published
-    * update: the tail already appended to postings but `built_version`
-    * unchanged, so the NEXT updater appended the same tail again —
-    * duplicated (term, doc_id) rows, silent BM25 corruption. */
-  private case class Pins(postingsV: Long, termsV: Long, statsV: Long)
-
-  /** Sentinel "no built.lance" version for the pins cache. */
+  /** Sentinel version of a tombstoned publish point. */
   private val NoBuilt = -1L
 
-  /** Cached pins, keyed by the built.lance head version they were read
-    * at — a cross-process publish advances that version, so the next
-    * [[pinsOf]] call picks it up (one manifest stat per read, no TTL). */
-  private val pinsCache = new graft.functions.Lru[String, (Long, Option[Pins])](32)
+  private def builtPath(indexPath: String): String = s"$indexPath/built.lance"
 
-  /** Last-known pins per index path, NON-evicting by design: this map
-    * backs only the transient-store-failure fallback in [[pinsOf]], whose
-    * contract is "stale-but-consistent beats unpinned-and-possibly-torn".
-    * The bounded [[pinsCache]] cannot serve that role — an LRU eviction
-    * on a driver touching >32 indexes would silently downgrade a flaky
-    * read to unpinned sidecar heads. Entries are three longs plus the
-    * path string, so even a driver touching a million index paths holds
-    * tens of MB here, and a path is only ever added when its index is
-    * actually read — this is a roster, not a cache. */
-  private val fallbackPins =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Pins]]()
+  private def published(spark: SparkSession, indexPath: String): Option[Published] =
+    IndexStore.published(spark, builtPath(indexPath))
 
-  /** Write-through for the pins caches: the bounded LRU entry (fast
-    * path, freshness-keyed) plus the non-evicting last-known entry the
-    * failure fallback reads. */
-  private def putPins(indexPath: String, head: Long,
-                      pins: Option[Pins]): Unit = {
-    pinsCache.put(indexPath, (head, pins))
-    fallbackPins.put(indexPath, pins)
-  }
+  /** The record of a lance-attached index, for operations that need its
+    * source version and column names: refuses a plain-build index and a
+    * tombstone (after a plain-path rebuild those fields are retired, and
+    * e.g. an incremental update or a combined search would CDC-scan from
+    * a bogus source version). */
+  private def requirePublished(pub: Option[Published],
+                               indexPath: String): Published =
+    pub.filter(_.built != NoBuilt).getOrElse(throw new IllegalArgumentException(
+      s"$indexPath: publish point is missing or a tombstone — the index was " +
+        "rebuilt by the plain buildIndex path since its last lance-attached " +
+        "publish; re-run buildIndexLance against the source dataset"))
 
-  /** The failure fallback: last pins successfully read for this path, in
-    * this JVM, regardless of LRU eviction. */
-  private def lastKnownPins(indexPath: String): Option[Pins] =
-    Option(fallbackPins.get(indexPath)).flatten
+  /** A sidecar scan at the version `pub` pins (the head when unpinned). */
+  private def sidecar(spark: SparkSession, indexPath: String, name: String,
+                      pub: Option[Published]): DataFrame =
+    IndexStore.pinned(spark, indexPath, s"$name.lance",
+      pub.flatMap(_.pin(s"${name}_version")))
 
-  /** built.lance's current head version, or [[NoBuilt]] when the dataset
-    * does not exist (legacy / plain-build index). Throws on a transient
-    * store failure — callers must NOT conflate that with "legacy". */
-  private def builtHeadVersion(spark: SparkSession, indexPath: String): Long = {
-    import graft.sources.lance.LanceFormat
-    val (fs, p) = LanceFormat.fileSystem(s"$indexPath/built.lance",
-      spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) NoBuilt
-    else LanceFormat.readManifest(fs,
-      LanceFormat.latestManifestPath(fs, p, None)).version
-  }
+  /** Corpus stats cached per index, keyed by the stats.lance version they
+    * were read at: its pin, or for an unpinned index its head (one
+    * manifest stat per read). A publish, a cross-process rebuild or a
+    * stats overwrite all advance that version and so invalidate. When the
+    * head stat fails the read bypasses the cache and caches nothing. */
+  private val statsCache = new graft.functions.Lru[String, (Long, (Long, Long))](32)
 
-  /** Pins from `built.lance` (None: an index built by the plain
-    * [[buildIndex]] path — sidecar heads are read directly, the pre-pins
-    * behavior). Every call stats the publish point's head version, so a
-    * publish by ANOTHER process becomes visible at the next read here. A
-    * transient store failure falls back to the last-known pins for THIS
-    * read only and is never cached — the next call retries instead of
-    * permanently downgrading the index to unpinned head reads. */
-  private def pinsOf(spark: SparkSession, indexPath: String): Option[Pins] = {
-    val headNow =
-      try builtHeadVersion(spark, indexPath)
-      catch { case _: Exception =>
-        // stale-but-consistent beats unpinned-and-possibly-torn — served
-        // from the non-evicting roster, so an LRU eviction can't downgrade
-        return lastKnownPins(indexPath)
-      }
-    val cached = pinsCache.get(indexPath).orNull
-    if (cached != null && cached._1 == headNow) return cached._2
-    if (headNow == NoBuilt) {
-      putPins(indexPath, NoBuilt, None)
-      return None
-    }
-    try {
-      // read pinned at the version just statted — a racing overwrite
-      // between the stat and this read cannot tear the row
-      val b = spark.read.format("lance").option("versionAsOf", headNow)
-        .load(s"$indexPath/built.lance")
-      val pins =
-        if (b.columns.contains("postings_version")) {
-          val r = b.head()
-          val pv = r.getAs[Long]("postings_version")
-          // NoBuilt sentinel = tombstone (plain rebuild retired the
-          // publish point): sidecar heads are authoritative, no pins
-          if (pv == NoBuilt) None
-          else Some(Pins(pv, r.getAs[Long]("terms_version"),
-                         r.getAs[Long]("stats_version")))
-        } else None
-      putPins(indexPath, headNow, pins)
-      pins
-    } catch { case _: Exception =>
-      // stat succeeded but the read failed: transient — don't cache
-      lastKnownPins(indexPath)
+  private def statsOf(spark: SparkSession, indexPath: String,
+                      pub: Option[Published]): (Long, Long) = {
+    val v = pub.flatMap(_.pin("stats_version")).orElse(
+      try Some(LanceFormat.headVersion(spark.sessionState.newHadoopConf(),
+        s"$indexPath/stats.lance"))
+      catch { case _: Exception => None })
+    statsCache.get(indexPath).filter(c => v.contains(c._1)).map(_._2).getOrElse {
+      val st = readStats(spark, indexPath, v)
+      v.foreach(k => statsCache.put(indexPath, (k, st)))
+      st
     }
   }
 
-  private def pinsFromRow(r: org.apache.spark.sql.Row): Option[Pins] =
-    if (r.length >= 6 && r.getLong(3) != NoBuilt)
-      Some(Pins(r.getLong(3), r.getLong(4), r.getLong(5)))
-    else None
-
-  /** Reject a tombstoned publish point for operations that need the
-    * lance-attached metadata (source version / column names): after a
-    * plain-path rebuild those fields are retired, and e.g. an
-    * incremental update or a combined search would CDC-scan from a
-    * bogus source version. */
-  private def requirePublished(r: org.apache.spark.sql.Row,
-                               indexPath: String): Unit =
-    require(r.length < 6 || r.getLong(3) != NoBuilt,
-      s"$indexPath: publish point is a tombstone — the index was rebuilt " +
-        "by the plain buildIndex path since its last lance-attached " +
-        "publish; re-run buildIndexLance against the source dataset")
-
-  /** A sidecar scan pinned at its PUBLISHED version — every reader goes
-    * through here, so in-flight (unpublished) sidecar commits are
-    * invisible exactly like uncommitted MVCC writes. */
-  private def sidecar(spark: SparkSession, indexPath: String,
-                      name: String): DataFrame = {
-    val base = spark.read.format("lance")
-    pinsOf(spark, indexPath) match {
-      case Some(p) =>
-        val v = name match {
-          case "postings" => p.postingsV
-          case "terms"    => p.termsV
-          case _          => p.statsV
-        }
-        base.option("versionAsOf", v).load(s"$indexPath/$name.lance")
-      case None => base.load(s"$indexPath/$name.lance")
-    }
-  }
-
-  private def headVersion(conf: org.apache.hadoop.conf.Configuration,
-                          path: String): Long = {
-    import graft.sources.lance.LanceFormat
-    val (fs, p) = LanceFormat.fileSystem(path, conf)
-    LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None)).version
+  private def readStats(spark: SparkSession, indexPath: String,
+                        v: Option[Long]): (Long, Long) = {
+    val r = IndexStore.pinned(spark, indexPath, "stats.lance", v).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Test hook: simulate a fresh session (forces the stats/pins re-read). */
   private[graft] def clearStatsCache(): Unit = {
     statsCache.clear()
-    pinsCache.clear()
-    fallbackPins.clear()
+    IndexStore.clear()
   }
 
   /** The fixed-point BM25 contribution of one posting row, as a long in
@@ -417,8 +283,9 @@ object Fts {
     */
   def searchPersisted(spark: SparkSession, indexPath: String,
                       terms: Seq[String], k: Int): DataFrame = {
-    val (nDocs, totalLen) = statsOf(spark, indexPath)
-    searchWithStats(spark, indexPath, nDocs, totalLen, terms, k)
+    val pub = published(spark, indexPath)
+    val (nDocs, totalLen) = statsOf(spark, indexPath, pub)
+    probe(spark, indexPath, pub, nDocs, totalLen, terms, k)
   }
 
   /** The probe plan with corpus stats supplied by the caller — shared by
@@ -427,11 +294,14 @@ object Fts {
     * registration so PLANNING never runs a job).
     */
   def searchWithStats(spark: SparkSession, indexPath: String, nDocs: Long,
-                      totalLen: Long, terms: Seq[String], k: Int): DataFrame = {
-    val p  = sidecar(spark, indexPath, "postings")
-    val df = sidecar(spark, indexPath, "terms")
-    bm25TopK(p, df, nDocs, totalLen, terms, k)
-  }
+                      totalLen: Long, terms: Seq[String], k: Int): DataFrame =
+    probe(spark, indexPath, published(spark, indexPath), nDocs, totalLen, terms, k)
+
+  private def probe(spark: SparkSession, indexPath: String,
+                    pub: Option[Published], nDocs: Long, totalLen: Long,
+                    terms: Seq[String], k: Int): DataFrame =
+    bm25TopK(sidecar(spark, indexPath, "postings", pub),
+      sidecar(spark, indexPath, "terms", pub), nDocs, totalLen, terms, k)
 
   /** Delete-aware search of a persisted index (the liveness mask of the
     * ANN `ivfSearchCombinedLive` applied to FTS): postings store a
@@ -497,8 +367,8 @@ object Fts {
   def searchFuzzy(spark: SparkSession, indexPath: String,
                   terms: Seq[String], maxDist: Int, k: Int,
                   maxExpansions: Int = 50): DataFrame = {
-    val vocab = sidecar(spark, indexPath, "terms")
-    val matched = vocab
+    val pub = published(spark, indexPath)
+    val matched = sidecar(spark, indexPath, "terms", pub)
       .filter(terms.map(t => levenshtein(col("term"), lit(t)) <= maxDist)
                    .reduce(_ || _))
       // deterministic cap: most-frequent terms first (tantivy keeps the
@@ -507,10 +377,9 @@ object Fts {
       .orderBy(col("df").desc, col("term"))
       .limit(maxExpansions)
       .select("term").collect().map(_.getString(0)).toSeq
-    val (nDocs, totalLen) = statsOf(spark, indexPath)
-    if (matched.isEmpty)
-      searchWithStats(spark, indexPath, nDocs, totalLen, Seq("\u0000"), k)
-    else searchWithStats(spark, indexPath, nDocs, totalLen, matched, k)
+    val (nDocs, totalLen) = statsOf(spark, indexPath, pub)
+    probe(spark, indexPath, pub, nDocs, totalLen,
+      if (matched.isEmpty) Seq("\u0000") else matched, k)
   }
 
   /** Build the index FOR a lance dataset, recording the source head
@@ -525,16 +394,13 @@ object Fts {
                       textCol: String, indexPath: String,
                       writePartitions: Int = 8,
                       stagedPostings: Option[DataFrame] = None): Long = {
-    import graft.sources.lance.LanceFormat
     val conf = spark.sessionState.newHadoopConf()
     // hold the maintenance lock across rebuild AND republish: without it
     // a concurrent updateIndex (or twin rebuild) could interleave between
     // the interior's tombstone and this publish, and cross-process
     // readers would head-read a mix of two writers' sidecars
-    graft.sources.lance.MaintenanceLock.withLock(indexPath, conf) {
-    val (fs, p) = LanceFormat.fileSystem(sourcePath, conf)
-    val builtV = LanceFormat.readManifest(fs,
-      LanceFormat.latestManifestPath(fs, p, None)).version
+    MaintenanceLock.withLock(indexPath, conf) {
+    val builtV = LanceFormat.headVersion(conf, sourcePath)
     // stagedPostings: a pre-tokenized [[postings]] frame of the SAME
     // corpus content as `sourcePath` at `builtV` (the caller's
     // responsibility) — lets N index flavors over one corpus tokenize it
@@ -545,23 +411,8 @@ object Fts {
     }
     // locked interior — the public wrapper's lock is NOT reentrant
     buildIndexFromPostingsLocked(spark, tokenized, indexPath, writePartitions)
-    // publish: built.lance records the exact sidecar versions this build
-    // produced — all readers pin on them (see [[Pins]])
-    val pins = Pins(headVersion(conf, s"$indexPath/postings.lance"),
-                    headVersion(conf, s"$indexPath/terms.lance"),
-                    headVersion(conf, s"$indexPath/stats.lance"))
-    spark.createDataFrame(
-        Seq((builtV, idCol, textCol, pins.postingsV, pins.termsV, pins.statsV)))
-      .toDF("built_version", "id_col", "text_col",
-            "postings_version", "terms_version", "stats_version")
-      .coalesce(1).write.format("lance").mode("overwrite")
-      .save(s"$indexPath/built.lance")
-    putPins(indexPath, builtHeadVersion(spark, indexPath), Some(pins))
-    // fresh 1-row read, not the cache: the pre-publish entry could be
-    // missing (transient statsHeadKey failure) or stale, and readStats
-    // through the tombstoned pins resolves to the just-written head
-    val (nDocs, totalLen) = readStats(spark, indexPath)
-    statsCache.put(indexPath, (Some(pins), (nDocs, totalLen)))
+    val pub = publish(spark, indexPath, None, builtV, idCol, textCol)
+    val (nDocs, totalLen) = statsOf(spark, indexPath, Some(pub))
     graft.plans.GraftFts.register(sourcePath, graft.plans.GraftFts.IndexInfo(
       indexPath, idCol, textCol, nDocs, totalLen, builtV))
     builtV
@@ -590,55 +441,46 @@ object Fts {
     */
   def updateIndex(spark: SparkSession, sourcePath: String, indexPath: String,
                   writePartitions: Int = 4): Long =
-    graft.sources.lance.MaintenanceLock.withLockFenced(indexPath,
+    MaintenanceLock.withLockFenced(indexPath,
         spark.sessionState.newHadoopConf()) { fence =>
       updateIndexLocked(spark, sourcePath, indexPath, writePartitions, fence)
     }
 
+  /** Publish the sidecar heads this build or update produced, with the
+    * covered source version and column names, to `built.lance`. */
+  private def publish(spark: SparkSession, indexPath: String,
+                      fence: Option[MaintenanceLock.Fence], builtV: Long,
+                      idCol: String, textCol: String): Published = {
+    val conf = spark.sessionState.newHadoopConf()
+    def head(name: String): Long =
+      LanceFormat.headVersion(conf, s"$indexPath/$name.lance")
+    IndexStore.publish(spark, builtPath(indexPath), fence,
+      "built_version" -> builtV, "id_col" -> idCol, "text_col" -> textCol,
+      "postings_version" -> head("postings"), "terms_version" -> head("terms"),
+      "stats_version" -> head("stats"))
+  }
+
   /** The update body; callers hold the maintenance lock — a racing twin
     * would double-merge the tail dfs into the vocabulary (silent BM25
-    * corruption), which the lock turns into a loud refusal.
-    *
-    * Atomicity: the only PUBLISH is the final `built.lance` overwrite —
-    * every sidecar commit before it lands at a version no reader is
-    * pinned to ([[sidecar]]), so a fence abort (clock-skew usurper,
-    * swept holder) or a crash ANYWHERE in the sequence leaves the
-    * published index bit-identical to before the update. The next
-    * updater first sweeps a predecessor's orphan postings tail
-    * (restore to the pinned version — appends build on the head, unlike
-    * the overwrite-mode sidecars whose pinned INPUTS make orphan
-    * overwrites simply dead versions), then recomputes the same
-    * builtV..headV tail against the pinned inputs: exactly-once
-    * semantics without double-appended postings or double-merged dfs. */
+    * corruption), which the lock turns into a loud refusal. Every input
+    * (the source bound, the terms and stats merged into) comes from the
+    * record read under the lock, and `built.lance` publishes last
+    * ([[graft.sources.lance.IndexStore]]): after a fence abort or crash
+    * the next updater sweeps the orphan postings tail, while orphan
+    * terms/stats overwrites are simply dead versions (their merges read
+    * the pinned inputs) — exactly-once without double-appended postings
+    * or double-merged dfs. */
   private def updateIndexLocked(spark: SparkSession, sourcePath: String,
                                 indexPath: String, writePartitions: Int,
-                                fence: graft.sources.lance.MaintenanceLock.Fence): Long = {
-    import graft.sources.lance.LanceFormat
-    val b = spark.read.format("lance").load(s"$indexPath/built.lance").head()
-    requirePublished(b, indexPath)
-    val (builtV, idCol, textCol) = (b.getLong(0), b.getString(1), b.getString(2))
-    val pins = pinsFromRow(b)
-    // refresh the JVM cache from the row JUST read under the lock: the
-    // terms/stats merges below go through sidecar() -> pinsOf(), and a
-    // stale cached entry (another process updated the index since this
-    // JVM last read it) would merge the tail into an OLD terms version —
-    // silent df corruption. The head can't move while we hold the lock.
-    putPins(indexPath, builtHeadVersion(spark, indexPath), pins)
-    val conf = spark.sessionState.newHadoopConf()
-    val (fs, sp) = LanceFormat.fileSystem(sourcePath, conf)
-    val headV = LanceFormat.readManifest(fs,
-      LanceFormat.latestManifestPath(fs, sp, None)).version
+                                fence: MaintenanceLock.Fence): Long = {
+    val pub = requirePublished(published(spark, indexPath), indexPath)
+    val (builtV, idCol, textCol) =
+      (pub.built, pub.row.getString(1), pub.row.getString(2))
+    val headV = LanceFormat.headVersion(spark.sessionState.newHadoopConf(), sourcePath)
     if (headV == builtV) return builtV
-    // sweep an orphan postings tail left by a fence-aborted predecessor:
-    // published readers never saw it (they pin), but our append would
-    // otherwise stack on top of it and duplicate its rows
-    pins.foreach { p =>
-      if (headVersion(conf, s"$indexPath/postings.lance") != p.postingsV) {
-        fence.check()
-        graft.sources.lance.LanceMaintenance.restore(
-          spark, s"$indexPath/postings.lance", p.postingsV)
-      }
-    }
+    fence.check()
+    pub.pin("postings_version").foreach(
+      IndexStore.sweep(spark, indexPath, "postings.lance", _))
     val tail = spark.read.format("lance")
       .option("fromVersion", builtV).option("versionAsOf", headV)
       .load(sourcePath)
@@ -647,12 +489,10 @@ object Fts {
     tp.repartitionByRange(writePartitions, col("term"))
       .sortWithinPartitions("term", "doc_id")
       .write.format("lance").mode("append").save(s"$indexPath/postings.lance")
-    val postingsV2 = headVersion(conf, s"$indexPath/postings.lance")
     // terms.lance is both input and output; safe because lance is
-    // versioned — the scan pins the PUBLISHED version (an orphan
-    // overwrite from an aborted predecessor is skipped, not re-merged),
-    // data files are immutable, and the overwrite commits a NEW version
-    val mergedTerms = sidecar(spark, indexPath, "terms")
+    // versioned — the scan pins the PUBLISHED version, data files are
+    // immutable, and the overwrite commits a NEW version
+    val mergedTerms = sidecar(spark, indexPath, "terms", Some(pub))
       .unionByName(tp.groupBy("term").agg(count(lit(1)).as("df")))
       .groupBy("term").agg(sum(col("df")).as("df"))
       .repartitionByRange(math.max(writePartitions / 4, 1), col("term"))
@@ -660,29 +500,19 @@ object Fts {
     fence.check()
     mergedTerms
       .write.format("lance").mode("overwrite").save(s"$indexPath/terms.lance")
-    val termsV2 = headVersion(conf, s"$indexPath/terms.lance")
     val ts = corpusStats(tail, idCol, textCol).head()
-    // fresh read through the pins refreshed above — a stale cached stats
-    // entry would double- or under-count another process's merged tail
-    val (oldN, oldLen) = readStats(spark, indexPath)
+    // a fresh read at the pin, never the cache: a stale cached entry would
+    // double- or under-count another process's merged tail
+    val (oldN, oldLen) = readStats(spark, indexPath, pub.pin("stats_version"))
     val (newN, newLen) = (oldN + ts.getLong(0), oldLen + ts.getLong(1))
     fence.check()
     spark.createDataFrame(Seq((newN, newLen))).toDF("n_docs", "total_len")
       .coalesce(1).write.format("lance").mode("overwrite")
       .save(s"$indexPath/stats.lance")
-    val statsV2 = headVersion(conf, s"$indexPath/stats.lance")
-    // built.lance is the PUBLISH point — nothing above is visible to any
-    // reader until this commit, so this fence is the one that decides
-    // which of two racing maintainers "commits"
-    fence.check()
-    spark.createDataFrame(Seq((headV, idCol, textCol, postingsV2, termsV2, statsV2)))
-      .toDF("built_version", "id_col", "text_col",
-            "postings_version", "terms_version", "stats_version")
-      .coalesce(1).write.format("lance").mode("overwrite")
-      .save(s"$indexPath/built.lance")
-    val newPins = Some(Pins(postingsV2, termsV2, statsV2))
-    putPins(indexPath, builtHeadVersion(spark, indexPath), newPins)
-    statsCache.put(indexPath, (newPins, (newN, newLen)))
+    // the publish fence decides which of two racing maintainers commits
+    val newPub = publish(spark, indexPath, Some(fence), headV, idCol, textCol)
+    newPub.pin("stats_version").foreach(v =>
+      statsCache.put(indexPath, (v, (newN, newLen))))
     graft.plans.GraftFts.register(sourcePath, graft.plans.GraftFts.IndexInfo(
       indexPath, idCol, textCol, newN, newLen, headV))
     headV
@@ -694,17 +524,16 @@ object Fts {
     * centroid sidecar. */
   def attachIndex(spark: SparkSession, sourcePath: String,
                   indexPath: String): Unit = {
-    val b = spark.read.format("lance").load(s"$indexPath/built.lance").head()
-    requirePublished(b, indexPath)
     // re-attach = drop cached state and re-read the publish point —
     // including the failure-fallback roster: serving pre-attach pins
     // after an explicit re-attach could pin vacuumed sidecar versions
-    pinsCache.remove(indexPath)
+    IndexStore.forget(builtPath(indexPath))
     statsCache.remove(indexPath)
-    fallbackPins.remove(indexPath)
-    val (nDocs, totalLen) = statsOf(spark, indexPath)
+    val pub = requirePublished(published(spark, indexPath), indexPath)
+    val (nDocs, totalLen) = statsOf(spark, indexPath, Some(pub))
     graft.plans.GraftFts.register(sourcePath, graft.plans.GraftFts.IndexInfo(
-      indexPath, b.getString(1), b.getString(2), nDocs, totalLen, b.getLong(0)))
+      indexPath, pub.row.getString(1), pub.row.getString(2), nDocs, totalLen,
+      pub.built))
   }
 
   /** Search covering rows appended to `sourcePath` after the index build:
@@ -721,15 +550,16 @@ object Fts {
   def searchCombined(spark: SparkSession, indexPath: String,
                      sourcePath: String, idCol: String, textCol: String,
                      terms: Seq[String], k: Int): DataFrame = {
-    val br = spark.read.format("lance").load(s"$indexPath/built.lance").head()
-    requirePublished(br, indexPath)
-    val builtV = br.getLong(0)
-    val (nDocs, totalLen) = statsOf(spark, indexPath)
-    val idxPost = sidecar(spark, indexPath, "postings")
+    // the tail bound and the pins from ONE record: a publish landing
+    // between two reads would pair an old bound with new postings, and
+    // the tail would re-score rows the pinned postings already hold
+    val pub = requirePublished(published(spark, indexPath), indexPath)
+    val (nDocs, totalLen) = statsOf(spark, indexPath, Some(pub))
+    val idxPost = sidecar(spark, indexPath, "postings", Some(pub))
     val tailPost = postings(
-      spark.read.format("lance").option("fromVersion", builtV).load(sourcePath),
+      spark.read.format("lance").option("fromVersion", pub.built).load(sourcePath),
       idCol, textCol)
-    val termDf = sidecar(spark, indexPath, "terms")
+    val termDf = sidecar(spark, indexPath, "terms", Some(pub))
     bm25TopK(idxPost.unionByName(tailPost), termDf, nDocs, totalLen, terms, k)
   }
 
@@ -788,12 +618,13 @@ object Fts {
                     mustNot: Seq[String], k: Int): DataFrame = {
     require(must.nonEmpty || should.nonEmpty,
       "searchBoolean needs at least one scoring (must/should) term")
-    val (nDocs, totalLen) = statsOf(spark, indexPath)
+    val pub = published(spark, indexPath)
+    val (nDocs, totalLen) = statsOf(spark, indexPath, pub)
     val avgdl = totalLen.toDouble / nDocs
     val scoring = (must ++ should).distinct
     val allTerms = (scoring ++ mustNot).distinct
-    val p  = sidecar(spark, indexPath, "postings")
-    val df = sidecar(spark, indexPath, "terms")
+    val p  = sidecar(spark, indexPath, "postings", pub)
+    val df = sidecar(spark, indexPath, "terms", pub)
     // ONE postings scan (the full clause IN-list still prunes by term zone
     // maps) and ONE per-doc aggregate answer all three clause kinds:
     // postings are unique per (doc, term), so must-coverage is a plain
@@ -841,7 +672,7 @@ object Fts {
     val pcols = distinctTerms.map(t =>
       first(when(col("term") === t, col("positions")), ignoreNulls = true)
         .as(termCol(t)))
-    val agged = sidecar(spark, indexPath, "postings")
+    val agged = sidecar(spark, indexPath, "postings", published(spark, indexPath))
       .filter(col("term").isin(distinctTerms: _*))
       .groupBy("doc_id")
       .agg(pcols.head, pcols.tail: _*)

@@ -43,10 +43,8 @@ object IncrementalDedup {
     * zero rows — the probe must read the snapshot it deduped against. */
   def dedupeBatch(spark: SparkSession, batch: DataFrame, textCol: String,
                   store: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val (fs, p) = graft.sources.lance.LanceFormat.fileSystem(store, conf)
-    val v = graft.sources.lance.LanceFormat.readManifest(
-      fs, graft.sources.lance.LanceFormat.latestManifestPath(fs, p, None)).version
+    val v = graft.sources.lance.LanceFormat.headVersion(
+      spark.sessionState.newHadoopConf(), store)
     val stored = spark.read.format("lance").option("versionAsOf", v).load(store)
     val fresh = batch.join(stored, md5(batch(textCol)) === stored("h"), "left_anti")
     fresh.select(md5(col(textCol)).as("h")).distinct()

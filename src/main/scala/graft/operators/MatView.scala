@@ -198,19 +198,14 @@ object MatView {
       .option("versionAsOf", v.toString).load(srcPath)
     // pin each dim at ITS current head — refresh joins the same versions
     val pinnedDims = dims.map { case (dp, fk, dk) =>
-      val (dfs, dpp) = LanceFormat.fileSystem(dp, conf)
-      val dv = LanceFormat.readManifest(dfs,
-        LanceFormat.latestManifestPath(dfs, dpp, None)).version
-      (dp, fk, dk, dv)
+      (dp, fk, dk, LanceFormat.headVersion(conf, dp))
     }
     val base = joined(spark, src, pinnedDims)
     requireKeysNonNull(base.select(keys.map(col): _*), keys, srcPath)
     val aggs = aggCols(base, sums, minMax)
     val mv = base.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     mv.write.format("lance").mode("overwrite").save(mvPath)
-    val (fs, p) = LanceFormat.fileSystem(mvPath, conf)
-    val mvVersion = LanceFormat.readManifest(fs,
-      LanceFormat.latestManifestPath(fs, p, None)).version
+    val mvVersion = LanceFormat.headVersion(conf, mvPath)
     writeSpec(spark, mvPath,
       Spec(srcPath, keys, sums, v, minMax, pinnedDims), mvVersion)
     v
@@ -267,9 +262,7 @@ object MatView {
   def refresh(spark0: SparkSession, mvPath: String): Long = {
     val (spec, mvHead) = loadSpec(spark0, mvPath)
     val conf = spark0.sessionState.newHadoopConf()
-    val (sfs, sp) = LanceFormat.fileSystem(spec.src, conf)
-    val srcHead = LanceFormat.readManifest(sfs,
-      LanceFormat.latestManifestPath(sfs, sp, None)).version
+    val srcHead = LanceFormat.headVersion(conf, spec.src)
     if (srcHead == spec.lastVersion) return spec.lastVersion // up to date
     // size the EXECUTION to the change set (known from manifest metadata
     // before planning anything). Recompute-mode (min/max) views are
@@ -286,9 +279,7 @@ object MatView {
     }
 
     spec.dims.foreach { case (dp, _, _, dv) =>
-      val (dfs, dpp) = LanceFormat.fileSystem(dp, conf)
-      val dHead = LanceFormat.readManifest(dfs,
-        LanceFormat.latestManifestPath(dfs, dpp, None)).version
+      val dHead = LanceFormat.headVersion(conf, dp)
       require(dHead == dv,
         s"matview $mvPath: dimension $dp advanced (v$dv -> v$dHead) — a dim " +
           "change can invalidate every group; re-create the view")

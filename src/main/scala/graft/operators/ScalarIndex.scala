@@ -28,90 +28,129 @@ import org.apache.spark.sql.functions._
   * VERSION it was built from. Rows appended later are not covered until
   * [[build]] runs again; rows deleted later are masked by the take path's
   * deletion-vector handling (a stale addr fetches nothing, never a wrong
-  * row).
+  * row). [[update]] (and the bitmap/ngram twins) extend an index over the
+  * append tail instead.
+  *
+  * Every kind but the label list is a published index
+  * ([[graft.sources.lance.IndexStore]]): `meta.lance` holds
+  * (built_version, key_col, [stable,] data_version), and probes read the
+  * data sidecar at `data_version`.
   */
 object ScalarIndex {
 
+  import graft.sources.lance.{IndexStore, LanceFormat, MaintenanceLock}
+  import IndexStore.Published
+
   /** Build (or rebuild) the index sidecar for `keyCol`. One range shuffle
     * of `(key, addr)` — the index build is the offline cost. The source
-    * head version is recorded alongside (`meta.lance`) so [[lookupCombined]]
-    * can cover the append tail.
+    * head version is published alongside (`meta.lance`) so
+    * [[lookupCombined]] can cover the append tail.
     */
   def build(spark: SparkSession, datasetPath: String, keyCol: String,
             indexPath: String, writePartitions: Int = 8,
-            stableRowIds: Boolean = false): Long = {
-    import graft.sources.lance.LanceFormat
-    val conf = spark.sessionState.newHadoopConf()
-    val (fs, p) = LanceFormat.fileSystem(datasetPath, conf)
-    val builtV = LanceFormat.readManifest(fs,
-      LanceFormat.latestManifestPath(fs, p, None)).version
+            stableRowIds: Boolean = false): Long =
     // stable mode stores move-stable row IDS instead of addresses: the
     // index keeps answering correctly after the dataset is compacted
     // underneath it (ids survive the move; lookup resolves id -> current
     // address through the manifest's sequences at probe time)
-    val addrCol = if (stableRowIds) "_rowid" else "_rowaddr"
-    spark.read.format("lance").option("versionAsOf", builtV).load(datasetPath)
-      .select(col(keyCol).as("key"), col(addrCol).as("addr"))
-      .write.format("lance")
-      .option("sortBy", "key")
-      .option("writePartitions", writePartitions.toString)
-      .mode("overwrite").save(s"$indexPath/keys.lance")
-    spark.createDataFrame(Seq((builtV, keyCol, stableRowIds,
-        headVersion(spark, s"$indexPath/keys.lance"))))
-      .toDF("built_version", "key_col", "stable", "data_version")
-      .coalesce(1).write.format("lance").mode("overwrite")
-      .save(s"$indexPath/meta.lance")
-    builtV
-  }
+    buildPublished(spark, datasetPath, indexPath, "keys", writePartitions,
+        Seq("key_col" -> keyCol, "stable" -> stableRowIds))(
+      keyRows(spark, datasetPath, keyCol, stableRowIds, 0L, _))
 
   /** Whether this index stores row ids (vs addresses) — `stable` meta
     * column; absent in pre-stable indexes, defaulting to false. */
-  private def isStable(meta: org.apache.spark.sql.Row): Boolean = {
-    val i = meta.schema.fieldNames.indexOf("stable")
-    i >= 0 && !meta.isNullAt(i) && meta.getBoolean(i)
+  private def isStable(pub: Published): Boolean = {
+    val i = pub.row.schema.fieldNames.indexOf("stable")
+    i >= 0 && !pub.row.isNullAt(i) && pub.row.getBoolean(i)
   }
 
-  /** The PUBLISHED data-sidecar version recorded in meta.lance (None:
-    * legacy or label indexes without the column). meta.lance is the
-    * index's one atomic publish point: an updater's data-sidecar append
-    * is invisible to every reader until the meta overwrite lands, so a
-    * fence abort (or crash) between the two commits publishes nothing —
-    * the next updater sweeps the orphan tail (restore to the pinned
-    * version) instead of re-appending the same rows on top of it. */
-  private def dataVersionOf(meta: org.apache.spark.sql.Row): Option[Long] = {
-    val i = meta.schema.fieldNames.indexOf("data_version")
-    if (i >= 0 && !meta.isNullAt(i)) Some(meta.getLong(i)) else None
+  private def metaPath(indexPath: String): String = s"$indexPath/meta.lance"
+
+  private def requireMeta(spark: SparkSession, indexPath: String): Published =
+    IndexStore.published(spark, metaPath(indexPath)).getOrElse(
+      throw new IllegalStateException(s"$indexPath has no meta.lance"))
+
+  /** The data sidecar pinned at the published `data_version` (the head
+    * for legacy indexes without one; see [[IndexStore]]). */
+  private def sidecar(spark: SparkSession, indexPath: String, name: String,
+                      pub: Option[Published]): DataFrame =
+    IndexStore.pinned(spark, indexPath, s"$name.lance",
+      pub.flatMap(_.pin("data_version")))
+
+  /** The source rows of one version window: the snapshot at `to` when
+    * `from` is 0 (a build), else only the fragments committed after
+    * `from` (an update's tail). */
+  private def window(spark: SparkSession, datasetPath: String,
+                     from: Long, to: Long): DataFrame = {
+    val rd = spark.read.format("lance").option("versionAsOf", to)
+    (if (from > 0) rd.option("fromVersion", from) else rd).load(datasetPath)
   }
 
-  private def metaRowOpt(spark: SparkSession,
-                         indexPath: String): Option[org.apache.spark.sql.Row] =
-    try Some(spark.read.format("lance").load(s"$indexPath/meta.lance").head())
-    catch { case _: Exception => None }
+  private def keyRows(spark: SparkSession, datasetPath: String, keyCol: String,
+                      stable: Boolean, from: Long, to: Long): DataFrame =
+    window(spark, datasetPath, from, to).select(col(keyCol).as("key"),
+      col(if (stable) "_rowid" else "_rowaddr").as("addr"))
 
-  /** Data-sidecar scan pinned at the published version when meta records
-    * one — readers never see a fence-aborted updater's orphan tail. */
-  private def pinnedSidecar(spark: SparkSession, indexPath: String,
-                            name: String,
-                            meta: Option[org.apache.spark.sql.Row]): DataFrame = {
-    val base = spark.read.format("lance")
-    meta.flatMap(dataVersionOf) match {
-      case Some(v) =>
-        base.option("versionAsOf", v).load(s"$indexPath/$name.lance")
-      case None => base.load(s"$indexPath/$name.lance")
+  private def writeSorted(rows: DataFrame, path: String, mode: String,
+                          writePartitions: Int): Unit =
+    rows.write.format("lance")
+      .option("sortBy", "key")
+      .option("writePartitions", writePartitions.toString)
+      .mode(mode).save(path)
+
+  /** Publish (built_version, `fields`, data_version = the data sidecar's
+    * head) to meta.lance. */
+  private def publishMeta(spark: SparkSession, indexPath: String, name: String,
+                          fence: Option[MaintenanceLock.Fence], builtV: Long,
+                          fields: Seq[(String, Any)]): Unit =
+    IndexStore.publish(spark, metaPath(indexPath), fence,
+      (("built_version" -> builtV) +: fields) :+ ("data_version" ->
+        LanceFormat.headVersion(spark.sessionState.newHadoopConf(),
+          s"$indexPath/$name.lance")): _*)
+
+  /** The one build body: `rowsAt(head)` overwrites the data sidecar, then
+    * meta publishes. */
+  private def buildPublished(spark: SparkSession, datasetPath: String,
+                             indexPath: String, name: String,
+                             writePartitions: Int, fields: Seq[(String, Any)])(
+                             rowsAt: Long => DataFrame): Long = {
+    val builtV = LanceFormat.headVersion(spark.sessionState.newHadoopConf(), datasetPath)
+    writeSorted(rowsAt(builtV), s"$indexPath/$name.lance", "overwrite", writePartitions)
+    publishMeta(spark, indexPath, name, None, builtV, fields)
+    builtV
+  }
+
+  /** The one update body of every kind — the crate's `optimize_indices`
+    * for a scalar index, O(tail): under the fenced maintenance lock, sweep
+    * a fence-aborted predecessor's orphan tail, append `rowsOf(record,
+    * from, to)` as NEW key-sorted fragments (existing fragments untouched;
+    * a probe prunes by zone maps per fragment), then republish the record
+    * with the covered version and the new data pin. Fence BEFORE the
+    * sweep: a usurped holder resuming from a pause must not restore the
+    * sidecar to ITS stale record and delete a successor's fresh tail. */
+  private def appendUpdate(spark: SparkSession, datasetPath: String,
+                           indexPath: String, name: String,
+                           writePartitions: Int)(
+                           rowsOf: (Published, Long, Long) => DataFrame): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    MaintenanceLock.withLockFenced(indexPath, conf) { fence =>
+      val pub = requireMeta(spark, indexPath)
+      val headV = LanceFormat.headVersion(conf, datasetPath)
+      if (headV == pub.built) pub.built
+      else {
+        fence.check()
+        pub.pin("data_version").foreach(
+          IndexStore.sweep(spark, indexPath, s"$name.lance", _))
+        writeSorted(rowsOf(pub, pub.built, headV), s"$indexPath/$name.lance",
+          "append", writePartitions)
+        publishMeta(spark, indexPath, name, Some(fence), headV,
+          pub.row.schema.fieldNames.toSeq
+            .filterNot(Set("built_version", "data_version"))
+            .map(n => n -> pub.row.getAs[Any](n)))
+        headV
+      }
     }
   }
-
-  /** Sweep a fence-aborted predecessor's orphan tail from an append-mode
-    * data sidecar: restore it to the published version before we append
-    * (overwrite-mode sidecars never need this — their readers pin). */
-  private def sweepOrphanTail(spark: SparkSession, indexPath: String,
-                              name: String,
-                              meta: org.apache.spark.sql.Row): Unit =
-    dataVersionOf(meta).foreach { v =>
-      if (headVersion(spark, s"$indexPath/$name.lance") != v)
-        graft.sources.lance.LanceMaintenance.restore(
-          spark, s"$indexPath/$name.lance", v)
-    }
 
   /** Translate a probed `addr` column to CURRENT row addresses: identity
     * for an address index; for a stable index, resolve ids through the
@@ -123,7 +162,6 @@ object ScalarIndex {
                            stable: Boolean, vals: Array[Long]): Array[Long] =
     if (!stable) vals
     else {
-      import graft.sources.lance.LanceFormat
       val conf = spark.sessionState.newHadoopConf()
       val (fs, p) = LanceFormat.fileSystem(datasetPath, conf)
       val m = LanceFormat.readManifest(fs,
@@ -132,57 +170,19 @@ object ScalarIndex {
       vals.flatMap(byId.get)
     }
 
-  /** Incrementally extend the index over rows appended after the build —
-    * the crate's `optimize_indices` for a scalar index, O(tail): the
-    * post-build fragments' `(key, addr)` pairs append as NEW range-sorted
-    * fragments (existing fragments untouched; a probe prunes by zone maps
-    * per fragment, so it opens at most one old + one new fragment), and
-    * `meta.lance` advances to the covered version. After an update,
-    * [[lookup]] covers exactly what a full [[build]] at the head would —
-    * the addr SET is identical, only the fragment layout differs.
+  /** Incrementally extend the index over rows appended after the build:
+    * the post-build fragments' `(key, addr)` pairs append as new
+    * range-sorted fragments, so a probe opens at most one old + one new
+    * fragment per key. After an update, [[lookup]] covers exactly what a
+    * full [[build]] at the head would — the addr SET is identical, only
+    * the fragment layout differs.
     */
   def update(spark: SparkSession, datasetPath: String, indexPath: String,
              writePartitions: Int = 2): Long =
-    graft.sources.lance.MaintenanceLock.withLockFenced(indexPath,
-        spark.sessionState.newHadoopConf()) { fence =>
-    import graft.sources.lance.LanceFormat
-    val meta = spark.read.format("lance").load(s"$indexPath/meta.lance").head()
-    val (builtV, keyCol) = (meta.getLong(0), meta.getString(1))
-    val stable = isStable(meta)
-    val conf = spark.sessionState.newHadoopConf()
-    val (fs, p) = LanceFormat.fileSystem(datasetPath, conf)
-    val headV = LanceFormat.readManifest(fs,
-      LanceFormat.latestManifestPath(fs, p, None)).version
-    if (headV == builtV) builtV
-    else {
-      val addrCol = if (stable) "_rowid" else "_rowaddr"
-      // the meta overwrite below is the only PUBLISH: readers pin the
-      // data_version it records, so a fence abort (clock-skew usurper,
-      // swept holder) or crash between the two commits leaves the
-      // published index untouched — sweep any such predecessor's orphan
-      // tail before appending ours. Fence BEFORE the sweep (the Fts
-      // ordering): a usurped holder resuming from a pause must not
-      // restore the sidecar to ITS stale meta and delete a successor's
-      // freshly-appended tail.
-      fence.check()
-      sweepOrphanTail(spark, indexPath, "keys", meta)
-      spark.read.format("lance")
-        .option("fromVersion", builtV).option("versionAsOf", headV)
-        .load(datasetPath)
-        .select(col(keyCol).as("key"), col(addrCol).as("addr"))
-        .write.format("lance")
-        .option("sortBy", "key")
-        .option("writePartitions", writePartitions.toString)
-        .mode("append").save(s"$indexPath/keys.lance")
-      fence.check()
-      spark.createDataFrame(Seq((headV, keyCol, stable,
-          headVersion(spark, s"$indexPath/keys.lance"))))
-        .toDF("built_version", "key_col", "stable", "data_version")
-        .coalesce(1).write.format("lance").mode("overwrite")
-        .save(s"$indexPath/meta.lance")
-      headV
+    appendUpdate(spark, datasetPath, indexPath, "keys", writePartitions) {
+      (pub, from, to) =>
+        keyRows(spark, datasetPath, pub.row.getString(1), isStable(pub), from, to)
     }
-  }
 
   /** Greedy coverage-optimal interval cover: split the sorted addrs at
     * the (maxIntervals - 1) largest gaps — for a fixed interval budget
@@ -227,10 +227,10 @@ object ScalarIndex {
   /** Point / IN-list lookup: zone-pruned index probe → take-path fetch. */
   def lookup(spark: SparkSession, datasetPath: String, indexPath: String,
              keys: Seq[Any], maxRows: Int = 100000): DataFrame = {
-    val meta = metaRowOpt(spark, indexPath)
-    val probe = pinnedSidecar(spark, indexPath, "keys", meta)
+    val pub = IndexStore.published(spark, metaPath(indexPath))
+    val probe = sidecar(spark, indexPath, "keys", pub)
       .filter(col("key").isin(keys: _*))
-    fetchByAddrs(spark, datasetPath, probe, maxRows, meta.exists(isStable))
+    fetchByAddrs(spark, datasetPath, probe, maxRows, pub.exists(isStable))
   }
 
   /** Range lookup `lo <= key < hi` — the BTREE range-scan shape; the
@@ -238,10 +238,10 @@ object ScalarIndex {
     */
   def lookupRange(spark: SparkSession, datasetPath: String, indexPath: String,
                   lo: Any, hi: Any, maxRows: Int = 100000): DataFrame = {
-    val meta = metaRowOpt(spark, indexPath)
-    val probe = pinnedSidecar(spark, indexPath, "keys", meta)
+    val pub = IndexStore.published(spark, metaPath(indexPath))
+    val probe = sidecar(spark, indexPath, "keys", pub)
       .filter(col("key") >= lit(lo) && col("key") < lit(hi))
-    fetchByAddrs(spark, datasetPath, probe, maxRows, meta.exists(isStable))
+    fetchByAddrs(spark, datasetPath, probe, maxRows, pub.exists(isStable))
   }
 
   /** Point / IN-list lookup that ALSO covers rows appended after the
@@ -256,17 +256,16 @@ object ScalarIndex {
   def lookupCombined(spark: SparkSession, datasetPath: String,
                      indexPath: String, keys: Seq[Any],
                      maxRows: Int = 100000): DataFrame = {
-    val meta = spark.read.format("lance").load(s"$indexPath/meta.lance").head()
-    val builtV = meta.getLong(0)
-    val keyCol = meta.getString(1)
-    val stable = isStable(meta)
-    val addrCol = if (stable) "_rowid" else "_rowaddr"
-    val idxProbe = pinnedSidecar(spark, indexPath, "keys", Some(meta))
+    // the tail bound and the pin come from ONE publish record
+    val pub = requireMeta(spark, indexPath)
+    val keyCol = pub.row.getString(1)
+    val stable = isStable(pub)
+    val idxProbe = sidecar(spark, indexPath, "keys", Some(pub))
       .filter(col("key").isin(keys: _*)).select("addr")
     val tailProbe = spark.read.format("lance")
-      .option("fromVersion", builtV).load(datasetPath)
+      .option("fromVersion", pub.built).load(datasetPath)
       .filter(col(keyCol).isin(keys: _*))
-      .select(col(addrCol).as("addr"))
+      .select(col(if (stable) "_rowid" else "_rowaddr").as("addr"))
     fetchByAddrs(spark, datasetPath, idxProbe.unionByName(tailProbe), maxRows,
                  stable)
   }
@@ -277,16 +276,15 @@ object ScalarIndex {
     * layout. A membership probe prunes to the labels' fragments; the addr
     * set dedupes before the take (a row tagged with two probed labels
     * fetches once).
+    *
+    * This kind has no update and so no publish point: nothing commits to
+    * its sidecar after the build, and probes read the sidecar head.
     */
   def buildLabels(spark: SparkSession, datasetPath: String, arrayCol: String,
-                  indexPath: String, writePartitions: Int = 8): Unit = {
-    spark.read.format("lance").load(datasetPath)
-      .select(explode(col(arrayCol)).as("key"), col("_rowaddr").as("addr"))
-      .write.format("lance")
-      .option("sortBy", "key")
-      .option("writePartitions", writePartitions.toString)
-      .mode("overwrite").save(s"$indexPath/keys.lance")
-  }
+                  indexPath: String, writePartitions: Int = 8): Unit =
+    writeSorted(spark.read.format("lance").load(datasetPath)
+        .select(explode(col(arrayCol)).as("key"), col("_rowaddr").as("addr")),
+      s"$indexPath/keys.lance", "overwrite", writePartitions)
 
   /** Rows whose indexed array contains ANY of `labels` (`array_has_any`). */
   def lookupAnyLabel(spark: SparkSession, datasetPath: String,
@@ -334,53 +332,19 @@ object ScalarIndex {
     * lossless; probes cast their literals identically.
     */
   def buildBitmap(spark: SparkSession, datasetPath: String, keyCol: String,
-                  indexPath: String, writePartitions: Int = 4): Long = {
-    val builtV = headVersion(spark, datasetPath)
-    bitmapRows(spark, datasetPath, keyCol, Some((0L, builtV)))
-      .write.format("lance")
-      .option("sortBy", "key")
-      .option("writePartitions", writePartitions.toString)
-      .mode("overwrite").save(s"$indexPath/bitmaps.lance")
-    writeMeta(spark, indexPath, builtV, keyCol,
-              headVersion(spark, s"$indexPath/bitmaps.lance"))
-    builtV
-  }
+                  indexPath: String, writePartitions: Int = 4): Long =
+    buildPublished(spark, datasetPath, indexPath, "bitmaps", writePartitions,
+        Seq("key_col" -> keyCol))(
+      to => bitmapRows(window(spark, datasetPath, 0L, to), keyCol))
 
-  private def headVersion(spark: SparkSession, datasetPath: String): Long = {
-    import graft.sources.lance.LanceFormat
-    val conf = spark.sessionState.newHadoopConf()
-    val (fs, p) = LanceFormat.fileSystem(datasetPath, conf)
-    LanceFormat.readManifest(fs,
-      LanceFormat.latestManifestPath(fs, p, None)).version
-  }
-
-  private def writeMeta(spark: SparkSession, indexPath: String,
-                        builtV: Long, keyCol: String, dataV: Long): Unit =
-    spark.createDataFrame(Seq((builtV, keyCol, dataV)))
-      .toDF("built_version", "key_col", "data_version")
-      .coalesce(1).write.format("lance").mode("overwrite")
-      .save(s"$indexPath/meta.lance")
-
-  /** The per-(key, fragment) bitmap frame; `range = Some((fromV, toV))`
-    * restricts to fragments committed in that version window (the
-    * incremental-update slice). */
-  private def bitmapRows(spark: SparkSession, datasetPath: String,
-                         keyCol: String,
-                         range: Option[(Long, Long)]): DataFrame = {
-    val rd = spark.read.format("lance")
-    val src = range match {
-      case Some((from, to)) if from > 0 =>
-        rd.option("fromVersion", from).option("versionAsOf", to).load(datasetPath)
-      case Some((_, to)) => rd.option("versionAsOf", to).load(datasetPath)
-      case None => rd.load(datasetPath)
-    }
+  /** The per-(key, fragment) bitmap frame of `src`. */
+  private def bitmapRows(src: DataFrame, keyCol: String): DataFrame =
     src.select(col(keyCol).cast("string").as("key"),
                shiftrightunsigned(col("_rowaddr"), 32).as("frag"),
                col("_rowaddr").bitwiseAND(lit(0xFFFFFFFFL)).cast("int").as("off"))
       .groupBy("key", "frag")
       .agg(count(lit(1)).as("card"),
            serBitmap(sort_array(collect_list(col("off")))).as("bitmap"))
-  }
 
   /** Incrementally extend the bitmap index over post-build appends — new
     * fragments' bitmaps append as new key-sorted rows (a `(key, frag)`
@@ -388,34 +352,17 @@ object ScalarIndex {
     */
   def updateBitmap(spark: SparkSession, datasetPath: String,
                    indexPath: String, writePartitions: Int = 2): Long =
-    graft.sources.lance.MaintenanceLock.withLockFenced(indexPath,
-        spark.sessionState.newHadoopConf()) { fence =>
-    val meta = spark.read.format("lance").load(s"$indexPath/meta.lance").head()
-    val (builtV, keyCol) = (meta.getLong(0), meta.getString(1))
-    val headV = headVersion(spark, datasetPath)
-    if (headV == builtV) builtV
-    else {
-      // see update(): meta is the only publish; fence, sweep a
-      // fence-aborted predecessor's orphan tail, then append + publish
-      fence.check()
-      sweepOrphanTail(spark, indexPath, "bitmaps", meta)
-      bitmapRows(spark, datasetPath, keyCol, Some((builtV, headV)))
-        .write.format("lance")
-        .option("sortBy", "key")
-        .option("writePartitions", writePartitions.toString)
-        .mode("append").save(s"$indexPath/bitmaps.lance")
-      fence.check()
-      writeMeta(spark, indexPath, headV, keyCol,
-                headVersion(spark, s"$indexPath/bitmaps.lance"))
-      headV
+    appendUpdate(spark, datasetPath, indexPath, "bitmaps", writePartitions) {
+      (pub, from, to) =>
+        bitmapRows(window(spark, datasetPath, from, to), pub.row.getString(1))
     }
-  }
 
   /** Per-fragment OR of the bitmaps matching `keys` (one index) —
     * `(frag, bitmap)`, all executor-side. */
   private def fragBitmaps(spark: SparkSession, indexPath: String,
                           keys: Seq[Any]): DataFrame =
-    pinnedSidecar(spark, indexPath, "bitmaps", metaRowOpt(spark, indexPath))
+    sidecar(spark, indexPath, "bitmaps",
+        IndexStore.published(spark, metaPath(indexPath)))
       .filter(col("key").isin(keys.map(_.toString): _*))
       .groupBy("frag")
       .agg(unionBitmaps(collect_list(col("bitmap"))).as("bitmap"))
@@ -465,61 +412,26 @@ object ScalarIndex {
     */
   def buildNgram(spark: SparkSession, datasetPath: String, textCol: String,
                  indexPath: String, n: Int = 3,
-                 writePartitions: Int = 8): Long = {
-    val builtV = headVersion(spark, datasetPath)
-    ngramRows(spark, datasetPath, textCol, n, Some((0L, builtV)))
-      .write.format("lance")
-      .option("sortBy", "key")
-      .option("writePartitions", writePartitions.toString)
-      .mode("overwrite").save(s"$indexPath/keys.lance")
-    writeMeta(spark, indexPath, builtV, s"$textCol#$n",
-              headVersion(spark, s"$indexPath/keys.lance"))
-    builtV
-  }
+                 writePartitions: Int = 8): Long =
+    buildPublished(spark, datasetPath, indexPath, "keys", writePartitions,
+        Seq("key_col" -> s"$textCol#$n"))(
+      to => ngramRows(window(spark, datasetPath, 0L, to), textCol, n))
 
-  private def ngramRows(spark: SparkSession, datasetPath: String,
-                        textCol: String, n: Int,
-                        range: Option[(Long, Long)]): DataFrame = {
-    val rd = spark.read.format("lance")
-    val src = range match {
-      case Some((from, to)) if from > 0 =>
-        rd.option("fromVersion", from).option("versionAsOf", to).load(datasetPath)
-      case Some((_, to)) => rd.option("versionAsOf", to).load(datasetPath)
-      case None => rd.load(datasetPath)
-    }
+  private def ngramRows(src: DataFrame, textCol: String, n: Int): DataFrame =
     src.select(col("_rowaddr").as("addr"), col(textCol).as("t"))
       .select(col("addr"), explode(array_distinct(expr(
         s"transform(sequence(1, greatest(length(t) - ${n - 1}, 0))," +
           s" i -> substring(t, i, $n))"))).as("key"))
-  }
 
   /** Incrementally extend the ngram index over post-build appends (new
     * fragments' gram postings as new range-sorted fragments; O(tail)). */
   def updateNgram(spark: SparkSession, datasetPath: String,
                   indexPath: String, writePartitions: Int = 2): Long =
-    graft.sources.lance.MaintenanceLock.withLockFenced(indexPath,
-        spark.sessionState.newHadoopConf()) { fence =>
-    val meta = spark.read.format("lance").load(s"$indexPath/meta.lance").head()
-    val builtV = meta.getLong(0)
-    val Array(textCol, nStr) = meta.getString(1).split('#')
-    val headV = headVersion(spark, datasetPath)
-    if (headV == builtV) builtV
-    else {
-      // see update(): meta is the only publish; fence, sweep a
-      // fence-aborted predecessor's orphan tail, then append + publish
-      fence.check()
-      sweepOrphanTail(spark, indexPath, "keys", meta)
-      ngramRows(spark, datasetPath, textCol, nStr.toInt, Some((builtV, headV)))
-        .write.format("lance")
-        .option("sortBy", "key")
-        .option("writePartitions", writePartitions.toString)
-        .mode("append").save(s"$indexPath/keys.lance")
-      fence.check()
-      writeMeta(spark, indexPath, headV, meta.getString(1),
-                headVersion(spark, s"$indexPath/keys.lance"))
-      headV
+    appendUpdate(spark, datasetPath, indexPath, "keys", writePartitions) {
+      (pub, from, to) =>
+        val Array(textCol, n) = pub.row.getString(1).split('#')
+        ngramRows(window(spark, datasetPath, from, to), textCol, n.toInt)
     }
-  }
 
   /** Rows whose `textCol` CONTAINS `needle` — exact (not approximate):
     * candidate rows must post ALL of the needle's trigrams (an
@@ -535,8 +447,8 @@ object ScalarIndex {
     val base = spark.read.format("lance").load(datasetPath)
     if (needle.length < n) return base.filter(col(textCol).contains(needle))
     val grams = needle.sliding(n).toSeq.distinct
-    val probe = pinnedSidecar(spark, indexPath, "keys",
-        metaRowOpt(spark, indexPath))
+    val probe = sidecar(spark, indexPath, "keys",
+        IndexStore.published(spark, metaPath(indexPath)))
       .filter(col("key").isin(grams: _*))
       .groupBy("addr").agg(count(lit(1)).as("hits"))
       .filter(col("hits") === grams.size)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Lru
+import graft.sources.lance.{IndexStore, LanceFormat}
+import graft.sources.lance.IndexStore.Published
 
 /** Vector similarity-search operators over `ArrayType(FloatType)` columns
   * (SURVEY §2.5): brute-force exact top-k as the baseline, LSH-bucketed
@@ -297,19 +299,16 @@ object Similarity {
     *    assignments depend on; `pq_codebooks.lance` = (sub, code, float
     *    centroid); `pq_meta.lance`.
     *
-    * Pins: the meta is the one publish point, written only by the Lance
-    * build and the update — one row of (built_version = the covered source
-    * version, vectors_version = the index-dataset pin, centroids_version
-    * [, codebooks_version] = the sidecar pins). Probes take every pin from
-    * ONE meta read, so neither an update that crashed before its meta
-    * write (an orphaned index commit) nor a rebuild that crashed after
-    * overwriting a sidecar (new centroids/codebooks against old pinned
-    * rows: wrong probe lists, garbage ADC scores) is visible; the next
-    * update restores both back before applying. A missing pin column reads
-    * as head, and a legacy 1-column meta upgrades to the pinned schema at
-    * its first update, before any index mutation. A DataFrame-built index
-    * has no meta: probes read head; the update and combined faces refuse
-    * it. */
+    * The meta is the publish point of a published index
+    * ([[graft.sources.lance.IndexStore]]), written only by the Lance build
+    * and the update: one row of (built_version, vectors_version,
+    * centroids_version [, codebooks_version]). Pinning the sidecars too
+    * hides a rebuild that crashed after overwriting one (new
+    * centroids/codebooks against old pinned rows: wrong probe lists,
+    * garbage ADC scores), and the next update restores them. A legacy
+    * 1-column meta upgrades to the pinned schema at its first update,
+    * before any index mutation. A DataFrame-built index has no meta:
+    * probes read head; the update and combined faces refuse it. */
   private sealed abstract class Flavor(val dataName: String,
                                        val centroidsName: String,
                                        val codebooksName: Option[String],
@@ -317,6 +316,9 @@ object Similarity {
                                        val lanceBuild: String) {
     /** The index dataset and sidecars, in meta pin-column order. */
     def datasets: Seq[String] = Seq(dataName, centroidsName) ++ codebooksName
+    def pinColumns: Seq[String] =
+      Seq("vectors_version", "centroids_version", "codebooks_version")
+        .take(datasets.length)
     /** The per-row index columns of corpus rows carrying `list_id`: the
       * whole row for `Flat`. */
     def rows(assigned: DataFrame, idCol: String, vecCol: String,
@@ -426,7 +428,7 @@ object Similarity {
                               sourcePath: String, indexPath: String,
                               f: Flavor)(build: DataFrame => Unit): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    val builtV = datasetHead(conf, sourcePath)
+    val builtV = LanceFormat.headVersion(conf, sourcePath)
     // pin the snapshot: a concurrent append between version read and scan
     // must not leak half-indexed rows past the recorded version
     build(spark.read.format("lance").option("versionAsOf", builtV).load(sourcePath))
@@ -466,31 +468,31 @@ object Similarity {
     import graft.sources.lance.{LanceMaintenance, MaintenanceLock}
     val conf = spark.sessionState.newHadoopConf()
     MaintenanceLock.withLock(indexPath, conf) {
-      def headOf(name: String): Long = datasetHead(conf, s"$indexPath/$name")
-      val m0 = metaOf(spark, indexPath, f, recheck = true)
-        .getOrElse(throw noMeta(indexPath, f))
+      def headOf(name: String): Long =
+        LanceFormat.headVersion(conf, s"$indexPath/$name")
+      val m0 = requireMeta(spark, indexPath, f)
       // a legacy 1-column meta (built, never updated) first UPGRADES to
       // the pinned schema at the current heads — published BEFORE any
       // index mutation, so even the first update's crash window is
       // covered (an orphan after a legacy meta would otherwise be
       // invisible to the sweep and visible to unpinned probes)
       val pins =
-        if (m0.vecPin.isEmpty) {
+        if (m0.pin("vectors_version").isEmpty) {
           val hs = heads(conf, indexPath, f)
           publish(spark, indexPath, f, m0.built, hs)
           hs
-        } else Seq(m0.vecPin, m0.centsPin, m0.cbsPin).zip(f.datasets)
-          .map { case (pin, name) => pin.getOrElse(headOf(name)) }
+        } else f.pinColumns.zip(f.datasets)
+          .map { case (c, name) => m0.pin(c).getOrElse(headOf(name)) }
       // sweep a crashed update's orphaned index commit AND a crashed
       // rebuild's sidecar overwrite BEFORE anything: the recorded
       // versions are the last published state, and assigning or encoding
       // the tail with drifted sidecars would publish an index mixing two
       // centroid sets or codes no single LUT can score
       f.datasets.zip(pins).foreach { case (name, v) =>
-        if (headOf(name) != v) LanceMaintenance.restore(spark, s"$indexPath/$name", v)
+        IndexStore.sweep(spark, indexPath, name, v)
       }
       val sidecarPins = f.datasets.tail.map(headOf)
-      val headV = datasetHead(conf, sourcePath)
+      val headV = LanceFormat.headVersion(conf, sourcePath)
       if (headV != m0.built) {
         val sc = sidecars(spark, indexPath, f, Some(sidecarPins.head),
           sidecarPins.lift(1))
@@ -524,89 +526,25 @@ object Similarity {
     }
   }
 
-  private def noMeta(indexPath: String, f: Flavor): IllegalStateException =
-    new IllegalStateException(
-      s"$indexPath has no ${f.metaName} — build with ${f.lanceBuild}")
+  private def published(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                        f: Flavor): Option[Published] =
+    IndexStore.published(spark, s"$indexPath/${f.metaName}")
 
-  /** Manifest head version of a lance dataset — shared by the meta
-    * reads, the build, and the update (one idiom, one place to change
-    * manifest resolution). */
-  private def datasetHead(conf: org.apache.hadoop.conf.Configuration,
-                          path: String): Long = {
-    import graft.sources.lance.LanceFormat
-    val (fs, p) = LanceFormat.fileSystem(path, conf)
-    LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None)).version
-  }
+  private def requireMeta(spark: org.apache.spark.sql.SparkSession,
+                          indexPath: String, f: Flavor): Published =
+    published(spark, indexPath, f).getOrElse(throw new IllegalStateException(
+      s"$indexPath has no ${f.metaName} — build with ${f.lanceBuild}"))
 
   private def heads(conf: org.apache.hadoop.conf.Configuration,
                     indexPath: String, f: Flavor): Seq[Long] =
-    f.datasets.map(name => datasetHead(conf, s"$indexPath/$name"))
+    f.datasets.map(name => LanceFormat.headVersion(conf, s"$indexPath/$name"))
 
   /** The one meta writer: (built_version, then `pins` in `f.datasets`
-    * order) replaces the flavor's meta; the in-process copy drops. */
+    * order) replaces the flavor's meta. */
   private def publish(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                      f: Flavor, built: Long, pins: Seq[Long]): Unit = {
-    val vals = built +: pins
-    val schema = StructType(
-      Seq("built_version", "vectors_version", "centroids_version", "codebooks_version")
-        .take(vals.length).map(StructField(_, LongType, nullable = false)))
-    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row.fromSeq(vals)), schema)
-      .coalesce(1).write.format("lance").mode("overwrite")
-      .save(s"$indexPath/${f.metaName}")
-    metaCache.remove(s"$indexPath/${f.metaName}")
-  }
-
-  /** One atomically-read publish record of an index's meta sidecar (see
-    * [[Flavor]]): the covered source version and the pins of the index
-    * dataset and its sidecars. A None pin means "head". */
-  private[graft] case class IdxMeta(built: Long, vecPin: Option[Long],
-                                    centsPin: Option[Long],
-                                    cbsPin: Option[Long])
-
-  /** The [[IdxMeta]] of an index's meta sidecar (None without one), read
-    * ATOMICALLY: every field always comes from the same meta version (a
-    * fresh built_version paired with a stale cached pin would make the
-    * combined faces drop rows a cross-process update had just folded in —
-    * empty tail AND pre-update index). Values cache per meta MANIFEST
-    * version, so a call on an index with meta pays only a manifest-head
-    * read (plain file IO, no Spark job) to detect cross-process publishes.
-    * The no-meta answer (DataFrame-built indexes) caches as None — no
-    * per-probe existence check on that hot path; [[publish]] invalidates
-    * in-process, and `recheck` (the update's lock-held read) ignores it.
-    * The cache key is the meta dataset path, so the two flavors of one
-    * index directory never collide. */
-  private val metaCache = new Lru[String, Option[(Long, IdxMeta)]](32)
-  private def metaOf(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String, f: Flavor,
-                     recheck: Boolean = false): Option[IdxMeta] = {
-    import graft.sources.lance.LanceFormat
-    val conf = spark.sessionState.newHadoopConf()
-    val metaPath = s"$indexPath/${f.metaName}"
-    metaCache.get(metaPath) match {
-      case Some(None) if !recheck => None
-      case cached =>
-        val (fs, mp) = LanceFormat.fileSystem(metaPath, conf)
-        if (!fs.exists(mp)) { metaCache.put(metaPath, None); None }
-        else {
-          val head = datasetHead(conf, metaPath)
-          cached.flatten match {
-            case Some((v, m)) if v == head => Some(m)
-            case _ =>
-              val mdf = spark.read.format("lance")
-                .option("versionAsOf", head).load(metaPath)
-              val r = mdf.head()
-              def longOf(name: String): Option[Long] =
-                if (mdf.schema.fieldNames.contains(name))
-                  Some(r.getLong(r.fieldIndex(name)))
-                else None
-              val m = IdxMeta(r.getLong(0), longOf("vectors_version"),
-                longOf("centroids_version"), longOf("codebooks_version"))
-              metaCache.put(metaPath, Some((head, m)))
-              Some(m)
-          }
-        }
-    }
-  }
+                      f: Flavor, built: Long, pins: Seq[Long]): Unit =
+    IndexStore.publish(spark, s"$indexPath/${f.metaName}", None,
+      ("built_version" -> built) +: f.pinColumns.zip(pins): _*)
 
   /** An index's quantizer state as its sidecars hold it: the coarse
     * centroids, the build-time probe width (`Flat`; [[DefaultNProbe]] for
@@ -627,18 +565,14 @@ object Similarity {
                        f: Flavor, centsPin: Option[Long],
                        cbsPin: Option[Long]): Sidecars =
     sidecarCache.getOrLoad(sidecarKey(indexPath, f, centsPin, cbsPin)) {
-      def read(name: String, pin: Option[Long]): DataFrame = {
-        val base = spark.read.format("lance")
-        pin.fold(base)(v => base.option("versionAsOf", v)).load(s"$indexPath/$name")
-      }
-      val cdf = read(f.centroidsName, centsPin)
+      val cdf = IndexStore.pinned(spark, indexPath, f.centroidsName, centsPin)
       val rows = cdf.orderBy("list_id").collect()
       val width =
         if (cdf.schema.fieldNames.contains("default_nprobe") && rows.nonEmpty)
           rows.head.getInt(rows.head.fieldIndex("default_nprobe"))
         else DefaultNProbe
       val codebooks = f.codebooksName.fold(Array.empty[Array[Array[Double]]]) { name =>
-        read(name, cbsPin).orderBy("sub", "code").collect()
+        IndexStore.pinned(spark, indexPath, name, cbsPin).orderBy("sub", "code").collect()
           .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
           .map(_._2.map(_.getSeq[Float](2).map(_.toDouble).toArray)).toArray
       }
@@ -648,18 +582,16 @@ object Similarity {
   /** The index dataset and sidecars a probe reads, all pinned by ONE
     * publish record (head without one) — see [[Flavor]]. */
   private def pinnedIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                          f: Flavor, meta: Option[IdxMeta]): (DataFrame, Sidecars) = {
-    val base = spark.read.format("lance")
-    val data = meta.flatMap(_.vecPin).fold(base)(v => base.option("versionAsOf", v))
-      .load(s"$indexPath/${f.dataName}")
-    (data, sidecars(spark, indexPath, f, meta.flatMap(_.centsPin),
-      meta.flatMap(_.cbsPin)))
+                          f: Flavor, meta: Option[Published]): (DataFrame, Sidecars) = {
+    def pin(column: String): Option[Long] = meta.flatMap(_.pin(column))
+    (IndexStore.pinned(spark, indexPath, f.dataName, pin("vectors_version")),
+      sidecars(spark, indexPath, f, pin("centroids_version"), pin("codebooks_version")))
   }
 
   /** Test hook: simulate a fresh process (sidecar and meta re-reads). */
   private[graft] def clearIndexCaches(): Unit = {
     sidecarCache.clear()
-    metaCache.clear()
+    IndexStore.clear()
   }
 
   /** Head centroids of a persisted IVF index. */
@@ -668,7 +600,7 @@ object Similarity {
     sidecars(spark, indexPath, Flat, None, None).centroids
 
   /** Head codebooks of a persisted IVF_PQ index. */
-  def pqCodebooks(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def pqCodebooks(spark: org.apache.spark.sql.SparkSession,
                   indexPath: String): Array[Array[Array[Double]]] =
     sidecars(spark, indexPath, Pq, None, None).codebooks
 
@@ -681,16 +613,16 @@ object Similarity {
                          indexPath: String, idCol: String, vecCol: String,
                          query: Seq[Float], k: Int, nProbe: Int = DefaultNProbe): DataFrame =
     ivfSearchPersistedAt(spark, indexPath, idCol, vecCol, query, k, nProbe,
-      metaOf(spark, indexPath, Flat))
+      published(spark, indexPath, Flat))
 
   /** The probe interior with the explicit publish record — the combined
-    * face resolves the WHOLE [[IdxMeta]] in ONE [[metaOf]] read and passes
+    * face resolves the WHOLE record in ONE [[published]] read and passes
     * it here so the tail bound and the pins can never tear. */
   private def ivfSearchPersistedAt(spark: org.apache.spark.sql.SparkSession,
                                    indexPath: String, idCol: String,
                                    vecCol: String, query: Seq[Float],
                                    k: Int, nProbe: Int,
-                                   meta: Option[IdxMeta]): DataFrame = {
+                                   meta: Option[Published]): DataFrame = {
     val (indexed, sc) = pinnedIndex(spark, indexPath, Flat, meta)
     // the SQL-rewrite registration uses the width PERSISTED by the build
     // — this call's nProbe is a per-query parameter and must not leak
@@ -718,8 +650,7 @@ object Similarity {
     // ONE atomic meta read: the tail bound and the pins must come from
     // the same publish, or a cross-process update between two reads
     // would empty the tail while probing the pre-update index
-    val meta = metaOf(spark, indexPath, Flat)
-      .getOrElse(throw noMeta(indexPath, Flat))
+    val meta = requireMeta(spark, indexPath, Flat)
     val tail = spark.read.format("lance")
       .option("fromVersion", meta.built).load(sourcePath)
     val tailTop = cosineTopK(tail, idCol, vecCol, query, k)
@@ -844,7 +775,7 @@ object Similarity {
       idCol: String, query: Seq[Float], k: Int, nProbe: Int,
       rerank: Int): DataFrame = {
     val (codes, sc) = pinnedIndex(spark, indexPath, Pq,
-      metaOf(spark, indexPath, Pq))
+      published(spark, indexPath, Pq))
     val cbs = sc.codebooks
     val m = cbs.length
     val dsub = cbs(0)(0).length
@@ -900,8 +831,7 @@ object Similarity {
                               query: Seq[Float], k: Int,
                               nProbe: Int = DefaultNProbe,
                               rerank: Int = 4): DataFrame = {
-    val builtV = metaOf(spark, indexPath, Pq)
-      .getOrElse(throw noMeta(indexPath, Pq)).built
+    val builtV = requireMeta(spark, indexPath, Pq).built
     val live = spark.read.format("lance").load(sourcePath)
     val idxTop = ivfPqSearch(spark, indexPath, live, idCol, vecCol,
       query, k, nProbe, rerank)

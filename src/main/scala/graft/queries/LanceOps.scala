@@ -487,10 +487,8 @@ object LanceOps {
         .write.format("lance").mode("append").save(ds)
       graft.sources.lance.LanceMaintenance.compactStable(s, ds,
         targetFragments = 2)
-      val conf = s.sessionState.newHadoopConf()
-      val (fs, p) = graft.sources.lance.LanceFormat.fileSystem(ds, conf)
-      val head = graft.sources.lance.LanceFormat.readManifest(fs,
-        graft.sources.lance.LanceFormat.latestManifestPath(fs, p, None)).version
+      val head = graft.sources.lance.LanceFormat.headVersion(
+        s.sessionState.newHadoopConf(), ds)
       graft.sources.lance.LanceMaintenance.changesBetween(s, ds, 1L, head)
         .select(col("_change"), col("s_suppkey"), col("s_name"),
                 col("s_acctbal"))

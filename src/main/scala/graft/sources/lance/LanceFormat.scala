@@ -262,6 +262,15 @@ object LanceFormat {
     new Path(dir, s"$v.manifest")
   }
 
+  /** The version of a dataset's head manifest. */
+  def headVersion(fs: FileSystem, dataset: Path): Long =
+    readManifest(fs, latestManifestPath(fs, dataset, None)).version
+
+  def headVersion(conf: Configuration, path: String): Long = {
+    val (fs, p) = fileSystem(path, conf)
+    headVersion(fs, p)
+  }
+
   def readManifest(fs: FileSystem, manifestPath: Path): Manifest = {
     def readVia(f: FileSystem): Array[Byte] = {
       val len = f.getFileStatus(manifestPath).getLen.toInt

@@ -80,9 +80,7 @@ object LanceMaintenance {
           .option("writePartitions", targetFragments.toString)
       else src.repartition(targetFragments).write.format("lance")
     wr.mode("overwrite").save(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val (fs, p) = LanceFormat.fileSystem(path, conf)
-    LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None)).version
+    LanceFormat.headVersion(spark.sessionState.newHadoopConf(), path)
   }
 
   /** Compaction that PRESERVES move-stable row ids (the crate's
@@ -704,8 +702,7 @@ object LanceMaintenance {
       // chase on a hot view's retry loop. (The commit loop re-checks; this
       // only narrows the orphan window to the manifest-write itself.)
       expectedVersion.foreach { v =>
-        val now = LanceFormat.readManifest(fs,
-          LanceFormat.latestManifestPath(fs, p, None)).version
+        val now = LanceFormat.headVersion(fs, p)
         if (now != v) throw new LanceCommitConflict(
           s"lance: version advanced under a versioned commit on $path " +
             s"(expected v$v, found v$now) — recompute", null)
@@ -1348,8 +1345,7 @@ object LanceMaintenance {
     require(tag.matches("[A-Za-z0-9._-]+"), s"invalid tag name '$tag'")
     val conf = spark.sessionState.newHadoopConf()
     val (fs, p) = LanceFormat.fileSystem(path, conf)
-    val v = version.getOrElse(LanceFormat.readManifest(fs,
-      LanceFormat.latestManifestPath(fs, p, None)).version)
+    val v = version.getOrElse(LanceFormat.headVersion(fs, p))
     // validate the version exists
     LanceFormat.latestManifestPath(fs, p, Some(v))
     val dir = new org.apache.hadoop.fs.Path(p, "_refs/tags")

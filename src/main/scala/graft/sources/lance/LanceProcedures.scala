@@ -248,10 +248,7 @@ private[lance] object LanceProcedures {
         StructField("pending_changes_est", LongType))),
       in => {
         val (spec, _) = graft.operators.MatView.loadSpec(spark, path(in))
-        val conf = spark.sessionState.newHadoopConf()
-        val (sfs, sp) = LanceFormat.fileSystem(spec.src, conf)
-        val head = LanceFormat.readManifest(sfs,
-          LanceFormat.latestManifestPath(sfs, sp, None)).version
+        val head = LanceFormat.headVersion(spark.sessionState.newHadoopConf(), spec.src)
         val est: java.lang.Long =
           if (head == spec.lastVersion) 0L
           else LanceMaintenance.changeSetEstimate(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.ScalarIndex
+import graft.sources.lance.{FlakyAbstractFs, FlakyFs}
 
 /** Scalar (BTREE-analogue) index: sorted (key, addr) lance sidecar →
   * zone-pruned probe → _rowaddr take fetch. l11 oracles the values; these
@@ -292,6 +293,71 @@ class ScalarIndexSpec extends AnyFunSuite {
       .load(s"$ix/keys.lance")
       .groupBy("key", "addr").count().filter(col("count") > 1).count()
     assert(dups == 0L)
+  }
+
+  /** A fresh directory on the `flakyfs://` scheme ([[FlakyFs]]). */
+  private def flakyDir(prefix: String): String = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.flakyfs.impl", classOf[FlakyFs].getName)
+    hc.set("fs.AbstractFileSystem.flakyfs.impl", classOf[FlakyAbstractFs].getName)
+    s"flakyfs://${java.nio.file.Files.createTempDirectory(prefix)}"
+  }
+
+  private def failingOn[A](sub: String)(body: => A): A = {
+    FlakyFs.failing = sub
+    try body finally FlakyFs.failing = null
+  }
+
+  test("transient meta-read failure serves last-known pins, never an orphan tail") {
+    import spark.implicits._
+    val dir = flakyDir("sidx_flaky")
+    val ds  = s"$dir/base.lance"
+    val ix  = s"$dir/idx.lance"
+    (0L until 100L).map(i => (i, i * 1.5)).toDF("k", "v")
+      .write.format("lance").mode("overwrite").save(ds)
+    ScalarIndex.build(spark, ds, "k", ix)
+    (100L until 150L).map(i => (i, i * 1.5)).toDF("k", "v")
+      .write.format("lance").mode("append").save(ds)
+    assert(ScalarIndex.lookup(spark, ds, ix, Seq(3L)).count() == 1)
+    // a fence-aborted predecessor's orphan tail past the published pin
+    spark.read.format("lance").option("fromVersion", 1L).load(ds)
+      .select(col("k").as("key"), col("_rowaddr").as("addr"))
+      .write.format("lance").mode("append").save(s"$ix/keys.lance")
+    failingOn("meta.lance") {
+      assert(ScalarIndex.lookup(spark, ds, ix, Seq(120L)).count() == 0)
+      assert(ScalarIndex.lookup(spark, ds, ix, Seq(3L)).count() == 1)
+    }
+  }
+
+  test("a never-read index with a failing publish-point read throws") {
+    import spark.implicits._
+    import graft.operators.{Fts, Similarity}
+    val dir = flakyDir("sidx_flaky_cold")
+    val ds  = s"$dir/base.lance"
+    (0L until 300L).map(i => (i, s"tok${i % 7} cat",
+        Array.tabulate(8)(d => ((i * 31 + d * 17) % 13).toFloat - 6f)))
+      .toDF("k", "text", "emb")
+      .write.format("lance").mode("overwrite").save(ds)
+    ScalarIndex.build(spark, ds, "k", s"$dir/bt")
+    Fts.buildIndexLance(spark, ds, "k", "text", s"$dir/fts")
+    Similarity.ivfPqBuildPersistLance(spark, ds, "k", "emb", 4, s"$dir/ivf")
+    // a fresh process: nothing read yet, so no last-known record to serve
+    Fts.clearStatsCache()
+    Similarity.clearIndexCaches()
+    failingOn("meta.lance") {
+      intercept[java.io.IOException] {
+        ScalarIndex.lookup(spark, ds, s"$dir/bt", Seq(3L)).collect()
+      }
+      intercept[java.io.IOException] {
+        Similarity.ivfPqSearchCombinedLive(spark, s"$dir/ivf", ds, "k", "emb",
+          Seq.fill(8)(1f), 5).collect()
+      }
+    }
+    failingOn("built.lance") {
+      intercept[java.io.IOException] {
+        Fts.searchPersisted(spark, s"$dir/fts", Seq("cat"), 5).collect()
+      }
+    }
   }
 
   test("interval cover + range-set pruning agree with naive membership under fuzz") {

@@ -3,8 +3,8 @@ package graft.sources.lance
 import java.net.URI
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataOutputStream, FileAlreadyExistsException,
-  Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, FSDataOutputStream,
+  FileAlreadyExistsException, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
 
 /** Test-only Hadoop filesystem under the `strictfs://` scheme with
@@ -39,6 +39,37 @@ class LateFs extends StrictFs {
 /** FileContext binding (`fs.AbstractFileSystem.latefs.impl`). */
 class LateAbstractFs(uri: URI, conf: Configuration)
   extends DelegateToFileSystem(uri, new LateFs, conf, "latefs", false)
+
+/** [[StrictFs]] under `flakyfs://`, modeling a TRANSIENT store failure:
+  * while [[FlakyFs.failing]] is set, every open and every listing of a
+  * path containing that substring fails outright. Like the store it
+  * models, it fails the whole call and never returns partial data.
+  * Registered like [[LateFs]]. */
+class FlakyFs extends StrictFs {
+  override def getScheme: String = "flakyfs"
+  override def getUri: URI = URI.create("flakyfs:///")
+
+  private def check(p: Path): Unit = {
+    val sub = FlakyFs.failing
+    if (sub != null && p.toString.contains(sub))
+      throw new java.io.IOException(s"flakyfs: injected failure on $p")
+  }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    check(f); super.open(f, bufferSize)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    check(f); super.listStatus(f)
+  }
+}
+
+object FlakyFs {
+  /** The failing path substring; null = a healthy store. */
+  @volatile var failing: String = null
+}
+
+/** FileContext binding (`fs.AbstractFileSystem.flakyfs.impl`). */
+class FlakyAbstractFs(uri: URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new FlakyFs, conf, "flakyfs", false)
 
 /** Test-only filesystem under `s3like://` modeling the WORST object-store
   * rename semantics: rename lands even when the destination exists
