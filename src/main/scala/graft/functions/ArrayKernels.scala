@@ -76,9 +76,21 @@ case class FloatCosine(left: Expression, right: Expression) extends BinaryExpres
     }
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FloatCosine.score(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = ${classOf[FloatCosine].getName}.score($a, $b);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object FloatCosine {
+  /** The kernel body, shared by the Spark expression and driver-side
+    * callers so both give identical doubles. */
+  def score(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -90,30 +102,6 @@ case class FloatCosine(left: Expression, right: Expression) extends BinaryExpres
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $a.getFloat($i);
-         |  double $yv = (double) $b.getFloat($i);
-         |  $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Count of positions where two array<bigint> columns hold equal values
@@ -612,9 +600,22 @@ case class PqAdcScore(left: Expression, right: Expression) extends BinaryExpress
     }
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val code = a.asInstanceOf[Long]
-    val lut = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    PqAdcScore.score(a.asInstanceOf[Long], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = ${classOf[PqAdcScore].getName}.score($a, $b);")
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object PqAdcScore {
+  /** The kernel body, shared by the Spark expression and driver-side
+    * callers: the ADC cosine of one 8-byte code against a query's lookup
+    * table (per subspace 256 dots, then 256 squared norms). */
+  def score(code: Long, lut: ArrayData): Double = {
     val m = lut.numElements() >> 9 // 2 * 256 entries per subspace
     var dots = 0.0
     var nrm = 0.0
@@ -627,28 +628,6 @@ case class PqAdcScore(left: Expression, right: Expression) extends BinaryExpress
     }
     if (nrm > 0.0) dots / math.sqrt(nrm) else 0.0
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val m = ctx.freshName("m")
-      val s = ctx.freshName("s")
-      val byte = ctx.freshName("byt")
-      val dots = ctx.freshName("dots")
-      val nrm = ctx.freshName("nrm")
-      s"""
-         |int $m = $b.numElements() >> 9;
-         |double $dots = 0.0;
-         |double $nrm = 0.0;
-         |for (int $s = 0; $s < $m; $s++) {
-         |  int $byte = (int) (($a >>> ($s * 8)) & 0xffL);
-         |  $dots += $b.getDouble($s * 256 + $byte);
-         |  $nrm += $b.getDouble(($m + $s) * 256 + $byte);
-         |}
-         |${ev.value} = $nrm > 0.0 ? $dots / java.lang.Math.sqrt($nrm) : 0.0;
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
 }
 
 /** Binary quantization: pack the SIGN BITS of an array<bigint> vector into

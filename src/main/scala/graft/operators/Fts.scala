@@ -50,7 +50,7 @@ import org.apache.spark.sql.types._
   * reads sidecar heads.
   */
 object Fts {
-  import graft.sources.lance.{IndexStore, LanceFormat, MaintenanceLock}
+  import graft.sources.lance.{IndexStore, LanceFormat, LanceLocal, MaintenanceLock}
   import IndexStore.Published
 
   val K1 = 1.2
@@ -125,19 +125,10 @@ object Fts {
   private def buildIndexFromPostingsLocked(spark: SparkSession, p: DataFrame,
                                            indexPath: String,
                                            writePartitions: Int): Unit = {
-    p.repartitionByRange(writePartitions, col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.format("lance").mode("overwrite").save(s"$indexPath/postings.lance")
+    writePostings(p, indexPath, "overwrite", writePartitions)
     val staged = spark.read.format("lance").load(s"$indexPath/postings.lance")
-    // df per term: postings are already one row per (doc, term)
-    staged.groupBy("term").agg(count(lit(1)).as("df"))
-      .repartitionByRange(math.max(writePartitions / 4, 1), col("term"))
-      .sortWithinPartitions("term")
-      .write.format("lance").mode("overwrite").save(s"$indexPath/terms.lance")
-    staged.groupBy("doc_id").agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).cast(LongType).as("n_docs"),
-           sum(col("dl")).cast(LongType).as("total_len"))
-      .coalesce(1)
+    writeTerms(termDfs(staged), indexPath, writePartitions)
+    postingsStats(staged).coalesce(1)
       .write.format("lance").mode("overwrite").save(s"$indexPath/stats.lance")
     // a rebuild over a previously pinned path must retire the stale
     // publish point ITSELF, not just this JVM's cache: built.lance pins
@@ -158,6 +149,29 @@ object Fts {
           "stats_version" -> NoBuilt)
     } catch { case _: Exception => () } // best-effort; readers stat per read
   }
+
+  private def writePostings(p: DataFrame, indexPath: String, mode: String,
+                            writePartitions: Int): Unit =
+    p.repartitionByRange(writePartitions, col("term"))
+      .sortWithinPartitions("term", "doc_id")
+      .write.format("lance").mode(mode).save(s"$indexPath/postings.lance")
+
+  private def writeTerms(dfs: DataFrame, indexPath: String,
+                         writePartitions: Int): Unit =
+    dfs.repartitionByRange(math.max(writePartitions / 4, 1), col("term"))
+      .sortWithinPartitions("term")
+      .write.format("lance").mode("overwrite").save(s"$indexPath/terms.lance")
+
+  /** Document frequency per term: postings are one row per (doc, term). */
+  private def termDfs(p: DataFrame): DataFrame =
+    p.groupBy("term").agg(count(lit(1)).as("df"))
+
+  /** One row (n_docs, total_len) over the documents a postings frame
+    * holds — `dl` is constant per doc; an empty frame gives (0, 0). */
+  private def postingsStats(p: DataFrame): DataFrame =
+    p.groupBy("doc_id").agg(max(col("dl")).as("dl"))
+      .agg(count(lit(1)).cast(LongType).as("n_docs"),
+           coalesce(sum(col("dl")), lit(0L)).cast(LongType).as("total_len"))
 
   /** Sentinel version of a tombstoned publish point. */
   private val NoBuilt = -1L
@@ -207,7 +221,7 @@ object Fts {
 
   private def readStats(spark: SparkSession, indexPath: String,
                         v: Option[Long]): (Long, Long) = {
-    val r = IndexStore.pinned(spark, indexPath, "stats.lance", v).head()
+    val r = LanceLocal.collect(spark, s"$indexPath/stats.lance", v).head
     (r.getLong(0), r.getLong(1))
   }
 
@@ -227,13 +241,35 @@ object Fts {
     * `2.2`. The operation order mirrors the oracle SQL's parse tree
     * exactly; identical IEEE ops on identical inputs give identical bits.
     */
-  private def contribMicro(nDocs: Long, avgdl: Double): org.apache.spark.sql.Column = {
+  private[graft] def contribMicro(nDocs: Long, avgdl: Double): org.apache.spark.sql.Column = {
     val idf8 = round(log(lit(1.0) +
       (lit(nDocs.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5))), 8)
     val tfw = col("tf") * lit(2.2) /
       (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl)))
     floor(idf8 * tfw * lit(1e6) + lit(0.5)).cast(LongType)
   }
+
+  /** [[contribMicro]] as a plain function of one posting: the same IEEE
+    * operations in the same order, with Spark's `ln` (StrictMath) and
+    * HALF_UP `round` over the double's decimal spelling, so the driver
+    * path scores bit-identically. Defined where the expression is (every
+    * divisor is positive: tf >= 1, df >= 0, avgdl > 0). */
+  private[graft] def contribMicroOf(nDocs: Long, avgdl: Double,
+                                    tf: Long, dl: Long, df: Long): Long = {
+    val idf8 = roundHalfUp(StrictMath.log(1.0 +
+      (nDocs.toDouble - df.toDouble + 0.5) / (df.toDouble + 0.5)), 8)
+    val tfw = tf.toDouble * 2.2 /
+      (tf.toDouble + 1.2 * (0.25 + 0.75 * dl.toDouble / avgdl))
+    math.floor(idf8 * tfw * 1e6 + 0.5).toLong
+  }
+
+  /** A per-doc score from its summed micro-units, as
+    * `round(sum / 1e6, 6)` computes it. */
+  private[graft] def scoreOf(micro: Long): Double = roundHalfUp(micro / 1e6, 6)
+
+  private def roundHalfUp(d: Double, scale: Int): Double =
+    if (d.isNaN || d.isInfinite) d
+    else BigDecimal(d).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Score `terms` against prepared postings+df frames (index-free path:
     * both derived from the raw table; index path: both lance scans with the
@@ -481,26 +517,28 @@ object Fts {
     fence.check()
     pub.pin("postings_version").foreach(
       IndexStore.sweep(spark, indexPath, "postings.lance", _))
+    val conf = spark.sessionState.newHadoopConf()
+    val postingsPath = s"$indexPath/postings.lance"
+    val before = LanceFormat.headVersion(conf, postingsPath)
     val tail = spark.read.format("lance")
       .option("fromVersion", builtV).option("versionAsOf", headV)
       .load(sourcePath)
-    val tp = postings(tail, idCol, textCol)
     fence.check() // pre-commit fence: abort BEFORE publishing anything
-    tp.repartitionByRange(writePartitions, col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.format("lance").mode("append").save(s"$indexPath/postings.lance")
+    writePostings(postings(tail, idCol, textCol), indexPath, "append", writePartitions)
+    // the df merge and the stats delta read the appended fragments back
+    // (as the build does), so the tail is scanned and tokenized once
+    val staged = spark.read.format("lance").option("fromVersion", before)
+      .option("versionAsOf", LanceFormat.headVersion(conf, postingsPath))
+      .load(postingsPath)
     // terms.lance is both input and output; safe because lance is
     // versioned — the scan pins the PUBLISHED version, data files are
     // immutable, and the overwrite commits a NEW version
     val mergedTerms = sidecar(spark, indexPath, "terms", Some(pub))
-      .unionByName(tp.groupBy("term").agg(count(lit(1)).as("df")))
+      .unionByName(termDfs(staged))
       .groupBy("term").agg(sum(col("df")).as("df"))
-      .repartitionByRange(math.max(writePartitions / 4, 1), col("term"))
-      .sortWithinPartitions("term")
     fence.check()
-    mergedTerms
-      .write.format("lance").mode("overwrite").save(s"$indexPath/terms.lance")
-    val ts = corpusStats(tail, idCol, textCol).head()
+    writeTerms(mergedTerms, indexPath, writePartitions)
+    val ts = postingsStats(staged).head()
     // a fresh read at the pin, never the cache: a stale cached entry would
     // double- or under-count another process's merged tail
     val (oldN, oldLen) = readStats(spark, indexPath, pub.pin("stats_version"))
@@ -583,9 +621,80 @@ object Fts {
                          sourcePath: String, idCol: String, textCol: String,
                          terms: Seq[String], k: Int): DataFrame = {
     val over = math.max(4 * k, k + 64)
-    val candsDf = searchCombined(spark, indexPath, sourcePath, idCol,
-      textCol, terms, over)
-    liveTopK(spark, sourcePath, idCol, candsDf, k)
+    val pub = requirePublished(published(spark, indexPath), indexPath)
+    combinedLiveLocal(spark, indexPath, sourcePath, idCol, textCol, terms, k,
+        over, pub).getOrElse {
+      val candsDf = searchCombined(spark, indexPath, sourcePath, idCol,
+        textCol, terms, over)
+      liveTopK(spark, sourcePath, idCol, candsDf, k)
+    }
+  }
+
+  /** [[searchCombinedLive]] computed on the driver through bounded local
+    * reads ([[LanceLocal]]), with no Spark job: the pinned postings and
+    * vocabulary of the query terms, the tail tokenized as [[postings]]
+    * does (single-space split, one row per (doc, dl, term)), scores in
+    * the plan's fixed-point micro-units ([[contribMicroOf]]), and the
+    * liveness of the over-fetched candidates — the tail and the liveness
+    * read at ONE source head. None when a read is over the cap, the id
+    * column is not a bigint or holds nulls, the text column is not a
+    * string, or the corpus stats are empty; the caller runs the DSv2
+    * plan. */
+  private def combinedLiveLocal(spark: SparkSession, indexPath: String,
+                                sourcePath: String, idCol: String,
+                                textCol: String, terms: Seq[String], k: Int,
+                                over: Int, pub: Published): Option[DataFrame] = {
+    import graft.sources.lance.ZoneFilter
+    val (nDocs, totalLen) = statsOf(spark, indexPath, Some(pub))
+    if (nDocs <= 0 || totalLen <= 0) return None
+    val avgdl = totalLen.toDouble / nDocs
+    val wanted = terms.toSet
+    val byTerm = ZoneFilter.in("term", terms).toSeq
+    // the source's head manifest, read once for the tail and the liveness
+    val head = LanceLocal.snapshot(spark, sourcePath)
+    def noNulls(got: LanceLocal.Rows): Boolean =
+      !got.rows.exists(r => (0 until got.schema.length).exists(r.isNullAt))
+    for {
+      post <- LanceLocal.read(spark, s"$indexPath/postings.lance",
+        pub.pin("postings_version"), columns = Seq("term", "doc_id", "tf", "dl"),
+        zoneFilters = byTerm).filter(noNulls)
+      vocab <- LanceLocal.read(spark, s"$indexPath/terms.lance",
+        pub.pin("terms_version"), columns = Seq("term", "df"),
+        zoneFilters = byTerm).filter(noNulls)
+      tail <- LanceLocal.readAt(head, Some(pub.built), Seq(idCol, textCol))
+        .filter(t => t.schema(idCol).dataType == LongType &&
+          t.schema(textCol).dataType == StringType)
+      tailId <- Similarity.idsOf(tail)
+      // the query terms' posting rows ((doc_id, dl, term), tf): the
+      // index's as stored, the tail's grouped per (doc_id, dl, term)
+      rows = {
+        val tailTf = scala.collection.mutable.LinkedHashMap.empty[(Long, Long, String), Long]
+        tail.rows.withFilter(!_.isNullAt(1)).foreach { r =>
+          val toks = r.getUTF8String(1).toString.split(" ", -1)
+          toks.withFilter(wanted).foreach { t =>
+            val key = (tailId(r), toks.length.toLong, t)
+            tailTf(key) = tailTf.getOrElse(key, 0L) + 1L
+          }
+        }
+        post.rows.map(r => ((r.getLong(1), r.getLong(3), r.getUTF8String(0).toString),
+          r.getLong(2))).filter(p => wanted(p._1._3)) ++ tailTf
+      }
+      // the vocabulary left join: every df row of a term, 0 when none
+      dfs = vocab.rows.groupBy(_.getUTF8String(0).toString)
+        .map { case (t, rs) => t -> rs.map(_.getLong(1)) }
+      micro = rows.groupMapReduce(_._1._1) { case ((_, dl, t), n) =>
+        dfs.getOrElse(t, Seq(0L)).map(df => contribMicroOf(nDocs, avgdl, n, dl, df)).sum
+      }(_ + _)
+      cands = Similarity.rankDesc(
+        micro.toSeq.map { case (d, m) => (d, scoreOf(m): java.lang.Double) }, over)
+      live <- LanceLocal.readAt(head, columns = Seq(idCol),
+        zoneFilters = ZoneFilter.in(idCol, cands.map(_._1)).toSeq)
+      liveId <- Similarity.idsOf(live)
+    } yield {
+      val alive = live.rows.map(liveId).toSet
+      Similarity.scored(spark, "doc_id", LongType, "score",
+        Similarity.rankDesc(cands.filter(c => alive(c._1)), k))
+    }
   }
 
   /** Phrase match (tantivy phrase-query analogue, positions recomputed

@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Scalar (BTREE-analogue) index over a lance dataset — the lance crate's
   * `create_scalar_index` re-expressed Spark-first (`/root/reference/
@@ -38,7 +41,7 @@ import org.apache.spark.sql.functions._
   */
 object ScalarIndex {
 
-  import graft.sources.lance.{IndexStore, LanceFormat, MaintenanceLock}
+  import graft.sources.lance.{IndexStore, LanceFormat, LanceLocal, MaintenanceLock}
   import IndexStore.Published
 
   /** Build (or rebuild) the index sidecar for `keyCol`. One range shuffle
@@ -154,19 +157,15 @@ object ScalarIndex {
 
   /** Translate a probed `addr` column to CURRENT row addresses: identity
     * for an address index; for a stable index, resolve ids through the
-    * head manifest's row-id sequences (driver-side metadata walk). Ids
-    * compacted away with their deletes simply vanish — a stale id fetches
-    * nothing, never a wrong row.
+    * `head` manifest's row-id sequences (driver-side metadata walk, the
+    * manifest read only then). Ids compacted away with their deletes
+    * simply vanish — a stale id fetches nothing, never a wrong row.
     */
-  private def resolveAddrs(spark: SparkSession, datasetPath: String,
-                           stable: Boolean, vals: Array[Long]): Array[Long] =
+  private def resolveAddrs(head: => LanceFormat.Manifest, stable: Boolean,
+                           vals: Array[Long]): Array[Long] =
     if (!stable) vals
     else {
-      val conf = spark.sessionState.newHadoopConf()
-      val (fs, p) = LanceFormat.fileSystem(datasetPath, conf)
-      val m = LanceFormat.readManifest(fs,
-        LanceFormat.latestManifestPath(fs, p, None))
-      val byId = LanceFormat.addrOfRowIds(m, vals.toSeq)
+      val byId = LanceFormat.addrOfRowIds(head, vals.toSeq)
       vals.flatMap(byId.get)
     }
 
@@ -203,15 +202,19 @@ object ScalarIndex {
     out.toArray
   }
 
+  private def requireLookup(matched: Int, maxRows: Int): Unit =
+    require(matched <= maxRows,
+      s"scalar-index lookup matched > $maxRows rows — this is a scan, " +
+        "not a lookup; filter the dataset directly instead")
+
   private def fetchByAddrs(spark: SparkSession, datasetPath: String,
                            probe: DataFrame, maxRows: Int,
                            stable: Boolean = false): DataFrame = {
     val vals = probe.select("addr")
       .limit(maxRows + 1).collect().map(_.getLong(0))
-    require(vals.length <= maxRows,
-      s"scalar-index lookup matched > $maxRows rows — this is a scan, " +
-        "not a lookup; filter the dataset directly instead")
-    val addrs = resolveAddrs(spark, datasetPath, stable, vals).sorted
+    requireLookup(vals.length, maxRows)
+    val addrs = resolveAddrs(LanceLocal.snapshot(spark, datasetPath).manifest,
+      stable, vals).sorted
     if (addrs.isEmpty)
       return spark.read.format("lance").load(datasetPath).limit(0)
     // ship the probe result as a <=256-interval cover through a scan
@@ -258,16 +261,81 @@ object ScalarIndex {
                      maxRows: Int = 100000): DataFrame = {
     // the tail bound and the pin come from ONE publish record
     val pub = requireMeta(spark, indexPath)
-    val keyCol = pub.row.getString(1)
+    lookupCombinedLocal(spark, datasetPath, indexPath, pub, keys, maxRows)
+      .getOrElse {
+        val keyCol = pub.row.getString(1)
+        val stable = isStable(pub)
+        val idxProbe = sidecar(spark, indexPath, "keys", Some(pub))
+          .filter(col("key").isin(keys: _*)).select("addr")
+        val tailProbe = spark.read.format("lance")
+          .option("fromVersion", pub.built).load(datasetPath)
+          .filter(col(keyCol).isin(keys: _*))
+          .select(col(if (stable) "_rowid" else "_rowaddr").as("addr"))
+        fetchByAddrs(spark, datasetPath, idxProbe.unionByName(tailProbe),
+                     maxRows, stable)
+      }
+  }
+
+  /** [[lookupCombined]] answered on the driver through bounded local
+    * reads ([[LanceLocal]]), with no Spark job: the index probe at its
+    * pin, and the tail probe and the take at ONE source head. None when a
+    * read is over the cap or a key needs more than integral widening to
+    * compare with the key column, and the caller runs the DSv2 plan. */
+  private def lookupCombinedLocal(spark: SparkSession, datasetPath: String,
+                                  indexPath: String, pub: Published,
+                                  keys: Seq[Any], maxRows: Int): Option[DataFrame] = {
+    import graft.sources.lance.{AddrRangeSet, ZoneFilter}
     val stable = isStable(pub)
-    val idxProbe = sidecar(spark, indexPath, "keys", Some(pub))
-      .filter(col("key").isin(keys: _*)).select("addr")
-    val tailProbe = spark.read.format("lance")
-      .option("fromVersion", pub.built).load(datasetPath)
-      .filter(col(keyCol).isin(keys: _*))
-      .select(col(if (stable) "_rowid" else "_rowaddr").as("addr"))
-    fetchByAddrs(spark, datasetPath, idxProbe.unionByName(tailProbe), maxRows,
-                 stable)
+    // the source's head manifest, read once for the tail, the id
+    // resolution and the take
+    val head = LanceLocal.snapshot(spark, datasetPath)
+    // the addrs of rows whose `key` is one of `keys`
+    def probe(at: => LanceLocal.Snapshot, from: Option[Long],
+              key: String, addr: String): Option[IndexedSeq[Long]] =
+      for {
+        zone <- ZoneFilter.in(key, keys)
+        got <- LanceLocal.readAt(at, from, Seq(key, addr), Seq(zone))
+        dt = got.schema(key).dataType
+        wanted <- catalystKeys(dt, keys)
+      } yield got.rows.collect {
+        case r if !r.isNullAt(0) && wanted(r.get(0, dt)) => r.getLong(1)
+      }
+    for {
+      idx <- probe(LanceLocal.snapshot(spark, s"$indexPath/keys.lance", pub.pin("data_version")),
+                   None, "key", "addr")
+      tail <- probe(head, Some(pub.built), pub.row.getString(1),
+                    if (stable) "_rowid" else "_rowaddr")
+      addrs = {
+        requireLookup(idx.length + tail.length, maxRows)
+        resolveAddrs(head.manifest, stable, (idx ++ tail).toArray).sorted
+      }
+      taken <- LanceLocal.readAt(head, columns = Seq("*", "_rowaddr"),
+        addrFilters = Seq(AddrRangeSet(intervalCover(addrs, 256)
+          .flatMap { case (lo, hi) => Array(lo, hi) })))
+    } yield {
+      val data = StructType(taken.schema.fields.init)
+      val at = taken.schema.length - 1
+      taken.copy(schema = data, rows = taken.rows.collect {
+        case r if java.util.Arrays.binarySearch(addrs, r.getLong(at)) >= 0 =>
+          InternalRow.fromSeq(r.toSeq(taken.schema).init)
+      }).frame(spark)
+    }
+  }
+
+  /** `keys` as the catalyst values an `isin` over a column of type `dt`
+    * matches, for exact-equality types only; None when a key would need
+    * more than integral widening to compare. */
+  private def catalystKeys(dt: DataType, keys: Seq[Any]): Option[Set[Any]] = {
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    val exact = integral ++ Set[DataType](StringType, DateType, TimestampType,
+      TimestampNTZType, BooleanType)
+    scala.util.Try(keys.map(Literal(_))).toOption.flatMap { lits =>
+      if (!exact(dt)) None
+      else if (lits.forall(_.dataType == dt)) Some(lits.map(_.value).toSet)
+      else if (dt == LongType && lits.forall(l => integral(l.dataType)))
+        Some(lits.map(l => l.value.asInstanceOf[Number].longValue(): Any).toSet)
+      else None
+    }
   }
 
   /** LABEL_LIST-analogue index over an ARRAY column (the lance-index

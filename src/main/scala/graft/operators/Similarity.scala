@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Lru
-import graft.sources.lance.{IndexStore, LanceFormat}
+import graft.sources.lance.{IndexStore, LanceFormat, LanceLocal}
 import graft.sources.lance.IndexStore.Published
 
 /** Vector similarity-search operators over `ArrayType(FloatType)` columns
@@ -432,7 +432,7 @@ object Similarity {
     // pin the snapshot: a concurrent append between version read and scan
     // must not leak half-indexed rows past the recorded version
     build(spark.read.format("lance").option("versionAsOf", builtV).load(sourcePath))
-    publish(spark, indexPath, f, builtV, heads(conf, indexPath, f))
+    publish(spark, indexPath, f, builtV, heads(conf, indexPath, f), None)
     builtV
   }
 
@@ -467,7 +467,9 @@ object Similarity {
                           writePartitions: Int, f: Flavor): Long = {
     import graft.sources.lance.{LanceMaintenance, MaintenanceLock}
     val conf = spark.sessionState.newHadoopConf()
-    MaintenanceLock.withLock(indexPath, conf) {
+    // fenced like every index update: a holder swept as stale after a
+    // pause must not sweep, merge or publish over its successor
+    MaintenanceLock.withLockFenced(indexPath, conf) { fence =>
       def headOf(name: String): Long =
         LanceFormat.headVersion(conf, s"$indexPath/$name")
       val m0 = requireMeta(spark, indexPath, f)
@@ -479,7 +481,7 @@ object Similarity {
       val pins =
         if (m0.pin("vectors_version").isEmpty) {
           val hs = heads(conf, indexPath, f)
-          publish(spark, indexPath, f, m0.built, hs)
+          publish(spark, indexPath, f, m0.built, hs, Some(fence))
           hs
         } else f.pinColumns.zip(f.datasets)
           .map { case (c, name) => m0.pin(c).getOrElse(headOf(name)) }
@@ -488,6 +490,7 @@ object Similarity {
       // versions are the last published state, and assigning or encoding
       // the tail with drifted sidecars would publish an index mixing two
       // centroid sets or codes no single LUT can score
+      fence.check()
       f.datasets.zip(pins).foreach { case (name, v) =>
         IndexStore.sweep(spark, indexPath, name, v)
       }
@@ -514,6 +517,7 @@ object Similarity {
           .select(idxCols.map(col).toIndexedSeq: _*)
           .persist()
         try {
+          fence.check()
           LanceMaintenance.mergeInsert(spark, dataPath,
             rows
               .repartitionByRange(math.max(writePartitions, 1), col("list_id"))
@@ -521,7 +525,8 @@ object Similarity {
             Seq(idCol))
         } finally rows.unpersist(false)
       }
-      publish(spark, indexPath, f, headV, headOf(f.dataName) +: sidecarPins)
+      publish(spark, indexPath, f, headV, headOf(f.dataName) +: sidecarPins,
+        Some(fence))
       headV
     }
   }
@@ -542,8 +547,9 @@ object Similarity {
   /** The one meta writer: (built_version, then `pins` in `f.datasets`
     * order) replaces the flavor's meta. */
   private def publish(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                      f: Flavor, built: Long, pins: Seq[Long]): Unit =
-    IndexStore.publish(spark, s"$indexPath/${f.metaName}", None,
+                      f: Flavor, built: Long, pins: Seq[Long],
+                      fence: Option[graft.sources.lance.MaintenanceLock.Fence]): Unit =
+    IndexStore.publish(spark, s"$indexPath/${f.metaName}", fence,
       ("built_version" -> built) +: f.pinColumns.zip(pins): _*)
 
   /** An index's quantizer state as its sidecars hold it: the coarse
@@ -565,14 +571,14 @@ object Similarity {
                        f: Flavor, centsPin: Option[Long],
                        cbsPin: Option[Long]): Sidecars =
     sidecarCache.getOrLoad(sidecarKey(indexPath, f, centsPin, cbsPin)) {
-      val cdf = IndexStore.pinned(spark, indexPath, f.centroidsName, centsPin)
-      val rows = cdf.orderBy("list_id").collect()
-      val width =
-        if (cdf.schema.fieldNames.contains("default_nprobe") && rows.nonEmpty)
-          rows.head.getInt(rows.head.fieldIndex("default_nprobe"))
-        else DefaultNProbe
+      val rows = LanceLocal.collect(spark, s"$indexPath/${f.centroidsName}", centsPin)
+        .sortBy(_.getInt(0))
+      val width = rows.headOption
+        .filter(_.schema.fieldNames.contains("default_nprobe"))
+        .fold(DefaultNProbe)(r => r.getInt(r.fieldIndex("default_nprobe")))
       val codebooks = f.codebooksName.fold(Array.empty[Array[Array[Double]]]) { name =>
-        IndexStore.pinned(spark, indexPath, name, cbsPin).orderBy("sub", "code").collect()
+        LanceLocal.collect(spark, s"$indexPath/$name", cbsPin)
+          .sortBy(r => (r.getInt(0), r.getInt(1)))
           .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
           .map(_._2.map(_.getSeq[Float](2).map(_.toDouble).toArray)).toArray
       }
@@ -776,11 +782,21 @@ object Similarity {
       rerank: Int): DataFrame = {
     val (codes, sc) = pinnedIndex(spark, indexPath, Pq,
       published(spark, indexPath, Pq))
-    val cbs = sc.codebooks
+    codes
+      .filter(col("list_id").isin(probeLists(sc.centroids, query, nProbe): _*))
+      .select(col(idCol),
+        (graft.functions.ArrayKernels.pqAdcScore(col("pq_code"),
+          typedlit(adcLut(sc.codebooks, query).toSeq)) / lit(queryNorm(query))).as("acos"))
+      .orderBy(col("acos").desc, col(idCol))
+      .limit(k * rerank)
+  }
+
+  /** The ADC lookup table of `query`: dot(query_s, code) and |code|^2 per
+    * (subspace, code), the layout [[graft.functions.PqAdcScore]] reads. */
+  private def adcLut(cbs: Array[Array[Array[Double]]], query: Seq[Float]): Array[Double] = {
     val m = cbs.length
     val dsub = cbs(0)(0).length
     val qd = query.map(_.toDouble).toArray
-    // ADC lookup table: dot(query_s, code) and |code|^2 per (subspace, code)
     val lut = new Array[Double](2 * m * 256)
     var s = 0
     while (s < m) {
@@ -795,15 +811,11 @@ object Similarity {
       }
       s += 1
     }
-    val qNorm = math.sqrt(qd.map(x => x * x).sum)
-    codes
-      .filter(col("list_id").isin(probeLists(sc.centroids, query, nProbe): _*))
-      .select(col(idCol),
-        (graft.functions.ArrayKernels.pqAdcScore(col("pq_code"), typedlit(lut.toSeq))
-          / lit(qNorm)).as("acos"))
-      .orderBy(col("acos").desc, col(idCol))
-      .limit(k * rerank)
+    lut
   }
+
+  private def queryNorm(query: Seq[Float]): Double =
+    math.sqrt(query.map(_.toDouble).map(x => x * x).sum)
 
   /** The full between-rebuilds search contract for the PQ flavor —
     * [[ivfSearchCombinedLive]] for an IVF_PQ index, in ONE face because
@@ -831,18 +843,119 @@ object Similarity {
                               query: Seq[Float], k: Int,
                               nProbe: Int = DefaultNProbe,
                               rerank: Int = 4): DataFrame = {
-    val builtV = requireMeta(spark, indexPath, Pq).built
-    val live = spark.read.format("lance").load(sourcePath)
-    val idxTop = ivfPqSearch(spark, indexPath, live, idCol, vecCol,
-      query, k, nProbe, rerank)
-    val tail = spark.read.format("lance")
-      .option("fromVersion", builtV).load(sourcePath)
-    val tailTop = cosineTopK(tail, idCol, vecCol, query, k)
-    idxTop.unionByName(tailTop)
-      .groupBy(col(idCol)).agg(max(col("cos")).as("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+    val meta = requireMeta(spark, indexPath, Pq)
+    pqCombinedLocal(spark, indexPath, sourcePath, idCol, vecCol, query, k,
+        nProbe, rerank, meta).getOrElse {
+      val live = spark.read.format("lance").load(sourcePath)
+      val idxTop = ivfPqSearch(spark, indexPath, live, idCol, vecCol,
+        query, k, nProbe, rerank)
+      val tail = spark.read.format("lance")
+        .option("fromVersion", meta.built).load(sourcePath)
+      val tailTop = cosineTopK(tail, idCol, vecCol, query, k)
+      idxTop.unionByName(tailTop)
+        .groupBy(col(idCol)).agg(max(col("cos")).as("cos"))
+        .orderBy(col("cos").desc, col(idCol))
+        .limit(k)
+    }
   }
+
+  /** [[ivfPqSearchCombinedLive]] computed on the driver through bounded
+    * local reads ([[LanceLocal]]), with no Spark job: the ADC probe of the
+    * pinned codes, the exact re-rank and the tail brute force run the
+    * Spark plan's kernel bodies ([[graft.functions.PqAdcScore]],
+    * [[graft.functions.FloatCosine]]) over rows read at ONE source head,
+    * and rank as its sorts do. None when a read is over the cap, the id
+    * column is not integral, or the query has zero norm (the plan's
+    * division then yields nulls); the caller runs the DSv2 plan. */
+  private def pqCombinedLocal(spark: org.apache.spark.sql.SparkSession,
+                              indexPath: String, sourcePath: String,
+                              idCol: String, vecCol: String,
+                              query: Seq[Float], k: Int, nProbe: Int,
+                              rerank: Int, meta: Published): Option[DataFrame] = {
+    import graft.sources.lance.ZoneFilter
+    val qNorm = queryNorm(query)
+    if (qNorm == 0.0) return None
+    val sc = sidecars(spark, indexPath, Pq, meta.pin("centroids_version"),
+      meta.pin("codebooks_version"))
+    val lists = probeLists(sc.centroids, query, nProbe)
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    val lut = UnsafeArrayData.fromPrimitiveArray(adcLut(sc.codebooks, query))
+    val q = UnsafeArrayData.fromPrimitiveArray(query.toArray)
+    // the source's head manifest, read once for the re-rank and the tail
+    val head = LanceLocal.snapshot(spark, sourcePath)
+    // (id, exact cosine) of every live source row `keep` admits
+    def exact(from: Option[Long], zone: Option[ZoneFilter],
+              keep: Long => Boolean): Option[(DataType, Seq[(Long, java.lang.Double)])] =
+      LanceLocal.readAt(head, from, Seq(idCol, vecCol), zone.toSeq)
+        .filter(_.schema(vecCol).dataType match {
+          case ArrayType(FloatType, _) => true
+          case _ => false
+        })
+        .flatMap(got => idsOf(got).map(id => (got.schema(idCol).dataType, got.rows.collect {
+          case r if keep(id(r)) =>
+            (id(r), if (r.isNullAt(1)) null
+                    else graft.functions.FloatCosine.score(r.getArray(1), q): java.lang.Double)
+        })))
+    for {
+      codes <- LanceLocal.read(spark, s"$indexPath/${Pq.dataName}",
+        meta.pin("vectors_version"), columns = Seq(idCol, "list_id", "pq_code"),
+        zoneFilters = ZoneFilter.in("list_id", lists).toSeq)
+      id <- idsOf(codes)
+      probed = lists.toSet
+      cands = rankDesc(codes.rows.collect {
+        case r if !r.isNullAt(1) && probed(r.getInt(1)) =>
+          (id(r), if (r.isNullAt(2)) null
+                  else graft.functions.PqAdcScore.score(r.getLong(2), lut) / qNorm: java.lang.Double)
+      }, k * rerank).map(_._1).toSet
+      (dt, reranked) <- exact(None, ZoneFilter.in(idCol, cands.toSeq), cands)
+      (_, tail) <- exact(Some(meta.built), None, _ => true)
+    } yield {
+      val best = (rankDesc(reranked, k) ++ rankDesc(tail, k)).groupBy(_._1).toSeq
+        .map { case (i, hits) => (i, hits.map(_._2).reduce(maxScore)) }
+      scored(spark, idCol, dt, "cos", rankDesc(best, k))
+    }
+  }
+
+  /** The reader of a local read's first column as ids: None unless it is
+    * integral and non-null in every row. */
+  private[operators] def idsOf(
+      got: LanceLocal.Rows): Option[org.apache.spark.sql.catalyst.InternalRow => Long] =
+    (got.schema.head.dataType match {
+      case LongType => Some((r: org.apache.spark.sql.catalyst.InternalRow) => r.getLong(0))
+      case IntegerType => Some((r: org.apache.spark.sql.catalyst.InternalRow) => r.getInt(0).toLong)
+      case _ => None
+    }).filter(_ => !got.rows.exists(_.isNullAt(0)))
+
+  /** Spark's double ordering: NaN above every value, -0.0 == 0.0. */
+  private def cmpScore(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** `max` over nullable scores, nulls ignored. */
+  private[operators] def maxScore(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
+    if (a == null) b else if (b == null) a
+    else if (cmpScore(a, b) >= 0) a else b
+
+  /** The top `k` of (id, score) as `ORDER BY score DESC, id LIMIT k`
+    * ranks them: NaN first, nulls last, ties by ascending id. */
+  private[operators] def rankDesc(rows: Seq[(Long, java.lang.Double)],
+                                  k: Int): Seq[(Long, java.lang.Double)] =
+    rows.sortWith { case ((ia, a), (ib, b)) =>
+      val c =
+        if (a == null || b == null) (if (a == null) 1 else 0) - (if (b == null) 1 else 0)
+        else -cmpScore(a, b)
+      if (c != 0) c < 0 else ia < ib
+    }.take(k)
+
+  /** A job-free (id, score) frame of ranked rows. */
+  private[operators] def scored(spark: org.apache.spark.sql.SparkSession,
+                                idCol: String, idType: DataType, scoreCol: String,
+                                rows: Seq[(Long, java.lang.Double)]): DataFrame =
+    org.apache.spark.sql.graftglue.ColumnBridge.localFrame(spark,
+      StructType(Seq(StructField(idCol, idType), StructField(scoreCol, DoubleType))),
+      rows.map { case (i, v) =>
+        org.apache.spark.sql.catalyst.InternalRow(
+          if (idType == IntegerType) i.toInt else i, v)
+      })
 
   /** Similarity JOIN within an L2 radius via MLlib's
     * BucketedRandomProjectionLSH (the §2.5-suggested building block):

@@ -26,8 +26,9 @@ import org.apache.spark.sql.types._
   *    Appends would otherwise stack on the orphan tail and duplicate its
   *    rows.
   *  - The record is cached per publish-point head version, so a hit costs
-  *    one manifest stat and no Spark job, and a publish by another process
-  *    is visible at the next read.
+  *    one `_versions` listing and no Spark job, and a publish by another
+  *    process is visible at the next read. A miss reads the one row on
+  *    the driver ([[LanceLocal]]).
   *  - A transient store failure serves the last record this JVM read for
   *    the index, from a non-evicting roster: stale-but-consistent beats
   *    unpinned-and-possibly-torn, and an LRU eviction must not downgrade a
@@ -73,8 +74,8 @@ object IndexStore {
           cache.get(metaPath).filter(_.version == head).orElse {
             // read AT the statted version: a racing overwrite between the
             // stat and the read cannot pair this version with another row
-            Some(Published(head, spark.read.format("lance")
-              .option("versionAsOf", head).load(metaPath).head()))
+            Some(Published(head,
+              LanceLocal.collect(spark, metaPath, Some(head)).head))
           }
         }
       remember(metaPath, rec)

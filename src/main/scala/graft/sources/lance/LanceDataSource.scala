@@ -338,6 +338,30 @@ object AddrRangeSet {
 }
 
 object ZoneFilter {
+  /** Filter value -> the double domain of the page stats (timestamps =
+    * epoch micros, dates = epoch days — the units the writer records). */
+  private[lance] def numeric(v: Any): Option[Double] = v match {
+    case n: Number => Some(n.doubleValue())
+    case t: java.sql.Timestamp =>
+      Some(t.getTime * 1000.0 + (t.getNanos % 1000000) / 1000.0)
+    case t: java.time.Instant =>
+      Some(t.getEpochSecond * 1e6 + t.getNano / 1000.0)
+    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay.toDouble)
+    case d: java.time.LocalDate => Some(d.toEpochDay.toDouble)
+    case _ => None
+  }
+
+  /** `colName IN (vs)` as a zone filter: numeric/temporal values or
+    * strings (by 8-byte prefix); None when a value has no stat domain. */
+  def in(colName: String, vs: Seq[Any]): Option[ZoneFilter] =
+    if (vs.isEmpty || vs.exists(_ == null)) None
+    else if (vs.forall(v => numeric(v).isDefined))
+      Some(ZoneFilter(colName, "in", 0.0, values = vs.flatMap(numeric)))
+    else if (vs.forall(_.isInstanceOf[String]))
+      Some(ZoneFilter(colName, "in", 0.0, isStr = true,
+        strPrefixes = vs.map(v => prefixLong(v.asInstanceOf[String].getBytes("UTF-8")))))
+    else None
+
   /** First 8 bytes, big-endian, zero-padded — unsigned order equals
     * lexicographic byte order wherever the prefixes differ. */
   def prefixLong(b: Array[Byte]): Long = {
@@ -528,36 +552,12 @@ class LanceScanBuilder(path: String, full: StructType, versionAsOf: Option[Long]
   }
   override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
 
-  /** Filter value -> the double domain of the page stats (timestamps =
-    * epoch micros, dates = epoch days — the units the writer records). */
-  private def numeric(v: Any): Option[Double] = v match {
-    case n: Number => Some(n.doubleValue())
-    case t: java.sql.Timestamp =>
-      Some(t.getTime * 1000.0 + (t.getNanos % 1000000) / 1000.0)
-    case t: java.time.Instant =>
-      Some(t.getEpochSecond * 1e6 + t.getNano / 1000.0)
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay.toDouble)
-    case d: java.time.LocalDate => Some(d.toEpochDay.toDouble)
-    case _ => None
-  }
-
   private def zoneOf(a: String, op: String, v: Any): Option[ZoneFilter] =
-    numeric(v).map(ZoneFilter(a, op, _)).orElse(v match {
+    ZoneFilter.numeric(v).map(ZoneFilter(a, op, _)).orElse(v match {
       case s: String =>
         Some(ZoneFilter(a, op, 0.0, ZoneFilter.prefixLong(s.getBytes("UTF-8")), isStr = true))
       case _ => None
     })
-
-  private def zoneIn(a: String, vs: Array[Any]): Option[ZoneFilter] = {
-    if (vs == null || vs.isEmpty || vs.exists(_ == null)) None
-    else if (vs.forall(v => numeric(v).isDefined))
-      Some(ZoneFilter(a, "in", 0.0, values = vs.flatMap(numeric).toSeq))
-    else if (vs.forall(_.isInstanceOf[String]))
-      Some(ZoneFilter(a, "in", 0.0, isStr = true,
-        strPrefixes = vs.map(v =>
-          ZoneFilter.prefixLong(v.asInstanceOf[String].getBytes("UTF-8"))).toSeq))
-    else None
-  }
 
   /** Zone-map skipping only — every filter stays residual (we return all
     * filters back to Spark), so correctness never depends on the stats;
@@ -570,7 +570,7 @@ class LanceScanBuilder(path: String, full: StructType, versionAsOf: Option[Long]
       case LessThan(a, v) => zoneOf(a, "<", v)
       case LessThanOrEqual(a, v) => zoneOf(a, "<=", v)
       case EqualTo(a, v) => zoneOf(a, "=", v)
-      case In(a, vs) => zoneIn(a, vs)
+      case In(a, vs) => Option(vs).flatMap(v => ZoneFilter.in(a, v.toSeq))
       case _ => None
     }
     // `_rowaddr` comparisons prune by exact address range (take path)
@@ -690,7 +690,10 @@ class LanceScan(path: String, full: StructType, required: StructType,
                 fromVersion: Option[Long] = None,
                 addrFilters: Seq[AddrFilter] = Nil,
                 blobRefs: Set[String] = Set.empty,
-                splitRows: Long = 0L)
+                splitRows: Long = 0L,
+                // the manifest at `versionAsOf`, when the caller already
+                // read it (a driver-local read plans from it directly)
+                preread: Option[LanceFormat.Manifest] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering
     with SupportsReportPartitioning with SupportsReportOrdering {
@@ -741,7 +744,7 @@ class LanceScan(path: String, full: StructType, required: StructType,
        else "") +
       (if (addrFilters.nonEmpty) s", addrFilters=${addrFilters.size}" else "") + ")"
 
-  @transient private lazy val manifest0 = {
+  @transient private lazy val manifest0 = preread.getOrElse {
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val (fs, p) = LanceFormat.fileSystem(path, conf)
     LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, versionAsOf))

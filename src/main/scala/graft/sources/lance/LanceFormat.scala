@@ -247,12 +247,18 @@ object LanceFormat {
   }
 
   // --- manifest ----------------------------------------------------------
-  def latestManifestPath(fs: FileSystem, dataset: Path, versionAsOf: Option[Long]): Path = {
-    val dir = new Path(dataset, "_versions")
+  /** The committed versions listed under `_versions` (`<v>.manifest`). */
+  private def listedVersions(fs: FileSystem, dir: Path): Seq[Long] = {
     val versions = fs.listStatus(dir).toSeq
       .map(_.getPath.getName).filter(_.endsWith(".manifest"))
       .map(n => n.stripSuffix(".manifest").toLong)
     require(versions.nonEmpty, s"no manifests under $dir")
+    versions
+  }
+
+  def latestManifestPath(fs: FileSystem, dataset: Path, versionAsOf: Option[Long]): Path = {
+    val dir = new Path(dataset, "_versions")
+    val versions = listedVersions(fs, dir)
     val v = versionAsOf match {
       case Some(want) =>
         require(versions.contains(want), s"version $want not in ${versions.sorted}")
@@ -262,9 +268,11 @@ object LanceFormat {
     new Path(dir, s"$v.manifest")
   }
 
-  /** The version of a dataset's head manifest. */
+  /** The version of a dataset's head manifest: the largest listed
+    * `<v>.manifest` (every commit writes version v under that name), so
+    * no manifest is opened. */
   def headVersion(fs: FileSystem, dataset: Path): Long =
-    readManifest(fs, latestManifestPath(fs, dataset, None)).version
+    listedVersions(fs, new Path(dataset, "_versions")).max
 
   def headVersion(conf: Configuration, path: String): Long = {
     val (fs, p) = fileSystem(path, conf)

@@ -403,29 +403,41 @@ class FtsSpec extends AnyFunSuite {
 
   test("combined+live search handles appends AND deletions since the build") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("fts_combl").toString
-    val src = s"$dir/docs.lance"
-    Seq((1L, "cat cat cat"), (2L, "cat cat dog"), (3L, "cat elk fox"),
-        (4L, "gnu hen ibis"))
-      .toDF("doc_id", "text")
-      .write.format("lance").mode("overwrite").save(src)
-    Fts.buildIndexLance(spark, src, "doc_id", "text", s"$dir/ix")
-    // after the build: append a strong cat doc AND delete the indexed top hit
-    Seq((5L, "cat cat cat cat")).toDF("doc_id", "text")
-      .write.format("lance").mode("append").save(src)
-    graft.sources.lance.LanceMaintenance.deleteWhere(spark, src, "doc_id = 1")
+    // on both sides of the driver-local byte cap: the plain corpus is
+    // answered on the driver with no job; in the padded one each row
+    // carries ~2.5 MB more, so its one 4-row fragment holds more than
+    // `LanceLocal.CapBytes` and the face runs its DSv2 plan
+    Seq(false, true).foreach { padded =>
+      def frame(docs: Seq[(Long, String)]) = {
+        val df = docs.toDF("doc_id", "text")
+        if (!padded) df
+        else df.withColumn("pad", expr("concat(CAST(doc_id AS STRING), repeat('x', 2500000))"))
+          .coalesce(1)
+      }
+      val dir = java.nio.file.Files.createTempDirectory("fts_combl").toString
+      val src = s"$dir/docs.lance"
+      frame(Seq((1L, "cat cat cat"), (2L, "cat cat dog"), (3L, "cat elk fox"),
+          (4L, "gnu hen ibis")))
+        .write.format("lance").mode("overwrite").save(src)
+      Fts.buildIndexLance(spark, src, "doc_id", "text", s"$dir/ix")
+      // after the build: append a strong cat doc AND delete the indexed top hit
+      frame(Seq((5L, "cat cat cat cat")))
+        .write.format("lance").mode("append").save(src)
+      graft.sources.lance.LanceMaintenance.deleteWhere(spark, src, "doc_id = 1")
 
-    val got = Fts.searchCombinedLive(spark, s"$dir/ix", src, "doc_id", "text",
-      Seq("cat"), 10).as[(Long, Double)].collect().toSeq
-    val ids = got.map(_._1)
-    assert(!ids.contains(1L), s"deleted indexed doc surfaced: $ids")
-    assert(ids.contains(5L), s"appended doc missing: $ids")
-    assert(ids.sorted == Seq(2L, 3L, 5L), ids.toString)
-    // indexed survivors keep their build-era scores (stale-stats contract)
-    val stale = Fts.searchPersisted(spark, s"$dir/ix", Seq("cat"), 10)
-      .as[(Long, Double)].collect().toMap
-    got.filter(_._1 <= 4L).foreach { case (id, score) =>
-      assert(score == stale(id), s"doc $id rescored: $score vs ${stale(id)}")
+      val (got, jobs) = TestSpark.jobsOf(Fts.searchCombinedLive(spark, s"$dir/ix", src,
+        "doc_id", "text", Seq("cat"), 10).as[(Long, Double)].collect().toSeq)
+      assert((jobs > 0) == padded, s"padded=$padded ran $jobs jobs")
+      val ids = got.map(_._1)
+      assert(!ids.contains(1L), s"deleted indexed doc surfaced: $ids")
+      assert(ids.contains(5L), s"appended doc missing: $ids")
+      assert(ids.sorted == Seq(2L, 3L, 5L), ids.toString)
+      // indexed survivors keep their build-era scores (stale-stats contract)
+      val stale = Fts.searchPersisted(spark, s"$dir/ix", Seq("cat"), 10)
+        .as[(Long, Double)].collect().toMap
+      got.filter(_._1 <= 4L).foreach { case (id, score) =>
+        assert(score == stale(id), s"doc $id rescored: $score vs ${stale(id)}")
+      }
     }
   }
 

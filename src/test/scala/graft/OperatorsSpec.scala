@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{AsOf, Dedup, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -1075,63 +1076,115 @@ class SimilaritySpec extends AnyFunSuite {
   test("ivfPqSearchCombinedLive: appends, deletions and updates in one search") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
     val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_comb").toString
-    val src = s"$dir/corpus.lance"
     val indexedRows = emb.filter(col("vec_id") > 0 && col("vec_id") % 5 =!= 0)
-    indexedRows.write.format("lance").mode("overwrite").save(src)
-    Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
-    // mutate all three ways after the build:
-    // (1) append a tail — the fixture's %5 rows plus a planted twin of the
-    //     query (cos = 1.0: only the tail brute-force can serve it)
-    emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0)
-      .write.format("lance").mode("append").save(src)
-    Seq((999001L, query.toArray, 0)).toDF("vec_id", "embedding", "label")
-      .write.format("lance").mode("append").save(src)
-    // (2) delete an indexed top hit outright
-    val topIdx = Similarity.cosineTopK(indexedRows, "vec_id", "embedding", query, 2)
-      .select("vec_id").as[Long].collect()
-    val (delId, updId) = (topIdx(0), topIdx(1))
-    graft.sources.lance.LanceMaintenance.deleteWhere(spark, src, s"vec_id = $delId")
-    // (3) delete + re-append another indexed hit with the negated vector
-    val updLabel = emb.filter(col("vec_id") === updId).select("label").head().getInt(0)
-    graft.sources.lance.LanceMaintenance.deleteWhere(spark, src, s"vec_id = $updId")
-    Seq((updId, query.map(-_).toArray, updLabel))
-      .toDF("vec_id", "embedding", "label")
-      .write.format("lance").mode("append").save(src)
+    // on both sides of the driver-local byte cap: the plain corpus is
+    // answered on the driver with no job; in the padded one each row
+    // carries ~25 KB more, so the indexed rows' one fragment holds more
+    // than `LanceLocal.CapBytes` and the face runs its DSv2 plan
+    val sources = Seq(false, true).map { padded =>
+      def rows(df: DataFrame): DataFrame =
+        if (!padded) df
+        else df.withColumn("pad", expr("concat(CAST(vec_id AS STRING), repeat('x', 25000))"))
+          .coalesce(1)
+      def search(dir: String, src: String): Seq[(Long, Double)] = {
+        val (got, jobs) = TestSpark.jobsOf(Similarity.ivfPqSearchCombinedLive(spark, dir, src,
+          "vec_id", "embedding", query, k = 10, nProbe = 16, rerank = 8)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+        assert((jobs > 0) == padded, s"padded=$padded ran $jobs jobs")
+        got
+      }
+      val dir = java.nio.file.Files.createTempDirectory("ivfpq_comb").toString
+      val src = s"$dir/corpus.lance"
+      rows(indexedRows).write.format("lance").mode("overwrite").save(src)
+      Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
+      // mutate all three ways after the build:
+      // (1) append a tail — the fixture's %5 rows plus a planted twin of the
+      //     query (cos = 1.0: only the tail brute-force can serve it)
+      rows(emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0))
+        .write.format("lance").mode("append").save(src)
+      rows(Seq((999001L, query.toArray, 0)).toDF("vec_id", "embedding", "label"))
+        .write.format("lance").mode("append").save(src)
+      // (2) delete an indexed top hit outright
+      val topIdx = Similarity.cosineTopK(indexedRows, "vec_id", "embedding", query, 2)
+        .select("vec_id").as[Long].collect()
+      val (delId, updId) = (topIdx(0), topIdx(1))
+      graft.sources.lance.LanceMaintenance.deleteWhere(spark, src, s"vec_id = $delId")
+      // (3) delete + re-append another indexed hit with the negated vector
+      val updLabel = emb.filter(col("vec_id") === updId).select("label").head().getInt(0)
+      graft.sources.lance.LanceMaintenance.deleteWhere(spark, src, s"vec_id = $updId")
+      rows(Seq((updId, query.map(-_).toArray, updLabel))
+        .toDF("vec_id", "embedding", "label"))
+        .write.format("lance").mode("append").save(src)
 
-    Similarity.clearIndexCaches()
-    val got = Similarity.ivfPqSearchCombinedLive(spark, dir, src,
-      "vec_id", "embedding", query, k = 10, nProbe = 16, rerank = 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // the planted twin arrives through the tail side at rank 1
-    assert(got.head._1 == 999001L && got.head._2 > 0.9999, got.toString)
-    // no id ranks twice (grouped first-win dedup), the deleted id is
-    // masked by the live re-rank, and the updated id scores with its
-    // CURRENT (negated) vector — never the stale indexed code
-    assert(got.map(_._1).distinct == got.map(_._1), s"id ranked twice: $got")
-    assert(!got.map(_._1).contains(delId), s"deleted id survived: $got")
-    got.filter(_._1 == updId).foreach { case (_, cos) =>
-      assert(cos < 0, s"stale vector served for the updated id: $got") }
-    val exact = Similarity.cosineTopK(spark.read.format("lance").load(src),
-      "vec_id", "embedding", query, 10).select("vec_id").as[Long].collect().toSet
-    val recall = exact.intersect(got.map(_._1).toSet).size / 10.0
-    assert(recall >= 0.9, s"combined-live recall $recall: $exact vs $got")
-    // after an incremental update the tail empties and the answer holds
-    Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearIndexCaches()
-    val after = Similarity.ivfPqSearchCombinedLive(spark, dir, src,
-      "vec_id", "embedding", query, k = 10, nProbe = 16, rerank = 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(after.head._1 == 999001L && !after.map(_._1).contains(delId))
+      Similarity.clearIndexCaches()
+      val got = search(dir, src)
+      // the planted twin arrives through the tail side at rank 1
+      assert(got.head._1 == 999001L && got.head._2 > 0.9999, got.toString)
+      // no id ranks twice (grouped first-win dedup), the deleted id is
+      // masked by the live re-rank, and the updated id scores with its
+      // CURRENT (negated) vector — never the stale indexed code
+      assert(got.map(_._1).distinct == got.map(_._1), s"id ranked twice: $got")
+      assert(!got.map(_._1).contains(delId), s"deleted id survived: $got")
+      got.filter(_._1 == updId).foreach { case (_, cos) =>
+        assert(cos < 0, s"stale vector served for the updated id: $got") }
+      val exact = Similarity.cosineTopK(spark.read.format("lance").load(src),
+        "vec_id", "embedding", query, 10).select("vec_id").as[Long].collect().toSet
+      val recall = exact.intersect(got.map(_._1).toSet).size / 10.0
+      assert(recall >= 0.9, s"combined-live recall $recall: $exact vs $got")
+      // after an incremental update the tail empties and the answer holds
+      Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
+      Similarity.clearIndexCaches()
+      val after = search(dir, src)
+      assert(after.head._1 == 999001L && !after.map(_._1).contains(delId))
+      src
+    }
     // a no-meta index (plain DataFrame build) cannot take this face
     val bare = java.nio.file.Files.createTempDirectory("ivfpq_bare").toString
     Similarity.ivfPqBuildPersist(indexedRows, "vec_id", "embedding",
       nLists = 16, indexPath = bare)
     intercept[IllegalStateException] {
-      Similarity.ivfPqSearchCombinedLive(spark, bare, src,
+      Similarity.ivfPqSearchCombinedLive(spark, bare, sources.head,
         "vec_id", "embedding", query, k = 10)
     }
+  }
+
+  test("IVF_PQ update: a holder whose lock entry was swept mid-update refuses to publish") {
+    import graft.sources.lance.{LanceFormat, MaintenanceLock}
+    val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_fence").toString
+    val src = s"$dir/corpus.lance"
+    emb.filter(col("vec_id") % 5 =!= 0).write.format("lance").mode("overwrite").save(src)
+    Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
+      nLists = 16, indexPath = dir)
+    emb.filter(col("vec_id") % 5 === 0).write.format("lance").mode("append").save(src)
+    val conf = spark.sessionState.newHadoopConf()
+    val meta = s"$dir/pq_meta.lance"
+    val published = LanceFormat.headVersion(conf, meta)
+    // a rival sweeps this holder's lock entry as stale while the update's
+    // tail merge runs (its first job), as after a long pause
+    val (fs, root) = LanceFormat.fileSystem(dir, conf)
+    val swept = new java.util.concurrent.atomic.AtomicBoolean
+    val rival = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!swept.get) {
+          val entries = fs.listStatus(root)
+            .filter(_.getPath.getName.startsWith("_maintenance.lock."))
+          entries.foreach(st => fs.delete(st.getPath, false))
+          if (entries.nonEmpty) swept.set(true)
+        }
+    }
+    spark.sparkContext.addSparkListener(rival)
+    try intercept[MaintenanceLock.ConcurrentMaintenance] {
+      Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
+    } finally spark.sparkContext.removeSparkListener(rival)
+    assert(swept.get)
+    assert(LanceFormat.headVersion(conf, meta) == published,
+      "the swept holder published pq_meta.lance over its successor")
+    // the next maintainer sweeps the orphan merge and publishes the tail
+    val covered = Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
+    assert(covered == LanceFormat.headVersion(conf, src))
+    assert(LanceFormat.headVersion(conf, meta) > published)
   }
 
   test("IVF_PQ re-rank: candidate ids reach a lance corpus as a runtime filter") {

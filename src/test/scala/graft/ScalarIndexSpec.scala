@@ -12,14 +12,20 @@ import graft.sources.lance.{FlakyAbstractFs, FlakyFs}
 class ScalarIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshDs(): (String, String) = {
+  /** The fixture's columns over `id`; `padded` adds ~2 KB per row, so a
+    * 5,000-row fragment holds more than `LanceLocal.CapBytes` and a face
+    * that reads it runs its DSv2 plan instead of the driver-local one. */
+  private def columns(padded: Boolean): Seq[String] =
+    Seq("id AS k", "CAST(id % 7 AS STRING) AS tag", "CAST(id AS DOUBLE) * 1.5 AS v") ++
+      (if (padded) Seq("concat(CAST(id AS STRING), repeat('x', 2000)) AS pad") else Nil)
+
+  private def freshDs(padded: Boolean = false): (String, String) = {
     val dir = java.nio.file.Files.createTempDirectory("sidx").toString
     val ds  = s"$dir/base.lance"
     val ix  = s"$dir/idx.lance"
     // write UNSORTED in key so only the index can localize a key
     spark.range(20000)
-      .selectExpr("id AS k", "CAST(id % 7 AS STRING) AS tag",
-                  "CAST(id AS DOUBLE) * 1.5 AS v")
+      .selectExpr(columns(padded): _*)
       .orderBy(expr("hash(id)"))
       .repartition(4)
       .write.format("lance").mode("overwrite").save(ds)
@@ -85,23 +91,28 @@ class ScalarIndexSpec extends AnyFunSuite {
   }
 
   test("combined lookup covers rows appended after the index build") {
-    val (ds, ix) = freshDs()
-    spark.range(20000, 20050)
-      .selectExpr("id AS k", "CAST(id % 7 AS STRING) AS tag",
-                  "CAST(id AS DOUBLE) * 1.5 AS v")
-      .write.format("lance").mode("append").save(ds)
-    // plain lookup misses the appended key; combined finds it
-    val plain = ScalarIndex.lookup(spark, ds, ix, Seq(3L, 20010L))
-      .select("k").collect().map(_.getLong(0)).toSet
-    assert(plain == Set(3L))
-    val combined = ScalarIndex.lookupCombined(spark, ds, ix, Seq(3L, 20010L))
-      .select("k").collect().map(_.getLong(0)).toSet
-    assert(combined == Set(3L, 20010L))
-    // deletes after build are masked on the combined path too
-    graft.sources.lance.LanceMaintenance.deleteWhere(spark, ds, "k = 3")
-    val after = ScalarIndex.lookupCombined(spark, ds, ix, Seq(3L, 20010L))
-      .select("k").collect().map(_.getLong(0)).toSet
-    assert(after == Set(20010L))
+    // on both sides of the driver-local byte cap: the plain fixture is
+    // answered on the driver with no job, the padded one by the DSv2 plan
+    Seq(false, true).foreach { padded =>
+      val (ds, ix) = freshDs(padded)
+      spark.range(20000, 20050).selectExpr(columns(padded): _*)
+        .write.format("lance").mode("append").save(ds)
+      // plain lookup misses the appended key; combined finds it
+      val plain = ScalarIndex.lookup(spark, ds, ix, Seq(3L, 20010L))
+        .select("k").collect().map(_.getLong(0)).toSet
+      assert(plain == Set(3L))
+      def combined(): Set[Long] = {
+        val (got, jobs) = TestSpark.jobsOf(
+          ScalarIndex.lookupCombined(spark, ds, ix, Seq(3L, 20010L))
+            .select("k").collect().map(_.getLong(0)).toSet)
+        assert((jobs > 0) == padded, s"padded=$padded ran $jobs jobs")
+        got
+      }
+      assert(combined() == Set(3L, 20010L), s"padded=$padded")
+      // deletes after build are masked on the combined path too
+      graft.sources.lance.LanceMaintenance.deleteWhere(spark, ds, "k = 3")
+      assert(combined() == Set(20010L), s"padded=$padded")
+    }
   }
 
   test("label-list index: any-label lookup equals arrays_overlap, deduped") {

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
@@ -7,4 +11,27 @@ object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(8)
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the Spark jobs it starts. A marker job run
+    * afterwards proves the listener has seen every earlier job start. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val marker = s"jobs-of-marker-${java.util.UUID.randomUUID()}"
+    val started = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+      (out, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
