@@ -192,7 +192,7 @@ object Dev {
       "d21_pipeline_end2end" -> "quality gate -> dedup window -> budget window chained: one kernel scan, three shuffles total",
       "l20_runtime_prune" -> "dynamic pruning: the dim's realized key set reaches the lance scan as RuntimeFilters (fragments pruned at execution, join re-checks)",
       "d28_minhash_portable" -> "portable minhash: identical-signature collapse -> md5 bands mapped injectively to longs -> bucket-local kernel -> pair expansion",
-      "d34_neardup_capped" -> "bounded near-dup contract: same portable sketch as d28, per-doc K-smallest partners from sliced group arrays + bounded neighbor menus — linear output, no pair materialization",
+      "d34_neardup_capped" -> "bounded near-dup contract: d28's portable sketch and bucket-local core edges, per-doc K-smallest partners from sliced group arrays + bounded neighbor menus — linear output, no pair materialization",
       "l21_partitioned_join" -> "storage-partitioned join: co-partitioned lance facts (KeyGroupedPartitioning) — join without exchange (broadcast at this SF; SPJ pinned in LancePartitionSpec)",
       "l22_partitioned_agg" -> "partition-key aggregation over a lang-partitioned corpus: partial aggs per value-fragment ARE the groups",
       "l23_bucketed_join" -> "bucket(16,key) SPJ through the lance catalog's bucket function: SMJ directly over the two scans, no join exchange",

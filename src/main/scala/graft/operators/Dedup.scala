@@ -1,24 +1,30 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+/** What the per-pair LSH kernel reads of a bucket member: its gid, the
+  * bucket's band, the full signature for the estimate and the band-hash
+  * vector for first-colliding-band ownership. */
+private[graft] sealed trait LshRow {
+  def gid: Long; def band: Int; def sig: Array[Long]; def bhs: Array[Long]
+}
+
 /** One (rep, band, block-pair) row shipped into a hot LSH band bucket:
-  * the full signature for the estimate kernel, the band-hash vector for
-  * first-colliding-band ownership, and the member's gid-hash block `blk`
-  * within the bucket (`lo`/`hi` name the block PAIR this copy serves —
-  * a bucket of more than one block fans its O(m²) compares out across
-  * one task per upper-triangle block pair). */
+  * the [[LshRow]] fields plus the member's gid-hash block `blk` within
+  * the bucket (`lo`/`hi` name the block PAIR this copy serves — a bucket
+  * of more than one block fans its O(m²) compares out across one task
+  * per upper-triangle block pair). */
 private[graft] case class LshBucketRow(gid: Long, band: Int, bandHash: Long,
                                        blk: Int, lo: Int, hi: Int,
-                                       sig: Array[Long], bhs: Array[Long])
+                                       sig: Array[Long], bhs: Array[Long]) extends LshRow
 
 /** [[LshBucketRow]] without the block fan-out columns — the no-split
   * kernel's row (the overwhelmingly common census outcome), so the
   * exchange and the kernel serializer never carry constants. */
 private[graft] case class LshSlimRow(gid: Long, band: Int, bandHash: Long,
-                                     sig: Array[Long], bhs: Array[Long])
+                                     sig: Array[Long], bhs: Array[Long]) extends LshRow
 
 /** A surviving (est ≥ threshold) near-dup rep pair emitted by the
   * bucket-local LSH kernel. */
@@ -105,27 +111,18 @@ object Dedup {
     val t = tokenSets(df, idCol, textCol, Seq(blockCol))
       .select(col(idCol), col(blockCol).as("blk"),
               array_sort(array_distinct(transform(col("toks"), tk => xxhash64(tk)))).as("toks"))
-    // CORE-derived spread of the cached distinct-set table (r16, guide
-    // §2.5): the pair join's stream side and the O(n+m) merge-intersect
-    // kernel run per CANDIDATE PAIR — quadratic in block members while
-    // the frame's bytes are linear, so AQE's byte-based coalescing packed
-    // the verify stage into 1-2 tasks at sf0.1. One skinny round-robin
-    // exchange before the cache spreads every downstream stage.
-    val reps = t.groupBy(col("blk"), col("toks"))
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .repartition(math.max(1, df.sparkSession.sparkContext.defaultParallelism))
-      .cache()
-    val intra = reps.filter(size(col("ids")) > 1)
-      .select(col("ids"), explode(col("ids")).as("doc_a"))
-      .select(col("doc_a"), explode(col("ids")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("jaccard", lit(1.0))
+    // the pair join's stream side and the O(n+m) merge-intersect kernel
+    // run per CANDIDATE PAIR — quadratic in block members while the
+    // frame's bytes are linear (see [[groupIds]] for the spread). The
+    // checkpoint is lazy: the census below materializes it, and the
+    // ContextCleaner frees it with the returned frame.
+    val reps = groupIds(t, idCol, col("blk"), col("toks")).localCheckpoint(false)
     // adaptive interior (both branches differential-pinned identical in
     // OperatorsSpec): small blocks take the plain per-block pair join —
     // quadratic but affordable below ~4096²/2 merge walks per block, and
     // free of the prefix path's three extra linear shuffles; past the cap
     // the prefix-filtered shape is the only one that survives scale (the
-    // census is one cheap aggregate over the cached reps)
+    // census is one cheap aggregate over the checkpointed reps)
     val censusRow = reps.groupBy("blk").count()
       .agg(coalesce(max("count"), lit(0L)), coalesce(sum("count"), lit(0L)))
       .head()
@@ -133,7 +130,7 @@ object Dedup {
     // block keys are few by nature (sources/domains), so a shuffle join
     // on blk serializes on the key count — broadcast the build side
     // whenever the distinct-set table is genuinely small. The planner
-    // can't make this call once the census materialized the cache: the
+    // can't make this call once the census materialized the table: the
     // accurate array-heavy size estimate sits just over the broadcast
     // threshold and it flips to a 20-key SortMergeJoin (measured 4x on
     // sf1). Past the cap the table is big AND block keys are many — the
@@ -142,38 +139,76 @@ object Dedup {
       if (maxBlock <= allPairsMaxBlock)
         allPairsStage(reps, broadcastBuild = totalReps <= 200000L)
       else prefixFilteredPairs(reps, threshold)
-    val inter = staged
-      .select(col("ids_a"), col("ids_b"),
-              (col("n_inter").cast(DoubleType) /
-               (col("n_a") + col("n_b") - col("n_inter")).cast(DoubleType)).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("jaccard"), col("ids_b"), explode(col("ids_a")).as("a"))
-      .select(col("jaccard"), col("a"), explode(col("ids_b")).as("b"))
+    memberPairs(reps, "jaccard", lit(1.0), staged.filter(col("jaccard") >= threshold))
+  }
+
+  /** `pairs`' `keys` with the exact jaccard of their sorted hashed token
+    * sets `toks_a`/`toks_b` (the codegen merge-intersect kernel), the
+    * intersect size staged once so it isn't re-evaluated per use. */
+  private def exactJaccard(pairs: DataFrame, keys: String*): DataFrame =
+    pairs.select(keys.map(col) ++ Seq(
+        graft.functions.ArrayKernels.sortedIntersectCount(col("toks_a"), col("toks_b")).as("n_inter"),
+        size(col("toks_a")).as("n_a"), size(col("toks_b")).as("n_b")): _*)
+      .select(keys.map(col) :+ (col("n_inter").cast(DoubleType) /
+        (col("n_a") + col("n_b") - col("n_inter")).cast(DoubleType)).as("jaccard"): _*)
+
+  /** One row per distinct `keys` value with its members' sorted `ids` —
+    * the collapse every near-dup operator here starts with. Identical
+    * sketches (token sets, signatures) pair at similarity 1 by
+    * definition, so their pairs explode straight off the member list
+    * ([[memberPairs]]) and candidate generation and verification run
+    * once per DISTINCT value: the quadratic work tracks distinct-value
+    * bucket sizes, not duplicate-cluster sizes.
+    *
+    * CORE-derived spread (r16, guide §2.5): everything downstream — pair
+    * explosions (~100x for SimHash), band fan-out, verify kernels,
+    * survivor join-backs, the final sort's shuffle WRITE — runs on this
+    * frame's partitioning and costs the pair/band blow-up, not the
+    * frame's bytes, so AQE's byte-based coalescing packed it into 1-2
+    * tasks at sf0.1. One skinny round-robin exchange spreads it. */
+  private def groupIds(df: DataFrame, idCol: String, keys: Column*): DataFrame =
+    df.groupBy(keys: _*)
+      .agg(sort_array(collect_list(col(idCol))).as("ids"))
+      .repartition(math.max(1, df.sparkSession.sparkContext.defaultParallelism))
+
+  /** Every document pair of a collapsed near-dup result, normalized to
+    * doc_a < doc_b with its `score`: the intra-group pairs off each
+    * group's sorted `ids` at `same` (the score of identical sketches),
+    * then every member pair of each `cross(ids_a, ids_b, score)` row of
+    * two distinct groups (least/greatest re-normalizes, as a group's ids
+    * need not all sit below the other's). Distinct groups never share a
+    * member, so the two sets are disjoint. */
+  private def memberPairs(groups: DataFrame, score: String, same: Column,
+                          cross: DataFrame): DataFrame = {
+    val intra = groups.filter(size(col("ids")) > 1)
+      .select(col("ids"), explode(col("ids")).as("doc_a"))
+      .select(col("doc_a"), explode(col("ids")).as("doc_b"))
+      .filter(col("doc_a") < col("doc_b"))
+      .withColumn(score, same)
+    val inter = cross
+      .select(col(score), col("ids_b"), explode(col("ids_a")).as("a"))
+      .select(col(score), col("a"), explode(col("ids_b")).as("b"))
       .select(least(col("a"), col("b")).as("doc_a"),
-              greatest(col("a"), col("b")).as("doc_b"), col("jaccard"))
-    intra.select("doc_a", "doc_b", "jaccard").unionAll(inter)
+              greatest(col("a"), col("b")).as("doc_b"), col(score))
+    intra.select("doc_a", "doc_b", score).unionAll(inter)
   }
 
   /** The small-block interior: plain per-block pair join over the
-    * distinct-set table, exact intersect staged. Quadratic per block by
+    * distinct-set table, exact jaccard staged. Quadratic per block by
     * construction — [[jaccardPairs]] gates it behind `allPairsMaxBlock`. */
   private def allPairsStage(reps: DataFrame,
                             broadcastBuild: Boolean): DataFrame = {
     val a = reps.select(col("ids").as("ids_a"), col("blk"), col("toks").as("toks_a"))
     val b0 = reps.select(col("ids").as("ids_b"), col("blk").as("blk_b"), col("toks").as("toks_b"))
     val b = if (broadcastBuild) broadcast(b0) else b0
-    a.join(b, col("blk") === col("blk_b") &&
-        element_at(col("ids_a"), 1) < element_at(col("ids_b"), 1))
-      // stage the intersect size once so it isn't re-evaluated per use
-      .select(col("ids_a"), col("ids_b"),
-              graft.functions.ArrayKernels.sortedIntersectCount(col("toks_a"), col("toks_b")).as("n_inter"),
-              size(col("toks_a")).as("n_a"), size(col("toks_b")).as("n_b"))
+    exactJaccard(a.join(b, col("blk") === col("blk_b") &&
+        element_at(col("ids_a"), 1) < element_at(col("ids_b"), 1)), "ids_a", "ids_b")
   }
 
   /** Prefix-filtered candidate generation + exact intersect staging over a
     * distinct-set table `reps(blk, toks, ids)` — the interior of
-    * [[jaccardPairs]]. Returns one row per CANDIDATE pair with the exact
-    * `n_inter`/`n_a`/`n_b` staged (the caller applies the jaccard filter).
+    * [[jaccardPairs]]. Returns one row per CANDIDATE pair with its exact
+    * jaccard staged (the caller applies the jaccard filter).
     *
     * Correctness of the filter (no recall loss): order tokens by the
     * global total order (df asc, tok asc) within the block. For a set `s`
@@ -211,12 +246,8 @@ object Dedup {
                          col("ids").as("ids_a"), col("toks").as("toks_a"))
     val sb = reps.select(col("blk"), rid.as("rid_b"),
                          col("ids").as("ids_b"), col("toks").as("toks_b"))
-    cand.join(sa, Seq("blk", "rid_a"))
-      .join(sb, Seq("blk", "rid_b"))
-      // stage the intersect size once so it isn't re-evaluated per use
-      .select(col("ids_a"), col("ids_b"),
-              graft.functions.ArrayKernels.sortedIntersectCount(col("toks_a"), col("toks_b")).as("n_inter"),
-              size(col("toks_a")).as("n_a"), size(col("toks_b")).as("n_b"))
+    exactJaccard(cand.join(sa, Seq("blk", "rid_a")).join(sb, Seq("blk", "rid_b")),
+      "ids_a", "ids_b")
   }
 
   /** MinHash signatures: one row per doc with a `sig` array<bigint> of
@@ -264,47 +295,109 @@ object Dedup {
   def minHashLsh(df: DataFrame, idCol: String, textCol: String,
                  numHashes: Int, bands: Int, jaccardThreshold: Double,
                  blockSize: Int = 4096): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val sigs = minHashSignatures(df, idCol, textCol, numHashes)
-    // localCheckpoint pins the surrogate gid (nondeterminism guard) and
-    // materializes the signature table once — at 100 TB this is the "write
-    // the signature table" step every production dedup pipeline has.
-    // CORE-derived spread before the checkpoint (r16, guide §2.5): the
-    // intra-group pair explosion, the band-row fan-out and the survivor
-    // join-back all run on this frame's partitioning, and their cost is
-    // the pair/band blow-up, not the frame's bytes — AQE's byte-based
-    // coalescing handed them 1-2 partitions at sf0.1. The gid stays
-    // deterministic: it is assigned AFTER the repartition and pinned by
-    // the checkpoint.
-    val reps = sigs.groupBy("sig")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .repartition(math.max(1, df.sparkSession.sparkContext.defaultParallelism))
-      .withColumn("gid", monotonically_increasing_id())
-      .localCheckpoint(true)
-    val intra = reps.filter(size(col("ids")) > 1)
-      .select(col("ids"), explode(col("ids")).as("doc_a"))
-      .select(col("doc_a"), explode(col("ids")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("est_jaccard", lit(1.0))
-    val survivors =
-      bucketLocalLshPairs(reps, numHashes, bands, jaccardThreshold, blockSize)
-    // only SURVIVING pairs (the operator's output, post-threshold) join the
-    // member lists back — a stream proportional to the answer, not to the
-    // candidate set
-    val sa = reps.select(col("gid").as("gid_a"), col("ids").as("ids_a"))
-    val sb = reps.select(col("gid").as("gid_b"), col("ids").as("ids_b"))
-    val inter = survivors.join(sa, "gid_a").join(sb, "gid_b")
-      .select(col("est_jaccard"), col("ids_b"), explode(col("ids_a")).as("a"))
-      .select(col("est_jaccard"), col("a"), explode(col("ids_b")).as("b"))
-      .select(least(col("a"), col("b")).as("doc_a"),
-              greatest(col("a"), col("b")).as("doc_b"), col("est_jaccard"))
-    intra.select("doc_a", "doc_b", "est_jaccard").unionAll(inter)
+    require(numHashes > 0, s"numHashes must be positive, got $numHashes")
+    require(bands > 0, s"bands must be positive, got $bands")
+    require(numHashes % bands == 0,
+      s"numHashes ($numHashes) must be divisible by bands ($bands)")
+    // intra-group pairs emit at est 1.0 unfiltered, kernel pairs only on
+    // a band collision: outside (0, 1] the two branches disagree
+    require(jaccardThreshold > 0.0 && jaccardThreshold <= 1.0,
+      s"jaccardThreshold must be in (0, 1], got $jaccardThreshold")
+    lshCore(minHashSignatures(df, idCol, textCol, numHashes), idCol, numHashes,
+      identity, graft.functions.SketchAggs.bandHashes(_, bands),
+      jaccardThreshold, blockSize).pairs
   }
 
-  /** Bucket-local LSH candidate generation + threshold filter over a
-    * distinct-signature table `reps(gid, sig)`. Returns surviving pairs
-    * (gid_a, gid_b, est_jaccard) with gid_a < gid_b, exactly the set the
-    * join-shape candidates+distinct+estimate pipeline produces — but
+  /** One MinHash-LSH run: `reps(sig, ids, gid)`, one checkpointed row
+    * per distinct signature, and the kernel's `survivors(gid_a, gid_b,
+    * est_jaccard)`, gid_a < gid_b, est >= threshold. */
+  private[graft] final case class LshRun(reps: DataFrame, survivors: DataFrame) {
+    /** The document pairs (doc_a < doc_b, est_jaccard). Only SURVIVING
+      * pairs (post-threshold) join the member lists back — a stream
+      * proportional to the answer, not to the candidate set. */
+    def pairs: DataFrame = {
+      val sa = reps.select(col("gid").as("gid_a"), col("ids").as("ids_a"))
+      val sb = reps.select(col("gid").as("gid_b"), col("ids").as("ids_b"))
+      memberPairs(reps, "est_jaccard", lit(1.0),
+        survivors.join(sa, "gid_a").join(sb, "gid_b"))
+    }
+  }
+
+  /** The MinHash-LSH core of [[minHashLsh]] and [[portableMinHashLsh]]:
+    * `sigs(idCol, sig)` collapses to distinct signatures ([[groupIds]])
+    * and the bucket-local kernel ([[bucketLocalPairsFrom]]) runs over
+    * `sigLongs(sig)` (array<long>, `numHashes` positions) and
+    * `bandKeys(sig)` (array<long>).
+    *
+    * localCheckpoint pins the surrogate gid (nondeterminism guard) and
+    * materializes the signature table once — at 100 TB this is the "write
+    * the signature table" step every production dedup pipeline has. The
+    * gid stays deterministic: it is assigned AFTER the core spread and
+    * pinned by the checkpoint. */
+  private def lshCore(sigs: DataFrame, idCol: String, numHashes: Int,
+                      sigLongs: Column => Column, bandKeys: Column => Column,
+                      jaccardThreshold: Double, blockSize: Int): LshRun = {
+    val reps = groupIds(sigs, idCol, col("sig"))
+      .withColumn("gid", monotonically_increasing_id())
+      .localCheckpoint(true)
+    LshRun(reps, bucketLocalPairsFrom(
+      reps.select(col("gid"), sigLongs(col("sig")).as("sig"),
+                  bandKeys(col("sig")).as("bhs")),
+      numHashes, jaccardThreshold, blockSize))
+  }
+
+  /** The portable sketch: 8 salted md5 min-hashes in 4 bands of 2. */
+  private[graft] val PortableHashes = 8
+  private val PortableBands = 4
+
+  /** The portable MinHash sketch per doc: `sig` holds mh_p = the first 13
+    * hex chars of min over distinct tokens of md5("p:" || tok), from a
+    * fused kernel value-identical to the declarative construction DuckDB
+    * reproduces bit for bit (MinHashSig scaladoc). */
+  private[graft] def portableSignatures(df: DataFrame, idCol: String,
+                                        textCol: String): DataFrame =
+    df.select(col(idCol),
+      graft.functions.ArrayKernels.minhashSig(col(textCol), PortableHashes).as("sig"))
+
+  /** The portable sketch's band keys: band b is keyed by the FIRST 64 bits
+    * of md5(sig[2b] || ',' || sig[2b+1]), as a long (see
+    * [[portableMinHashLsh]] for why the truncation loses no pair). */
+  private[graft] def portableBandKeys(sig: Column): Column =
+    array((0 until PortableBands).map(b =>
+      conv(substring(md5(concat_ws(",", sig(2 * b), sig(2 * b + 1))), 1, 16), 16, -10)
+        .cast(LongType)): _*)
+
+  /** MinHash-LSH over the portable sketch at est >= 0.75 (d28, d34).
+    * Candidates come bucket-locally from the d07 kernel (round 11: d28's
+    * skinny-candidate join + distinct + wide sig join-back shuffled ~40
+    * GB at sf10 and exhausted disk).
+    *
+    * The portable md5 sketch maps INJECTIVELY to the kernel's long domain:
+    * each 13-hex-char mh parses to a 52-bit long (string equality ⟺ long
+    * equality, so the est fraction is bit-identical), and each band's md5
+    * keys the bucket by its FIRST 64 bits ([[portableBandKeys]]).
+    * Truncating the band key can only ADD candidates (64-bit collisions),
+    * never lose one — and every added pair dies at the est filter: est >=
+    * 0.75 = 1 - r/P means at most 2 of the 8 positions differ, which by
+    * pigeonhole leaves >= 2 of the 4 bands with BOTH positions equal —
+    * equal band input strings, equal FULL md5 — i.e. anything that can
+    * pass the filter was already a full-md5 candidate. The survivors are
+    * therefore exactly the full-md5 band self-join + distinct + estimate
+    * pipeline's edges (the DuckDB hash oracle pins d28 and d34 at 3 SFs;
+    * OperatorsSpec pins the naive twin at several block sizes). */
+  private[graft] def portableMinHashLsh(df: DataFrame, idCol: String, textCol: String,
+                                        blockSize: Int = 4096): LshRun =
+    lshCore(portableSignatures(df, idCol, textCol), idCol, PortableHashes,
+      transform(_, x => conv(x, 16, 10).cast(LongType)), portableBandKeys,
+      0.75, blockSize)
+
+  /** Bucket-local LSH candidate generation + threshold filter over
+    * `repsWithBhs(gid, sig: array<long>, bhs: array<long>)` — a
+    * distinct-signature table with its precomputed band keys (the xxhash
+    * sketch's [[graft.functions.SketchAggs.bandHashes]], or the portable
+    * sketch's md5 band keys truncated to longs). Returns surviving
+    * pairs (gid_a, gid_b, est_jaccard) with gid_a < gid_b, exactly the set
+    * the join-shape candidates+distinct+estimate pipeline produces — but
     * nothing pair-shaped ever shuffles:
     *
     *  - census: skinny (band, band_hash) aggregate; keys with ≥2 members
@@ -322,26 +415,9 @@ object Dedup {
     *    through a lazy iterator — peak memory per bucket is the member
     *    buffer, O(members × numHashes × 8 B), never the pair set.
     *
-    * Skew: a bucket of m > blockSize members fans its O(m²) compares out
-    * across one task per upper-triangle block pair (see
-    * [[bucketLocalPairsFrom]]) — memory AND latency both bounded by
-    * blockSize, the early-exit bound makes the common reject cheap.
     * OperatorsSpec pins value-identity vs the join shape, including an
     * adversarial mega-bucket ≥100× the median bucket size, at both a
     * splitting and a non-splitting blockSize.
-    */
-  private[graft] def bucketLocalLshPairs(reps: DataFrame, numHashes: Int,
-                                         bands: Int, jaccardThreshold: Double,
-                                         blockSize: Int = 4096): DataFrame =
-    bucketLocalPairsFrom(
-      reps.select(col("gid"), col("sig"),
-        graft.functions.SketchAggs.bandHashes(col("sig"), bands).as("bhs")),
-      numHashes, jaccardThreshold, blockSize)
-
-  /** [[bucketLocalLshPairs]] interior over PRECOMPUTED band hashes:
-    * `repsWithBhs(gid, sig: array<long>, bhs: array<long>)`. Lets sketch
-    * variants with their own banding (e.g. d28's portable md5 bands,
-    * injectively mapped to longs) reuse the census + bucket-local kernel.
     *
     * Skew (round 12): a bucket's O(m²) compares no longer serialize in
     * one task. Each bucket of m > blockSize members is chunked into
@@ -355,7 +431,8 @@ object Dedup {
     * the output is identical — but a 10⁶-member boilerplate bucket now
     * runs as ~nblk²/2 parallel tasks of ≤ blockSize² compares instead
     * of one multi-hour straggler. Peak task memory stays O(blockSize ×
-    * numHashes).
+    * numHashes): memory AND latency are both bounded by blockSize, and
+    * the early-exit bound makes the common reject cheap.
     */
   private[graft] def bucketLocalPairsFrom(repsWithBhs: DataFrame, numHashes: Int,
                                           jaccardThreshold: Double,
@@ -415,16 +492,7 @@ object Dedup {
         .as[LshSlimRow]
         .mapPartitions { it =>
           runGrouped(it)((a, b) => a.band == b.band && a.bandHash == b.bandHash)
-            .flatMap { ms =>
-              val n = ms.length
-              Iterator.range(0, n).flatMap { i =>
-                Iterator.range(i + 1, n).flatMap { j =>
-                  lshPairOf(nh, tau,
-                    ms(i).gid, ms(i).band, ms(i).sig, ms(i).bhs,
-                    ms(j).gid, ms(j).sig, ms(j).bhs)
-                }
-              }
-            }
+            .flatMap(ms => upperTriangle(nh, tau, ms))
         }
         .toDF("gid_a", "gid_b", "est_jaccard")
     } else {
@@ -461,25 +529,14 @@ object Dedup {
               a.bandHash == b.bandHash && a.lo == b.lo && a.hi == b.hi)
             .flatMap { all =>
               val (lo, hi) = (all(0).lo, all(0).hi)
-              if (lo == hi) {
-                // within-block upper triangle (every member carries blk == lo)
-                val ms = all
-                val n = ms.length
-                Iterator.range(0, n).flatMap { i =>
-                  Iterator.range(i + 1, n).flatMap { j =>
-                    lshPairOf(nh, tau,
-                      ms(i).gid, ms(i).band, ms(i).sig, ms(i).bhs,
-                      ms(j).gid, ms(j).sig, ms(j).bhs)
-                  }
-                }
-              } else {
+              // within-block upper triangle (every member carries blk == lo)
+              if (lo == hi) upperTriangle(nh, tau, all)
+              else {
                 // cross product of the two blocks — each unordered pair with
                 // blocks {lo, hi} exists exactly here and nowhere else
                 val as = all.filter(_.blk == lo)
                 val bs = all.filter(_.blk == hi)
-                as.iterator.flatMap(a => bs.iterator.flatMap(b =>
-                  lshPairOf(nh, tau, a.gid, a.band, a.sig, a.bhs,
-                            b.gid, b.sig, b.bhs)))
+                as.iterator.flatMap(a => bs.iterator.flatMap(b => lshPairOf(nh, tau, a, b)))
               }
             }
         }
@@ -505,26 +562,30 @@ object Dedup {
       }
     }
 
+  /** Every i < j member pair of one gid-sorted bucket (or one block's
+    * triangle) through [[lshPairOf]]. */
+  private def upperTriangle(nh: Int, tau: Double,
+                            ms: scala.collection.IndexedSeq[LshRow]): Iterator[LshPair] =
+    Iterator.range(0, ms.length).flatMap(i =>
+      Iterator.range(i + 1, ms.length).flatMap(j => lshPairOf(nh, tau, ms(i), ms(j))))
+
   /** The per-pair LSH kernel, shared by the slim (no-split) and
     * block-pair kernels: first-colliding-band ownership (the
     * bucket-local replacement for the global distinct — exact because
     * bucket membership IS band-hash equality), then an eq count with a
     * conservative early exit: if even all-remaining-equal cannot reach
     * the threshold under the SAME double compare the final test uses,
-    * reject now. Symmetric in (a, b). */
-  private def lshPairOf(nh: Int, tau: Double,
-                        aGid: Long, aBand: Int,
-                        aSig: Array[Long], aBhs: Array[Long],
-                        bGid: Long, bSig: Array[Long],
-                        bBhs: Array[Long]): Iterator[LshPair] = {
+    * reject now. Symmetric in (a, b), which share the bucket's band. */
+  private def lshPairOf(nh: Int, tau: Double, a: LshRow, b: LshRow): Iterator[LshPair] = {
     var owned = true
     var k = 0
-    while (k < aBand && owned) {
-      if (aBhs(k) == bBhs(k)) owned = false
+    while (k < a.band && owned) {
+      if (a.bhs(k) == b.bhs(k)) owned = false
       k += 1
     }
     if (!owned) Iterator.empty
     else {
+      val aSig = a.sig; val bSig = b.sig
       var eq = 0
       var p = 0
       var live = true
@@ -535,14 +596,14 @@ object Dedup {
       }
       val est = eq.toDouble / nh
       if (live && est >= tau)
-        Iterator.single(LshPair(math.min(aGid, bGid), math.max(aGid, bGid), est))
+        Iterator.single(LshPair(math.min(a.gid, b.gid), math.max(a.gid, b.gid), est))
       else Iterator.empty
     }
   }
 
   /** The pre-round-11 join-shape pipeline: skinny (gid, band, band_hash)
     * candidate equi-join + distinct + signature join-back. Retained ONLY as
-    * the differential oracle for [[bucketLocalLshPairs]] (OperatorsSpec) —
+    * the differential oracle for [[bucketLocalPairsFrom]] (OperatorsSpec) —
     * its candidate stream materializes in a shuffle and was measured
     * exhausting disk at sf10 (~211M pairs / ~46 GB). Do not ship new
     * callers. */
@@ -593,19 +654,17 @@ object Dedup {
                     candidateThreshold: Double, exactThreshold: Double): DataFrame = {
     val cands = minHashLsh(df, idCol, textCol, numHashes, bands, candidateThreshold)
       .select("doc_a", "doc_b")
+    // both join sides read ONE computation of the token sets: the lazy
+    // checkpoint is filled by the first job that reads it (no job of its
+    // own — the frame has no exchange) and freed by the ContextCleaner
+    // with the returned frame, never pinned in the session cache
     val toks = tokenSets(df, idCol, textCol)
       .select(col(idCol),
               array_sort(array_distinct(transform(col("toks"), tk => xxhash64(tk)))).as("toks"))
-      .cache()
+      .localCheckpoint(false)
     val ta = toks.select(col(idCol).as("doc_a"), col("toks").as("toks_a"))
     val tb = toks.select(col(idCol).as("doc_b"), col("toks").as("toks_b"))
-    cands.join(ta, "doc_a").join(tb, "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-              graft.functions.ArrayKernels.sortedIntersectCount(col("toks_a"), col("toks_b")).as("n_inter"),
-              size(col("toks_a")).as("n_a"), size(col("toks_b")).as("n_b"))
-      .select(col("doc_a"), col("doc_b"),
-              (col("n_inter").cast(DoubleType) /
-               (col("n_a") + col("n_b") - col("n_inter")).cast(DoubleType)).as("jaccard"))
+    exactJaccard(cands.join(ta, "doc_a").join(tb, "doc_b"), "doc_a", "doc_b")
       .filter(col("jaccard") >= exactThreshold)
   }
 
@@ -756,23 +815,10 @@ object Dedup {
     // aggregate, and the quadratic work tracks distinct-signature bucket
     // sizes, not duplicate-cluster sizes.
     val sigs = simHash(df, idCol, textCol)
-    // CORE-derived spread of the cached signature groups (r16, guide
-    // §2.5): everything downstream — both explode sides and the final
-    // sort's shuffle WRITE — runs on this frame's partitioning, and its
-    // per-row cost is the ~100x pair explosion, not its bytes, so AQE's
-    // byte-based coalescing (1-2 partitions at sf0.1) serialized the
-    // whole pair expansion through 1-2 tasks. One skinny round-robin
-    // exchange before the cache spreads it across the cluster.
-    val groups = sigs.groupBy("simhash")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .repartition(math.max(1, df.sparkSession.sparkContext.defaultParallelism))
-      .cache()
-
-    val intra = groups.filter(size(col("ids")) > 1)
-      .select(col("ids"), explode(col("ids")).as("doc_a"))
-      .select(col("doc_a"), explode(col("ids")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", lit(0))
+    // lazy checkpoint: the returned frame's first job fills it and the
+    // ContextCleaner frees it with that frame (see [[groupIds]] for the
+    // spread)
+    val groups = groupIds(sigs, idCol, col("simhash")).localCheckpoint(false)
 
     val chunks = groups.select(col("simhash"), col("ids"),
         posexplode(array((0 until 4).map(c => expr(s"(shiftright(simhash, ${c * 16})) & 65535")): _*)))
@@ -794,17 +840,12 @@ object Dedup {
     val firstMatch = (1 until 4).map(c =>
       col("chunk") === c && (0 until c).map(k => !chunkMatches(k)).reduce(_ && _))
       .foldLeft(col("chunk") === 0)(_ || _)
-    val inter = l.join(r, col("chunk") === col("chunk_r") &&
+    val cross = l.join(r, col("chunk") === col("chunk_r") &&
         col("chunk_val") === col("chunk_val_r") && col("sh_a") < col("sh_b"))
       .filter(firstMatch)
       .withColumn("hamming", bit_count(expr("sh_a ^ sh_b")).cast(IntegerType))
       .filter(col("hamming") <= maxHamming)
       .select("sh_a", "sh_b", "ids_a", "ids_b", "hamming")
-      .select(col("hamming"), col("ids_b"), explode(col("ids_a")).as("a"))
-      .select(col("hamming"), col("a"), explode(col("ids_b")).as("b"))
-      .select(least(col("a"), col("b")).as("doc_a"),
-              greatest(col("a"), col("b")).as("doc_b"), col("hamming"))
-
-    intra.select("doc_a", "doc_b", "hamming").unionAll(inter)
+    memberPairs(groups, "hamming", lit(0), cross)
   }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Dedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,6 +25,74 @@ object TextOps {
   private val stopDe = Seq("der", "die", "das", "und", "ist")
 
   private def inList(xs: Seq[String]): String = xs.map(x => s"'$x'").mkString("(", ", ", ")")
+
+  /** d34's bounded near-dup contract over `docs(doc_id, text)`: each
+    * doc's `k` smallest near-dup partners (doc_id, partner_id,
+    * est_jaccard) under the portable sketch — the first `k` of the full
+    * pair list ([[Dedup.portableMinHashLsh]]) per doc by partner_id,
+    * without materializing that list. The distinct-signature groups and
+    * their surviving edges come from the shared MinHash-LSH core; per
+    * group, bounded partner menus: neighbors contribute only their k
+    * smallest ids (in each direction), group-mates a k+1 slice. */
+  private[graft] def cappedNearDups(docs: DataFrame, k: Int,
+                                    blockSize: Int = 4096): DataFrame = {
+    val run = Dedup.portableMinHashLsh(docs, "doc_id", "text", blockSize)
+    val (reps, edges) = (run.reps, run.survivors)
+    // both directions of every edge in ONE pass over it (explode of a
+    // 2-struct array, as in Dedup.connectedComponents): a union of two
+    // selects would run the kernel's subtree twice
+    val gk = reps.select(col("gid").as("nbr"), slice(col("ids"), 1, k + 1).as("cands"))
+    val inMenu = edges
+      .select(explode(array(
+          struct(col("gid_a").as("gid"), col("gid_b").as("nbr")),
+          struct(col("gid_b").as("gid"), col("gid_a").as("nbr")))).as("e"),
+        col("est_jaccard"))
+      .join(gk, col("e.nbr") === col("nbr"))
+      .select(col("e.gid").as("gid"), col("cands"), col("est_jaccard"))
+    val intraMenu = reps.filter(size(col("ids")) > 1)
+      .select(col("gid"), slice(col("ids"), 1, k + 1).as("cands"),
+              lit(1.0).as("est_jaccard"))
+    val menus = inMenu.unionAll(intraMenu)
+      .select(col("gid"), explode(col("cands")).as("partner_id"),
+              col("est_jaccard"))
+    val perDoc = reps.select(col("gid"), explode(col("ids")).as("doc_id"))
+      .join(menus, "gid")
+      .filter(col("partner_id") =!= col("doc_id"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy("partner_id")
+    perDoc.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("doc_id"), col("partner_id"), col("est_jaccard"))
+  }
+
+  /** The DuckDB oracles' portable-sketch chain shared by d28 and d34:
+    * the salted-md5 signatures, full-md5 band self-join + distinct, and
+    * the signature-estimated jaccard of every candidate pair (`est`). */
+  private val portableEstSql = """
+      WITH toks AS (
+        SELECT doc_id, UNNEST(list_distinct(string_split(text, ' '))) AS tok
+        FROM documents),
+      sig AS (
+        SELECT doc_id, p,
+               MIN(substr(md5(CAST(p AS VARCHAR) || ':' || tok), 1, 13)) AS mh
+        FROM toks CROSS JOIN (VALUES (0),(1),(2),(3),(4),(5),(6),(7)) t(p)
+        GROUP BY 1, 2),
+      sigv AS (SELECT doc_id, LIST(mh ORDER BY p) AS s FROM sig GROUP BY 1),
+      bands AS (
+        SELECT doc_id, b, md5(s[2*b+1] || ',' || s[2*b+2]) AS bh
+        FROM sigv CROSS JOIN (VALUES (0),(1),(2),(3)) t(b)),
+      cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM bands a JOIN bands b
+          ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
+      est AS (
+        SELECT c.doc_a, c.doc_b,
+               CAST(SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS DOUBLE) / 8
+                 AS est_jaccard
+        FROM cand c
+        JOIN sig sa ON sa.doc_id = c.doc_a
+        JOIN sig sb ON sb.doc_id = c.doc_b AND sb.p = sa.p
+        GROUP BY 1, 2)"""
 
   val defs: Seq[QDef] = Seq(
 
@@ -206,8 +275,8 @@ object TextOps {
     //     kernel; its band/bucket/estimate plumbing is identical). 8
     //     salted min-hashes (mh_p = min over tokens of md5("p:" || tok)
     //     prefix), 4 bands of 2, signature-estimated jaccard = equal
-    //     positions / 8. Scale shape preserved: banded candidates, pair
-    //     distinct on skinny ids, signatures joined back — no all-pairs.
+    //     positions / 8. Scale shape: the shared Dedup MinHash-LSH core
+    //     (collapse, bucket-local kernel, survivor join-back) — no all-pairs.
     //     NOTE the OUTPUT contract is the full near-dup PAIR list, which
     //     is inherently quadratic in duplicate-group size (5x duplicate
     //     multiplicity = ~25x pairs — measured in the round-8 scaling
@@ -216,88 +285,15 @@ object TextOps {
     //     (linear output: one keep-decision per doc), not a pair dump.
     QDef("d28_minhash_portable", (s, dir) => {
       val t = Tables.register(s, dir)
-      val P = 8; val B = 4
       // identical signatures COLLAPSE before banding (the d07 shape): a
       // dup-dense corpus concentrates on equal sketches, whose intra-group
       // pairs are est 1.0 by definition — banding/distinct/estimate then
       // run per DISTINCT-signature pair, never quadratic in group size
       // (the naive doc-level band self-join was 17-45 s at sf0.1; this is
       // the same output from ~|distinct sigs|² candidate work)
-      // fused one-pass signature kernel — value-identical to the portable
-      // declarative construction the oracle mirrors (MinHashSig scaladoc)
-      val sig = t("documents").select(col("doc_id"),
-          graft.functions.ArrayKernels.minhashSig(col("text"), P).as("sig"))
-      // core-derived spread before the checkpoint (r16): the pair
-      // explosions and survivor join-backs run on this partitioning — see
-      // the same move in Dedup.minHashLsh (guide §2.5, byte-based AQE
-      // coalescing vs compute-heavy rows)
-      val reps = sig.groupBy("sig")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .repartition(math.max(1, s.sparkContext.defaultParallelism))
-        .withColumn("gid", monotonically_increasing_id())
-        .localCheckpoint(true)
-      val intra = reps.filter(size(col("ids")) > 1)
-        .select(col("ids"), explode(col("ids")).as("a"))
-        .select(col("a"), explode(col("ids")).as("b"))
-        .filter(col("a") < col("b"))
-        .select(col("a").as("doc_a"), col("b").as("doc_b"),
-                lit(1.0).as("est_jaccard"))
-      // Bucket-local candidate generation via the d07 kernel (round 11 —
-      // the skinny-candidate join + distinct + wide sig join-back shuffled
-      // ~40 GB at sf10 and exhausted disk). The portable md5 sketch maps
-      // INJECTIVELY to the kernel's long domain: each 13-hex-char mh
-      // parses to a 52-bit long (string equality ⟺ long equality, so the
-      // est fraction is bit-identical), and each band's md5 keys the
-      // bucket by its FIRST 64 bits. Truncating the band key can only ADD
-      // candidates (64-bit collisions), never lose one — and every added
-      // pair dies at the est filter: est >= 0.75 = 1 - r/P means at most
-      // 2 of the 8 positions differ, which by pigeonhole leaves >= 2 of
-      // the 4 bands with BOTH positions equal — equal band input strings,
-      // equal FULL md5 — i.e. anything that can pass the filter was
-      // already a full-md5 candidate. Output unchanged (the DuckDB hash
-      // oracle pins it at 3 SFs).
-      val bhLong = (h: org.apache.spark.sql.Column) =>
-        conv(substring(h, 1, 16), 16, -10).cast(LongType)
-      val repsL = reps.select(col("gid"),
-          transform(col("sig"), x => conv(x, 16, 10).cast(LongType)).as("sig"),
-          array((0 until B).map(b => bhLong(
-            md5(concat_ws(",", col("sig")(2 * b), col("sig")(2 * b + 1))))): _*).as("bhs"))
-      val survivors = graft.operators.Dedup.bucketLocalPairsFrom(repsL, P, 0.75)
-      val sa = reps.select(col("gid").as("gid_a"), col("ids").as("ids_a"))
-      val sb = reps.select(col("gid").as("gid_b"), col("ids").as("ids_b"))
-      // est = 1.0 implies identical sigs, which collapsed — cross-group
-      // pairs never overlap the intra set
-      val inter = survivors.join(sa, "gid_a").join(sb, "gid_b")
-        .select(col("est_jaccard"), col("ids_b"), explode(col("ids_a")).as("a"))
-        .select(col("est_jaccard"), col("a"), explode(col("ids_b")).as("b"))
-        .select(least(col("a"), col("b")).as("doc_a"),
-                greatest(col("a"), col("b")).as("doc_b"), col("est_jaccard"))
-      intra.unionAll(inter).orderBy("doc_a", "doc_b")
-    }, Some("""
-      WITH toks AS (
-        SELECT doc_id, UNNEST(list_distinct(string_split(text, ' '))) AS tok
-        FROM documents),
-      sig AS (
-        SELECT doc_id, p,
-               MIN(substr(md5(CAST(p AS VARCHAR) || ':' || tok), 1, 13)) AS mh
-        FROM toks CROSS JOIN (VALUES (0),(1),(2),(3),(4),(5),(6),(7)) t(p)
-        GROUP BY 1, 2),
-      sigv AS (SELECT doc_id, LIST(mh ORDER BY p) AS s FROM sig GROUP BY 1),
-      bands AS (
-        SELECT doc_id, b, md5(s[2*b+1] || ',' || s[2*b+2]) AS bh
-        FROM sigv CROSS JOIN (VALUES (0),(1),(2),(3)) t(b)),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-      est AS (
-        SELECT c.doc_a, c.doc_b,
-               CAST(SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS DOUBLE) / 8
-                 AS est_jaccard
-        FROM cand c
-        JOIN sig sa ON sa.doc_id = c.doc_a
-        JOIN sig sb ON sb.doc_id = c.doc_b AND sb.p = sa.p
-        GROUP BY 1, 2)
+      Dedup.portableMinHashLsh(t("documents"), "doc_id", "text").pairs
+        .orderBy("doc_a", "doc_b")
+    }, Some(portableEstSql + """
       SELECT doc_a, doc_b, est_jaccard FROM est
       WHERE est_jaccard >= 0.75
       ORDER BY doc_a, doc_b""")),
@@ -305,8 +301,9 @@ object TextOps {
     // --- BOUNDED near-dup contract: the production face of d28 -------------
     // d28's full pair list is inherently quadratic in duplicate-group
     // size (47x wall at 5x multiplicity in the round-8 smoke). This
-    // variant keeps the identical portable salted-md5 sketch but emits,
-    // per doc, only its K smallest near-dup partners — O(K·N) output AND
+    // variant keeps the identical portable salted-md5 sketch (and the
+    // shared Dedup core's groups and edges) but emits, per doc, only its
+    // K smallest near-dup partners — O(K·N) output AND
     // O(K·(N+E)) compute: group-mates come from a slice of the sorted
     // per-signature id array, cross-group partners from the K smallest
     // ids of each banded neighbor group (any partner outside those K
@@ -317,86 +314,8 @@ object TextOps {
     // is the one a 100 TB corpus runs.
     QDef("d34_neardup_capped", (s, dir) => {
       val t = Tables.register(s, dir)
-      val P = 8; val B = 4; val K = 3
-      val sig = t("documents").select(col("doc_id"),
-          graft.functions.ArrayKernels.minhashSig(col("text"), P).as("sig"))
-      // core-derived spread before the checkpoint (r16): the pair
-      // explosions and survivor join-backs run on this partitioning — see
-      // the same move in Dedup.minHashLsh (guide §2.5, byte-based AQE
-      // coalescing vs compute-heavy rows)
-      val reps = sig.groupBy("sig")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .repartition(math.max(1, s.sparkContext.defaultParallelism))
-        .withColumn("gid", monotonically_increasing_id())
-        .localCheckpoint(true)
-      val bands = reps.select(col("gid"),
-          posexplode(array((0 until B).map(b =>
-            md5(concat_ws(",", col("sig")(2 * b), col("sig")(2 * b + 1)))): _*)))
-        .select(col("gid"), col("pos").as("band"), col("col").as("bh"))
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-            col("a.gid") < col("b.gid"))
-        .select(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"))
-        .distinct()
-      val sa = reps.select(col("gid").as("gid_a"), col("sig").as("sig_a"))
-      val sb = reps.select(col("gid").as("gid_b"), col("sig").as("sig_b"))
-      val est = (0 until P).map(i =>
-          when(col("sig_a")(i) === col("sig_b")(i), 1).otherwise(0))
-        .reduce(_ + _).cast(DoubleType) / P
-      val edges = cand.join(sa, "gid_a").join(sb, "gid_b")
-        .select(col("gid_a"), col("gid_b"), est.as("est_jaccard"))
-        .filter(col("est_jaccard") >= 0.75)
-      // per-group bounded partner menus: neighbors contribute only their
-      // K smallest ids (in each direction), group-mates a K+1 slice
-      val gk = reps.select(col("gid"), slice(col("ids"), 1, K + 1).as("topk"))
-      val inMenu = edges
-        .join(gk.withColumnRenamed("gid", "gid_b")
-                .withColumnRenamed("topk", "cands"), "gid_b")
-        .select(col("gid_a").as("gid"), col("cands"), col("est_jaccard"))
-        .unionAll(edges
-          .join(gk.withColumnRenamed("gid", "gid_a")
-                  .withColumnRenamed("topk", "cands"), "gid_a")
-          .select(col("gid_b").as("gid"), col("cands"), col("est_jaccard")))
-      val intraMenu = reps.filter(size(col("ids")) > 1)
-        .select(col("gid"), slice(col("ids"), 1, K + 1).as("cands"),
-                lit(1.0).as("est_jaccard"))
-      val menus = inMenu.unionAll(intraMenu)
-        .select(col("gid"), explode(col("cands")).as("partner_id"),
-                col("est_jaccard"))
-      val perDoc = reps.select(col("gid"), explode(col("ids")).as("doc_id"))
-        .join(menus, "gid")
-        .filter(col("partner_id") =!= col("doc_id"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy("partner_id")
-      perDoc.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= K)
-        .select(col("doc_id"), col("partner_id"), col("est_jaccard"))
-        .orderBy("doc_id", "partner_id")
-    }, Some("""
-      WITH toks AS (
-        SELECT doc_id, UNNEST(list_distinct(string_split(text, ' '))) AS tok
-        FROM documents),
-      sig AS (
-        SELECT doc_id, p,
-               MIN(substr(md5(CAST(p AS VARCHAR) || ':' || tok), 1, 13)) AS mh
-        FROM toks CROSS JOIN (VALUES (0),(1),(2),(3),(4),(5),(6),(7)) t(p)
-        GROUP BY 1, 2),
-      sigv AS (SELECT doc_id, LIST(mh ORDER BY p) AS s FROM sig GROUP BY 1),
-      bands AS (
-        SELECT doc_id, b, md5(s[2*b+1] || ',' || s[2*b+2]) AS bh
-        FROM sigv CROSS JOIN (VALUES (0),(1),(2),(3)) t(b)),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.b = b.b AND a.bh = b.bh AND a.doc_id < b.doc_id),
-      est AS (
-        SELECT c.doc_a, c.doc_b,
-               CAST(SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS DOUBLE) / 8
-                 AS est_jaccard
-        FROM cand c
-        JOIN sig sa ON sa.doc_id = c.doc_a
-        JOIN sig sb ON sb.doc_id = c.doc_b AND sb.p = sa.p
-        GROUP BY 1, 2),
+      cappedNearDups(t("documents"), 3).orderBy("doc_id", "partner_id")
+    }, Some(portableEstSql + """,
       pairs AS (SELECT * FROM est WHERE est_jaccard >= 0.75),
       sym AS (
         SELECT doc_a AS doc_id, doc_b AS partner_id, est_jaccard FROM pairs
@@ -423,28 +342,26 @@ object TextOps {
     // match — no shuffle of corpus text at all.
     QDef("d33_fuzzy_decontaminate", (s, dir) => {
       val t = Tables.register(s, dir)
-      val P = 8; val B = 4
-      def sigOf(df: org.apache.spark.sql.DataFrame, idc: String) = df.select(col(idc),
-          graft.functions.ArrayKernels.minhashSig(col("text"), P).as("sig"))
-      def bandsOf(df: org.apache.spark.sql.DataFrame, idc: String) = df.select(col(idc),
-          posexplode(array((0 until B).map(b =>
-            md5(concat_ws(",", col("sig")(2 * b), col("sig")(2 * b + 1)))): _*)))
-        .select(col(idc), col("pos").as("band"), col("col").as("bh"))
       val docs = t("documents")
       val isBench = col("source") === "src0" && col("doc_id") % 7 === 0
       // the corpus sketch feeds BOTH the band path and the verify join —
-      // materialize it once (the d28 localCheckpoint shape) instead of
-      // paying the md5 x P x tokens pass twice
-      val cs = sigOf(docs.filter(!isBench), "doc_id").localCheckpoint(true)
-      val bs = sigOf(docs.filter(isBench), "doc_id")
+      // materialize it once (localCheckpoint) instead of paying the md5 x
+      // P x tokens pass twice
+      val cs = Dedup.portableSignatures(docs.filter(!isBench), "doc_id", "text")
+        .localCheckpoint(true)
+      val bs = Dedup.portableSignatures(docs.filter(isBench), "doc_id", "text")
         .select(col("doc_id").as("bench_id"), col("sig").as("bsig"))
-      val cand = bandsOf(cs, "doc_id")
-        .join(broadcast(bandsOf(bs.select(col("bench_id"),
-          col("bsig").as("sig")), "bench_id")), Seq("band", "bh"))
+      // band keys as the shared core keys them (first 64 bits of each
+      // band's md5): a truncation collision only adds a candidate, which
+      // the est filter drops (pigeonhole, [[Dedup.portableMinHashLsh]])
+      val bandsOf = (sig: String) =>
+        posexplode(Dedup.portableBandKeys(col(sig))).as(Seq("band", "bh"))
+      val cand = cs.select(col("doc_id"), bandsOf("sig"))
+        .join(broadcast(bs.select(col("bench_id"), bandsOf("bsig"))), Seq("band", "bh"))
         .select("doc_id", "bench_id").distinct()
-      val est = (0 until P).map(i =>
+      val est = (0 until Dedup.PortableHashes).map(i =>
           when(col("sig")(i) === col("bsig")(i), 1).otherwise(0))
-        .reduce(_ + _).cast(DoubleType) / P
+        .reduce(_ + _).cast(DoubleType) / Dedup.PortableHashes
       cand.join(cs, "doc_id").join(broadcast(bs), "bench_id")
         .select(col("doc_id"), col("bench_id"), est.as("est_jaccard"))
         .filter(col("est_jaccard") >= 0.75)

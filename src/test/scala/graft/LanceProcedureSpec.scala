@@ -291,6 +291,32 @@ class LanceProcedureSpec extends AnyFunSuite {
     assert(kept == survivors.length.toLong)
   }
 
+  test("dedup_minhash refuses a bad threshold, num_hashes or bands, naming it") {
+    val base = java.nio.file.Files.createTempDirectory("graft-proc-mh-args").toString
+    val ds = s"$base/docs.lance"
+    Seq((1L, "alpha beta gamma"), (2L, "alpha beta delta"))
+      .toDF("doc_id", "text").write.format("lance").mode("overwrite").save(ds)
+    val out = s"$base/deduped.lance"
+    for ((args, named) <- Seq(
+        "bands => 0" -> "bands must be positive",
+        "bands => -4" -> "bands must be positive",
+        "num_hashes => 0" -> "numHashes must be positive",
+        "num_hashes => -64" -> "numHashes must be positive",
+        "num_hashes => 64, bands => 5" -> "divisible by bands",
+        "threshold => 0.0" -> "jaccardThreshold",
+        "threshold => -0.5" -> "jaccardThreshold",
+        "threshold => 1.5" -> "jaccardThreshold")) {
+      val e = intercept[Exception] {
+        spark.sql(s"CALL lance.dedup_minhash('$ds', 'doc_id', 'text', '$out', $args)")
+          .collect()
+      }
+      val bad = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i }
+      assert(bad.exists(_.getMessage.contains(named)), s"$args: $e")
+    }
+    assert(!new java.io.File(out).exists(), "a refused call wrote its output")
+  }
+
   test("decontaminate drops corpus docs sharing an n-gram with the benchmark") {
     val base = java.nio.file.Files.createTempDirectory("graft-proc-decon").toString
     val corpus = s"$base/corpus.lance"

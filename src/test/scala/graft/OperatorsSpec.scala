@@ -240,6 +240,101 @@ class DedupSpec extends AnyFunSuite {
       .count()
     assert(offenders == 0L)
   }
+
+  test("pair operators leave nothing pinned in the session cache") {
+    // each operator returns a lazy frame, so a frame it cached could never
+    // be unpersisted by it — its scoped frames must be localCheckpoints the
+    // ContextCleaner frees with the result
+    spark.catalog.clearCache()
+    val runs = Seq[(String, () => DataFrame)](
+      "jaccardPairs" -> (() => Dedup.jaccardPairs(docs, "doc_id", "text", "source", 0.5)),
+      "simHashPairs" -> (() => Dedup.simHashPairs(docs, "doc_id", "text", 3)),
+      "lshExactPairs" -> (() => Dedup.lshExactPairs(docs, "doc_id", "text",
+          numHashes = 64, bands = 16, candidateThreshold = 0.5, exactThreshold = 0.75)),
+      "minHashLsh" -> (() => Dedup.minHashLsh(docs, "doc_id", "text", 64, 16, 0.6)),
+      "portableMinHashLsh" -> (() => Dedup.portableMinHashLsh(docs, "doc_id", "text").pairs))
+    for ((name, run) <- runs) {
+      assert(run().collect().nonEmpty, name)
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a frame in the cache")
+    }
+  }
+
+  /** The portable path's naive twin: the full-md5 band self-join +
+    * distinct + string estimate over distinct signatures (d34's former
+    * candidate block), member pairs expanded on the driver. */
+  private def portableReference(df: DataFrame): Set[(Long, Long, Double)] = {
+    val reps = df.select(col("doc_id"),
+        graft.functions.ArrayKernels.minhashSig(col("text"), 8).as("sig"))
+      .groupBy("sig").agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+      .withColumn("gid", monotonically_increasing_id())
+      .localCheckpoint(true)
+    val bands = reps.select(col("gid"),
+        posexplode(array((0 until 4).map(b =>
+          md5(concat_ws(",", col("sig")(2 * b), col("sig")(2 * b + 1)))): _*)))
+      .select(col("gid"), col("pos").as("band"), col("col").as("bh"))
+    val cand = bands.as("a").join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+          col("a.gid") < col("b.gid"))
+      .select(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"))
+      .distinct()
+    val sa = reps.select(col("gid").as("gid_a"), col("sig").as("sig_a"), col("ids").as("ids_a"))
+    val sb = reps.select(col("gid").as("gid_b"), col("sig").as("sig_b"), col("ids").as("ids_b"))
+    val est = (0 until 8).map(i =>
+        when(col("sig_a")(i) === col("sig_b")(i), 1).otherwise(0))
+      .reduce(_ + _).cast("double") / 8
+    val edges = cand.join(sa, "gid_a").join(sb, "gid_b")
+      .select(col("ids_a"), col("ids_b"), est.as("est_jaccard"))
+      .filter(col("est_jaccard") >= 0.75)
+      .as[(Seq[Long], Seq[Long], Double)].collect()
+    val intra = reps.select("ids").as[Seq[Long]].collect().toSeq
+      .flatMap(ids => for (a <- ids; b <- ids if a < b) yield (a, b, 1.0))
+    val inter = edges.toSeq.flatMap { case (as, bs, e) =>
+      for (a <- as; b <- bs) yield (math.min(a, b), math.max(a, b), e) }
+    (intra ++ inter).toSet
+  }
+
+  /** A 400-doc near-dup cloud sharing 15 of 16 tokens (each band of 2
+    * matches the base w.p. (15/16)^2, so every band has a ~350-member
+    * bucket), an exact-dup group and unrelated singletons. */
+  private lazy val megaBucketCorpus = {
+    val base = (0 until 15).map(i => s"tok$i").mkString(" ")
+    ((0 until 400).map(i => (i.toLong, s"$base uniq$i")) ++
+      (400 until 420).map(i => (i.toLong, base + " shared")) ++
+      (420 until 460).map(i => (i.toLong, (0 until 12).map(j => s"other${i}_$j").mkString(" "))))
+      .toDF("doc_id", "text")
+  }
+
+  test("portable MinHash-LSH ≡ its naive full-md5 twin, incl. a mega-bucket, at every block size") {
+    val df = megaBucketCorpus
+    val census = Dedup.portableSignatures(df, "doc_id", "text")
+      .select(posexplode(Dedup.portableBandKeys(col("sig"))))
+      .groupBy("pos", "col").count().select("count").as[Long].collect().sorted
+    assert(census.last >= 100 * census(census.length / 2), "no mega-bucket — weak test")
+    val ref = portableReference(df)
+    assert(ref.exists(_._3 < 1.0) && ref.size > 400, "too few cross-group pairs — weak test")
+    for (bs <- Seq(2, 5, 16, 4096)) {
+      val got = Dedup.portableMinHashLsh(df, "doc_id", "text", bs).pairs
+        .as[(Long, Long, Double)].collect()
+      assert(got.length == got.toSet.size, s"blockSize $bs emitted a pair twice")
+      assert(got.toSet == ref, s"blockSize $bs")
+    }
+  }
+
+  test("d34's K-capped partners ≡ the full pair list cut at row_number <= K per doc") {
+    val df = megaBucketCorpus
+    val full = Dedup.portableMinHashLsh(df, "doc_id", "text").pairs
+    val sym = full.select(col("doc_a").as("doc_id"), col("doc_b").as("partner_id"), col("est_jaccard"))
+      .unionAll(full.select(col("doc_b"), col("doc_a"), col("est_jaccard")))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id").orderBy("partner_id")
+    for (k <- Seq(1, 3); bs <- Seq(5, 4096)) {
+      val want = sym.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+        .select("doc_id", "partner_id", "est_jaccard").as[(Long, Long, Double)].collect()
+      val got = graft.queries.TextOps.cappedNearDups(df, k, bs)
+        .as[(Long, Long, Double)].collect()
+      assert(got.length == want.length && got.toSet == want.toSet, s"k=$k blockSize=$bs")
+      assert(want.length >= 400 * k, s"k=$k: too few capped partners — weak test")
+    }
+  }
 }
 
 class SkewSpec extends AnyFunSuite {
