@@ -8,10 +8,12 @@ Pair i runs both sides on seed SEED0 + i, each side through its own
 checkout's `lancebench/run.py` (so each builds from its own source) for
 the `run_seconds` that the change checkout's BENCHMARK.json declares,
 alternating which side runs first. Prints every pair, each side's median
-and quartiles of `ops_per_s` (higher is better), the change's win count,
-and whether the claim rule holds: the change wins at least 9 of every 10
-pairs and its median beats the parent's by more than the parent's
-interquartile range.
+and quartiles of `ops_per_s` (higher is better), each side's median of
+every per-op-kind `<kind>.p50_ms` (from the runs' `[lancebench]` lines,
+so the A/B shows which ops moved), the change's win count, and whether
+the claim rule holds: the change wins at least 9 of every 10 pairs and
+its median beats the parent's by more than the parent's interquartile
+range.
 Every run, with its wall time, its result JSON and its `[lancebench]`
 lines, is written to the --out file. Exits 1 when a run fails.
 """
@@ -56,6 +58,17 @@ def run_side(root, workload, seed, seconds):
     return wall, result, [l for l in lines if l.startswith("[lancebench]")]
 
 
+def op_p50s(lines):
+    """{op kind: p50 ms} from one run's `[lancebench] <workload> <kind>.p50_ms
+    <value> ms n=<samples>` lines."""
+    out = {}
+    for line in lines:
+        f = line.split()
+        if len(f) >= 4 and f[2].endswith(".p50_ms"):
+            out[f[2][:-len(".p50_ms")]] = float(f[3])
+    return out
+
+
 def quartiles(xs):
     q = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else [xs[0]] * 3
     return q[0], q[1], q[2]
@@ -97,6 +110,19 @@ def main(argv):
             q1, med, q3 = quartiles(xs)
             summary[side] = {"median": med, "q1": q1, "q3": q3, "n": len(xs)}
             print(f"{side:<6} {METRIC} median {med:.4f}  q1 {q1:.4f}  q3 {q3:.4f}  n={len(xs)}")
+    kinds = {side: {} for side in sides}
+    for r in runs:
+        if r["result"] is not None:
+            for k, v in op_p50s(r["lines"]).items():
+                kinds[r["side"]].setdefault(k, []).append(v)
+    op_medians = {side: {k: statistics.median(v) for k, v in ks.items()}
+                  for side, ks in kinds.items()}
+    print(f"{'op p50_ms':<12} {'parent':>10} {'change':>10}")
+    for k in sorted(set(op_medians["parent"]) | set(op_medians["change"])):
+        cells = [op_medians[side].get(k) for side in ("parent", "change")]
+        print(f"{k:<12} " + " ".join(f"{c:>10.1f}" if c is not None else f"{'-':>10}"
+                                      for c in cells))
+    summary["op_p50_ms"] = op_medians
     n = len(values["change"])
     holds = False
     if n and "parent" in summary:

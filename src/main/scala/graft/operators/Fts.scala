@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -473,7 +474,10 @@ object Fts {
     * and the merged statistics equal a from-scratch rebuild's EXACTLY —
     * [[searchPersisted]] after an update is bit-identical to a fresh
     * [[buildIndexLance]] at the head version (pinned by FtsSpec's
-    * differential test). Returns the new covered version.
+    * differential test). A tail, tail postings and vocabulary that fit
+    * [[graft.sources.lance.LanceLocal.CapBytes]] are read, merged and
+    * committed on the driver with no Spark job. Returns the new covered
+    * version.
     */
   def updateIndex(spark: SparkSession, sourcePath: String, indexPath: String,
                   writePartitions: Int = 4): Long =
@@ -517,36 +521,42 @@ object Fts {
     fence.check()
     pub.pin("postings_version").foreach(
       IndexStore.sweep(spark, indexPath, "postings.lance", _))
-    val conf = spark.sessionState.newHadoopConf()
-    val postingsPath = s"$indexPath/postings.lance"
-    val before = LanceFormat.headVersion(conf, postingsPath)
-    val tail = spark.read.format("lance")
-      .option("fromVersion", builtV).option("versionAsOf", headV)
-      .load(sourcePath)
-    fence.check() // pre-commit fence: abort BEFORE publishing anything
-    writePostings(postings(tail, idCol, textCol), indexPath, "append", writePartitions)
-    // the df merge and the stats delta read the appended fragments back
-    // (as the build does), so the tail is scanned and tokenized once
-    val staged = spark.read.format("lance").option("fromVersion", before)
-      .option("versionAsOf", LanceFormat.headVersion(conf, postingsPath))
-      .load(postingsPath)
-    // terms.lance is both input and output; safe because lance is
-    // versioned — the scan pins the PUBLISHED version, data files are
-    // immutable, and the overwrite commits a NEW version
-    val mergedTerms = sidecar(spark, indexPath, "terms", Some(pub))
-      .unionByName(termDfs(staged))
-      .groupBy("term").agg(sum(col("df")).as("df"))
-    fence.check()
-    writeTerms(mergedTerms, indexPath, writePartitions)
-    val ts = postingsStats(staged).head()
+    // the tail's (n_docs, total_len) delta, its postings and vocabulary
+    // merge committed on the driver when they fit the cap, else as jobs
+    val (tailN, tailLen) =
+      updateLocal(spark, sourcePath, indexPath, builtV, headV, idCol, textCol,
+          pub, fence).getOrElse {
+        val conf = spark.sessionState.newHadoopConf()
+        val postingsPath = s"$indexPath/postings.lance"
+        val before = LanceFormat.headVersion(conf, postingsPath)
+        val tail = spark.read.format("lance")
+          .option("fromVersion", builtV).option("versionAsOf", headV)
+          .load(sourcePath)
+        fence.check() // pre-commit fence: abort BEFORE publishing anything
+        writePostings(postings(tail, idCol, textCol), indexPath, "append", writePartitions)
+        // the df merge and the stats delta read the appended fragments back
+        // (as the build does), so the tail is scanned and tokenized once
+        val staged = spark.read.format("lance").option("fromVersion", before)
+          .option("versionAsOf", LanceFormat.headVersion(conf, postingsPath))
+          .load(postingsPath)
+        // terms.lance is both input and output; safe because lance is
+        // versioned — the scan pins the PUBLISHED version, data files are
+        // immutable, and the overwrite commits a NEW version
+        val mergedTerms = sidecar(spark, indexPath, "terms", Some(pub))
+          .unionByName(termDfs(staged))
+          .groupBy("term").agg(sum(col("df")).as("df"))
+        fence.check()
+        writeTerms(mergedTerms, indexPath, writePartitions)
+        val ts = postingsStats(staged).head()
+        (ts.getLong(0), ts.getLong(1))
+      }
     // a fresh read at the pin, never the cache: a stale cached entry would
     // double- or under-count another process's merged tail
     val (oldN, oldLen) = readStats(spark, indexPath, pub.pin("stats_version"))
-    val (newN, newLen) = (oldN + ts.getLong(0), oldLen + ts.getLong(1))
+    val (newN, newLen) = (oldN + tailN, oldLen + tailLen)
     fence.check()
-    spark.createDataFrame(Seq((newN, newLen))).toDF("n_docs", "total_len")
-      .coalesce(1).write.format("lance").mode("overwrite")
-      .save(s"$indexPath/stats.lance")
+    val stats = LanceLocal.Rows(StatsSchema, IndexedSeq(InternalRow(newN, newLen)))
+    LanceLocal.write(spark, s"$indexPath/stats.lance", stats, "overwrite")
     // the publish fence decides which of two racing maintainers commits
     val newPub = publish(spark, indexPath, Some(fence), headV, idCol, textCol)
     newPub.pin("stats_version").foreach(v =>
@@ -554,6 +564,74 @@ object Fts {
     graft.plans.GraftFts.register(sourcePath, graft.plans.GraftFts.IndexInfo(
       indexPath, idCol, textCol, newN, newLen, headV))
     headV
+  }
+
+  /** The schema [[postingsStats]] gives `stats.lance`. */
+  private val StatsSchema = StructType(Seq(
+    StructField("n_docs", LongType, nullable = false),
+    StructField("total_len", LongType, nullable = false)))
+
+  /** [[postings]] of driver rows `(id, text)` (`docId` reads the id) as
+    * plain values, one entry per distinct (doc_id, dl, term) in first-seen
+    * order, with its positions (tf is their count): the same single-space
+    * split (trailing empty tokens kept), and NULL text posts nothing. */
+  private def postingsOf(docs: LanceLocal.Rows, docId: InternalRow => Long)
+      : collection.Map[(Long, Long, String), collection.Seq[Int]] = {
+    val out = scala.collection.mutable.LinkedHashMap
+      .empty[(Long, Long, String), scala.collection.mutable.ArrayBuffer[Int]]
+    docs.rows.withFilter(!_.isNullAt(1)).foreach { r =>
+      val toks = r.getUTF8String(1).toString.split(" ", -1)
+      toks.iterator.zipWithIndex.foreach { case (t, pos) =>
+        out.getOrElseUpdate((docId(r), toks.length.toLong, t),
+          scala.collection.mutable.ArrayBuffer.empty[Int]) += pos
+      }
+    }
+    out
+  }
+
+  /** The update's postings, vocabulary and stats delta computed on the
+    * driver, with no Spark job: the tail read through [[LanceLocal]] and
+    * tokenized by [[postingsOf]]; its postings appended and the
+    * vocabulary at its pin merged with the tail dfs and overwritten, each
+    * by [[LanceLocal.write]] after a fence. Returns the tail's (n_docs,
+    * total_len) as [[postingsStats]] counts them; None, having committed
+    * nothing, when a read or write is over the cap or the id column is
+    * not an integer, and the caller runs the DSv2 plan. */
+  private def updateLocal(spark: SparkSession, sourcePath: String, indexPath: String,
+                          builtV: Long, headV: Long, idCol: String, textCol: String,
+                          pub: Published, fence: MaintenanceLock.Fence): Option[(Long, Long)] = {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    for {
+      tail <- LanceLocal.read(spark, sourcePath, Some(headV), Some(builtV), Seq(idCol, textCol))
+        .filter(_.schema(textCol).dataType == StringType)
+      tailId <- Similarity.idsOf(tail)
+      posted = postingsOf(tail, tailId)
+      postingRows = LanceLocal.Rows(postings(tail.frame(spark), idCol, textCol).schema,
+        posted.iterator.map { case ((id, dl, t), pos) =>
+          InternalRow(id, dl, UTF8String.fromString(t), pos.length.toLong,
+            new GenericArrayData(pos.sorted.toArray[Any]))
+        }.toIndexedSeq).sortedBy(Seq("term", "doc_id"))
+      if postingRows.fits
+      vocab <- LanceLocal.read(spark, s"$indexPath/terms.lance", pub.pin("terms_version"),
+        columns = Seq("term", "df"))
+      // df_new = df_old + df_tail: every posting is a (doc, term) pair
+      merged = LanceLocal.Rows(vocab.schema,
+        (vocab.rows.map(r => r.getUTF8String(0) -> r.getLong(1)) ++
+          posted.keysIterator.map(k => UTF8String.fromString(k._3) -> 1L))
+          .groupMapReduce(_._1)(_._2)(_ + _)
+          .iterator.map { case (t, n) => InternalRow(t, n) }.toIndexedSeq)
+        .sortedBy(Seq("term"))
+      if merged.fits
+    } yield {
+      fence.check() // pre-commit fence: abort BEFORE publishing anything
+      LanceLocal.write(spark, s"$indexPath/postings.lance", postingRows, "append")
+      fence.check()
+      LanceLocal.write(spark, s"$indexPath/terms.lance", merged, "overwrite")
+      val dls = posted.keysIterator.map { case (id, dl, _) => id -> dl }
+        .toSeq.groupMapReduce(_._1)(_._2)(math.max)
+      (dls.size.toLong, dls.valuesIterator.sum)
+    }
   }
 
   /** Re-attach a persisted index in a fresh session: corpus stats and
@@ -668,14 +746,8 @@ object Fts {
       // the query terms' posting rows ((doc_id, dl, term), tf): the
       // index's as stored, the tail's grouped per (doc_id, dl, term)
       rows = {
-        val tailTf = scala.collection.mutable.LinkedHashMap.empty[(Long, Long, String), Long]
-        tail.rows.withFilter(!_.isNullAt(1)).foreach { r =>
-          val toks = r.getUTF8String(1).toString.split(" ", -1)
-          toks.withFilter(wanted).foreach { t =>
-            val key = (tailId(r), toks.length.toLong, t)
-            tailTf(key) = tailTf.getOrElse(key, 0L) + 1L
-          }
-        }
+        val tailTf = postingsOf(tail, tailId)
+          .collect { case (key, pos) if wanted(key._3) => key -> pos.length.toLong }
         post.rows.map(r => ((r.getLong(1), r.getLong(3), r.getUTF8String(0).toString),
           r.getLong(2))).filter(p => wanted(p._1._3)) ++ tailTf
       }

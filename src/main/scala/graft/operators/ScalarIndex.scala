@@ -57,8 +57,7 @@ object ScalarIndex {
     // underneath it (ids survive the move; lookup resolves id -> current
     // address through the manifest's sequences at probe time)
     buildPublished(spark, datasetPath, indexPath, "keys", writePartitions,
-        Seq("key_col" -> keyCol, "stable" -> stableRowIds))(
-      keyRows(spark, datasetPath, keyCol, stableRowIds, 0L, _))
+        Seq("key_col" -> keyCol, "stable" -> stableRowIds), keyRows(keyCol, stableRowIds))
 
   /** Whether this index stores row ids (vs addresses) — `stable` meta
     * column; absent in pre-stable indexes, defaulting to false. */
@@ -89,10 +88,21 @@ object ScalarIndex {
     (if (from > 0) rd.option("fromVersion", from) else rd).load(datasetPath)
   }
 
-  private def keyRows(spark: SparkSession, datasetPath: String, keyCol: String,
-                      stable: Boolean, from: Long, to: Long): DataFrame =
-    window(spark, datasetPath, from, to).select(col(keyCol).as("key"),
-      col(if (stable) "_rowid" else "_rowaddr").as("addr"))
+  /** How an index kind derives its sidecar rows from source rows: the
+    * source `columns` it reads, a row-wise `project` (which folds into a
+    * `LocalRelation` over a driver-local read), then `finish` as a plan
+    * or `finishLocal` as plain rows on the driver, equal row for row. */
+  private final case class Derive(
+      columns: Seq[String], project: DataFrame => DataFrame,
+      finish: DataFrame => DataFrame = identity,
+      finishLocal: IndexedSeq[InternalRow] => IndexedSeq[InternalRow] = identity) {
+    def of(src: DataFrame): DataFrame = finish(project(src.select(columns.map(col): _*)))
+  }
+
+  private def keyRows(keyCol: String, stable: Boolean): Derive = {
+    val addr = if (stable) "_rowid" else "_rowaddr"
+    Derive(Seq(keyCol, addr), _.select(col(keyCol).as("key"), col(addr).as("addr")))
+  }
 
   private def writeSorted(rows: DataFrame, path: String, mode: String,
                           writePartitions: Int): Unit =
@@ -111,30 +121,33 @@ object ScalarIndex {
         LanceFormat.headVersion(spark.sessionState.newHadoopConf(),
           s"$indexPath/$name.lance")): _*)
 
-  /** The one build body: `rowsAt(head)` overwrites the data sidecar, then
-    * meta publishes. */
+  /** The one build body: `rows` of the source at its head overwrite the
+    * data sidecar, then meta publishes. */
   private def buildPublished(spark: SparkSession, datasetPath: String,
                              indexPath: String, name: String,
-                             writePartitions: Int, fields: Seq[(String, Any)])(
-                             rowsAt: Long => DataFrame): Long = {
+                             writePartitions: Int, fields: Seq[(String, Any)],
+                             rows: Derive): Long = {
     val builtV = LanceFormat.headVersion(spark.sessionState.newHadoopConf(), datasetPath)
-    writeSorted(rowsAt(builtV), s"$indexPath/$name.lance", "overwrite", writePartitions)
+    writeSorted(rows.of(window(spark, datasetPath, 0L, builtV)), s"$indexPath/$name.lance",
+      "overwrite", writePartitions)
     publishMeta(spark, indexPath, name, None, builtV, fields)
     builtV
   }
 
   /** The one update body of every kind — the crate's `optimize_indices`
     * for a scalar index, O(tail): under the fenced maintenance lock, sweep
-    * a fence-aborted predecessor's orphan tail, append `rowsOf(record,
-    * from, to)` as NEW key-sorted fragments (existing fragments untouched;
-    * a probe prunes by zone maps per fragment), then republish the record
-    * with the covered version and the new data pin. Fence BEFORE the
-    * sweep: a usurped holder resuming from a pause must not restore the
-    * sidecar to ITS stale record and delete a successor's fresh tail. */
+    * a fence-aborted predecessor's orphan tail, append the `rowsOf(record)`
+    * of the source tail as NEW key-sorted fragments (existing fragments
+    * untouched; a probe prunes by zone maps per fragment), then republish
+    * the record with the covered version and the new data pin. Fence
+    * BEFORE the sweep: a usurped holder resuming from a pause must not
+    * restore the sidecar to ITS stale record and delete a successor's
+    * fresh tail. A tail that fits [[LanceLocal.CapBytes]] is read, derived
+    * and appended on the driver with no Spark job; a larger one runs the
+    * DSv2 plan. */
   private def appendUpdate(spark: SparkSession, datasetPath: String,
                            indexPath: String, name: String,
-                           writePartitions: Int)(
-                           rowsOf: (Published, Long, Long) => DataFrame): Long = {
+                           writePartitions: Int)(rowsOf: Published => Derive): Long = {
     val conf = spark.sessionState.newHadoopConf()
     MaintenanceLock.withLockFenced(indexPath, conf) { fence =>
       val pub = requireMeta(spark, indexPath)
@@ -144,8 +157,19 @@ object ScalarIndex {
         fence.check()
         pub.pin("data_version").foreach(
           IndexStore.sweep(spark, indexPath, s"$name.lance", _))
-        writeSorted(rowsOf(pub, pub.built, headV), s"$indexPath/$name.lance",
-          "append", writePartitions)
+        val rows = rowsOf(pub)
+        val path = s"$indexPath/$name.lance"
+        (for {
+          tail <- LanceLocal.read(spark, datasetPath, Some(headV), Some(pub.built), rows.columns)
+          projected = rows.project(tail.frame(spark))
+          got <- LanceLocal.folded(projected)
+          local = LanceLocal.Rows(rows.finish(projected).schema, rows.finishLocal(got.rows))
+          if local.fits
+        } yield local) match {
+          case Some(local) => LanceLocal.write(spark, path, local, "append", sortBy = Seq("key"))
+          case None => writeSorted(rows.of(window(spark, datasetPath, pub.built, headV)),
+            path, "append", writePartitions)
+        }
         publishMeta(spark, indexPath, name, Some(fence), headV,
           pub.row.schema.fieldNames.toSeq
             .filterNot(Set("built_version", "data_version"))
@@ -178,10 +202,8 @@ object ScalarIndex {
     */
   def update(spark: SparkSession, datasetPath: String, indexPath: String,
              writePartitions: Int = 2): Long =
-    appendUpdate(spark, datasetPath, indexPath, "keys", writePartitions) {
-      (pub, from, to) =>
-        keyRows(spark, datasetPath, pub.row.getString(1), isStable(pub), from, to)
-    }
+    appendUpdate(spark, datasetPath, indexPath, "keys", writePartitions)(
+      pub => keyRows(pub.row.getString(1), isStable(pub)))
 
   /** Greedy coverage-optimal interval cover: split the sorted addrs at
     * the (maxIntervals - 1) largest gaps — for a fixed interval budget
@@ -327,10 +349,8 @@ object ScalarIndex {
     * more than integral widening to compare. */
   private def catalystKeys(dt: DataType, keys: Seq[Any]): Option[Set[Any]] = {
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
-    val exact = integral ++ Set[DataType](StringType, DateType, TimestampType,
-      TimestampNTZType, BooleanType)
     scala.util.Try(keys.map(Literal(_))).toOption.flatMap { lits =>
-      if (!exact(dt)) None
+      if (!LanceLocal.ExactKeyTypes(dt)) None
       else if (lits.forall(_.dataType == dt)) Some(lits.map(_.value).toSet)
       else if (dt == LongType && lits.forall(l => integral(l.dataType)))
         Some(lits.map(l => l.value.asInstanceOf[Number].longValue(): Any).toSet)
@@ -402,17 +422,22 @@ object ScalarIndex {
   def buildBitmap(spark: SparkSession, datasetPath: String, keyCol: String,
                   indexPath: String, writePartitions: Int = 4): Long =
     buildPublished(spark, datasetPath, indexPath, "bitmaps", writePartitions,
-        Seq("key_col" -> keyCol))(
-      to => bitmapRows(window(spark, datasetPath, 0L, to), keyCol))
+        Seq("key_col" -> keyCol), bitmapRows(keyCol))
 
-  /** The per-(key, fragment) bitmap frame of `src`. */
-  private def bitmapRows(src: DataFrame, keyCol: String): DataFrame =
-    src.select(col(keyCol).cast("string").as("key"),
+  /** The per-(key, fragment) bitmaps of source rows. */
+  private def bitmapRows(keyCol: String): Derive =
+    Derive(Seq(keyCol, "_rowaddr"),
+      _.select(col(keyCol).cast("string").as("key"),
                shiftrightunsigned(col("_rowaddr"), 32).as("frag"),
-               col("_rowaddr").bitwiseAND(lit(0xFFFFFFFFL)).cast("int").as("off"))
-      .groupBy("key", "frag")
-      .agg(count(lit(1)).as("card"),
-           serBitmap(sort_array(collect_list(col("off")))).as("bitmap"))
+               col("_rowaddr").bitwiseAND(lit(0xFFFFFFFFL)).cast("int").as("off")),
+      _.groupBy("key", "frag")
+        .agg(count(lit(1)).as("card"),
+             serBitmap(sort_array(collect_list(col("off")))).as("bitmap")),
+      _.groupBy(r => (if (r.isNullAt(0)) null else r.getUTF8String(0), r.getLong(1)))
+        .iterator.map { case ((key, frag), rs) =>
+          InternalRow(key, frag, rs.length.toLong,
+            Roaring.serialize(rs.map(_.getInt(2)).toArray.sorted))
+        }.toIndexedSeq)
 
   /** Incrementally extend the bitmap index over post-build appends — new
     * fragments' bitmaps append as new key-sorted rows (a `(key, frag)`
@@ -420,10 +445,8 @@ object ScalarIndex {
     */
   def updateBitmap(spark: SparkSession, datasetPath: String,
                    indexPath: String, writePartitions: Int = 2): Long =
-    appendUpdate(spark, datasetPath, indexPath, "bitmaps", writePartitions) {
-      (pub, from, to) =>
-        bitmapRows(window(spark, datasetPath, from, to), pub.row.getString(1))
-    }
+    appendUpdate(spark, datasetPath, indexPath, "bitmaps", writePartitions)(
+      pub => bitmapRows(pub.row.getString(1)))
 
   /** Per-fragment OR of the bitmaps matching `keys` (one index) —
     * `(frag, bitmap)`, all executor-side. */
@@ -482,23 +505,29 @@ object ScalarIndex {
                  indexPath: String, n: Int = 3,
                  writePartitions: Int = 8): Long =
     buildPublished(spark, datasetPath, indexPath, "keys", writePartitions,
-        Seq("key_col" -> s"$textCol#$n"))(
-      to => ngramRows(window(spark, datasetPath, 0L, to), textCol, n))
+        Seq("key_col" -> s"$textCol#$n"), ngramRows(textCol, n))
 
-  private def ngramRows(src: DataFrame, textCol: String, n: Int): DataFrame =
-    src.select(col("_rowaddr").as("addr"), col(textCol).as("t"))
-      .select(col("addr"), explode(array_distinct(expr(
-        s"transform(sequence(1, greatest(length(t) - ${n - 1}, 0))," +
-          s" i -> substring(t, i, $n))"))).as("key"))
+  /** One `(addr, gram)` row per distinct `n`-gram of each source row. */
+  private def ngramRows(textCol: String, n: Int): Derive =
+    Derive(Seq("_rowaddr", textCol),
+      _.select(col("_rowaddr").as("addr"), col(textCol).as("t"))
+        .select(col("addr"), array_distinct(expr(
+          s"transform(sequence(1, greatest(length(t) - ${n - 1}, 0))," +
+            s" i -> substring(t, i, $n))")).as("grams")),
+      _.select(col("addr"), explode(col("grams")).as("key")),
+      _.flatMap { r =>
+        val grams = if (r.isNullAt(1)) null else r.getArray(1)
+        (0 until (if (grams == null) 0 else grams.numElements())).map(i =>
+          InternalRow(r.getLong(0), if (grams.isNullAt(i)) null else grams.getUTF8String(i)))
+      })
 
   /** Incrementally extend the ngram index over post-build appends (new
     * fragments' gram postings as new range-sorted fragments; O(tail)). */
   def updateNgram(spark: SparkSession, datasetPath: String,
                   indexPath: String, writePartitions: Int = 2): Long =
-    appendUpdate(spark, datasetPath, indexPath, "keys", writePartitions) {
-      (pub, from, to) =>
-        val Array(textCol, n) = pub.row.getString(1).split('#')
-        ngramRows(window(spark, datasetPath, from, to), textCol, n.toInt)
+    appendUpdate(spark, datasetPath, indexPath, "keys", writePartitions) { pub =>
+      val Array(textCol, n) = pub.row.getString(1).split('#')
+      ngramRows(textCol, n.toInt)
     }
 
   /** Rows whose `textCol` CONTAINS `needle` — exact (not approximate):

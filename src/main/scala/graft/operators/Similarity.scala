@@ -447,7 +447,9 @@ object Similarity {
     * cached sidecar read stays valid; the meta write publishes
     * ([[Flavor]]). Deletion-only deltas advance the covered version
     * without index writes (the combined faces mask deletions at query
-    * time). Returns the covered source version. */
+    * time). A tail that fits [[LanceLocal.CapBytes]] is read, assigned,
+    * encoded and merged on the driver with no Spark job. Returns the
+    * covered source version. */
   def ivfUpdateIndex(spark: org.apache.spark.sql.SparkSession,
                      sourcePath: String, indexPath: String,
                      idCol: String, vecCol: String,
@@ -504,26 +506,38 @@ object Similarity {
         // the window pins at headV so a concurrent append past the read
         // cannot leak half-covered rows into a version the meta then claims
         val idxCols = spark.read.format("lance").load(dataPath).schema.fieldNames
-        val assigned = spark.read.format("lance")
+        // the tail is read on the driver when it fits the cap, and the
+        // same projection then folds into its LocalRelation: no job
+        val local = LanceLocal.read(spark, sourcePath, Some(headV), Some(m0.built))
+        val tail = local.fold(spark.read.format("lance")
           .option("fromVersion", m0.built).option("versionAsOf", headV)
-          .load(sourcePath)
+          .load(sourcePath))(_.frame(spark))
+        val assigned = tail
           .withColumn("list_id", graft.functions.ArrayKernels.nearestCentroid(
             col(vecCol), typedlit(sc.centroids.map(_.toSeq).toSeq)))
-        // persist the tail rows: mergeInsert consumes its source several
-        // times (emptiness check, matched-key semi-join, staging) and
-        // repartitionByRange SAMPLES its child — without this the kernels
-        // re-run over the tail four to five times
-        val rows = f.rows(assigned, idCol, vecCol, sc.codebooks)
+        val projected = f.rows(assigned, idCol, vecCol, sc.codebooks)
           .select(idxCols.map(col).toIndexedSeq: _*)
-          .persist()
-        try {
-          fence.check()
-          LanceMaintenance.mergeInsert(spark, dataPath,
-            rows
-              .repartitionByRange(math.max(writePartitions, 1), col("list_id"))
-              .sortWithinPartitions("list_id"),
-            Seq(idCol))
-        } finally rows.unpersist(false)
+        LanceLocal.folded(projected).filter(_.fits) match {
+          case Some(rows) =>
+            // mergeInsert's local arm stages the rows in this order
+            fence.check()
+            LanceMaintenance.mergeInsert(spark, dataPath,
+              rows.sortedBy(Seq("list_id")).frame(spark), Seq(idCol))
+          case None =>
+            // persist the tail rows: mergeInsert consumes its source several
+            // times (emptiness check, matched-key semi-join, staging) and
+            // repartitionByRange SAMPLES its child — without this the kernels
+            // re-run over the tail four to five times
+            val rows = projected.persist()
+            try {
+              fence.check()
+              LanceMaintenance.mergeInsert(spark, dataPath,
+                rows
+                  .repartitionByRange(math.max(writePartitions, 1), col("list_id"))
+                  .sortWithinPartitions("list_id"),
+                Seq(idCol))
+            } finally rows.unpersist(false)
+        }
       }
       publish(spark, indexPath, f, headV, headOf(f.dataName) +: sidecarPins,
         Some(fence))

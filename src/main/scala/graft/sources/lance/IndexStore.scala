@@ -1,6 +1,7 @@
 package graft.sources.lance
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
 
@@ -101,7 +102,8 @@ object IndexStore {
 
   /** Overwrite the publish point with one row of `fields` (Long, String
     * or Boolean values, in column order), after `fence.check()`, and
-    * write the new record through to the caches. */
+    * write the new record through to the caches. The row commits on the
+    * driver ([[LanceLocal.write]]), with no Spark job. */
   def publish(spark: SparkSession, metaPath: String,
               fence: Option[MaintenanceLock.Fence],
               fields: (String, Any)*): Published = {
@@ -112,8 +114,9 @@ object IndexStore {
     })
     val row = new GenericRowWithSchema(fields.map(_._2).toArray, schema)
     fence.foreach(_.check())
-    spark.createDataFrame(java.util.List.of[Row](row), schema)
-      .coalesce(1).write.format("lance").mode("overwrite").save(metaPath)
+    LanceLocal.write(spark, metaPath, LanceLocal.Rows(schema, IndexedSeq(
+      CatalystTypeConverters.createToCatalystConverter(schema)(row).asInstanceOf[InternalRow])),
+      "overwrite")
     val rec = Published(
       LanceFormat.headVersion(spark.sessionState.newHadoopConf(), metaPath), row)
     remember(metaPath, Some(rec))

@@ -3,13 +3,20 @@ package graft.sources.lance
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  InterpretedOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.connector.write.PhysicalWriteInfo
 import org.apache.spark.sql.graftglue.ColumnBridge
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types._
 
-/** Bounded driver-local Lance reads: the reference's in-process scan
-  * (`lance_scan` is a table function over the crate's scanner) for the
-  * reads an index answer is made of — a publish record, a sidecar at its
-  * pin, an append tail, the take of a few rows.
+/** Bounded driver-local Lance reads and writes: the reference's
+  * in-process scan (`lance_scan` is a table function over the crate's
+  * scanner) for the reads an index answer is made of — a publish record,
+  * a sidecar at its pin, an append tail, the take of a few rows — and its
+  * in-process write (`COPY ... (FORMAT lance)` on the calling thread) for
+  * the small tails index maintenance and point DML commit.
   *
   * A read plans exactly as the DSv2 scan does, through [[LanceScan]]:
   * fragment and page zone maps, address ranges, deletion vectors, stable
@@ -27,11 +34,43 @@ object LanceLocal {
     * cores, and 4.5-6x that in decoded rows on the driver heap. */
   val CapBytes: Long = 8L << 20
 
-  /** The decoded rows of one read, in the requested column order. */
+  /** Catalyst rows on the driver: the decoded rows of one read, in the
+    * requested column order, or the rows a write commits. */
   final case class Rows(schema: StructType, rows: IndexedSeq[InternalRow]) {
     /** A job-free DataFrame over `rows` (a `LocalRelation`). */
     def frame(spark: SparkSession): DataFrame =
       ColumnBridge.localFrame(spark, schema, rows)
+
+    /** Whether [[write]] may commit these rows: their unsafe-row bytes,
+      * an upper bound of what the encoder writes, are within [[CapBytes]]. */
+    def fits: Boolean = {
+      val unsafe = UnsafeProjection.create(schema)
+      rows.iterator.map(r => unsafe(r).getSizeInBytes.toLong)
+        .scanLeft(0L)(_ + _).forall(_ <= CapBytes)
+    }
+
+    /** The rows sorted ascending by `cols`, nulls first, as the writer's
+      * `sortBy` ordering sorts them. */
+    def sortedBy(cols: Seq[String]): Rows =
+      if (cols.isEmpty) this
+      else copy(rows = rows.sorted(new InterpretedOrdering(cols.map { c =>
+        val i = schema.fieldIndex(c)
+        SortOrder(BoundReference(i, schema(i).dataType, schema(i).nullable), Ascending)
+      })))
+  }
+
+  /** Types whose catalyst values compare as Spark's equality does, so a
+    * driver-side key match equals the plan's join or `isin`. */
+  val ExactKeyTypes: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType,
+    StringType, DateType, TimestampType, TimestampNTZType, BooleanType)
+
+  /** The rows of `df` when its optimized plan is one `LocalRelation`: a
+    * frame over driver rows whose projections and filters the optimizer
+    * folded in (`ConvertToLocalRelation`), so no job computes them. None
+    * for any other plan. */
+  def folded(df: DataFrame): Option[Rows] = df.queryExecution.optimizedPlan match {
+    case l: LocalRelation => Some(Rows(DataTypeUtils.fromAttributes(l.output), l.data.toIndexedSeq))
+    case _ => None
   }
 
   private val metadataColumns = Seq(
@@ -108,4 +147,30 @@ object LanceLocal {
         val rd = spark.read.format("lance")
         version.fold(rd)(v => rd.option("versionAsOf", v)).load(path).collect()
     }
+
+  /** Write `rows` to `path` on the driver through the DSv2 writer's own
+    * classes: [[LanceBatchWrite]], one [[LanceDataWriterFactory]] writer,
+    * then its commit — the same encoder, optimistic commit loop and
+    * row-id, sortCols and field-id rules as `df.write.format("lance")`,
+    * as one fragment. `mode` is "append" or "overwrite"; `sortBy` (sorts
+    * the rows and declares the sort) and `fsl` are the writer's `sortBy`
+    * and `fixedSizeList` options, and a stable dataset keeps its row ids.
+    * The rows must [[Rows.fits fit]]; a caller with more runs its DSv2
+    * write. */
+  def write(spark: SparkSession, path: String, rows: Rows, mode: String,
+            sortBy: Seq[String] = Nil, fsl: Map[String, Int] = Map.empty): Unit = {
+    require(mode == "append" || mode == "overwrite", s"lance local write: mode $mode")
+    require(rows.fits, s"lance local write: rows for $path exceed $CapBytes bytes")
+    val batch = new LanceBatchWrite(path, rows.schema, truncate = mode == "overwrite",
+      fsl, sortBy = sortBy, hadoopConf = SessionConf.broadcast(spark))
+    val one: PhysicalWriteInfo = () => 1
+    val writer = batch.createBatchWriterFactory(one).createWriter(0, 0L)
+    val msg =
+      try {
+        rows.sortedBy(sortBy).rows.foreach(writer.write)
+        writer.commit()
+      } catch { case e: Throwable => writer.abort(); throw e }
+    try batch.commit(Array(msg))
+    catch { case e: Throwable => batch.abort(Array(msg)); throw e }
+  }
 }

@@ -2,6 +2,7 @@ package graft.sources.lance
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 
 /** Dataset maintenance operations.
   *
@@ -230,6 +231,8 @@ object LanceMaintenance {
     * fragment id, and each group writes its deletion file FROM THE
     * EXECUTOR — only the metas (fragId, file id, count) land on the
     * driver, so a mass delete of 10^9 rows ships kilobytes, not offsets.
+    * When the columns the condition names fit the cap, the predicate runs
+    * on the driver instead, with no Spark job (`deleteLocal`).
     *
     * Returns the committed version (unchanged if nothing matched). */
   def deleteWhere(spark: SparkSession, path: String, condition: String): Long = {
@@ -238,14 +241,16 @@ object LanceMaintenance {
     val manifestPath = LanceFormat.latestManifestPath(fs, p, None)
     val manifest = LanceFormat.readManifest(fs, manifestPath)
 
-    // pin the scan to the SAME version as the captured manifest: an
-    // unpinned load re-reads the head at planning time, so a concurrent
-    // append between the two reads tears the snapshot (the scan sees a
-    // fragment the manifest doesn't — found by the racing-commits test)
-    val df = spark.read.format("lance")
-      .option("versionAsOf", manifest.version.toString)
-      .option("withRowAddress", "true").load(path)
-    val delMetas = writeDeletionFiles(spark, path, manifest, df.filter(condition))
+    val delMetas = deleteLocal(spark, path, fs, p, manifest, condition).getOrElse {
+      // pin the scan to the SAME version as the captured manifest: an
+      // unpinned load re-reads the head at planning time, so a concurrent
+      // append between the two reads tears the snapshot (the scan sees a
+      // fragment the manifest doesn't — found by the racing-commits test)
+      val df = spark.read.format("lance")
+        .option("versionAsOf", manifest.version.toString)
+        .option("withRowAddress", "true").load(path)
+      writeDeletionFiles(spark, path, manifest, df.filter(condition))
+    }
     if (delMetas.isEmpty) return manifest.version
 
     // Optimistic commit with SAFE rebase (the append path's model): losing
@@ -257,70 +262,118 @@ object LanceMaintenance {
     commitDeletionLoop(conf, p, path, manifest, delMetas)
   }
 
-  /** Write per-fragment roaring deletion bitmaps from `matched` (any frame
-    * carrying a `_rowaddr` column), merged with each fragment's existing
-    * deletion file (either lance format — offsets are physical, so old and
-    * new union cleanly). The sort+merge+serialize+write all happen inside
-    * `mapGroups` on executors; the driver collects only the metas. A
-    * speculative/retried task leaves at most an unreferenced file behind
-    * (fresh random id per attempt), which vacuum sweeps.
+  /** [[deleteWhere]]'s matches found on the driver: the columns the
+    * condition names and `_rowaddr` read at `manifest` through
+    * [[LanceLocal]], the condition applied to them as a folded
+    * `LocalRelation` filter, and the deletion files written by
+    * [[Deletions.write]]. None when the read is over the cap, a reference
+    * is not a column, or the filter does not fold; the caller runs the
+    * DSv2 scan. */
+  private def deleteLocal(spark: SparkSession, path: String,
+                          fs: org.apache.hadoop.fs.FileSystem,
+                          p: org.apache.hadoop.fs.Path,
+                          manifest: LanceFormat.Manifest,
+                          condition: String): Option[Map[Long, LanceFormat.DeletionFileMeta]] = {
+    val names = LanceFormat.toStructType(manifest).fieldNames.toSeq :+ "_rowaddr"
+    val resolver = spark.sessionState.conf.resolver
+    val refs = spark.sessionState.sqlParser.parseExpression(condition).collect {
+      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+        names.find(resolver(_, a.name))
+    }
+    for {
+      cols <- if (refs.forall(_.isDefined)) Some(refs.flatten.distinct) else None
+      got <- LanceLocal.readAt(LanceLocal.Snapshot(path, fs, p, manifest),
+        columns = cols.filterNot(_ == "_rowaddr") :+ "_rowaddr")
+      matched <- LanceLocal.folded(got.frame(spark).filter(condition).select("_rowaddr"))
+    } yield deletions(spark, path, manifest).writeLocal(
+      spark.sessionState.newHadoopConf(), matched.rows.map(_.getLong(0)))
+  }
+
+  /** Per-fragment roaring deletion bitmaps against one manifest: each
+    * fragment's matched offsets merged with its existing deletion file
+    * (either lance format — offsets are physical, so old and new union
+    * cleanly), written as a new file of `readVersion`. A matched addr
+    * outside `validFrags` means the scan and manifest disagree: fail
+    * loudly, not silently. Serializable: executors write with it in
+    * [[writeDeletionFiles]], the driver in the local arms. */
+  private final case class Deletions(delDir: String, readVersion: Long,
+                                     existing: Map[Long, String],
+                                     validFrags: Set[Long]) {
+    /** Write fragment `frag`'s file from `offs` (any order, repeats
+      * allowed); (frag, file id, deleted count). */
+    def write(conf: Configuration, frag: Long, offs: Array[Int]): (Long, Long, Long) = {
+      if (!validFrags.contains(frag))
+        throw new IllegalStateException(s"fragment $frag vanished mid-delete")
+      java.util.Arrays.sort(offs)
+      val merged = existing.get(frag) match {
+        case Some(name) =>
+          val bs = DeletionFiles.read(s"$delDir/$name", conf)
+          offs.foreach(bs.set)
+          val out = new Array[Int](bs.cardinality())
+          var i = bs.nextSetBit(0); var k = 0
+          while (i >= 0) { out(k) = i; k += 1; i = bs.nextSetBit(i + 1) }
+          out
+        case None => // dedupe in place (scans can't dup an addr, but be safe)
+          var k = 0
+          var i = 0
+          while (i < offs.length) {
+            if (k == 0 || offs(i) != offs(k - 1)) { offs(k) = offs(i); k += 1 }
+            i += 1
+          }
+          java.util.Arrays.copyOf(offs, k)
+      }
+      val id = new java.security.SecureRandom().nextInt(Int.MaxValue).toLong
+      val meta = LanceFormat.DeletionFileMeta(readVersion, id, 1, merged.length.toLong)
+      val (dfs, dp) = LanceFormat.fileSystem(s"$delDir/${meta.fileName(frag)}", conf)
+      val out = dfs.create(dp, true)
+      try out.write(Roaring.serialize(merged)) finally out.close()
+      (frag, id, merged.length.toLong)
+    }
+
+    def metas(written: Iterable[(Long, Long, Long)]): Map[Long, LanceFormat.DeletionFileMeta] =
+      written.map { case (frag, id, n) =>
+        frag -> LanceFormat.DeletionFileMeta(readVersion, id, 1, n)
+      }.toMap
+
+    /** The files of `addrs` (row addresses), written on the driver. */
+    def writeLocal(conf: Configuration,
+                   addrs: Iterable[Long]): Map[Long, LanceFormat.DeletionFileMeta] =
+      metas(addrs.groupBy(_ >>> 32).map { case (frag, as) =>
+        write(conf, frag, as.iterator.map(a => (a & 0xffffffffL).toInt).toArray)
+      })
+  }
+
+  /** The [[Deletions]] of `path` at `manifest`, its directory created. */
+  private def deletions(spark: SparkSession, path: String,
+                        manifest: LanceFormat.Manifest): Deletions = {
+    val (fs, p) = LanceFormat.fileSystem(path, spark.sessionState.newHadoopConf())
+    val delDir = new org.apache.hadoop.fs.Path(p, "_deletions")
+    fs.mkdirs(delDir)
+    Deletions(delDir.toString, manifest.version,
+      manifest.fragments.flatMap(fr => fr.deletion.map(d => fr.id -> d.fileName(fr.id))).toMap,
+      manifest.fragments.map(_.id).toSet)
+  }
+
+  /** Write the deletion files of `matched` (any frame carrying a
+    * `_rowaddr` column) with [[Deletions.write]] inside `mapGroups` on
+    * executors; the driver collects only the metas. A speculative/retried
+    * task leaves at most an unreferenced file behind (fresh random id per
+    * attempt), which vacuum sweeps.
     * Shared by deleteWhere, mergeInsert, and updateWhere. */
   private def writeDeletionFiles(
       spark: SparkSession, path: String,
       manifest: LanceFormat.Manifest,
       matched: org.apache.spark.sql.DataFrame): Map[Long, LanceFormat.DeletionFileMeta] = {
     import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val (fs, p) = LanceFormat.fileSystem(path, conf)
-    val delDir = new org.apache.hadoop.fs.Path(p, "_deletions")
-    fs.mkdirs(delDir)
-    val delDirStr = delDir.toString
+    val dels = deletions(spark, path, manifest)
     val serConf = SessionConf.broadcast(spark)
-    val readVersion = manifest.version
-    // tiny closure state: fragId -> existing deletion file to merge, and
-    // the valid fragment ids (a matched addr outside them means the scan
-    // and manifest disagree — fail loudly, not silently)
-    val existing: Map[Long, String] = manifest.fragments.flatMap(fr =>
-      fr.deletion.map(d => fr.id -> d.fileName(fr.id))).toMap
-    val validFrags = manifest.fragments.map(_.id).toSet
-
-    matched
+    dels.metas(matched
       .select(org.apache.spark.sql.functions.col("_rowaddr")).as[Long]
       .groupByKey(a => a >>> 32)
       .mapGroups { (frag, it) =>
-        if (!validFrags.contains(frag))
-          throw new IllegalStateException(s"fragment $frag vanished mid-delete")
-        val offs = it.map(a => (a & 0xffffffffL).toInt).toArray
-        java.util.Arrays.sort(offs)
-        val merged = existing.get(frag) match {
-          case Some(name) =>
-            val bs = DeletionFiles.read(s"$delDirStr/$name", serConf.value.value)
-            offs.foreach(bs.set)
-            val out = new Array[Int](bs.cardinality())
-            var i = bs.nextSetBit(0); var k = 0
-            while (i >= 0) { out(k) = i; k += 1; i = bs.nextSetBit(i + 1) }
-            out
-          case None => // dedupe in place (scans can't dup an addr, but be safe)
-            var k = 0
-            var i = 0
-            while (i < offs.length) {
-              if (k == 0 || offs(i) != offs(k - 1)) { offs(k) = offs(i); k += 1 }
-              i += 1
-            }
-            java.util.Arrays.copyOf(offs, k)
-        }
-        val id = new java.security.SecureRandom().nextInt(Int.MaxValue).toLong
-        val meta = LanceFormat.DeletionFileMeta(readVersion, id, 1, merged.length.toLong)
-        val (dfs, dp) = LanceFormat.fileSystem(
-          s"$delDirStr/${meta.fileName(frag)}", serConf.value.value)
-        val out = dfs.create(dp, true)
-        try out.write(Roaring.serialize(merged)) finally out.close()
-        (frag, id, merged.length.toLong)
+        dels.write(serConf.value.value, frag, it.map(a => (a & 0xffffffffL).toInt).toArray)
       }
-      .collect()
-      .map { case (frag, id, n) =>
-        frag -> LanceFormat.DeletionFileMeta(readVersion, id, 1, n)
-      }.toMap
+      .collect())
   }
 
   /** Column-merge — the lance crate's `Dataset::merge` / `add_columns`
@@ -494,7 +547,9 @@ object LanceMaintenance {
     * `_staging-*` dataset whose fragments are renamed into `data/`), and
     * the commit writes one manifest: old fragments with patched deletion
     * vectors + the staged fragments. Readers never observe an
-    * intermediate state — versions V and V+1 are both consistent.
+    * intermediate state — versions V and V+1 are both consistent. A
+    * source of driver rows whose target key read fits the cap commits on
+    * the driver instead, with no Spark job (`mergeLocal`).
     *
     * Returns the committed version (unchanged if `source` is empty). */
   def mergeInsert(spark: SparkSession, path: String,
@@ -515,17 +570,78 @@ object LanceMaintenance {
       s"target ${tgtFields.map(_.name).mkString(",")}")
     val src = source.select(tgtFields.map(f =>
       org.apache.spark.sql.functions.col(f.name)): _*)
-    if (src.isEmpty) return manifest.version
-
-    // matched target rows (left-semi on keys) -> deletion vectors, written
-    // executor-side BEFORE staging (files stay unreferenced until the one
-    // manifest commit, so ordering is free)
-    val keyCols = keys.map(org.apache.spark.sql.functions.col)
-    val matched = target.join(src.select(keyCols: _*).distinct(), keys, "left_semi")
-    val delF = scala.concurrent.Future(
-      writeDeletionFiles(spark, path, manifest, matched))(maintenanceEc)
-    commitReplacement(spark, path, manifest, delF, src, tgtFields)
+    mergeLocal(spark, path, fs, p, manifest, src, keys, tgtFields).getOrElse {
+      if (src.isEmpty) manifest.version
+      else {
+        // matched target rows (left-semi on keys) -> deletion vectors, written
+        // executor-side BEFORE staging (files stay unreferenced until the one
+        // manifest commit, so ordering is free)
+        val keyCols = keys.map(org.apache.spark.sql.functions.col)
+        val matched = target.join(src.select(keyCols: _*).distinct(), keys, "left_semi")
+        val delF = scala.concurrent.Future(
+          writeDeletionFiles(spark, path, manifest, matched))(maintenanceEc)
+        commitReplacement(spark, path, manifest, delF, stageFrame(src), tgtFields)
+      }
+    }
   }
+
+  /** [[mergeInsert]] on the driver, with no Spark job, when `src` folds to
+    * driver rows within the cap ([[LanceLocal.folded]]) and the target's
+    * `(keys, _rowaddr)` read fits it: the matched addresses come from
+    * that read, their deletion files from [[Deletions.write]], the
+    * staging fragment from [[LanceLocal.write]], and the commit from
+    * [[commitReplacement]]'s loop and abort cleanup. None (the caller
+    * runs the DSv2 plan) otherwise, or when a key is not of an exact
+    * type on both sides. */
+  private def mergeLocal(spark: SparkSession, path: String,
+                         fs: org.apache.hadoop.fs.FileSystem,
+                         p: org.apache.hadoop.fs.Path,
+                         manifest: LanceFormat.Manifest,
+                         src: org.apache.spark.sql.DataFrame, keys: Seq[String],
+                         tgtFields: Seq[org.apache.spark.sql.types.StructField]): Option[Long] =
+    for {
+      rows <- LanceLocal.folded(src).filter(_.fits)
+      types = keys.map(k => rows.schema(k).dataType)
+      if types.forall(LanceLocal.ExactKeyTypes) && keys.zip(types).forall { case (k, t) =>
+        tgtFields.exists(f => f.name == k && f.dataType == t) }
+      srcKey = keys.map(rows.schema.fieldIndex).zip(types)
+      wanted = rows.rows.map(r => srcKey.map { case (i, t) => r.get(i, t) })
+        .filterNot(_.contains(null)).toSet
+      first = CatalystTypeConverters.createToScalaConverter(types.head)
+      target <- LanceLocal.readAt(LanceLocal.Snapshot(path, fs, p, manifest),
+        columns = keys :+ "_rowaddr",
+        zoneFilters = ZoneFilter.in(keys.head, wanted.toSeq.map(k => first(k.head))).toSeq)
+    } yield {
+      if (rows.rows.isEmpty) manifest.version
+      else {
+        val tgtKey = types.zipWithIndex.map(_.swap)
+        val matched = target.rows.collect {
+          case r if wanted(tgtKey.map { case (i, t) => r.get(i, t) }) => r.getLong(keys.length)
+        }
+        val dels = deletions(spark, path, manifest)
+          .writeLocal(spark.sessionState.newHadoopConf(), matched)
+        commitReplacement(spark, path, manifest, scala.concurrent.Future.successful(dels),
+          (ds, fsl) => LanceLocal.write(spark, ds, rows, "overwrite", fsl = fsl), tgtFields)
+      }
+    }
+
+  /** A replacement's DSv2 staging write of `src` (see
+    * [[commitReplacement]]): `stagePartitions` caps the staged fragment
+    * count. */
+  private def stageFrame(src: org.apache.spark.sql.DataFrame,
+                         stagePartitions: Option[Int] = None): (String, Map[String, Int]) => Unit =
+    (stagingDs, fsl) => {
+      // a caller that knows its delta size (MatView's stats probe) caps
+      // the staged fragment count — a 5-row group upsert must not stage
+      // one micro-fragment per cached partition (coalesce: a shuffle-free
+      // merge; a no-op when the frame already has fewer partitions)
+      val staged0 = stagePartitions.fold(src)(n => src.coalesce(n))
+      var wr = staged0.write.format("lance").mode("overwrite")
+      if (fsl.nonEmpty)
+        wr = wr.option("fixedSizeList",
+          fsl.map { case (n, d) => s"$n:$d" }.mkString(","))
+      wr.save(stagingDs)
+    }
 
   /** One committed version that (a) replaces every target row whose key
     * appears in `source` with the source rows (the [[mergeInsert]]
@@ -581,8 +697,8 @@ object LanceMaintenance {
       if (delMetas.isEmpty) return manifest.version
       commitDeletionLoop(conf, p, path, manifest, delMetas, expectedVersion)
     } else {
-      commitReplacement(spark, path, manifest, delF, src, tgtFields,
-        stagePartitions, expectedVersion)
+      commitReplacement(spark, path, manifest, delF, stageFrame(src, stagePartitions),
+        tgtFields, expectedVersion)
     }
   }
 
@@ -655,18 +771,19 @@ object LanceMaintenance {
         .cast(tgtFields.find(_.name == c).get.dataType))
     }.select(tgtFields.map(f => org.apache.spark.sql.functions.col(f.name)): _*)
     commitReplacement(spark, path, manifest,
-      scala.concurrent.Future.successful(delMetas), updated, tgtFields)
+      scala.concurrent.Future.successful(delMetas), stageFrame(updated), tgtFields)
   }
 
-  /** Shared upsert commit: stage `src` as fragment files, patch the
-    * pre-written `delMetas` deletion vectors onto the old fragments, and
-    * write ONE manifest containing both. */
+  /** Shared upsert commit: stage the replacement rows as fragment files
+    * (`stage(stagingDataset, fixedSizeListColumns)` writes them, through
+    * the DSv2 writer or [[LanceLocal.write]]), patch the pre-written
+    * `delMetas` deletion vectors onto the old fragments, and write ONE
+    * manifest containing both. */
   private def commitReplacement(spark: SparkSession, path: String,
                                 manifest: LanceFormat.Manifest,
                                 delMetasF: scala.concurrent.Future[Map[Long, LanceFormat.DeletionFileMeta]],
-                                src: org.apache.spark.sql.DataFrame,
+                                stage: (String, Map[String, Int]) => Unit,
                                 tgtFields: Seq[org.apache.spark.sql.types.StructField],
-                                stagePartitions: Option[Int] = None,
                                 expectedVersion: Option[Long] = None): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val (fs, p) = LanceFormat.fileSystem(path, conf)
@@ -677,16 +794,7 @@ object LanceMaintenance {
       s"_staging-${java.util.UUID.randomUUID()}")
     val stagingDs = new org.apache.hadoop.fs.Path(stagingDir, "m.lance").toString
     try {
-      // a caller that knows its delta size (MatView's stats probe) caps
-      // the staged fragment count — a 5-row group upsert must not stage
-      // one micro-fragment per cached partition (coalesce: a shuffle-free
-      // merge; a no-op when the frame already has fewer partitions)
-      val staged0 = stagePartitions.fold(src)(n => src.coalesce(n))
-      var wr = staged0.write.format("lance").mode("overwrite")
-      if (fsl.nonEmpty)
-        wr = wr.option("fixedSizeList",
-          fsl.map { case (n, d) => s"$n:$d" }.mkString(","))
-      wr.save(stagingDs)
+      stage(stagingDs, fsl)
       // the deletion-vector job (started by the caller) ran CONCURRENTLY
       // with the staging write — both are delta-sized and independent;
       // join it here, before anything references its output

@@ -188,10 +188,10 @@ class LanceBatchWrite(path: String, schema: StructType, truncate: Boolean,
                       stableRowIds: Boolean = false, codec: String = "",
                       partitionBy: Seq[String] = Nil,
                       sortBy: Seq[String] = Nil,
-                      bucketBy: Option[(Int, String)] = None)
+                      bucketBy: Option[(Int, String)] = None,
+                      hadoopConf: Broadcast[SerializableConfiguration] =
+                        SessionConf.broadcast(org.apache.spark.sql.SparkSession.active))
     extends BatchWrite {
-
-  private val hadoopConf = SessionConf.broadcast(org.apache.spark.sql.SparkSession.active)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new LanceDataWriterFactory(path, schema, hadoopConf, fsl, codec, partitionBy,

@@ -240,27 +240,33 @@ class FtsSpec extends AnyFunSuite {
 
   test("updateIndex folds the append tail: search ≡ a from-scratch rebuild, bit-identical") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("fts_update").toString
-    val src = s"$dir/docs.lance"
-    (1L to 30L).map(i => (i, s"tok${i % 7} tok${i % 5} cat"))
-      .toDF("doc_id", "text")
-      .write.format("lance").mode("overwrite").save(src)
-    Fts.buildIndexLance(spark, src, "doc_id", "text", s"$dir/ix")
-    (31L to 45L).map(i => (i, s"tok${i % 7} cat dog"))
-      .toDF("doc_id", "text")
-      .write.format("lance").mode("append").save(src)
-    Fts.updateIndex(spark, src, s"$dir/ix")
-    // the merged index must answer EXACTLY like an index built fresh at
-    // the head version (df merge + stats delta are exact — the scaladoc
-    // contract)
-    Fts.buildIndexLance(spark, src, "doc_id", "text", s"$dir/ix_fresh")
-    def top(ix: String) = Fts.searchPersisted(spark, ix,
-      Seq("cat", "tok3", "dog"), k = 20).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(top(s"$dir/ix") == top(s"$dir/ix_fresh"))
-    // phrase + boolean paths read the merged postings too
-    assert(Fts.phrasePersisted(spark, s"$dir/ix", Seq("cat", "dog"))
-      .count() == 15)
+    // the update reads, tokenizes and commits the tail on the driver with
+    // no job; on the padded twin each appended row carries ~600 KB, so the
+    // tail is over LanceLocal.CapBytes and the update runs its DSv2 plan
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("fts_update").toString
+      val src = s"$dir/docs.lance"
+      (1L to 30L).map(i => (i, s"tok${i % 7} tok${i % 5} cat", s"$i"))
+        .toDF("doc_id", "text", "pad")
+        .write.format("lance").mode("overwrite").save(src)
+      Fts.buildIndexLance(spark, src, "doc_id", "text", s"$dir/ix")
+      (31L to 45L).map(i => (i, s"tok${i % 7} cat dog", if (padded) s"$i" + "x" * 630000 else s"$i"))
+        .toDF("doc_id", "text", "pad")
+        .write.format("lance").mode("append").save(src)
+      val (_, jobs) = TestSpark.jobsOf(Fts.updateIndex(spark, src, s"$dir/ix"))
+      assert((jobs > 0) == padded, s"padded=$padded: the update ran $jobs jobs")
+      // the merged index must answer EXACTLY like an index built fresh at
+      // the head version (df merge + stats delta are exact — the scaladoc
+      // contract)
+      Fts.buildIndexLance(spark, src, "doc_id", "text", s"$dir/ix_fresh")
+      def top(ix: String) = Fts.searchPersisted(spark, ix,
+        Seq("cat", "tok3", "dog"), k = 20).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(top(s"$dir/ix") == top(s"$dir/ix_fresh"), s"padded=$padded")
+      // phrase + boolean paths read the merged postings too
+      assert(Fts.phrasePersisted(spark, s"$dir/ix", Seq("cat", "dog"))
+        .count() == 15)
+    }
   }
 
   test("fence-aborted partial update: invisible to readers, swept exactly-once") {

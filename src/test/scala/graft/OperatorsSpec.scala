@@ -1024,112 +1024,137 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == exact)
   }
 
+  /** `df` with a `pad` column: on the padded twin its rows hold ~9 MiB in
+    * all, more than `LanceLocal.CapBytes`, so an index update reading them
+    * as its tail runs its DSv2 plan; otherwise a few bytes, and the update
+    * runs on the driver with no job. */
+  private def withPad(df: DataFrame, padded: Boolean): DataFrame = {
+    val per = if (padded) (9L << 20) / math.max(df.count(), 1L) else 0L
+    df.withColumn("pad", concat(col("vec_id").cast("string"), expr(s"repeat('x', $per)")))
+  }
+
+  /** `update`'s result, asserting it ran on the side of the cap its twin
+    * is on. */
+  private def onSide[A](padded: Boolean)(update: => A): A = {
+    val (out, jobs) = TestSpark.jobsOf(update)
+    assert((jobs > 0) == padded, s"padded=$padded: the update ran $jobs jobs")
+    out
+  }
+
   test("ivfPqUpdateIndex covers appends with the existing codebooks") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_upd").toString
-    val src = s"$dir/corpus.lance"
-    emb.filter(col("vec_id") > 0 && col("vec_id") % 5 =!= 0)
-      .write.format("lance").mode("overwrite").save(src)
-    Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
-    emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0)
-      .write.format("lance").mode("append").save(src)
-    val corpus = spark.read.format("lance").load(src)
-    // query = an APPENDED row's own vector: exact re-rank would put it at
-    // rank 1 (cos = 1.0), but the index cannot produce it as a candidate
-    // until the update covers the tail
-    val query = emb.filter(col("vec_id") === 5).select("embedding")
-      .head().getSeq[Float](0)
-    val stale = Similarity.ivfPqSearch(spark, dir, corpus, "vec_id", "embedding",
-      query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
-    assert(!stale.contains(5L), s"stale index served an unindexed id: $stale")
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("ivfpq_upd").toString
+      val src = s"$dir/corpus.lance"
+      withPad(emb.filter(col("vec_id") > 0 && col("vec_id") % 5 =!= 0), padded = false)
+        .write.format("lance").mode("overwrite").save(src)
+      Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
+      withPad(emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0), padded)
+        .write.format("lance").mode("append").save(src)
+      val corpus = spark.read.format("lance").load(src)
+      // query = an APPENDED row's own vector: exact re-rank would put it at
+      // rank 1 (cos = 1.0), but the index cannot produce it as a candidate
+      // until the update covers the tail
+      val query = emb.filter(col("vec_id") === 5).select("embedding")
+        .head().getSeq[Float](0)
+      val stale = Similarity.ivfPqSearch(spark, dir, corpus, "vec_id", "embedding",
+        query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
+      assert(!stale.contains(5L), s"stale index served an unindexed id: $stale")
 
-    val covered = Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    // fresh session: pin, centroids and codebooks reload from the sidecars
-    Similarity.clearIndexCaches()
-    val got = Similarity.ivfPqSearch(spark, dir, corpus, "vec_id", "embedding",
-      query, k = 10, nProbe = 16, rerank = 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got.head._1 == 5L && got.head._2 > 0.9999,
-      s"updated index did not surface the appended row as its own top hit: $got")
-    assert(spark.read.format("lance").load(s"$dir/pq_meta.lance")
-      .head().getLong(0) == covered)
-    // idempotent: a second update with no new rows is a no-op publish
-    assert(Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding") == covered)
+      val covered = onSide(padded)(
+        Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding"))
+      // fresh session: pin, centroids and codebooks reload from the sidecars
+      Similarity.clearIndexCaches()
+      val got = Similarity.ivfPqSearch(spark, dir, corpus, "vec_id", "embedding",
+        query, k = 10, nProbe = 16, rerank = 8)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got.head._1 == 5L && got.head._2 > 0.9999,
+        s"updated index did not surface the appended row as its own top hit: $got")
+      assert(spark.read.format("lance").load(s"$dir/pq_meta.lance")
+        .head().getLong(0) == covered)
+      // idempotent: a second update with no new rows is a no-op publish
+      assert(Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding") == covered)
+    }
   }
 
   test("ivfPqUpdateIndex replaces the stale code of a re-appended id") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
     val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_re").toString
-    val src = s"$dir/corpus.lance"
-    emb.filter(col("vec_id") > 0).write.format("lance").mode("overwrite").save(src)
-    Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
-    val updId = Similarity.cosineTopK(spark.read.format("lance").load(src),
-      "vec_id", "embedding", query, 1).select("vec_id").as[Long].head()
-    val updLabel = spark.read.format("lance").load(src)
-      .filter(col("vec_id") === updId).select("label").head().getInt(0)
-    graft.sources.lance.LanceMaintenance.deleteWhere(spark, src, s"vec_id = $updId")
-    Seq((updId, query.map(-_).toArray, updLabel))
-      .toDF("vec_id", "embedding", "label")
-      .write.format("lance").mode("append").save(src)
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("ivfpq_re").toString
+      val src = s"$dir/corpus.lance"
+      withPad(emb.filter(col("vec_id") > 0), padded = false)
+        .write.format("lance").mode("overwrite").save(src)
+      Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
+      val updId = Similarity.cosineTopK(spark.read.format("lance").load(src),
+        "vec_id", "embedding", query, 1).select("vec_id").as[Long].head()
+      val updLabel = spark.read.format("lance").load(src)
+        .filter(col("vec_id") === updId).select("label").head().getInt(0)
+      graft.sources.lance.LanceMaintenance.deleteWhere(spark, src, s"vec_id = $updId")
+      withPad(Seq((updId, query.map(-_).toArray, updLabel))
+        .toDF("vec_id", "embedding", "label"), padded)
+        .write.format("lance").mode("append").save(src)
 
-    Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearIndexCaches()
-    // the mergeInsert keyed on vec_id REPLACED the stale code: the
-    // published index holds exactly one row for the id, and its ADC score
-    // reflects the negated vector (a stale code would ADC-score ~1.0 and
-    // burn a candidate slot even though exact re-rank masks it)
-    val copies = spark.read.format("lance").load(s"$dir/pq.lance")
-      .filter(col("vec_id") === updId).count()
-    assert(copies == 1L, s"re-appended id holds $copies index rows")
-    val cand = Similarity.ivfPqCandidates(spark, dir, "vec_id",
-      query, k = 10, nProbe = 16, rerank = 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    cand.filter(_._1 == updId).foreach { case (_, acos) =>
-      assert(acos < 0, s"stale ADC code survived the update: $cand") }
+      onSide(padded)(Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding"))
+      Similarity.clearIndexCaches()
+      // the mergeInsert keyed on vec_id REPLACED the stale code: the
+      // published index holds exactly one row for the id, and its ADC score
+      // reflects the negated vector (a stale code would ADC-score ~1.0 and
+      // burn a candidate slot even though exact re-rank masks it)
+      val copies = spark.read.format("lance").load(s"$dir/pq.lance")
+        .filter(col("vec_id") === updId).count()
+      assert(copies == 1L, s"re-appended id holds $copies index rows")
+      val cand = Similarity.ivfPqCandidates(spark, dir, "vec_id",
+        query, k = 10, nProbe = 16, rerank = 8)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      cand.filter(_._1 == updId).foreach { case (_, acos) =>
+        assert(acos < 0, s"stale ADC code survived the update: $cand") }
+    }
   }
 
   test("ivfPqUpdateIndex publish pin hides an orphaned pq commit") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
     val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_orph").toString
-    val src = s"$dir/corpus.lance"
-    emb.filter(col("vec_id") > 0 && col("vec_id") % 5 =!= 0)
-      .write.format("lance").mode("overwrite").save(src)
-    Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
-    emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0)
-      .write.format("lance").mode("append").save(src)
-    Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    val expect = Similarity.ivfPqCandidates(spark, dir, "vec_id",
-      query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("ivfpq_orph").toString
+      val src = s"$dir/corpus.lance"
+      withPad(emb.filter(col("vec_id") > 0 && col("vec_id") % 5 =!= 0), padded = false)
+        .write.format("lance").mode("overwrite").save(src)
+      Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
+      withPad(emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0), padded)
+        .write.format("lance").mode("append").save(src)
+      onSide(padded)(Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding"))
+      val expect = Similarity.ivfPqCandidates(spark, dir, "vec_id",
+        query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
 
-    // simulate a crashed update: a pq.lance commit AFTER the published
-    // meta — a tripwire code encoding the query vector itself (top ADC
-    // score in any probe that could see it)
-    val cbLit = typedlit(
-      Similarity.pqCodebooks(spark, dir).flatMap(_.map(_.toSeq)).toSeq)
-    val idxCols = spark.read.format("lance").load(s"$dir/pq.lance").schema.fieldNames
-    Seq((999999L, query.toArray)).toDF("vec_id", "embedding")
-      .withColumn("list_id", lit(0))
-      .withColumn("pq_code",
-        graft.functions.ArrayKernels.pqEncode(col("embedding"), cbLit))
-      .select(idxCols.map(col).toIndexedSeq: _*)
-      .write.format("lance").mode("append").save(s"$dir/pq.lance")
-    Similarity.clearIndexCaches() // fresh session: pin re-reads from pq_meta
-    val pinned = Similarity.ivfPqCandidates(spark, dir, "vec_id",
-      query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
-    assert(pinned == expect, s"orphaned pq commit leaked into a pinned probe: $pinned")
-    // the next update sweeps the orphan before publishing
-    Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    Similarity.clearIndexCaches()
-    val swept = Similarity.ivfPqCandidates(spark, dir, "vec_id",
-      query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
-    assert(swept == expect && !swept.contains(999999L))
-    assert(spark.read.format("lance").load(s"$dir/pq.lance")
-      .filter(col("vec_id") === 999999L).count() == 0L)
+      // simulate a crashed update: a pq.lance commit AFTER the published
+      // meta — a tripwire code encoding the query vector itself (top ADC
+      // score in any probe that could see it)
+      val cbLit = typedlit(
+        Similarity.pqCodebooks(spark, dir).flatMap(_.map(_.toSeq)).toSeq)
+      val idxCols = spark.read.format("lance").load(s"$dir/pq.lance").schema.fieldNames
+      Seq((999999L, query.toArray)).toDF("vec_id", "embedding")
+        .withColumn("list_id", lit(0))
+        .withColumn("pq_code",
+          graft.functions.ArrayKernels.pqEncode(col("embedding"), cbLit))
+        .select(idxCols.map(col).toIndexedSeq: _*)
+        .write.format("lance").mode("append").save(s"$dir/pq.lance")
+      Similarity.clearIndexCaches() // fresh session: pin re-reads from pq_meta
+      val pinned = Similarity.ivfPqCandidates(spark, dir, "vec_id",
+        query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
+      assert(pinned == expect, s"orphaned pq commit leaked into a pinned probe: $pinned")
+      // the next update sweeps the orphan before publishing
+      Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
+      Similarity.clearIndexCaches()
+      val swept = Similarity.ivfPqCandidates(spark, dir, "vec_id",
+        query, k = 10, nProbe = 16, rerank = 8).select("vec_id").as[Long].collect().toSeq
+      assert(swept == expect && !swept.contains(999999L))
+      assert(spark.read.format("lance").load(s"$dir/pq.lance")
+        .filter(col("vec_id") === 999999L).count() == 0L)
+    }
   }
 
   test("crashed PQ REBUILD: codebook-sidecar overwrite is invisible to pinned probes and swept") {
@@ -1244,42 +1269,79 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("IVF_PQ update: a holder whose lock entry was swept mid-update refuses to publish") {
+  /** The IVF_PQ fence spec's body on `dir`: a rival (`armRival`, which
+    * returns whether it fired) sweeps the update's lock entry mid-update,
+    * as after a long pause; the swept holder must refuse to publish, and
+    * the next maintainer covers the tail. */
+  private def sweptHolderRefuses(dir: String, padded: Boolean)(
+                                 armRival: (org.apache.hadoop.fs.FileSystem,
+                                   org.apache.hadoop.fs.Path) => (() => Boolean, () => Unit)): Unit = {
     import graft.sources.lance.{LanceFormat, MaintenanceLock}
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_fence").toString
     val src = s"$dir/corpus.lance"
-    emb.filter(col("vec_id") % 5 =!= 0).write.format("lance").mode("overwrite").save(src)
+    withPad(emb.filter(col("vec_id") % 5 =!= 0), padded = false)
+      .write.format("lance").mode("overwrite").save(src)
     Similarity.ivfPqBuildPersistLance(spark, src, "vec_id", "embedding",
       nLists = 16, indexPath = dir)
-    emb.filter(col("vec_id") % 5 === 0).write.format("lance").mode("append").save(src)
+    withPad(emb.filter(col("vec_id") % 5 === 0), padded)
+      .write.format("lance").mode("append").save(src)
     val conf = spark.sessionState.newHadoopConf()
     val meta = s"$dir/pq_meta.lance"
     val published = LanceFormat.headVersion(conf, meta)
-    // a rival sweeps this holder's lock entry as stale while the update's
-    // tail merge runs (its first job), as after a long pause
     val (fs, root) = LanceFormat.fileSystem(dir, conf)
-    val swept = new java.util.concurrent.atomic.AtomicBoolean
-    val rival = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (!swept.get) {
-          val entries = fs.listStatus(root)
-            .filter(_.getPath.getName.startsWith("_maintenance.lock."))
-          entries.foreach(st => fs.delete(st.getPath, false))
-          if (entries.nonEmpty) swept.set(true)
-        }
-    }
-    spark.sparkContext.addSparkListener(rival)
-    try intercept[MaintenanceLock.ConcurrentMaintenance] {
+    val (swept, disarm) = armRival(fs, root)
+    try onSide(padded)(intercept[MaintenanceLock.ConcurrentMaintenance] {
       Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
-    } finally spark.sparkContext.removeSparkListener(rival)
-    assert(swept.get)
+    }) finally disarm()
+    assert(swept())
     assert(LanceFormat.headVersion(conf, meta) == published,
       "the swept holder published pq_meta.lance over its successor")
     // the next maintainer sweeps the orphan merge and publishes the tail
     val covered = Similarity.ivfPqUpdateIndex(spark, src, dir, "vec_id", "embedding")
     assert(covered == LanceFormat.headVersion(conf, src))
     assert(LanceFormat.headVersion(conf, meta) > published)
+  }
+
+  /** Delete every maintenance lock entry under `root`; true when any. */
+  private def sweepLocks(fs: org.apache.hadoop.fs.FileSystem,
+                         root: org.apache.hadoop.fs.Path): Boolean = {
+    val entries = fs.listStatus(root)
+      .filter(_.getPath.getName.startsWith("_maintenance.lock."))
+    entries.foreach(st => fs.delete(st.getPath, false))
+    entries.nonEmpty
+  }
+
+  test("IVF_PQ update: a holder whose lock entry was swept mid-update refuses to publish") {
+    // the padded twin's tail is over the cap, so the update runs Spark
+    // jobs: the rival sweeps the lock entry as the update's first job
+    // starts
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_fence").toString
+    sweptHolderRefuses(dir, padded = true) { (fs, root) =>
+      val swept = new java.util.concurrent.atomic.AtomicBoolean
+      val rival = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (!swept.get && sweepLocks(fs, root)) swept.set(true)
+      }
+      spark.sparkContext.addSparkListener(rival)
+      (() => swept.get, () => spark.sparkContext.removeSparkListener(rival))
+    }
+  }
+
+  test("IVF_PQ update on the driver: a holder whose lock entry was swept mid-update refuses to publish") {
+    import graft.sources.lance.{HookAbstractFs, HookFs}
+    // the fixture's update starts no job, so the rival sweeps the lock
+    // entry at the update's first file create under the index directory
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.hookfs.impl", classOf[HookFs].getName)
+    hc.set("fs.AbstractFileSystem.hookfs.impl", classOf[HookAbstractFs].getName)
+    val dir = s"hookfs://${java.nio.file.Files.createTempDirectory("ivfpq_fence_local")}"
+    sweptHolderRefuses(dir, padded = false) { (fs, root) =>
+      val swept = new java.util.concurrent.atomic.AtomicBoolean
+      HookFs.beforeCreate = p =>
+        if (!p.getName.startsWith("_maintenance.lock.") && !swept.get &&
+            sweepLocks(fs, root)) swept.set(true)
+      (() => swept.get, () => HookFs.beforeCreate = _ => ())
+    }
   }
 
   test("IVF_PQ re-rank: candidate ids reach a lance corpus as a runtime filter") {

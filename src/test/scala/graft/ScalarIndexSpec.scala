@@ -205,105 +205,126 @@ class ScalarIndexSpec extends AnyFunSuite {
     assert(short.count() > 0)
   }
 
+  /** The `pad` column of an appended tail of `n` rows over `id`: on the
+    * padded twin the tail holds ~9 MiB, more than `LanceLocal.CapBytes`,
+    * so an update reading it runs its DSv2 plan; otherwise a few bytes,
+    * and the update runs on the driver with no job. */
+  private def tailPad(padded: Boolean, n: Int): String =
+    if (padded) s"concat(CAST(id AS STRING), repeat('x', ${(9 << 20) / n})) AS pad"
+    else "CAST(id AS STRING) AS pad"
+
+  /** `update`'s result, asserting it ran on the side of the cap its twin
+    * is on. */
+  private def onSide[A](padded: Boolean)(update: => A): A = {
+    val (out, jobs) = TestSpark.jobsOf(update)
+    assert((jobs > 0) == padded, s"padded=$padded: the update ran $jobs jobs")
+    out
+  }
+
   test("bitmap and ngram indexes cover appends via incremental update") {
-    val dir = java.nio.file.Files.createTempDirectory("sidx_upd").toString
-    val ds  = s"$dir/base.lance"
-    spark.range(3000).selectExpr("id AS k", "CAST(id % 4 AS STRING) AS a",
-        "concat('text ', id % 4, ' tail') AS t")
-      .repartition(2).write.format("lance").mode("overwrite").save(ds)
-    ScalarIndex.buildBitmap(spark, ds, "a", s"$dir/bm")
-    ScalarIndex.buildNgram(spark, ds, "t", s"$dir/ng")
-    spark.range(3000, 3200).selectExpr("id AS k", "'9' AS a",
-        "concat('freshly appended ', id) AS t")
-      .write.format("lance").mode("append").save(ds)
-    // pre-update: the appended rows are invisible to both indexes
-    assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("9")).count() == 0)
-    assert(ScalarIndex.lookupContains(spark, ds, s"$dir/ng", "t", "freshly")
-      .count() == 0)
-    ScalarIndex.updateBitmap(spark, ds, s"$dir/bm")
-    ScalarIndex.updateNgram(spark, ds, s"$dir/ng")
-    assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("9")).count() == 200)
-    assert(ScalarIndex.lookupContains(spark, ds, s"$dir/ng", "t", "freshly")
-      .count() == 200)
-    // old keys still resolve after the incremental append
-    assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("1")).count() == 750)
-    // idempotent when already at head
-    assert(ScalarIndex.updateBitmap(spark, ds, s"$dir/bm") ==
-           ScalarIndex.updateBitmap(spark, ds, s"$dir/bm"))
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("sidx_upd").toString
+      val ds  = s"$dir/base.lance"
+      spark.range(3000).selectExpr("id AS k", "CAST(id % 4 AS STRING) AS a",
+          "concat('text ', id % 4, ' tail') AS t", "CAST(id AS STRING) AS pad")
+        .repartition(2).write.format("lance").mode("overwrite").save(ds)
+      ScalarIndex.buildBitmap(spark, ds, "a", s"$dir/bm")
+      ScalarIndex.buildNgram(spark, ds, "t", s"$dir/ng")
+      spark.range(3000, 3200).selectExpr("id AS k", "'9' AS a",
+          "concat('freshly appended ', id) AS t", tailPad(padded, 200))
+        .write.format("lance").mode("append").save(ds)
+      // pre-update: the appended rows are invisible to both indexes
+      assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("9")).count() == 0)
+      assert(ScalarIndex.lookupContains(spark, ds, s"$dir/ng", "t", "freshly")
+        .count() == 0)
+      onSide(padded)(ScalarIndex.updateBitmap(spark, ds, s"$dir/bm"))
+      onSide(padded)(ScalarIndex.updateNgram(spark, ds, s"$dir/ng"))
+      assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("9")).count() == 200)
+      assert(ScalarIndex.lookupContains(spark, ds, s"$dir/ng", "t", "freshly")
+        .count() == 200)
+      // old keys still resolve after the incremental append
+      assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("1")).count() == 750)
+      // idempotent when already at head
+      assert(ScalarIndex.updateBitmap(spark, ds, s"$dir/bm") ==
+             ScalarIndex.updateBitmap(spark, ds, s"$dir/bm"))
+    }
   }
 
   test("bitmap/ngram fence-aborted partial updates: orphan invisible, swept exactly-once") {
-    val dir = java.nio.file.Files.createTempDirectory("sidx_abort2").toString
-    val ds  = s"$dir/base.lance"
-    spark.range(2000).selectExpr("id AS k", "CAST(id % 4 AS STRING) AS a",
-        "concat('text ', id % 4, ' tail') AS t")
-      .repartition(2).write.format("lance").mode("overwrite").save(ds)
-    ScalarIndex.buildBitmap(spark, ds, "a", s"$dir/bm")
-    ScalarIndex.buildNgram(spark, ds, "t", s"$dir/ng")
-    spark.range(2000, 2100).selectExpr("id AS k", "'9' AS a",
-        "concat('freshly appended ', id) AS t")
-      .write.format("lance").mode("append").save(ds)
-    val pre = ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("1")).count()
-    // simulate predecessors that fence-aborted after their data-sidecar
-    // appends but before the meta publish (the advice's duplicate
-    // addr/gram scenario): re-append copies of existing rows — exactly
-    // the double-append corruption the old code produced
-    spark.read.format("lance").load(s"$dir/bm/bitmaps.lance").limit(5)
-      .write.format("lance").mode("append").save(s"$dir/bm/bitmaps.lance")
-    spark.read.format("lance").load(s"$dir/ng/keys.lance").limit(50)
-      .write.format("lance").mode("append").save(s"$dir/ng/keys.lance")
-    // pinned readers never see the orphans
-    assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("1")).count() == pre)
-    assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("9")).count() == 0)
-    assert(ScalarIndex.lookupContains(spark, ds, s"$dir/ng", "t", "freshly")
-      .count() == 0)
-    // real updates sweep the orphans and land the tail exactly once
-    ScalarIndex.updateBitmap(spark, ds, s"$dir/bm")
-    ScalarIndex.updateNgram(spark, ds, s"$dir/ng")
-    assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("9")).count() == 100)
-    assert(ScalarIndex.lookupContains(spark, ds, s"$dir/ng", "t", "freshly")
-      .count() == 100)
-    // no duplicated rows at the published versions
-    def dups(ix: String, sidecar: String, cols: Seq[String]): Long = {
-      val pv = spark.read.format("lance").load(s"$ix/meta.lance")
-        .head().getAs[Long]("data_version")
-      spark.read.format("lance").option("versionAsOf", pv)
-        .load(s"$ix/$sidecar.lance")
-        .groupBy(cols.map(col): _*).count().filter(col("count") > 1).count()
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("sidx_abort2").toString
+      val ds  = s"$dir/base.lance"
+      spark.range(2000).selectExpr("id AS k", "CAST(id % 4 AS STRING) AS a",
+          "concat('text ', id % 4, ' tail') AS t", "CAST(id AS STRING) AS pad")
+        .repartition(2).write.format("lance").mode("overwrite").save(ds)
+      ScalarIndex.buildBitmap(spark, ds, "a", s"$dir/bm")
+      ScalarIndex.buildNgram(spark, ds, "t", s"$dir/ng")
+      spark.range(2000, 2100).selectExpr("id AS k", "'9' AS a",
+          "concat('freshly appended ', id) AS t", tailPad(padded, 100))
+        .write.format("lance").mode("append").save(ds)
+      val pre = ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("1")).count()
+      // simulate predecessors that fence-aborted after their data-sidecar
+      // appends but before the meta publish (the advice's duplicate
+      // addr/gram scenario): re-append copies of existing rows — exactly
+      // the double-append corruption the old code produced
+      spark.read.format("lance").load(s"$dir/bm/bitmaps.lance").limit(5)
+        .write.format("lance").mode("append").save(s"$dir/bm/bitmaps.lance")
+      spark.read.format("lance").load(s"$dir/ng/keys.lance").limit(50)
+        .write.format("lance").mode("append").save(s"$dir/ng/keys.lance")
+      // pinned readers never see the orphans
+      assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("1")).count() == pre)
+      assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("9")).count() == 0)
+      assert(ScalarIndex.lookupContains(spark, ds, s"$dir/ng", "t", "freshly")
+        .count() == 0)
+      // real updates sweep the orphans and land the tail exactly once
+      onSide(padded)(ScalarIndex.updateBitmap(spark, ds, s"$dir/bm"))
+      onSide(padded)(ScalarIndex.updateNgram(spark, ds, s"$dir/ng"))
+      assert(ScalarIndex.lookupBitmap(spark, ds, s"$dir/bm", Seq("9")).count() == 100)
+      assert(ScalarIndex.lookupContains(spark, ds, s"$dir/ng", "t", "freshly")
+        .count() == 100)
+      // no duplicated rows at the published versions
+      def dups(ix: String, sidecar: String, cols: Seq[String]): Long = {
+        val pv = spark.read.format("lance").load(s"$ix/meta.lance")
+          .head().getAs[Long]("data_version")
+        spark.read.format("lance").option("versionAsOf", pv)
+          .load(s"$ix/$sidecar.lance")
+          .groupBy(cols.map(col): _*).count().filter(col("count") > 1).count()
+      }
+      assert(dups(s"$dir/bm", "bitmaps", Seq("key", "frag")) == 0L)
+      assert(dups(s"$dir/ng", "keys", Seq("key", "addr")) == 0L)
     }
-    assert(dups(s"$dir/bm", "bitmaps", Seq("key", "frag")) == 0L)
-    assert(dups(s"$dir/ng", "keys", Seq("key", "addr")) == 0L)
   }
 
   test("fence-aborted partial update: orphan tail invisible, next update exactly-once") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sidx_abort").toString
-    val ds  = s"$dir/base.lance"
-    val ix  = s"$dir/idx.lance"
-    (0L until 100L).map(i => (i, i * 1.5)).toDF("k", "v")
-      .write.format("lance").mode("overwrite").save(ds)
-    ScalarIndex.build(spark, ds, "k", ix)
-    (100L until 150L).map(i => (i, i * 1.5)).toDF("k", "v")
-      .write.format("lance").mode("append").save(ds)
-    // simulate a predecessor that fence-aborted AFTER its keys append but
-    // BEFORE the meta publish: the same tail the real updater will write
-    spark.read.format("lance").option("fromVersion", 1L).load(ds)
-      .select(col("k").as("key"), col("_rowaddr").as("addr"))
-      .write.format("lance").mode("append").save(s"$ix/keys.lance")
-    // readers pin the published data_version: the orphan rows are invisible
-    assert(ScalarIndex.lookup(spark, ds, ix, Seq(120L)).count() == 0)
-    // the real update sweeps the orphan and lands the tail exactly once
-    ScalarIndex.update(spark, ds, ix)
-    val got = ScalarIndex.lookup(spark, ds, ix, Seq(120L, 3L))
-      .select("k").collect().map(_.getLong(0)).sorted.toSeq
-    assert(got == Seq(3L, 120L))
-    // no duplicated (key, addr) rows in the published index data
-    val pv = spark.read.format("lance").load(s"$ix/meta.lance")
-      .head().getAs[Long]("data_version")
-    val dups = spark.read.format("lance").option("versionAsOf", pv)
-      .load(s"$ix/keys.lance")
-      .groupBy("key", "addr").count().filter(col("count") > 1).count()
-    assert(dups == 0L)
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("sidx_abort").toString
+      val ds  = s"$dir/base.lance"
+      val ix  = s"$dir/idx.lance"
+      spark.range(100).selectExpr("id AS k", "CAST(id * 1.5 AS DOUBLE) AS v", "CAST(id AS STRING) AS pad")
+        .write.format("lance").mode("overwrite").save(ds)
+      ScalarIndex.build(spark, ds, "k", ix)
+      spark.range(100, 150).selectExpr("id AS k", "CAST(id * 1.5 AS DOUBLE) AS v", tailPad(padded, 50))
+        .write.format("lance").mode("append").save(ds)
+      // simulate a predecessor that fence-aborted AFTER its keys append but
+      // BEFORE the meta publish: the same tail the real updater will write
+      spark.read.format("lance").option("fromVersion", 1L).load(ds)
+        .select(col("k").as("key"), col("_rowaddr").as("addr"))
+        .write.format("lance").mode("append").save(s"$ix/keys.lance")
+      // readers pin the published data_version: the orphan rows are invisible
+      assert(ScalarIndex.lookup(spark, ds, ix, Seq(120L)).count() == 0)
+      // the real update sweeps the orphan and lands the tail exactly once
+      onSide(padded)(ScalarIndex.update(spark, ds, ix))
+      val got = ScalarIndex.lookup(spark, ds, ix, Seq(120L, 3L))
+        .select("k").collect().map(_.getLong(0)).sorted.toSeq
+      assert(got == Seq(3L, 120L))
+      // no duplicated (key, addr) rows in the published index data
+      val pv = spark.read.format("lance").load(s"$ix/meta.lance")
+        .head().getAs[Long]("data_version")
+      val dups = spark.read.format("lance").option("versionAsOf", pv)
+        .load(s"$ix/keys.lance")
+        .groupBy("key", "addr").count().filter(col("count") > 1).count()
+      assert(dups == 0L)
+    }
   }
 
   /** A fresh directory on the `flakyfs://` scheme ([[FlakyFs]]). */

@@ -22,6 +22,24 @@ class LanceDeleteSpec extends AnyFunSuite {
       .repartition(parts)
       .write.format("lance").mode("append").save(ds)
 
+  /** The columns of [[writeIds]] plus a `pad`: on the padded twin `n`
+    * rows hold ~9 MiB, more than `LanceLocal.CapBytes`, so a delete or
+    * merge reading their keys runs its DSv2 plan; otherwise a few bytes,
+    * and it runs on the driver with no job. */
+  private def paddedCols(padded: Boolean, n: Int): Seq[String] =
+    Seq("id", "id % 7 AS grp", "CAST(id * 1.5 AS DOUBLE) AS v",
+      if (padded) s"concat(CAST(id AS STRING), repeat('x', ${(9 << 20) / n})) AS pad"
+      else "CAST(id AS STRING) AS pad")
+
+  /** `op`'s result, asserting it ran on the side of the cap its twin is
+    * on, counting only the jobs this thread starts (racing threads run
+    * their own). */
+  private def onSide[A](padded: Boolean)(op: => A): A = {
+    val (out, jobs) = graft.TestSpark.threadJobsOf(op)
+    assert((jobs > 0) == padded, s"padded=$padded: ran $jobs jobs")
+    out
+  }
+
   test("mass delete: millions of matched rows stay executor-side (VERDICT r4 scale gate)") {
     // 3M rows across 8 fragments; delete ~1/3 by predicate. The matched
     // offsets are sorted/merged/serialized inside mapGroups on executors
@@ -49,61 +67,70 @@ class LanceDeleteSpec extends AnyFunSuite {
   }
 
   test("deleteWhere rebases over a concurrent append (snapshot-delete semantics)") {
-    val ds = tmpDs()
-    writeIds(ds, 50000, 4)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val appender = new Thread(() => {
-      try (1 to 3).foreach { i =>
-        spark.range(1000000L + i * 1000, 1000000L + i * 1000 + 500)
-          .selectExpr("id", "id % 7 AS grp", "CAST(id * 1.5 AS DOUBLE) AS v")
-          .coalesce(1).write.format("lance").mode("append").save(ds)
-      } catch { case e: Throwable => failures.add(e) }
-    })
-    val deleter = new Thread(() => {
-      try LanceMaintenance.deleteWhere(spark, ds, "grp = 2 AND id < 1000000")
-      catch { case e: Throwable => failures.add(e) }
-    })
-    appender.start(); deleter.start()
-    appender.join(); deleter.join()
-    assert(failures.isEmpty, s"concurrent append/delete failed: ${failures.peek()}")
-    val back = spark.read.format("lance").load(ds)
-    // the delete's snapshot rows are masked; every appended row survives
-    // (even grp=2 ones — they were not visible at the delete's readVersion
-    // and are excluded by the predicate's id guard)
-    assert(back.filter("id < 1000000 AND grp = 2").count() == 0)
-    assert(back.filter("id >= 1000000").count() == 1500)
-    val expectedLive = (0L until 50000L).count(_ % 7 != 2)
-    assert(back.filter("id < 1000000").count() == expectedLive)
+    Seq(false, true).foreach { padded =>
+      val ds = tmpDs()
+      spark.range(50000).selectExpr(paddedCols(padded, 50000): _*).repartition(4)
+        .write.format("lance").mode("append").save(ds)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val appender = new Thread(() => {
+        try (1 to 3).foreach { i =>
+          spark.range(1000000L + i * 1000, 1000000L + i * 1000 + 500)
+            .selectExpr(paddedCols(padded = false, 500): _*)
+            .coalesce(1).write.format("lance").mode("append").save(ds)
+        } catch { case e: Throwable => failures.add(e) }
+      })
+      val deleter = new Thread(() => {
+        try onSide(padded)(LanceMaintenance.deleteWhere(spark, ds, "grp = 2 AND id < 1000000"))
+        catch { case e: Throwable => failures.add(e) }
+      })
+      appender.start(); deleter.start()
+      appender.join(); deleter.join()
+      assert(failures.isEmpty, s"concurrent append/delete failed: ${failures.peek()}")
+      val back = spark.read.format("lance").load(ds)
+      // the delete's snapshot rows are masked; every appended row survives
+      // (even grp=2 ones — they were not visible at the delete's readVersion
+      // and are excluded by the predicate's id guard)
+      assert(back.filter("id < 1000000 AND grp = 2").count() == 0)
+      assert(back.filter("id >= 1000000").count() == 1500)
+      val expectedLive = (0L until 50000L).count(_ % 7 != 2)
+      assert(back.filter("id < 1000000").count() == expectedLive)
+    }
   }
 
   test("mergeInsert rebases over a concurrent append") {
-    val ds = tmpDs()
-    writeIds(ds, 20000, 2)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val appender = new Thread(() => {
-      try (1 to 3).foreach { i =>
-        spark.range(2000000L + i * 1000, 2000000L + i * 1000 + 400)
-          .selectExpr("id", "id % 7 AS grp", "CAST(id * 1.5 AS DOUBLE) AS v")
-          .coalesce(1).write.format("lance").mode("append").save(ds)
-      } catch { case e: Throwable => failures.add(e) }
-    })
-    val upserter = new Thread(() => {
-      try {
-        // update 100 existing rows' v and insert 50 fresh ids
-        val src = spark.range(0, 150)
-          .selectExpr("CASE WHEN id < 100 THEN id ELSE 3000000 + id END AS id",
-                      "id % 7 AS grp", "CAST(-1.0 AS DOUBLE) AS v")
-        LanceMaintenance.mergeInsert(spark, ds, src, Seq("id"))
-      } catch { case e: Throwable => failures.add(e) }
-    })
-    appender.start(); upserter.start()
-    appender.join(); upserter.join()
-    assert(failures.isEmpty, s"concurrent append/upsert failed: ${failures.peek()}")
-    val back = spark.read.format("lance").load(ds)
-    assert(back.filter("id < 100 AND v = -1.0").count() == 100)   // updated
-    assert(back.filter("id >= 3000000").count() == 50)            // inserted
-    assert(back.filter("id >= 2000000 AND id < 3000000").count() == 1200) // appends all landed
-    assert(back.filter("id < 2000000").count() == 20000)          // no snapshot row lost
+    import spark.implicits._
+    Seq(false, true).foreach { padded =>
+      val ds = tmpDs()
+      spark.range(20000).selectExpr(paddedCols(padded, 20000): _*).repartition(2)
+        .write.format("lance").mode("append").save(ds)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val appender = new Thread(() => {
+        try (1 to 3).foreach { i =>
+          spark.range(2000000L + i * 1000, 2000000L + i * 1000 + 400)
+            .selectExpr(paddedCols(padded = false, 400): _*)
+            .coalesce(1).write.format("lance").mode("append").save(ds)
+        } catch { case e: Throwable => failures.add(e) }
+      })
+      val upserter = new Thread(() => {
+        try {
+          // update 100 existing rows' v and insert 50 fresh ids, from driver
+          // rows (a LocalRelation source, which the local arm takes)
+          val src = (0L until 150L).map { i =>
+            val id = if (i < 100) i else 3000000L + i
+            (id, i % 7, -1.0, s"$id")
+          }.toDF("id", "grp", "v", "pad")
+          onSide(padded)(LanceMaintenance.mergeInsert(spark, ds, src, Seq("id")))
+        } catch { case e: Throwable => failures.add(e) }
+      })
+      appender.start(); upserter.start()
+      appender.join(); upserter.join()
+      assert(failures.isEmpty, s"concurrent append/upsert failed: ${failures.peek()}")
+      val back = spark.read.format("lance").load(ds)
+      assert(back.filter("id < 100 AND v = -1.0").count() == 100)   // updated
+      assert(back.filter("id >= 3000000").count() == 50)            // inserted
+      assert(back.filter("id >= 2000000 AND id < 3000000").count() == 1200) // appends all landed
+      assert(back.filter("id < 2000000").count() == 20000)          // no snapshot row lost
+    }
   }
 
   test("roaring codec round-trips array and bitmap containers") {
@@ -131,37 +158,69 @@ class LanceDeleteSpec extends AnyFunSuite {
   }
 
   test("deleteWhere masks rows, versions both states, and merges deletes") {
-    val ds = tmpDs()
-    writeIds(ds, 1000, 3)
-    val v1 = {
+    Seq(false, true).foreach { padded =>
+      val ds = tmpDs()
+      spark.range(1000).selectExpr(paddedCols(padded, 1000): _*).repartition(3)
+        .write.format("lance").mode("append").save(ds)
+      val v1 = {
+        val conf = spark.sessionState.newHadoopConf()
+        val (fs, p) = LanceFormat.fileSystem(ds, conf)
+        LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None)).version
+      }
+
+      val v2 = onSide(padded)(LanceMaintenance.deleteWhere(spark, ds, "grp = 3"))
+      assert(v2 == v1 + 1)
+      val after = spark.read.format("lance").load(ds)
+      assert(after.count() == 1000 - spark.range(1000).filter("id % 7 = 3").count())
+      assert(after.filter("grp = 3").count() == 0)
+      // time travel: the old version still sees every row
+      val before = spark.read.format("lance").option("versionAsOf", v1).load(ds)
+      assert(before.count() == 1000)
+      assert(before.filter("grp = 3").count() == spark.range(1000).filter("id % 7 = 3").count())
+
+      // second delete merges with the first (per-fragment bitmap union)
+      val v3 = onSide(padded)(LanceMaintenance.deleteWhere(spark, ds, "grp = 5"))
+      assert(v3 == v2 + 1)
+      val after2 = spark.read.format("lance").load(ds)
+      assert(after2.filter("grp IN (3, 5)").count() == 0)
+      assert(after2.count() ==
+        spark.range(1000).filter("id % 7 NOT IN (3, 5)").count())
+      // sums only over live rows (columnar path is bypassed under deletions)
+      val expected = spark.range(1000).filter("id % 7 NOT IN (3, 5)")
+        .agg(sum(expr("CAST(id * 1.5 AS DOUBLE)"))).head.getDouble(0)
+      assert(math.abs(after2.agg(sum("v")).head.getDouble(0) - expected) < 1e-6)
+      // deleting nothing is a no-op version-wise
+      assert(onSide(padded)(LanceMaintenance.deleteWhere(spark, ds, "grp = 99")) == v3)
+    }
+  }
+
+  test("mergeInsert and deleteWhere keep move-stable row ids on both sides of the cap") {
+    import spark.implicits._
+    Seq(false, true).foreach { padded =>
+      val ds = tmpDs()
+      spark.range(100).selectExpr(paddedCols(padded, 100): _*).coalesce(1)
+        .write.format("lance").option("stableRowIds", "true").mode("overwrite").save(ds)
+      def ids(): Map[Long, Long] = spark.read.format("lance").load(ds)
+        .select("id", "_rowid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      onSide(padded)(LanceMaintenance.deleteWhere(spark, ds, "id % 10 = 0"))
+      val afterDelete = ids()
+      assert(afterDelete.size == 90 && afterDelete.forall { case (k, id) => k == id },
+        "a delete keeps every surviving row's id")
+      // upsert 5 live rows and insert 2: rewritten and new rows take fresh
+      // ids from the counter, the rest keep theirs
+      val src = Seq(1L, 2L, 3L, 4L, 5L, 500L, 501L)
+        .map(i => (i, i % 7, -1.0, s"$i")).toDF("id", "grp", "v", "pad")
+      onSide(padded)(LanceMaintenance.mergeInsert(spark, ds, src, Seq("id")))
+      val got = ids()
+      assert(got.size == 92)
+      assert(got.filter { case (k, _) => k > 5 && k < 100 }.forall { case (k, id) => k == id })
+      assert(Seq(1L, 2L, 3L, 4L, 5L, 500L, 501L).map(got).sorted == (100L until 107L))
       val conf = spark.sessionState.newHadoopConf()
       val (fs, p) = LanceFormat.fileSystem(ds, conf)
-      LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None)).version
+      assert(LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None))
+        .nextRowId == 107L)
+      assert(spark.read.format("lance").load(ds).filter("v = -1.0").count() == 7)
     }
-
-    val v2 = LanceMaintenance.deleteWhere(spark, ds, "grp = 3")
-    assert(v2 == v1 + 1)
-    val after = spark.read.format("lance").load(ds)
-    assert(after.count() == 1000 - spark.range(1000).filter("id % 7 = 3").count())
-    assert(after.filter("grp = 3").count() == 0)
-    // time travel: the old version still sees every row
-    val before = spark.read.format("lance").option("versionAsOf", v1).load(ds)
-    assert(before.count() == 1000)
-    assert(before.filter("grp = 3").count() == spark.range(1000).filter("id % 7 = 3").count())
-
-    // second delete merges with the first (per-fragment bitmap union)
-    val v3 = LanceMaintenance.deleteWhere(spark, ds, "grp = 5")
-    assert(v3 == v2 + 1)
-    val after2 = spark.read.format("lance").load(ds)
-    assert(after2.filter("grp IN (3, 5)").count() == 0)
-    assert(after2.count() ==
-      spark.range(1000).filter("id % 7 NOT IN (3, 5)").count())
-    // sums only over live rows (columnar path is bypassed under deletions)
-    val expected = spark.range(1000).filter("id % 7 NOT IN (3, 5)")
-      .agg(sum(expr("CAST(id * 1.5 AS DOUBLE)"))).head.getDouble(0)
-    assert(math.abs(after2.agg(sum("v")).head.getDouble(0) - expected) < 1e-6)
-    // deleting nothing is a no-op version-wise
-    assert(LanceMaintenance.deleteWhere(spark, ds, "grp = 99") == v3)
   }
 
   test("count(*), limit pushdown, and appends honor deletion vectors") {
@@ -340,40 +399,52 @@ class LanceDeleteSpec extends AnyFunSuite {
   }
 
   test("mergeInsert upserts matched rows and inserts new ones in one version") {
-    val ds = tmpDs()
-    writeIds(ds, 100, 2)
-    val v1 = {
+    import spark.implicits._
+    Seq(false, true).foreach { padded =>
+      val ds = tmpDs()
+      spark.range(100).selectExpr(paddedCols(padded, 100): _*).repartition(2)
+        .write.format("lance").mode("append").save(ds)
+      val v1 = {
+        val conf = spark.sessionState.newHadoopConf()
+        val (fs, p) = LanceFormat.fileSystem(ds, conf)
+        LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None)).version
+      }
+      // updates ids 50..99, inserts 100..120, from driver rows (the local
+      // arm's source)
+      val source = (50L to 120L).map(id => (id, id % 7, id * 10.0, s"$id"))
+        .toDF("id", "grp", "v", "pad")
+      val v2 = onSide(padded)(LanceMaintenance.mergeInsert(spark, ds, source, Seq("id")))
+      assert(v2 == v1 + 1)
+
+      val back = spark.read.format("lance").load(ds)
+      assert(back.count() == 121)
+      assert(back.select("id").distinct().count() == 121) // no duplicate keys
+      val byId = back.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      assert(byId(10L) == 15.0)   // untouched: id * 1.5
+      assert(byId(60L) == 600.0)  // updated: id * 10
+      assert(byId(120L) == 1200.0) // inserted
+      // both surrounding versions are consistent
+      val before = spark.read.format("lance").option("versionAsOf", v1).load(ds)
+      assert(before.count() == 100)
+      assert(before.filter("id = 60").head.getDouble(2) == 90.0)
+
+      // merge is repeatable: same source again replaces its own rows
+      val v3 = onSide(padded)(LanceMaintenance.mergeInsert(spark, ds, source, Seq("id")))
+      assert(v3 == v2 + 1)
+      val again = spark.read.format("lance").load(ds)
+      assert(again.count() == 121 && again.select("id").distinct().count() == 121)
+      // no staging leftovers
       val conf = spark.sessionState.newHadoopConf()
       val (fs, p) = LanceFormat.fileSystem(ds, conf)
-      LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None)).version
+      assert(!fs.listStatus(p).exists(_.getPath.getName.startsWith("_staging")))
     }
-    // updates ids 50..99, inserts 100..120
-    val source = spark.range(50, 121)
+    // a source computed by Spark (not driver rows) keeps the DSv2 plan
+    val ds = tmpDs()
+    writeIds(ds, 100, 2)
+    val computed = spark.range(50, 121)
       .selectExpr("id", "id % 7 AS grp", "CAST(id * 10.0 AS DOUBLE) AS v")
-    val v2 = LanceMaintenance.mergeInsert(spark, ds, source, Seq("id"))
-    assert(v2 == v1 + 1)
-
-    val back = spark.read.format("lance").load(ds)
-    assert(back.count() == 121)
-    assert(back.select("id").distinct().count() == 121) // no duplicate keys
-    val byId = back.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(byId(10L) == 15.0)   // untouched: id * 1.5
-    assert(byId(60L) == 600.0)  // updated: id * 10
-    assert(byId(120L) == 1200.0) // inserted
-    // both surrounding versions are consistent
-    val before = spark.read.format("lance").option("versionAsOf", v1).load(ds)
-    assert(before.count() == 100)
-    assert(before.filter("id = 60").head.getDouble(2) == 90.0)
-
-    // merge is repeatable: same source again replaces its own rows
-    val v3 = LanceMaintenance.mergeInsert(spark, ds, source, Seq("id"))
-    assert(v3 == v2 + 1)
-    val again = spark.read.format("lance").load(ds)
-    assert(again.count() == 121 && again.select("id").distinct().count() == 121)
-    // no staging leftovers
-    val conf = spark.sessionState.newHadoopConf()
-    val (fs, p) = LanceFormat.fileSystem(ds, conf)
-    assert(!fs.listStatus(p).exists(_.getPath.getName.startsWith("_staging")))
+    onSide(padded = true)(LanceMaintenance.mergeInsert(spark, ds, computed, Seq("id")))
+    assert(spark.read.format("lance").load(ds).count() == 121)
   }
 
   test("updateWhere rewrites matched rows in place (one version)") {

@@ -1,7 +1,7 @@
 package graft.sources.lance
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -136,6 +136,62 @@ class LanceLocalSpec extends AnyFunSuite {
     check("compaction")
     LanceMaintenance.restore(spark, path, 2L)
     check("restore")
+  }
+
+  // ---- the write -------------------------------------------------------------
+
+  private def manifestOf(path: String): LanceFormat.Manifest = {
+    val (fs, p) = LanceFormat.fileSystem(path, spark.sessionState.newHadoopConf())
+    LanceFormat.readManifest(fs, LanceFormat.latestManifestPath(fs, p, None))
+  }
+
+  test("a local write commits what the DSv2 write commits, with no job") {
+    val dir = tmp("lance_local_write")
+    // (name, sortBy, fixed-size-list columns, stable row ids: both copies
+    // start from one DSv2 write with them, which later writes continue)
+    val cases = Seq(("plain", Nil, Map.empty[String, Int], false),
+      ("sorted_fsl_stable", Seq("grp", "id"), Map("emb" -> 2), true))
+    // a history of appends and overwrites; each step's rows arrive in a
+    // shuffled order, so the sort is the writer's
+    val history = Seq(("overwrite", 0L, 300L), ("append", 300L, 420L),
+      ("overwrite", 420L, 500L), ("append", 500L, 530L))
+    cases.foreach { case (name, sortBy, fsl, stable) =>
+      val (local, dsv2) = (s"$dir/$name-local.lance", s"$dir/$name-dsv2.lance")
+      if (stable) Seq(local, dsv2).foreach(p => fixture(900, 910).coalesce(1).write.format("lance")
+        .mode("overwrite").option("stableRowIds", "true").option("fixedSizeList", "emb:2").save(p))
+      history.foreach { case (mode, lo, hi) =>
+        val df = fixture(lo, hi).orderBy(expr("hash(id)"))
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(df.schema)
+        val rows = LanceLocal.Rows(df.schema,
+          df.collect().toIndexedSeq.map(toCatalyst(_).asInstanceOf[InternalRow]))
+        val (_, jobs) = jobsOf(LanceLocal.write(spark, local, rows, mode, sortBy, fsl))
+        assert(jobs == 0, s"$name $mode ran $jobs jobs")
+        var w = df.coalesce(1).write.format("lance").mode(mode)
+        if (sortBy.nonEmpty)
+          w = w.option("sortBy", sortBy.mkString(",")).option("writePartitions", "1")
+        if (fsl.nonEmpty) w = w.option("fixedSizeList", fsl.map { case (c, d) => s"$c:$d" }.mkString(","))
+        w.save(dsv2)
+        val (ml, md) = (manifestOf(local), manifestOf(dsv2))
+        assert(ml.version == md.version, s"$name $mode")
+        assert(ml.fields == md.fields, s"$name $mode: fields")
+        assert(ml.sortCols == md.sortCols, s"$name $mode: sortCols")
+        assert(ml.nextRowId == md.nextRowId, s"$name $mode: nextRowId")
+        assert(ml.fragments.map(_.rowIds) == md.fragments.map(_.rowIds), s"$name $mode: row ids")
+        val cols = Seq("*", "_rowaddr") ++ (if (stable) Seq("_rowid") else Nil)
+        def read(p: String) = spark.read.format("lance").load(p).select(cols.map(col): _*)
+          .collect().toSeq.map(_.toString).sorted
+        assert(read(local) == read(dsv2), s"$name $mode: rows")
+      }
+    }
+  }
+
+  test("a frame folds to driver rows only when no job computes it") {
+    val local = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s")
+    val folded = LanceLocal.folded(local.filter(col("id") > 1).select(col("s"), col("id") * 2))
+    assert(folded.map(_.rows.map(r => (r.getUTF8String(0).toString, r.getLong(1)))) ==
+      Some(IndexedSeq(("b", 4L), ("c", 6L))))
+    assert(LanceLocal.folded(spark.range(3).toDF()).isEmpty)
+    assert(LanceLocal.folded(local.groupBy("s").count()).isEmpty)
   }
 
   // ---- the three index faces ---------------------------------------------

@@ -71,6 +71,31 @@ object FlakyFs {
 class FlakyAbstractFs(uri: URI, conf: Configuration)
   extends DelegateToFileSystem(uri, new FlakyFs, conf, "flakyfs", false)
 
+/** [[StrictFs]] under `hookfs://`, running [[HookFs.beforeCreate]] before
+  * every file create: a test injects a rival's action (say, sweeping a
+  * maintenance lock entry) at the first write of a code path that starts
+  * no Spark job, where a listener on job starts never fires. Registered
+  * like [[LateFs]]. */
+class HookFs extends StrictFs {
+  override def getScheme: String = "hookfs"
+  override def getUri: URI = URI.create("hookfs:///")
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    HookFs.beforeCreate(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object HookFs {
+  /** Runs before each create; a no-op unless a test sets it. */
+  @volatile var beforeCreate: Path => Unit = _ => ()
+}
+
+/** FileContext binding (`fs.AbstractFileSystem.hookfs.impl`). */
+class HookAbstractFs(uri: URI, conf: Configuration)
+  extends DelegateToFileSystem(uri, new HookFs, conf, "hookfs", false)
+
 /** Test-only filesystem under `s3like://` modeling the WORST object-store
   * rename semantics: rename lands even when the destination exists
   * (copy+delete with no atomic no-overwrite guarantee — the S3A shape).
