@@ -340,10 +340,9 @@ object Fts {
     bm25TopK(sidecar(spark, indexPath, "postings", pub),
       sidecar(spark, indexPath, "terms", pub), nDocs, totalLen, terms, k)
 
-  /** Delete-aware search of a persisted index (the liveness mask of the
-    * ANN `ivfSearchCombinedLive` applied to FTS): postings store a
-    * COPY of the term statistics, so a document deleted from `sourcePath`
-    * after the build would otherwise still rank. The probe over-fetches a
+  /** Delete-aware search of a persisted index: postings store a COPY of
+    * the term statistics, so a document deleted from `sourcePath` after
+    * the build would otherwise still rank. The probe over-fetches a
     * bounded candidate set, verifies liveness against the source with a
     * pushed id IN-list (zone-pruned point reads — O(k), never a corpus
     * scan), and returns the top `k` live survivors. Scores keep the
@@ -360,10 +359,9 @@ object Fts {
   }
 
   /** The liveness mask shared by [[searchPersistedLive]] and
-    * [[searchCombinedLive]] (the ANN
-    * [[graft.operators.Similarity.ivfSearchCombinedLive]] shape): the
-    * source joins the broadcast candidate set `(doc_id, score)`, and the
-    * lance scan's SupportsRuntimeV2Filtering receives the realized
+    * [[searchCombinedLive]]: the source joins the broadcast candidate
+    * set `(doc_id, score)`, and the lance scan's
+    * SupportsRuntimeV2Filtering receives the realized
     * candidate ids as an IN-list zone filter once the broadcast
     * materializes — bounded point reads, never a corpus scan, no
     * driver-side collect, and the probe's broadcast is shared with the
@@ -680,8 +678,9 @@ object Fts {
   }
 
   /** The full between-rebuilds search contract ([[searchCombined]] +
-    * [[searchPersistedLive]] composed — the ANN
-    * [[graft.operators.Similarity.ivfSearchCombinedLive]] twin): appended
+    * [[searchPersistedLive]] composed — the FTS counterpart of
+    * [[graft.operators.Similarity.ivfSearchCombinedLive]], which re-scores
+    * its candidates against the live source instead): appended
     * docs rank via on-the-fly tail postings, and docs deleted from the
     * source since the build (indexed OR appended) drop from the final
     * ranked set through the same runtime-filter liveness join — the

@@ -81,15 +81,6 @@ object Similarity {
     sig
   }
 
-  /** IVF (inverted-file) index: a KMeans coarse quantizer assigns every
-    * vector to one of `nLists` lists (SURVEY §2.5 "scale path: IVF —
-    * KMeans (MLlib) coarse quantizer, partition-pruned search").
-    *
-    * At 100 TB the returned frame is materialized partitioned-by-list;
-    * a query then reads only its `nProbe` nearest lists — storage-level
-    * pruning the same way lance-index's IVF does. Returns (indexed frame
-    * with a `list_id` column, centroid matrix).
-    */
   /** Spread a compute-dense per-row pass across the session's cores.
     * Size-based file splitting under-parallelizes when the input is a
     * few dense row groups but the per-row kernel is heavy — a
@@ -105,6 +96,15 @@ object Similarity {
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }
 
+  /** IVF (inverted-file) index: a KMeans coarse quantizer assigns every
+    * vector to one of `nLists` lists (SURVEY §2.5 "scale path: IVF —
+    * KMeans (MLlib) coarse quantizer, partition-pruned search").
+    *
+    * At 100 TB the returned frame is materialized partitioned-by-list;
+    * a query then reads only its `nProbe` nearest lists — storage-level
+    * pruning the same way lance-index's IVF does. Returns (indexed frame
+    * with a `list_id` column, centroid matrix).
+    */
   def ivfIndex(df: DataFrame, idCol: String, vecCol: String,
                nLists: Int, seed: Long = 42L): (DataFrame, Array[Array[Double]]) = {
     // The quantizer trains on a bounded DETERMINISTIC sample (hash-gated
@@ -452,21 +452,18 @@ object Similarity {
     * covered source version. */
   def ivfUpdateIndex(spark: org.apache.spark.sql.SparkSession,
                      sourcePath: String, indexPath: String,
-                     idCol: String, vecCol: String,
-                     writePartitions: Int = 2): Long =
-    updateIndex(spark, sourcePath, indexPath, idCol, vecCol, writePartitions, Flat)
+                     idCol: String, vecCol: String): Long =
+    updateIndex(spark, sourcePath, indexPath, idCol, vecCol, Flat)
 
   /** [[ivfUpdateIndex]] for the IVF_PQ flavor. */
   def ivfPqUpdateIndex(spark: org.apache.spark.sql.SparkSession,
                        sourcePath: String, indexPath: String,
-                       idCol: String, vecCol: String,
-                       writePartitions: Int = 2): Long =
-    updateIndex(spark, sourcePath, indexPath, idCol, vecCol, writePartitions, Pq)
+                       idCol: String, vecCol: String): Long =
+    updateIndex(spark, sourcePath, indexPath, idCol, vecCol, Pq)
 
   private def updateIndex(spark: org.apache.spark.sql.SparkSession,
                           sourcePath: String, indexPath: String,
-                          idCol: String, vecCol: String,
-                          writePartitions: Int, f: Flavor): Long = {
+                          idCol: String, vecCol: String, f: Flavor): Long = {
     import graft.sources.lance.{LanceMaintenance, MaintenanceLock}
     val conf = spark.sessionState.newHadoopConf()
     // fenced like every index update: a holder swept as stale after a
@@ -532,8 +529,9 @@ object Similarity {
             try {
               fence.check()
               LanceMaintenance.mergeInsert(spark, dataPath,
+                // an over-cap tail lands as two list-range fragments
                 rows
-                  .repartitionByRange(math.max(writePartitions, 1), col("list_id"))
+                  .repartitionByRange(2, col("list_id"))
                   .sortWithinPartitions("list_id"),
                 Seq(idCol))
             } finally rows.unpersist(false)
@@ -599,14 +597,25 @@ object Similarity {
       Sidecars(rows.map(_.getSeq[Double](1).toArray), width, codebooks)
     }
 
+  /** The sidecars a probe of `f` reads at `meta`'s pins (head without
+    * one — see [[Flavor]]). A `Flat` probe also enables the SQL rewrite
+    * at the width PERSISTED by the build: a call's nProbe is a per-query
+    * parameter and must not leak into later rewrites. */
+  private def probeSidecars(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+                            f: Flavor, meta: Option[Published]): Sidecars = {
+    def pin(column: String): Option[Long] = meta.flatMap(_.pin(column))
+    val sc = sidecars(spark, indexPath, f, pin("centroids_version"), pin("codebooks_version"))
+    if (f == Flat) graft.plans.GraftAnn.registerIfAbsent(
+      s"$indexPath/${f.dataName}", sc.centroids, sc.nProbe)
+    sc
+  }
+
   /** The index dataset and sidecars a probe reads, all pinned by ONE
     * publish record (head without one) — see [[Flavor]]. */
   private def pinnedIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                          f: Flavor, meta: Option[Published]): (DataFrame, Sidecars) = {
-    def pin(column: String): Option[Long] = meta.flatMap(_.pin(column))
-    (IndexStore.pinned(spark, indexPath, f.dataName, pin("vectors_version")),
-      sidecars(spark, indexPath, f, pin("centroids_version"), pin("codebooks_version")))
-  }
+                          f: Flavor, meta: Option[Published]): (DataFrame, Sidecars) =
+    (IndexStore.pinned(spark, indexPath, f.dataName, meta.flatMap(_.pin("vectors_version"))),
+      probeSidecars(spark, indexPath, f, meta))
 
   /** Test hook: simulate a fresh process (sidecar and meta re-reads). */
   private[graft] def clearIndexCaches(): Unit = {
@@ -631,103 +640,162 @@ object Similarity {
     * scans the head instead — its relation IS the user-visible table. */
   def ivfSearchPersisted(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, idCol: String, vecCol: String,
-                         query: Seq[Float], k: Int, nProbe: Int = DefaultNProbe): DataFrame =
-    ivfSearchPersistedAt(spark, indexPath, idCol, vecCol, query, k, nProbe,
-      published(spark, indexPath, Flat))
-
-  /** The probe interior with the explicit publish record — the combined
-    * face resolves the WHOLE record in ONE [[published]] read and passes
-    * it here so the tail bound and the pins can never tear. */
-  private def ivfSearchPersistedAt(spark: org.apache.spark.sql.SparkSession,
-                                   indexPath: String, idCol: String,
-                                   vecCol: String, query: Seq[Float],
-                                   k: Int, nProbe: Int,
-                                   meta: Option[Published]): DataFrame = {
-    val (indexed, sc) = pinnedIndex(spark, indexPath, Flat, meta)
-    // the SQL-rewrite registration uses the width PERSISTED by the build
-    // — this call's nProbe is a per-query parameter and must not leak
-    // into later SQL rewrites
-    graft.plans.GraftAnn.registerIfAbsent(
-      s"$indexPath/${Flat.dataName}", sc.centroids, sc.nProbe)
+                         query: Seq[Float], k: Int, nProbe: Int = DefaultNProbe): DataFrame = {
+    val (indexed, sc) = pinnedIndex(spark, indexPath, Flat, published(spark, indexPath, Flat))
     ivfCosineTopK(indexed, sc.centroids, idCol, vecCol, query, k, nProbe)
   }
 
   /** The full crate search contract on a STALE index — appends AND
-    * deletions since the build: the indexed side probes with liveness
-    * masked via the runtime-filter join against the current source (the
-    * plain index stores a COPY of the vectors, so deleted-but-indexed rows
-    * would otherwise surface), the tail side brute-forces only the
-    * fragments appended after the recorded build version (a `fromVersion`
-    * CDC scan; deletions among appended rows are masked by the scan
-    * itself), and the two top-k streams merge. This is what
-    * `dataset.search()` does in the crate between index rebuilds: index
-    * hits minus the deletion bitmap, plus an unindexed-tail flat scan. */
+    * deletions since the build, as `dataset.search()` answers between
+    * rebuilds ([[combinedLive]]). The candidate step ranks the top 2k by
+    * exact cosine of the probed lists' stored vector copies. */
   def ivfSearchCombinedLive(spark: org.apache.spark.sql.SparkSession,
                             indexPath: String, sourcePath: String,
                             idCol: String, vecCol: String,
                             query: Seq[Float], k: Int,
-                            nProbe: Int = DefaultNProbe): DataFrame = {
-    // ONE atomic meta read: the tail bound and the pins must come from
-    // the same publish, or a cross-process update between two reads
-    // would empty the tail while probing the pre-update index
-    val meta = requireMeta(spark, indexPath, Flat)
-    val tail = spark.read.format("lance")
-      .option("fromVersion", meta.built).load(sourcePath)
-    val tailTop = cosineTopK(tail, idCol, vecCol, query, k)
-    // An id present in the post-build tail = a row deleted and
-    // re-appended since the build (an update): the id-existence liveness
-    // check keeps the STALE indexed copy alive, but the crate's
-    // row-level deletion bitmap would mask it — drop indexed hits whose
-    // id reappears ANYWHERE in the tail (not just in tailTop: a poorly-
-    // ranking re-append must still retire its stale copy). The
-    // retirement applies to the FULL 2k live over-fetch, BEFORE any
-    // top-k cut: cutting first would let each retired hit permanently
-    // consume a top-k slot, silently dropping live indexed rows ranked
-    // k+1..2k that outrank tail rows.
-    val cands = ivfSearchPersistedAt(spark, indexPath, idCol, vecCol,
-      query, 2 * k, nProbe, Some(meta))
-    // Liveness mask via Spark's runtime-filter path, no driver collect:
-    // the source joins the broadcast candidate set, and because the lance
-    // scan implements SupportsRuntimeV2Filtering (with idCol among its
-    // filterAttributes) the optimizer's PartitionPruning rule attaches a
-    // dynamic-pruning subquery that reuses the candidate broadcast — once
-    // the ≤2k candidates materialize, their realized ids reach the
-    // source scan as an IN-list zone filter (bounded point reads — O(k)
-    // like the crate's per-candidate deletion-bitmap check, never a
-    // corpus scan). The probe subtree appears ONCE in the plan and its
-    // broadcast is shared between the join build side and the pruning
-    // subquery, so the probe executes once; the whole result stays a lazy
-    // distributed plan. LivenessJoinSpec pins that the runtime filter
-    // actually reaches the source scan and prunes fragments.
-    //
-    // grouped first-win: the inner join emits one row per matching SOURCE
-    // row, so a source holding duplicate ids (update-by-append) would
-    // repeat a candidate. Grouping on the id alone (instead of an
-    // all-columns distinct) keeps the exchange keyed on ≤2k ids after
-    // map-side partial aggregation, and under duplicate ids in the INDEX
-    // itself deterministically keeps the best-scoring copy.
-    val idxLive = spark.read.format("lance").load(sourcePath).select(col(idCol))
-      .join(broadcast(cands), Seq(idCol), "inner")
-      .groupBy(col(idCol)).agg(max(col("cos")).as("cos"))
-    // Realize the retired ids as a ≤2k set FIRST: tail ids semi-join the
-    // SAME broadcast candidate set (retiring on the candidate-id superset
-    // equals retiring on live-candidate ids — idxLive's ids are a subset
-    // of cands', and extra retired ids hit nothing in the anti-join), and
-    // only THEN do the candidates anti-join the realized set. A left_anti
-    // join can only broadcast its RIGHT side, so anti-joining the raw
-    // tail id projection would shuffle (or broadcast) the whole append
-    // sliver at 100 TB; here the tail streams against a broadcast and its
-    // id scan receives the candidate IN-list as a runtime zone filter
-    // (the liveness-join machinery), so retirement costs O(k) point reads
-    // of the tail, never a sliver pass. Both retirement joins broadcast
-    // the identical `cands` subtree with the identical id key, so the
-    // exchange is planned once and reused (probe executes once here).
-    val retired = tail.select(col(idCol))
-      .join(broadcast(cands), Seq(idCol), "left_semi")
-    val idxOnly = idxLive.join(broadcast(retired), Seq(idCol), "left_anti")
-    idxOnly.unionByName(tailTop)
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
+                            nProbe: Int = DefaultNProbe): DataFrame =
+    combinedLive(spark, indexPath, sourcePath, idCol, vecCol, query, k, nProbe,
+      Flat, 2 * k)
+
+  /** [[ivfSearchCombinedLive]] for an IVF_PQ index: the candidate step
+    * ranks the top `k * rerank` by ADC over the probed lists of
+    * `pq.lance`. */
+  def ivfPqSearchCombinedLive(spark: org.apache.spark.sql.SparkSession,
+                              indexPath: String, sourcePath: String,
+                              idCol: String, vecCol: String,
+                              query: Seq[Float], k: Int,
+                              nProbe: Int = DefaultNProbe,
+                              rerank: Int = 4): DataFrame =
+    combinedLive(spark, indexPath, sourcePath, idCol, vecCol, query, k, nProbe,
+      Pq, k * rerank)
+
+  /** The one combined-live body, both flavors: index hits minus the
+    * deletion bitmap, plus a flat scan of the unindexed tail. The
+    * flavor's candidate step ranks the top `fetch` ids over the probed
+    * lists of its pinned index — exact cosine of the stored vector copies
+    * (`Flat`, [[ivfCosineTopK]]) or ADC of the codes (`Pq`, [[adcTopK]]).
+    * The exact re-rank ([[exactRerank]]) scores them against the LIVE
+    * source, so deleted rows drop out and a deleted-then-re-appended id
+    * scores with its CURRENT vector, never its stale indexed copy or
+    * code. The rows appended after the recorded build version get a
+    * brute-force scan (a `fromVersion` scan, a sliver until the next
+    * rebuild or update), and a grouped max merges an id both sides hold
+    * before the top-k cut (both score it from the live source, so the
+    * copies agree).
+    *
+    * ONE meta read: the tail bound and every pin come from the same
+    * publish, so a cross-process update between two reads cannot empty
+    * the tail while the probe reads the pre-update index. A meta-less
+    * (DataFrame-built) index is refused. Answered on the driver with no
+    * job when every read fits the cap ([[combinedLocal]]), else one lazy
+    * DSv2 plan. */
+  private def combinedLive(spark: org.apache.spark.sql.SparkSession,
+                           indexPath: String, sourcePath: String,
+                           idCol: String, vecCol: String, query: Seq[Float],
+                           k: Int, nProbe: Int, f: Flavor, fetch: Int): DataFrame = {
+    val meta = requireMeta(spark, indexPath, f)
+    val sc = probeSidecars(spark, indexPath, f, Some(meta))
+    combinedLocal(spark, indexPath, sourcePath, idCol, vecCol, query, k, nProbe,
+        f, fetch, meta, sc).getOrElse {
+      val index = IndexStore.pinned(spark, indexPath, f.dataName, meta.pin("vectors_version"))
+      val tail = spark.read.format("lance")
+        .option("fromVersion", meta.built).load(sourcePath)
+      val cands = f match {
+        case Flat => ivfCosineTopK(index, sc.centroids, idCol, vecCol, query, fetch, nProbe)
+        case Pq => adcTopK(index, sc, idCol, query, nProbe, fetch)
+      }
+      exactRerank(spark.read.format("lance").load(sourcePath), cands, idCol, vecCol, query)
+        .unionByName(cosineTopK(tail, idCol, vecCol, query, k))
+        .groupBy(col(idCol)).agg(max(col("cos")).as("cos"))
+        .orderBy(col("cos").desc, col(idCol))
+        .limit(k)
+    }
+  }
+
+  /** The IVF_PQ candidate step over `codes`, `pq.lance` at the pin: the
+    * top `fetch` (idCol, acos) rows of the `nProbe` probed lists by ADC. */
+  private def adcTopK(codes: DataFrame, sc: Sidecars, idCol: String,
+                      query: Seq[Float], nProbe: Int, fetch: Int): DataFrame =
+    codes.filter(col("list_id").isin(probeLists(sc.centroids, query, nProbe): _*))
+      .select(col(idCol),
+        (graft.functions.ArrayKernels.pqAdcScore(col("pq_code"),
+          typedlit(adcLut(sc.codebooks, query).toSeq)) / lit(queryNorm(query))).as("acos"))
+      .orderBy(col("acos").desc, col(idCol))
+      .limit(fetch)
+
+  /** (idCol, cos) of every `corpus` row whose id is a candidate, with NO
+    * driver collect: the corpus semi-joins the broadcast candidate ids,
+    * and when it is a lance scan its SupportsRuntimeV2Filtering receives
+    * the realized ids as an IN-list zone filter through the
+    * PartitionPruning subquery that REUSES the candidate broadcast —
+    * bounded point reads of candidate rows, never a table scan, and the
+    * candidate step executes once. */
+  private def exactRerank(corpus: DataFrame, cands: DataFrame, idCol: String,
+                          vecCol: String, query: Seq[Float]): DataFrame =
+    corpus.join(broadcast(cands.select(col(idCol))), Seq(idCol), "left_semi")
+      .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("cos"))
+
+  /** [[combinedLive]] computed on the driver through bounded local reads
+    * ([[LanceLocal]]), with no Spark job: the candidate step over the
+    * pinned index rows, the exact re-rank and the tail brute force run
+    * the Spark plan's kernel bodies ([[graft.functions.FloatCosine]],
+    * [[graft.functions.PqAdcScore]]) over rows read at ONE source head,
+    * and rank as its sorts do. None when a read is over the cap, the id
+    * column is not integral, a vector column is not float, or the query
+    * has zero norm (the ADC division then yields nulls); the caller runs
+    * the DSv2 plan. */
+  private def combinedLocal(spark: org.apache.spark.sql.SparkSession,
+                            indexPath: String, sourcePath: String,
+                            idCol: String, vecCol: String, query: Seq[Float],
+                            k: Int, nProbe: Int, f: Flavor, fetch: Int,
+                            meta: Published, sc: Sidecars): Option[DataFrame] = {
+    import graft.sources.lance.ZoneFilter
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    val qNorm = queryNorm(query)
+    if (qNorm == 0.0) return None
+    val lists = probeLists(sc.centroids, query, nProbe)
+    val q = UnsafeArrayData.fromPrimitiveArray(query.toArray)
+    def cos(r: InternalRow, i: Int): java.lang.Double =
+      if (r.isNullAt(i)) null else graft.functions.FloatCosine.score(r.getArray(i), q)
+    // the index column a candidate is scored from (read third), and its score
+    val (scoredCol, score): (String, InternalRow => java.lang.Double) = f match {
+      case Flat => (vecCol, cos(_, 2))
+      case Pq =>
+        val lut = UnsafeArrayData.fromPrimitiveArray(adcLut(sc.codebooks, query))
+        ("pq_code", r => if (r.isNullAt(2)) null
+                         else graft.functions.PqAdcScore.score(r.getLong(2), lut) / qNorm)
+    }
+    def floats(got: LanceLocal.Rows, c: String): Boolean = got.schema(c).dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    // the source's head manifest, read once for the re-rank and the tail
+    val head = LanceLocal.snapshot(spark, sourcePath)
+    // (id, exact cosine) of every live source row `keep` admits
+    def exact(from: Option[Long], zone: Option[ZoneFilter],
+              keep: Long => Boolean): Option[(DataType, Seq[(Long, java.lang.Double)])] =
+      LanceLocal.readAt(head, from, Seq(idCol, vecCol), zone.toSeq)
+        .filter(floats(_, vecCol))
+        .flatMap(got => idsOf(got).map(id => (got.schema(idCol).dataType,
+          got.rows.collect { case r if keep(id(r)) => (id(r), cos(r, 1)) })))
+    for {
+      index <- LanceLocal.read(spark, s"$indexPath/${f.dataName}", meta.pin("vectors_version"),
+          columns = Seq(idCol, "list_id", scoredCol),
+          zoneFilters = ZoneFilter.in("list_id", lists).toSeq)
+        .filter(got => f == Pq || floats(got, vecCol))
+      id <- idsOf(index)
+      probed = lists.toSet
+      cands = rankDesc(index.rows.collect {
+        case r if !r.isNullAt(1) && probed(r.getInt(1)) => (id(r), score(r))
+      }, fetch).map(_._1).toSet
+      (dt, reranked) <- exact(None, ZoneFilter.in(idCol, cands.toSeq), cands)
+      (_, tail) <- exact(Some(meta.built), None, _ => true)
+    } yield {
+      val best = (reranked ++ rankDesc(tail, k)).groupBy(_._1).toSeq
+        .map { case (i, hits) => (i, hits.map(_._2).reduce(maxScore)) }
+      scored(spark, idCol, dt, "cos", rankDesc(best, k))
+    }
   }
 
   // ---- IVF_PQ: product-quantized persisted index (lance-index IVF_PQ
@@ -760,30 +828,19 @@ object Similarity {
   /** Probe an IVF_PQ index: pick `nProbe` lists driver-side, scan only
     * their fragments of `pq.lance`, score codes with the one-lookup-per-
     * subspace ADC kernel, keep the top `k * rerank` candidates, then
-    * re-rank those ids EXACTLY against `corpus` via a broadcast semi-join
-    * (the realized candidate ids push into a lance corpus scan's zone
-    * maps as a runtime IN-list filter, so re-rank touches candidate rows,
-    * not the table). One bounded driver transfer: probe lists (nLists
-    * rows); candidate ids stay distributed. */
+    * re-rank those ids EXACTLY against `corpus` ([[exactRerank]]: the
+    * realized candidate ids reach a lance corpus scan as a runtime
+    * IN-list filter, so re-rank touches candidate rows, not the table).
+    * One bounded driver transfer: probe lists (nLists rows); candidate
+    * ids stay distributed. */
   def ivfPqSearch(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                   corpus: DataFrame, idCol: String, vecCol: String,
                   query: Seq[Float], k: Int, nProbe: Int = DefaultNProbe,
-                  rerank: Int = 4): DataFrame = {
-    val cand = ivfPqCandidates(spark, indexPath, idCol, query, k, nProbe, rerank)
-    // Exact re-rank with NO driver collect (the liveness-join shape): the
-    // corpus semi-joins the broadcast ADC top-(k·rerank) candidate ids,
-    // and when the corpus is a lance scan its
-    // SupportsRuntimeV2Filtering receives the realized ids as an IN-list
-    // zone filter through the PartitionPruning subquery that REUSES the
-    // candidate broadcast — bounded point reads of candidate rows, never
-    // a table scan, and the ADC probe executes once. A semi-join keeps
-    // each corpus row at most once (exactly the old isin semantics), so
-    // no dedup is needed.
-    corpus.join(broadcast(cand.select(col(idCol))), Seq(idCol), "left_semi")
-      .select(col(idCol), cosine(col(vecCol), typedlit(query)).as("cos"))
+                  rerank: Int = 4): DataFrame =
+    exactRerank(corpus, ivfPqCandidates(spark, indexPath, idCol, query, k, nProbe, rerank),
+        idCol, vecCol, query)
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
-  }
 
   /** The ADC candidate plan of [[ivfPqSearch]] — (idCol, acos), the top
     * `k * rerank` approximate hits from the probed lists of `pq.lance`,
@@ -794,15 +851,8 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       idCol: String, query: Seq[Float], k: Int, nProbe: Int,
       rerank: Int): DataFrame = {
-    val (codes, sc) = pinnedIndex(spark, indexPath, Pq,
-      published(spark, indexPath, Pq))
-    codes
-      .filter(col("list_id").isin(probeLists(sc.centroids, query, nProbe): _*))
-      .select(col(idCol),
-        (graft.functions.ArrayKernels.pqAdcScore(col("pq_code"),
-          typedlit(adcLut(sc.codebooks, query).toSeq)) / lit(queryNorm(query))).as("acos"))
-      .orderBy(col("acos").desc, col(idCol))
-      .limit(k * rerank)
+    val (codes, sc) = pinnedIndex(spark, indexPath, Pq, published(spark, indexPath, Pq))
+    adcTopK(codes, sc, idCol, query, nProbe, k * rerank)
   }
 
   /** The ADC lookup table of `query`: dot(query_s, code) and |code|^2 per
@@ -830,105 +880,6 @@ object Similarity {
 
   private def queryNorm(query: Seq[Float]): Double =
     math.sqrt(query.map(_.toDouble).map(x => x * x).sum)
-
-  /** The full between-rebuilds search contract for the PQ flavor —
-    * [[ivfSearchCombinedLive]] for an IVF_PQ index, in ONE face because
-    * the PQ path gets liveness for free: the exact re-rank reads the
-    * LIVE source, so deleted candidates drop out of the re-rank
-    * semi-join, and a deleted-then-re-appended id scores with its
-    * CURRENT vector (never the stale code's) — no anti-join retirement
-    * and no over-fetch refill hazard, since the re-rank refills top-k
-    * from the k*rerank ADC candidate pool. The tail side brute-forces
-    * only the fragments appended after the recorded build version (a
-    * sliver until the next rebuild or [[ivfPqUpdateIndex]]). An id
-    * surfacing on both sides carries the SAME exact cosine — both sides
-    * compute it from the live source — so a grouped first-win dedups
-    * without choosing between copies.
-    *
-    * Torn-read note: unlike the plain flavor this face needs no atomic
-    * (built_version, pin) pair. If a cross-process optimize publishes
-    * between this tail-bound read and the probe's own pin read, every
-    * row the newer index covers also still sits in the older-bounded
-    * (larger) tail, and the grouped max merges the duplicates —
-    * correctness never rests on the two meta reads agreeing. */
-  def ivfPqSearchCombinedLive(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String, sourcePath: String,
-                              idCol: String, vecCol: String,
-                              query: Seq[Float], k: Int,
-                              nProbe: Int = DefaultNProbe,
-                              rerank: Int = 4): DataFrame = {
-    val meta = requireMeta(spark, indexPath, Pq)
-    pqCombinedLocal(spark, indexPath, sourcePath, idCol, vecCol, query, k,
-        nProbe, rerank, meta).getOrElse {
-      val live = spark.read.format("lance").load(sourcePath)
-      val idxTop = ivfPqSearch(spark, indexPath, live, idCol, vecCol,
-        query, k, nProbe, rerank)
-      val tail = spark.read.format("lance")
-        .option("fromVersion", meta.built).load(sourcePath)
-      val tailTop = cosineTopK(tail, idCol, vecCol, query, k)
-      idxTop.unionByName(tailTop)
-        .groupBy(col(idCol)).agg(max(col("cos")).as("cos"))
-        .orderBy(col("cos").desc, col(idCol))
-        .limit(k)
-    }
-  }
-
-  /** [[ivfPqSearchCombinedLive]] computed on the driver through bounded
-    * local reads ([[LanceLocal]]), with no Spark job: the ADC probe of the
-    * pinned codes, the exact re-rank and the tail brute force run the
-    * Spark plan's kernel bodies ([[graft.functions.PqAdcScore]],
-    * [[graft.functions.FloatCosine]]) over rows read at ONE source head,
-    * and rank as its sorts do. None when a read is over the cap, the id
-    * column is not integral, or the query has zero norm (the plan's
-    * division then yields nulls); the caller runs the DSv2 plan. */
-  private def pqCombinedLocal(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String, sourcePath: String,
-                              idCol: String, vecCol: String,
-                              query: Seq[Float], k: Int, nProbe: Int,
-                              rerank: Int, meta: Published): Option[DataFrame] = {
-    import graft.sources.lance.ZoneFilter
-    val qNorm = queryNorm(query)
-    if (qNorm == 0.0) return None
-    val sc = sidecars(spark, indexPath, Pq, meta.pin("centroids_version"),
-      meta.pin("codebooks_version"))
-    val lists = probeLists(sc.centroids, query, nProbe)
-    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-    val lut = UnsafeArrayData.fromPrimitiveArray(adcLut(sc.codebooks, query))
-    val q = UnsafeArrayData.fromPrimitiveArray(query.toArray)
-    // the source's head manifest, read once for the re-rank and the tail
-    val head = LanceLocal.snapshot(spark, sourcePath)
-    // (id, exact cosine) of every live source row `keep` admits
-    def exact(from: Option[Long], zone: Option[ZoneFilter],
-              keep: Long => Boolean): Option[(DataType, Seq[(Long, java.lang.Double)])] =
-      LanceLocal.readAt(head, from, Seq(idCol, vecCol), zone.toSeq)
-        .filter(_.schema(vecCol).dataType match {
-          case ArrayType(FloatType, _) => true
-          case _ => false
-        })
-        .flatMap(got => idsOf(got).map(id => (got.schema(idCol).dataType, got.rows.collect {
-          case r if keep(id(r)) =>
-            (id(r), if (r.isNullAt(1)) null
-                    else graft.functions.FloatCosine.score(r.getArray(1), q): java.lang.Double)
-        })))
-    for {
-      codes <- LanceLocal.read(spark, s"$indexPath/${Pq.dataName}",
-        meta.pin("vectors_version"), columns = Seq(idCol, "list_id", "pq_code"),
-        zoneFilters = ZoneFilter.in("list_id", lists).toSeq)
-      id <- idsOf(codes)
-      probed = lists.toSet
-      cands = rankDesc(codes.rows.collect {
-        case r if !r.isNullAt(1) && probed(r.getInt(1)) =>
-          (id(r), if (r.isNullAt(2)) null
-                  else graft.functions.PqAdcScore.score(r.getLong(2), lut) / qNorm: java.lang.Double)
-      }, k * rerank).map(_._1).toSet
-      (dt, reranked) <- exact(None, ZoneFilter.in(idCol, cands.toSeq), cands)
-      (_, tail) <- exact(Some(meta.built), None, _ => true)
-    } yield {
-      val best = (rankDesc(reranked, k) ++ rankDesc(tail, k)).groupBy(_._1).toSeq
-        .map { case (i, hits) => (i, hits.map(_._2).reduce(maxScore)) }
-      scored(spark, idCol, dt, "cos", rankDesc(best, k))
-    }
-  }
 
   /** The reader of a local read's first column as ids: None unless it is
     * integral and non-null in every row. */

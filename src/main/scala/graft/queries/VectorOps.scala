@@ -397,12 +397,12 @@ object VectorOps {
     }, None),
 
     // --- the FULL between-rebuilds contract, composed (the crate's
-    // dataset.search() between index rebuilds): the indexed side probes
-    // with liveness masked via the runtime-filter join (stale copies of
-    // re-appended ids retired BEFORE the top-k cut, refilled from the 2k
-    // over-fetch), the tail side brute-forces only the post-build
-    // fragments, and the two top-k streams merge. Rows-only (IVF probe
-    // sets are index-specific); correctness pinned by the
+    // dataset.search() between index rebuilds): the 2k probe candidates
+    // re-rank exactly against the LIVE source (deleted rows drop out, a
+    // re-appended id scores with its current vector, and the over-fetch
+    // refills their slots), the tail side brute-forces only the
+    // post-build fragments, and a grouped max merges the two. Rows-only
+    // (IVF probe sets are index-specific); correctness pinned by the
     // combined+live/refill specs in SimilaritySpec. ----------------------
     QDef("e06e_ivf_combined_live", (s, dir) => {
       val t = Tables.register(s, dir)
@@ -414,13 +414,11 @@ object VectorOps {
         .select(col("vec_id"), round(col("cos"), 9).as("cos"))
     }, None),
 
-    // The same between-rebuilds contract for the PQ flavor, in ONE face:
-    // the exact re-rank reads the LIVE source, so deletions and updated
-    // vectors are masked without the plain flavor's anti-join retirement
-    // (a deleted-then-re-appended id scores with its current vector);
-    // the tail side brute-forces only the post-build fragments. Rows-only
-    // (ADC candidate sets are index-specific); correctness pinned by the
-    // ivfPqSearchCombinedLive mutate-all-three-ways spec.
+    // The same between-rebuilds contract, and the same body, for the PQ
+    // flavor: only the candidate step differs (the top k·rerank by ADC
+    // over pq.lance). Rows-only (ADC candidate sets are index-specific);
+    // correctness pinned by the ivfPqSearchCombinedLive
+    // mutate-all-three-ways spec.
     QDef("e08b_ivfpq_combined_live", (s, dir) => {
       val t = Tables.register(s, dir)
       val query = t("embeddings").filter(col("vec_id") === 0)

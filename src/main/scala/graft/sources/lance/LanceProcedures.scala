@@ -609,7 +609,8 @@ private[lance] object LanceProcedures {
     // [[graft.operators.Similarity.ivfBuildPersistLance]] — the offline
     // IVF build (range-partitioned vectors.lance + centroid sidecar with
     // the persisted probe width), recording the source head version so
-    // ivfSearchCombinedLive can brute-force the post-build append tail. Also
+    // ivfSearchCombinedLive can brute-force the post-build append tail and
+    // re-rank the index candidates against the live source. Also
     // registers the `ORDER BY graft_cosine(...) DESC LIMIT k` planner
     // rewrite for this session. Returns the recorded source version.
     val createIvf = Proc("create_ivf_index",

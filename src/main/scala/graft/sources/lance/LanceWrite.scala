@@ -81,11 +81,16 @@ class LanceWriteBuilder(path: String, info: LogicalWriteInfo,
       if (explicitLayout || Option(info.options.get("sortBy")).isDefined)
         cols("sortBy")
       else defaultSort
+    val numPartitions = Option(info.options.get("writePartitions")).map(_.toInt).getOrElse(0)
+    // a fragment count shapes only a laid-out write: Spark refuses a
+    // partition count over an unspecified distribution
+    require(numPartitions == 0 || partitionBy.nonEmpty || clusterBy.nonEmpty ||
+        bucketBy.isDefined || sortBy.nonEmpty,
+      "lance: writePartitions needs a layout: sortBy, clusterBy, partitionBy or bucketBy")
     new LanceWrite(path, info.schema(), doTruncate, fsl,
       clusterBy = clusterBy, sortBy = sortBy,
       partitionBy = partitionBy, bucketBy = bucketBy,
-      numPartitions = Option(info.options.get("writePartitions"))
-        .map(_.toInt).getOrElse(0),
+      numPartitions = numPartitions,
       stableRowIds = Option(info.options.get("stableRowIds"))
         .exists(_.toBoolean),
       codec = {

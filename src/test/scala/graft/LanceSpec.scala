@@ -579,6 +579,21 @@ class LanceSpec extends AnyFunSuite {
     assert(spread == 1, s"a grp value spans $spread fragments")
   }
 
+  test("writePartitions without a layout is refused by name") {
+    val ds = tmpDs()
+    val err = intercept[IllegalArgumentException] {
+      spark.range(100).toDF("id").write.format("lance")
+        .option("writePartitions", "2").mode("overwrite").save(ds)
+    }
+    Seq("writePartitions", "sortBy", "clusterBy", "partitionBy", "bucketBy").foreach { o =>
+      assert(err.getMessage.contains(o), err.getMessage)
+    }
+    // with a layout the same fragment count writes
+    spark.range(100).toDF("id").write.format("lance")
+      .option("sortBy", "id").option("writePartitions", "2").mode("overwrite").save(ds)
+    assert(spark.read.format("lance").load(ds).count() == 100)
+  }
+
   test("versionAsOf resolves an explicit manifest version") {
     val df = spark.read.format("lance").option("versionAsOf", "1").load(golden)
     assert(df.count() == 5)

@@ -355,6 +355,9 @@ class SkewSpec extends AnyFunSuite {
 }
 
 class SimilaritySpec extends AnyFunSuite {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -478,191 +481,193 @@ class SimilaritySpec extends AnyFunSuite {
   test("delete-aware IVF probe masks rows deleted from the source after build") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
     val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_live").toString
-    val src = s"$dir/corpus.lance"
-    // range-sorted on vec_id across 8 fragments: the liveness runtime
-    // filter's fragment pruning is assertable (candidate ids cluster in
-    // few id ranges only by luck, so the assertion below is the weaker
-    // but layout-independent "planned < total")
-    emb.filter(col("vec_id") > 0).write.format("lance")
-      .option("sortBy", "vec_id").option("writePartitions", "8")
-      .mode("overwrite").save(src)
-    Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("ivf_live").toString
+      val src = s"$dir/corpus.lance"
+      // the fixture is range-sorted on vec_id across 8 fragments; the
+      // padded twin is one fragment, so its source reads are over the cap
+      val w = twin(emb.filter(col("vec_id") > 0), padded).write.format("lance")
+      (if (padded) w else w.option("sortBy", "vec_id").option("writePartitions", "8"))
+        .mode("overwrite").save(src)
+      Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
 
-    val before = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
-      query, k = 10, nProbe = 6).select("vec_id").as[Long].collect().toSeq
-    // delete the top two hits from the SOURCE (the index copy keeps them)
-    val gone = before.take(2)
-    graft.sources.lance.LanceMaintenance.deleteWhere(spark, src,
-      s"vec_id IN (${gone.mkString(",")})")
+      val before = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
+        query, k = 10, nProbe = 6).select("vec_id").as[Long].collect().toSeq
+      // delete the top two hits from the SOURCE (the index copy keeps them)
+      val gone = before.take(2)
+      graft.sources.lance.LanceMaintenance.deleteWhere(spark, src,
+        s"vec_id IN (${gone.mkString(",")})")
 
-    val stale = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
-      query, k = 10, nProbe = 6).select("vec_id").as[Long].collect().toSeq
-    assert(gone.forall(stale.contains), "plain probe reads the index copy")
+      val stale = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
+        query, k = 10, nProbe = 6).select("vec_id").as[Long].collect().toSeq
+      assert(gone.forall(stale.contains), "plain probe reads the index copy")
 
-    val liveDf = Similarity.ivfSearchCombinedLive(spark, dir, src,
-      "vec_id", "embedding", query, k = 10, nProbe = 6)
-    // collect liveDf ITSELF (not a derived frame): the plan assertions
-    // below inspect the executed scan instances of this QueryExecution
-    val live = liveDf.collect().toSeq.map(_.getAs[Long]("vec_id"))
-    assert(gone.forall(g => !live.contains(g)), s"deleted ids surfaced: $live")
-    assert(live.length == 10, s"over-fetch margin should refill to k: $live")
-    // exactly the over-fetched candidate ranking minus the dead rows
-    val cand20 = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
-      query, k = 20, nProbe = 6).select("vec_id").as[Long].collect().toSeq
-    assert(live == cand20.filterNot(gone.contains).take(10))
-    // no driver-side collect: the candidate ids reach the SOURCE scan via
-    // Spark's runtime-filter (dynamic pruning) path — pin that the
-    // REALIZED candidate id set (the 2k over-fetch, exactly, not a
-    // superset) was installed as an IN-list zone filter, so liveness
-    // stays O(k) point reads (LanceRuntimeFilterSpec pins that installed
-    // IN zone filters prune fragments via manifest stats)
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    def scansOf(p: SparkPlan): Seq[BatchScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-      case q: QueryStageExec => scansOf(q.plan)
-      case b: BatchScanExec => Seq(b)
-      case other => (other.children ++ other.subqueries).flatMap(scansOf)
-    }
-    val srcScans = scansOf(liveDf.queryExecution.executedPlan)
-      .map(_.scan).collect {
-        case s: graft.sources.lance.LanceScan
-            if s.description().contains("corpus.lance") => s
+      // collect liveDf ITSELF (not a derived frame): the plan assertions
+      // below inspect the executed scan instances of this QueryExecution
+      val (liveDf, live) = onSide(padded) {
+        val df = Similarity.ivfSearchCombinedLive(spark, dir, src,
+          "vec_id", "embedding", query, k = 10, nProbe = 6)
+        (df, df.collect().toSeq.map(_.getAs[Long]("vec_id")))
       }
-    assert(srcScans.nonEmpty, liveDf.queryExecution.executedPlan.toString)
-    val installedIn = srcScans.flatMap(_.installedRuntimeFilters)
-      .filter(f => f.colName == "vec_id" && f.op == "in")
-    assert(installedIn.nonEmpty,
-      s"candidate ids never reached the source scan as a runtime filter:\n" +
-        liveDf.queryExecution.executedPlan)
-    assert(installedIn.exists(_.values.toSet == cand20.map(_.toDouble).toSet),
-      s"installed IN-list != realized candidate set: " +
-        s"${installedIn.map(_.values.sorted)} vs ${cand20.sorted}")
+      assert(gone.forall(g => !live.contains(g)), s"deleted ids surfaced: $live")
+      assert(live.length == 10, s"over-fetch margin should refill to k: $live")
+      // exactly the over-fetched candidate ranking minus the dead rows
+      val cand20 = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
+        query, k = 20, nProbe = 6).select("vec_id").as[Long].collect().toSeq
+      assert(live == cand20.filterNot(gone.contains).take(10))
+      // no driver-side collect on the DSv2 plan: the candidate ids reach
+      // the SOURCE re-rank scan via Spark's runtime-filter (dynamic
+      // pruning) path — pin that the REALIZED candidate id set (the 2k
+      // over-fetch, exactly, not a superset) was installed as an IN-list
+      // zone filter, so the re-rank stays O(k) point reads
+      // (LanceRuntimeFilterSpec pins that installed IN zone filters prune
+      // fragments via manifest stats)
+      if (padded) {
+        val srcScans = scansOf(liveDf.queryExecution.executedPlan)
+          .map(_.scan).collect {
+            case s: graft.sources.lance.LanceScan
+                if s.description().contains("corpus.lance") => s
+          }
+        assert(srcScans.nonEmpty, liveDf.queryExecution.executedPlan.toString)
+        val installedIn = srcScans.flatMap(_.installedRuntimeFilters)
+          .filter(f => f.colName == "vec_id" && f.op == "in")
+        assert(installedIn.nonEmpty,
+          s"candidate ids never reached the source scan as a runtime filter:\n" +
+            liveDf.queryExecution.executedPlan)
+        assert(installedIn.exists(_.values.toSet == cand20.map(_.toDouble).toSet),
+          s"installed IN-list != realized candidate set: " +
+            s"${installedIn.map(_.values.sorted)} vs ${cand20.sorted}")
+      }
+    }
   }
 
   test("combined search covers rows appended after the index build") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
     val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_comb").toString
-    val src = s"$dir/corpus.lance"
-    emb.filter(col("vec_id") > 0 && col("vec_id") % 5 =!= 0)
-      .write.format("lance").mode("overwrite").save(src)
-    Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
-    // append the held-out fifth AFTER the build — not covered by the index
-    emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0)
-      .write.format("lance").mode("append").save(src)
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("ivf_comb").toString
+      val src = s"$dir/corpus.lance"
+      twin(emb.filter(col("vec_id") > 0 && col("vec_id") % 5 =!= 0), padded)
+        .write.format("lance").mode("overwrite").save(src)
+      Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
+      // append the held-out fifth AFTER the build — not covered by the index
+      twin(emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0), padded)
+        .write.format("lance").mode("append").save(src)
 
-    val combined = Similarity.ivfSearchCombinedLive(spark, dir, src,
-      "vec_id", "embedding", query, k = 10, nProbe = 6)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(combined.length == 10)
-    // the exact top-k over the FULL live dataset restricted to (probed
-    // lists ∪ tail) must agree where the tail holds top hits: at minimum,
-    // any exact top-3 hit from the appended tail must surface
-    val exact = Similarity.cosineTopK(
-      spark.read.format("lance").load(src), "vec_id", "embedding", query, 3)
-      .select("vec_id").as[Long].collect().toSeq
-    exact.filter(_ % 5 == 0).foreach { id =>
-      assert(combined.contains(id), s"appended top hit $id missing: $combined")
+      val combined = onSide(padded)(Similarity.ivfSearchCombinedLive(spark, dir, src,
+        "vec_id", "embedding", query, k = 10, nProbe = 6)
+        .select("vec_id").as[Long].collect().toSeq)
+      assert(combined.length == 10)
+      // the exact top-k over the FULL live dataset restricted to (probed
+      // lists ∪ tail) must agree where the tail holds top hits: at minimum,
+      // any exact top-3 hit from the appended tail must surface
+      val exact = Similarity.cosineTopK(
+        spark.read.format("lance").load(src), "vec_id", "embedding", query, 3)
+        .select("vec_id").as[Long].collect().toSeq
+      exact.filter(_ % 5 == 0).foreach { id =>
+        assert(combined.contains(id), s"appended top hit $id missing: $combined")
+      }
+      // stale plain probe cannot see appended rows at all
+      val stale = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
+        query, k = 50, nProbe = 16).select("vec_id").as[Long].collect().toSeq
+      assert(stale.forall(_ % 5 != 0))
     }
-    // stale plain probe cannot see appended rows at all
-    val stale = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
-      query, k = 50, nProbe = 16).select("vec_id").as[Long].collect().toSeq
-    assert(stale.forall(_ % 5 != 0))
   }
 
   test("combined+live search handles appends AND deletions since the build") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
     val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_combl").toString
-    val src = s"$dir/corpus.lance"
-    emb.filter(col("vec_id") > 0 && col("vec_id") % 5 =!= 0)
-      .write.format("lance").mode("overwrite").save(src)
-    Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
-    // after the build: append the held-out fifth AND delete the two top
-    // indexed hits — the crate's between-rebuilds reality
-    emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0)
-      .write.format("lance").mode("append").save(src)
-    val gone = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
-      query, k = 2, nProbe = 6).select("vec_id").as[Long].collect().toSeq
-    graft.sources.lance.LanceMaintenance.deleteWhere(spark, src,
-      s"vec_id IN (${gone.mkString(",")})")
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("ivf_combl").toString
+      val src = s"$dir/corpus.lance"
+      twin(emb.filter(col("vec_id") > 0 && col("vec_id") % 5 =!= 0), padded)
+        .write.format("lance").mode("overwrite").save(src)
+      Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
+      // after the build: append the held-out fifth AND delete the two top
+      // indexed hits — the crate's between-rebuilds reality
+      twin(emb.filter(col("vec_id") > 0 && col("vec_id") % 5 === 0), padded)
+        .write.format("lance").mode("append").save(src)
+      val gone = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
+        query, k = 2, nProbe = 6).select("vec_id").as[Long].collect().toSeq
+      graft.sources.lance.LanceMaintenance.deleteWhere(spark, src,
+        s"vec_id IN (${gone.mkString(",")})")
 
-    val got = Similarity.ivfSearchCombinedLive(spark, dir, src,
-      "vec_id", "embedding", query, k = 10, nProbe = 6)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(got.length == 10)
-    assert(gone.forall(g => !got.contains(g)), s"deleted indexed hits surfaced: $got")
-    // any exact top-3 hit from the appended tail must surface
-    val exact = Similarity.cosineTopK(
-      spark.read.format("lance").load(src), "vec_id", "embedding", query, 3)
-      .select("vec_id").as[Long].collect().toSeq
-    exact.filter(_ % 5 == 0).foreach { id =>
-      assert(got.contains(id), s"appended top hit $id missing: $got")
-    }
-    // and the result ranking agrees with the exact live top-k restricted
-    // to (probed lists ∪ appended tail): every exact live top-5 hit that
-    // is either appended or inside the probe's own candidate set appears
-    val cand = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
-      query, k = 20, nProbe = 6).select("vec_id").as[Long].collect().toSet
-    val exact5 = Similarity.cosineTopK(
-      spark.read.format("lance").load(src), "vec_id", "embedding", query, 5)
-      .select("vec_id").as[Long].collect().toSeq
-    exact5.filter(id => id % 5 == 0 || cand.contains(id)).foreach { id =>
-      assert(got.contains(id), s"live top-5 hit $id missing: $got")
+      val got = onSide(padded)(Similarity.ivfSearchCombinedLive(spark, dir, src,
+        "vec_id", "embedding", query, k = 10, nProbe = 6)
+        .select("vec_id").as[Long].collect().toSeq)
+      assert(got.length == 10)
+      assert(gone.forall(g => !got.contains(g)), s"deleted indexed hits surfaced: $got")
+      // any exact top-3 hit from the appended tail must surface
+      val exact = Similarity.cosineTopK(
+        spark.read.format("lance").load(src), "vec_id", "embedding", query, 3)
+        .select("vec_id").as[Long].collect().toSeq
+      exact.filter(_ % 5 == 0).foreach { id =>
+        assert(got.contains(id), s"appended top hit $id missing: $got")
+      }
+      // and the result ranking agrees with the exact live top-k restricted
+      // to (probed lists ∪ appended tail): every exact live top-5 hit that
+      // is either appended or inside the probe's own candidate set appears
+      val cand = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
+        query, k = 20, nProbe = 6).select("vec_id").as[Long].collect().toSet
+      val exact5 = Similarity.cosineTopK(
+        spark.read.format("lance").load(src), "vec_id", "embedding", query, 5)
+        .select("vec_id").as[Long].collect().toSeq
+      exact5.filter(id => id % 5 == 0 || cand.contains(id)).foreach { id =>
+        assert(got.contains(id), s"live top-5 hit $id missing: $got")
+      }
     }
   }
 
   test("liveness under update-by-append: no duplicate ids, stale copies retire") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
     val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_upd").toString
-    val src = s"$dir/corpus.lance"
-    emb.filter(col("vec_id") > 0).write.format("lance").mode("overwrite").save(src)
-    Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
-    val top2 = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
-      query, k = 2, nProbe = 6).select("vec_id").as[Long].collect().toSeq
-    val (dupId, updId) = (top2(0), top2(1))
-    val srcDf = spark.read.format("lance").load(src)
-    val dupRow = srcDf.filter(col("vec_id") === dupId)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
-    val updLabel = srcDf.filter(col("vec_id") === updId)
-      .select("label").head().getInt(0)
-    // duplicate id: a second source row under the top hit's id, indexed by
-    // a rebuild so both copies are live candidates and the tail is empty
-    // (a tail copy would retire the id through the anti-join instead) —
-    // the liveness inner join must still return each candidate ONCE
-    dupRow.toSeq.toDF("vec_id", "embedding", "label")
-      .write.format("lance").mode("append").save(src)
-    Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
-    val live = Similarity.ivfSearchCombinedLive(spark, dir, src,
-      "vec_id", "embedding", query, k = 10, nProbe = 6)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(live.distinct == live, s"duplicate source id repeated a candidate: $live")
-    assert(live.contains(dupId))
-    // update (delete + re-append with a far vector): the stale indexed
-    // copy must retire even though the re-appended row ranks poorly
-    graft.sources.lance.LanceMaintenance.deleteWhere(spark, src,
-      s"vec_id = $updId")
-    Seq((updId, query.map(-_).toArray, updLabel))
-      .toDF("vec_id", "embedding", "label")
-      .write.format("lance").mode("append").save(src)
-    val got = Similarity.ivfSearchCombinedLive(spark, dir, src,
-      "vec_id", "embedding", query, k = 10, nProbe = 6)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val ids = got.map(_._1)
-    assert(ids.distinct == ids, s"id ranked twice: $got")
-    // the updated row may still rank — but only through its FRESH vector
-    // (cos = -1 for the negated query), never the stale indexed cos
-    got.filter(_._1 == updId).foreach { case (_, cos) =>
-      assert(cos < 0, s"stale indexed cos served for the updated row: $got")
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("ivf_upd").toString
+      val src = s"$dir/corpus.lance"
+      twin(emb.filter(col("vec_id") > 0), padded)
+        .write.format("lance").mode("overwrite").save(src)
+      Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
+      val top2 = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
+        query, k = 2, nProbe = 6).select("vec_id").as[Long].collect().toSeq
+      val (dupId, updId) = (top2(0), top2(1))
+      val srcDf = spark.read.format("lance").load(src)
+      val dupRow = srcDf.filter(col("vec_id") === dupId).select("vec_id", "embedding", "label")
+        .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
+      val updLabel = srcDf.filter(col("vec_id") === updId)
+        .select("label").head().getInt(0)
+      // duplicate id: a second source row under the top hit's id, indexed
+      // by a rebuild so both copies are live candidates and the tail is
+      // empty — the re-rank must still return each candidate ONCE
+      twin(dupRow.toSeq.toDF("vec_id", "embedding", "label"), padded)
+        .write.format("lance").mode("append").save(src)
+      Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
+      val live = onSide(padded)(Similarity.ivfSearchCombinedLive(spark, dir, src,
+        "vec_id", "embedding", query, k = 10, nProbe = 6)
+        .select("vec_id").as[Long].collect().toSeq)
+      assert(live.distinct == live, s"duplicate source id repeated a candidate: $live")
+      assert(live.contains(dupId))
+      // update (delete + re-append with a far vector): the stale indexed
+      // copy must retire even though the re-appended row ranks poorly
+      graft.sources.lance.LanceMaintenance.deleteWhere(spark, src,
+        s"vec_id = $updId")
+      twin(Seq((updId, query.map(-_).toArray, updLabel))
+        .toDF("vec_id", "embedding", "label"), padded)
+        .write.format("lance").mode("append").save(src)
+      val got = onSide(padded)(Similarity.ivfSearchCombinedLive(spark, dir, src,
+        "vec_id", "embedding", query, k = 10, nProbe = 6)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+      val ids = got.map(_._1)
+      assert(ids.distinct == ids, s"id ranked twice: $got")
+      // the updated row may still rank — but only through its FRESH vector
+      // (cos = -1 for the negated query), never the stale indexed cos
+      got.filter(_._1 == updId).foreach { case (_, cos) =>
+        assert(cos < 0, s"stale indexed cos served for the updated row: $got")
+      }
     }
   }
 
@@ -770,79 +775,69 @@ class SimilaritySpec extends AnyFunSuite {
   test("combined+live: retired top hit refills from the over-fetch window") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
     val query = emb.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_refill").toString
-    val src = s"$dir/corpus.lance"
-    emb.filter(col("vec_id") > 0).write.format("lance").mode("overwrite").save(src)
-    Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
-      nLists = 16, indexPath = dir)
-    val k = 5
-    // full-width probe: the over-fetch is the global approx top-2k, so
-    // the expected combined+live answer is exactly the live top-k
-    val topIds = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
-      query, k = k, nProbe = 16).select("vec_id").as[Long].collect().toSeq
-    // update the TOP hit: delete + re-append under the same id with the
-    // negated query vector (ranks dead last). Its stale indexed copy must
-    // retire AND its vacated top-k slot must refill from the live indexed
-    // candidate ranked k+1 in the over-fetch — which outranks every tail
-    // row. Cutting to k BEFORE retirement (the pre-fix shape) would let
-    // the worthless tail row take the slot instead.
-    val updId = topIds.head
-    val updLabel = spark.read.format("lance").load(src)
-      .filter(col("vec_id") === updId).select("label").head().getInt(0)
-    graft.sources.lance.LanceMaintenance.deleteWhere(spark, src,
-      s"vec_id = $updId")
-    Seq((updId, query.map(-_).toArray, updLabel))
-      .toDF("vec_id", "embedding", "label")
-      .write.format("lance").mode("append").save(src)
-    val gotDf = Similarity.ivfSearchCombinedLive(spark, dir, src,
-      "vec_id", "embedding", query, k = k, nProbe = 16)
-    // collect gotDf ITSELF: the plan assertions below inspect the
-    // executed scan/join instances of this QueryExecution
-    val got = gotDf.collect().map(_.getAs[Long]("vec_id")).toSeq
-    val exactLive = Similarity.cosineTopK(
-      spark.read.format("lance").load(src), "vec_id", "embedding", query, k)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(got == exactLive,
-      s"retired hit did not refill from the over-fetch: got $got, exact live $exactLive")
-    assert(!got.contains(updId), s"negated re-append ranked in the top-$k: $got")
-    // scale shape: retirement must never shuffle (or broadcast) the raw
-    // append sliver — the retired set is REALIZED first (tail ids
-    // semi-join the broadcast candidates), so the one LeftAnti join in
-    // the plan is a broadcast hash join over that ≤2k set, and the
-    // tail's id scan receives the candidate ids as a runtime IN-list
-    // zone filter exactly like the liveness source scan (two corpus
-    // scans carry the same realized IN-list)
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.catalyst.plans.LeftAnti
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec => flatten(q.plan)
-      case other => other +: (other.children ++ other.subqueries).flatMap(flatten)
+    Seq(false, true).foreach { padded =>
+      val dir = java.nio.file.Files.createTempDirectory("ivf_refill").toString
+      val src = s"$dir/corpus.lance"
+      twin(emb.filter(col("vec_id") > 0), padded)
+        .write.format("lance").mode("overwrite").save(src)
+      Similarity.ivfBuildPersistLance(spark, src, "vec_id", "embedding",
+        nLists = 16, indexPath = dir)
+      val k = 5
+      // full-width probe: the over-fetch is the global approx top-2k, so
+      // the expected combined+live answer is exactly the live top-k
+      val topIds = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
+        query, k = k, nProbe = 16).select("vec_id").as[Long].collect().toSeq
+      // update the TOP hit: delete + re-append under the same id with the
+      // negated query vector (ranks dead last). Its stale indexed copy must
+      // retire AND its vacated top-k slot must refill from the live indexed
+      // candidate ranked k+1 in the over-fetch — which outranks every tail
+      // row. Cutting to k BEFORE the re-rank would let the worthless tail
+      // row take the slot instead.
+      val updId = topIds.head
+      val updLabel = spark.read.format("lance").load(src)
+        .filter(col("vec_id") === updId).select("label").head().getInt(0)
+      graft.sources.lance.LanceMaintenance.deleteWhere(spark, src,
+        s"vec_id = $updId")
+      twin(Seq((updId, query.map(-_).toArray, updLabel))
+        .toDF("vec_id", "embedding", "label"), padded)
+        .write.format("lance").mode("append").save(src)
+      // collect gotDf ITSELF: the plan assertions below inspect the
+      // executed scan/join instances of this QueryExecution
+      val (gotDf, got) = onSide(padded) {
+        val df = Similarity.ivfSearchCombinedLive(spark, dir, src,
+          "vec_id", "embedding", query, k = k, nProbe = 16)
+        (df, df.collect().map(_.getAs[Long]("vec_id")).toSeq)
+      }
+      val exactLive = Similarity.cosineTopK(
+        spark.read.format("lance").load(src), "vec_id", "embedding", query, k)
+        .select("vec_id").as[Long].collect().toSeq
+      assert(got == exactLive,
+        s"retired hit did not refill from the over-fetch: got $got, exact live $exactLive")
+      assert(!got.contains(updId), s"negated re-append ranked in the top-$k: $got")
+      // scale shape of the DSv2 plan: the realized 2k candidate ids reach
+      // the source re-rank scan as a runtime IN-list zone filter (O(k)
+      // point reads), and no join shuffles the tail or the source — the
+      // tail side is a plain top-k scan
+      if (padded) {
+        val cand = Similarity.ivfSearchPersisted(spark, dir, "vec_id", "embedding",
+          query, k = 2 * k, nProbe = 16).select("vec_id").as[Long].collect().toSet
+        val all = flatten(gotDf.queryExecution.executedPlan)
+        assert(!all.exists {
+          case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec => true
+          case _: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => true
+          case _ => false
+        }, s"a join shuffled:\n${gotDf.queryExecution.executedPlan}")
+        val installedIn = all.collect { case b: BatchScanExec => b.scan }.collect {
+          case s: graft.sources.lance.LanceScan
+              if s.description().contains("corpus.lance") => s
+        }.flatMap(_.installedRuntimeFilters)
+          .filter(f => f.colName == "vec_id" && f.op == "in")
+        assert(installedIn.exists(_.values.toSet == cand.map(_.toDouble)),
+          s"the realized candidate ids never reached the source re-rank scan: " +
+            s"${installedIn.map(_.values.sorted)} vs ${cand.toSeq.sorted}\n" +
+            gotDf.queryExecution.executedPlan)
+      }
     }
-    val all = flatten(gotDf.queryExecution.executedPlan)
-    assert(all.exists {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
-        j.joinType == LeftAnti
-      case _ => false
-    }, s"retirement is not a broadcast anti-join:\n${gotDf.queryExecution.executedPlan}")
-    assert(!all.exists {
-      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>
-        j.joinType == LeftAnti
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec =>
-        j.joinType == LeftAnti
-      case _ => false
-    }, "retirement anti-join shuffled the tail side")
-    val inScans = all.collect { case b: BatchScanExec => b.scan }.collect {
-      case s: graft.sources.lance.LanceScan
-          if s.description().contains("corpus.lance") &&
-             s.installedRuntimeFilters.exists(f =>
-               f.colName == "vec_id" && f.op == "in") => s
-    }
-    assert(inScans.size >= 2,
-      s"candidate IN-list reached ${inScans.size} corpus scans (want liveness + tail):\n" +
-        gotDf.queryExecution.executedPlan)
   }
 
   test("ivfUpdateIndex extends the index over appends without retraining") {
@@ -1033,13 +1028,33 @@ class SimilaritySpec extends AnyFunSuite {
     df.withColumn("pad", concat(col("vec_id").cast("string"), expr(s"repeat('x', $per)")))
   }
 
-  /** `update`'s result, asserting it ran on the side of the cap its twin
-    * is on. */
-  private def onSide[A](padded: Boolean)(update: => A): A = {
-    val (out, jobs) = TestSpark.jobsOf(update)
-    assert((jobs > 0) == padded, s"padded=$padded: the update ran $jobs jobs")
+  /** `body`'s result, asserting it ran on the side of the cap its twin
+    * is on: no job on the fixture, the DSv2 plan on the padded twin. */
+  private def onSide[A](padded: Boolean)(body: => A): A = {
+    val (out, jobs) = TestSpark.jobsOf(body)
+    assert((jobs > 0) == padded, s"padded=$padded: ran $jobs jobs")
     out
   }
+
+  /** A combined-live search's corpus rows: on the padded twin each row
+    * carries ~25 KB more and one write lands in one fragment, so the
+    * source (and a flat index's copy of it) reads over
+    * `LanceLocal.CapBytes` and the search runs its DSv2 plan; otherwise
+    * it answers on the driver with no job. */
+  private def twin(df: DataFrame, padded: Boolean): DataFrame =
+    if (!padded) df
+    else df.withColumn("pad", expr("concat(CAST(vec_id AS STRING), repeat('x', 25000))"))
+      .coalesce(1)
+
+  /** Every node of an executed plan, adaptive stages and subqueries included. */
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+    case q: QueryStageExec => flatten(q.plan)
+    case other => other +: (other.children ++ other.subqueries).flatMap(flatten)
+  }
+
+  private def scansOf(p: SparkPlan): Seq[BatchScanExec] =
+    flatten(p).collect { case b: BatchScanExec => b }
 
   test("ivfPqUpdateIndex covers appends with the existing codebooks") {
     val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
@@ -1202,17 +1217,11 @@ class SimilaritySpec extends AnyFunSuite {
     // carries ~25 KB more, so the indexed rows' one fragment holds more
     // than `LanceLocal.CapBytes` and the face runs its DSv2 plan
     val sources = Seq(false, true).map { padded =>
-      def rows(df: DataFrame): DataFrame =
-        if (!padded) df
-        else df.withColumn("pad", expr("concat(CAST(vec_id AS STRING), repeat('x', 25000))"))
-          .coalesce(1)
-      def search(dir: String, src: String): Seq[(Long, Double)] = {
-        val (got, jobs) = TestSpark.jobsOf(Similarity.ivfPqSearchCombinedLive(spark, dir, src,
+      def rows(df: DataFrame): DataFrame = twin(df, padded)
+      def search(dir: String, src: String): Seq[(Long, Double)] =
+        onSide(padded)(Similarity.ivfPqSearchCombinedLive(spark, dir, src,
           "vec_id", "embedding", query, k = 10, nProbe = 16, rerank = 8)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
-        assert((jobs > 0) == padded, s"padded=$padded ran $jobs jobs")
-        got
-      }
       val dir = java.nio.file.Files.createTempDirectory("ivfpq_comb").toString
       val src = s"$dir/corpus.lance"
       rows(indexedRows).write.format("lance").mode("overwrite").save(src)
@@ -1367,16 +1376,7 @@ class SimilaritySpec extends AnyFunSuite {
     // no driver-side collect: the exact re-rank's corpus scan must have
     // received the REALIZED ADC candidate id set (exactly, not a
     // superset) as a runtime IN-list zone filter — the
-    // liveness-join contract of ivfSearchCombinedLive applied to the PQ path
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    def scansOf(p: SparkPlan): Seq[BatchScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
-      case q: QueryStageExec => scansOf(q.plan)
-      case b: BatchScanExec => Seq(b)
-      case other => (other.children ++ other.subqueries).flatMap(scansOf)
-    }
+    // re-rank contract the combined-live faces share
     val srcScans = scansOf(df.queryExecution.executedPlan)
       .map(_.scan).collect {
         case s: graft.sources.lance.LanceScan

@@ -11,7 +11,8 @@ import graft.operators.{Fts, ScalarIndex, Similarity}
 
 /** Driver-local reads ([[LanceLocal]]) against the DSv2 scan: the same
   * rows across storage layouts, versions and tails, and the same answers
-  * from the three index faces that use them, with no Spark job. */
+  * from the index faces that use them (BTREE lookup, the flat and IVF_PQ
+  * combined-live searches, FTS), with no Spark job. */
 class LanceLocalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -229,6 +230,7 @@ class LanceLocalSpec extends AnyFunSuite {
       stableRowIds = true)
     Fts.buildIndexLance(spark, small, "doc_id", "text", s"$dir/fts", writePartitions = 2)
     Similarity.ivfPqBuildPersistLance(spark, small, "doc_id", "embedding", 8, s"$dir/ivf")
+    Similarity.ivfBuildPersistLance(spark, small, "doc_id", "embedding", 8, s"$dir/ivf")
     // appends, upserts and deletes since the build
     val upserted = Seq(5L, 42L, 77L, 300L, 901L)
     corpora.foreach { case (p, pad) =>
@@ -251,6 +253,8 @@ class LanceLocalSpec extends AnyFunSuite {
     }
     val query = doc(77L, 1)._3.toSeq
     both(Similarity.ivfPqSearchCombinedLive(spark, s"$dir/ivf", _, "doc_id", "embedding",
+      query, 10, nProbe = 4)) { _.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq }
+    both(Similarity.ivfSearchCombinedLive(spark, s"$dir/ivf", _, "doc_id", "embedding",
       query, 10, nProbe = 4)) { _.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq }
     Seq(Seq("alpha"), Seq("beta", "pi", "nope")).foreach { terms =>
       both(Fts.searchCombinedLive(spark, s"$dir/fts", _, "doc_id", "text", terms, 10)) {
