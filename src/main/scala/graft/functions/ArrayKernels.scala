@@ -702,6 +702,80 @@ case class LongHamming(left: Expression, right: Expression) extends BinaryExpres
     copy(left = l, right = r)
 }
 
+/** A document's FTS postings in one pass over its text: the tokens of
+  * `split(text, ' ')` (single-space split, empty tokens kept), each
+  * distinct token once, in first-seen order, as
+  * struct(dl = the token count, term, tf, positions ascending) — what
+  * `posexplode` + `groupBy(doc, dl, term)` + `sort_array(collect_list(pos))`
+  * give for one document, with no exchange or aggregate. NULL text gives
+  * NULL (posts nothing). `dl` is nullable exactly where
+  * `size(split(text, ' '))` is (`legacySizeOfNull`). */
+case class FtsPostings(child: Expression, legacySizeOfNull: Boolean)
+    extends UnaryExpression {
+  def this(child: Expression) =
+    this(child, org.apache.spark.sql.internal.SQLConf.get.legacySizeOfNull)
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("dl", LongType, nullable = child.nullable && !legacySizeOfNull),
+    StructField("term", StringType, nullable = false),
+    StructField("tf", LongType, nullable = false),
+    StructField("positions", ArrayType(IntegerType, containsNull = false), nullable = false))),
+    containsNull = false)
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"graft_fts_postings expects string, got $t")
+    }
+  override def nullSafeEval(a: Any): Any =
+    FtsPostings.postings(a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.FtsPostings.postings($c)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+object FtsPostings {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  /** One token's positions so far. */
+  private final class Positions(first: Int) {
+    var at: Array[Int] = Array(first)
+    var n = 1
+    def add(p: Int): Unit = {
+      if (n == at.length) at = java.util.Arrays.copyOf(at, n * 2)
+      at(n) = p
+      n += 1
+    }
+  }
+
+  def postings(text: UTF8String): ArrayData = {
+    val bytes = text.getBytes
+    // a space byte never occurs inside a multi-byte UTF-8 sequence, so a
+    // byte scan splits as `split` does
+    val seen = new java.util.LinkedHashMap[UTF8String, Positions]()
+    var start = 0
+    var dl = 0
+    var i = 0
+    while (i <= bytes.length) {
+      if (i == bytes.length || bytes(i) == ' ') {
+        val t = UTF8String.fromBytes(bytes, start, i - start)
+        val p = seen.get(t)
+        if (p == null) seen.put(t, new Positions(dl)) else p.add(dl)
+        dl += 1
+        start = i + 1
+      }
+      i += 1
+    }
+    val out = new Array[Any](seen.size)
+    var k = 0
+    seen.forEach { (t, p) =>
+      out(k) = InternalRow(dl.toLong, t, p.n.toLong,
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
+          java.util.Arrays.copyOf(p.at, p.n)))
+      k += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+}
+
 object ArrayKernels {
   import org.apache.spark.sql.graftglue.ColumnBridge.{column, expression}
   def signPack(a: Column): Column = column(LongSignPack(expression(a)))
@@ -737,6 +811,8 @@ object ArrayKernels {
     column(PqEncode(expression(vec), expression(codebooks)))
   def nearestCentroid(vec: Column, centroids: Column): Column =
     column(NearestCentroid(expression(vec), expression(centroids)))
+  private[graft] def ftsPostings(text: Column): Column =
+    column(new FtsPostings(expression(text)))
 
   // SQL names for every kernel are registered by GraftExtensions
   // (injectFunction) — see graft.plans.GraftExtensions.

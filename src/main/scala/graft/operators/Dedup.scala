@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.lance.LanceLocal
 
 /** What the per-pair LSH kernel reads of a bucket member: its gid, the
   * bucket's band, the full signature for the estimate and the band-hash
@@ -32,8 +34,11 @@ private[graft] case class LshPair(gid_a: Long, gid_b: Long, est_jaccard: Double)
 
 /** Deduplication operators for training-data pipelines (SURVEY §2.5).
   *
-  * All of these are expressed as shuffles over key columns — no driver-side
-  * loops, no collect — so they scale horizontally. Design notes for 100 TB:
+  * Every corpus-sized step is a shuffle over key columns, so it scales
+  * horizontally. The one driver-side step is bounded: a pair set within
+  * [[graft.sources.lance.LanceLocal.CapBytes]] is collected once and
+  * labelled by union-find ([[connectedComponents]], [[dedupDecision]]),
+  * and a larger one runs the distributed arm. Design notes for 100 TB:
   *
   *  - token sets live as per-document ARRAY columns; similarity is
   *    evaluated with codegen'd array kernels (array_intersect / zip_with)
@@ -670,23 +675,127 @@ object Dedup {
 
   /** Cluster-level dedup decision from near-dup pairs: for every doc, the
     * smallest id among its neighbours-or-self (one star-contraction step —
-    * see [[connectedComponents]] for the fixpoint). */
+    * see [[connectedComponents]] for the fixpoint). `pairs` runs once;
+    * when its (doc_a, doc_b) are bigint, non-null and fit
+    * [[LanceLocal.CapBytes]], the per-`doc_b` minimum is taken on the
+    * driver ([[decisionLocal]]), else by a shuffle
+    * ([[decisionDistributed]]). */
   def dedupDecision(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val nbrMin = pairs.groupBy(col("doc_b").as(idCol)).agg(min("doc_a").as("nbr_min"))
-    docs.select(col(idCol)).join(nbrMin, Seq(idCol), "left")
-      .select(col(idCol), least(col(idCol), coalesce(col("nbr_min"), col(idCol))).as("keep_id"))
+    val (once, local) = pairsOnce(docs, idCol, pairs)
+    local.fold(decisionDistributed(docs, idCol, once))(decisionLocal(docs, idCol, _))
   }
 
-  /** Connected components over near-dup pairs by iterated label
-    * propagation: every node's label converges to the minimum id of its
-    * component; `keep_id` = component representative. Each round is one
-    * shuffle-join of labels against edges (both directions) + a min
-    * aggregate; rounds needed = graph diameter in min-label hops (
-    * O(log n) for typical dedup clusters). Labels are cached per round
-    * and convergence is detected with a changed-row count.
+  /** [[dedupDecision]]'s distributed arm: a min aggregate per `doc_b`,
+    * left-joined onto `docs`' ids. */
+  private[graft] def decisionDistributed(docs: DataFrame, idCol: String,
+                                         pairs: DataFrame): DataFrame = {
+    val nbrMin = pairs.groupBy(col("doc_b").as(idCol)).agg(min("doc_a").as("nbr_min"))
+    decide(docs, idCol, nbrMin)
+  }
+
+  /** [[dedupDecision]]'s driver arm over the collected `pairs`: the
+    * per-`doc_b` minimum as a `LocalRelation`, broadcast-joined onto
+    * `docs`' ids (one output row per `docs` row, as the left join
+    * gives). */
+  private[graft] def decisionLocal(docs: DataFrame, idCol: String,
+                                   pairs: LanceLocal.Rows): DataFrame = {
+    val nbrMin = scala.collection.mutable.LongMap.empty[Long]
+    pairs.rows.foreach { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      if (nbrMin.getOrElse(b, Long.MaxValue) > a) nbrMin(b) = a
+    }
+    decide(docs, idCol, broadcast(longPairs(docs.sparkSession, idCol, "nbr_min", nbrMin)))
+  }
+
+  private def decide(docs: DataFrame, idCol: String, nbrMin: DataFrame): DataFrame =
+    docs.select(col(idCol)).join(nbrMin, Seq(idCol), "left")
+      .select(col(idCol), least(col(idCol), coalesce(col("nbr_min"), col(idCol))).as("keep_id"))
+
+  /** `pairs`' (doc_a, doc_b) computed once, and its rows on the driver
+    * when they and `docs`' ids are bigint, no pair id is null and the
+    * rows fit [[LanceLocal.CapBytes]]. Either arm reads the returned
+    * frame, a local checkpoint the probe filled, so the pairs subtree
+    * never runs twice. */
+  private def pairsOnce(docs: DataFrame, idCol: String,
+                        pairs: DataFrame): (DataFrame, Option[LanceLocal.Rows]) = {
+    val two = pairs.select(col("doc_a"), col("doc_b"))
+    if ((docs.schema(idCol) +: two.schema.fields).exists(_.dataType != LongType)) (two, None)
+    else {
+      val once = two.localCheckpoint(false)
+      (once, LanceLocal.collectWithin(once)
+        .filter(_.rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))))
+    }
+  }
+
+  /** A `LocalRelation` (idCol, `valueCol`) of bigint pairs. */
+  private def longPairs(spark: org.apache.spark.sql.SparkSession, idCol: String,
+                        valueCol: String, kvs: Iterable[(Long, Long)]): DataFrame =
+    org.apache.spark.sql.graftglue.ColumnBridge.localFrame(spark,
+      StructType(Seq(StructField(idCol, LongType, nullable = false),
+                     StructField(valueCol, LongType, nullable = false))),
+      kvs.iterator.map { case (k, v) => InternalRow(k, v) }.toSeq)
+
+  /** Connected components over near-dup pairs: every node's label is
+    * the minimum id of its component; `keep_id` = component
+    * representative. The nodes are `docs`' ids and the pairs' endpoints,
+    * one row per distinct id. `pairs` runs once; when its (doc_a, doc_b)
+    * are bigint, non-null and fit [[LanceLocal.CapBytes]], union-find
+    * labels them on the driver ([[componentsLocal]]), else label
+    * propagation does ([[componentsPropagated]]). */
+  def connectedComponents(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val (once, local) = pairsOnce(docs, idCol, pairs)
+    local.fold(componentsPropagated(docs, idCol, once))(componentsLocal(docs, idCol, _))
+  }
+
+  /** [[connectedComponents]]' driver arm over the collected `pairs`:
+    * union-find with min-id roots and path halving over the pair nodes,
+    * whose labels (a `LocalRelation`) meet `docs`' ids in one min
+    * aggregate per id — a node's label never exceeds its id, so the
+    * aggregate keeps it, a doc in no pair keeps its own id, and duplicate
+    * ids collapse as the propagation's `groupBy` collapses them. */
+  private[graft] def componentsLocal(docs: DataFrame, idCol: String,
+                                     pairs: LanceLocal.Rows): DataFrame = {
+    val ends = new Array[Long](pairs.rows.length * 2)
+    pairs.rows.iterator.zipWithIndex.foreach { case (r, i) =>
+      ends(2 * i) = r.getLong(0); ends(2 * i + 1) = r.getLong(1)
+    }
+    // dense node indices in id order, so the smaller root index is the
+    // smaller id
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    ids.foreach { id => if (n == 0 || ids(n - 1) != id) { ids(n) = id; n += 1 } }
+    val parent = Array.range(0, n)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    ends.indices.by(2).foreach { i =>
+      val (ra, rb) = (find(index(ends(i))), find(index(ends(i + 1))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val labels = (0 until n).map(i => ids(i) -> ids(find(i)))
+    docs.select(col(idCol).as("u"), col(idCol).as("label"))
+      .unionAll(longPairs(docs.sparkSession, "u", "label", labels))
+      .groupBy("u").agg(min(col("label")).as("keep_id"))
+      .select(col("u").as(idCol), col("keep_id"))
+  }
+
+  /** Rounds after which [[componentsPropagated]] stops, converged or
+    * not. */
+  private val MaxRounds = 20
+
+  /** [[connectedComponents]]' distributed arm, by iterated label
+    * propagation. Each round is one shuffle-join of labels against edges
+    * (both directions) + a min aggregate, then a pointer jump; rounds
+    * needed = O(log d) for a component of min-label diameter d. Labels
+    * are checkpointed per round and convergence is detected with a label
+    * sum.
     */
-  def connectedComponents(docs: DataFrame, idCol: String, pairs: DataFrame,
-                          maxIter: Int = 20): DataFrame = {
+  private[graft] def componentsPropagated(docs: DataFrame, idCol: String,
+                                          pairs: DataFrame): DataFrame = {
     // localCheckpoint per round truncates the growing lineage — without it
     // round N replays rounds 1..N-1 and the loop goes quadratic.
     // repartition on v first: the two unions would otherwise stack up the
@@ -725,7 +834,7 @@ object Dedup {
     var prevSum = labels.agg(sum("label")).head().getLong(0)
     var iter = 1
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < MaxRounds && !converged) {
       val prop = edges.join(labels.withColumnRenamed("u", "v2"),
           col("v") === col("v2"))
         .groupBy("u").agg(min("label").as("label"))
@@ -776,8 +885,9 @@ object Dedup {
       Similarity.ivfIndexCached(df, idCol, vecCol, nClusters, s"semdedup:$vecCol")
     // the self-join references the assignment frame TWICE — persist so
     // the nearest-centroid kernel runs one pass, not one per side
-    // (connectedComponents' eager edge checkpoint materializes the pair
-    // lineage inside the try, so the unpersist is safe)
+    // (connectedComponents computes the pairs once, before it returns —
+    // its probe's checkpoint or its eager edge checkpoint — so the
+    // unpersist is safe)
     val indexed = indexed0.select(col("list_id"), col(idCol), col(vecCol)).persist()
     try {
       val a = indexed.select(col("list_id"), col(idCol).as("id_a"), col(vecCol).as("va"))

@@ -57,22 +57,22 @@ object Fts {
   val K1 = 1.2
   val B  = 0.75
 
-  /** Tokenized postings `(doc_id, term, tf, dl, positions)` — one row per
+  /** Tokenized postings `(doc_id, dl, term, tf, positions)` — one row per
     * distinct (document, term); `dl` is the document's token count and
     * `positions` the sorted token offsets (what tantivy's
     * `with_position` postings store — they power persisted phrase
     * queries and cost nothing at ranking time: BM25 scans prune the
     * column). Tokenization is single-space split, matching the corpus
-    * convention (and the oracle's `string_split`).
+    * convention (and the oracle's `string_split`). All of a document's
+    * tokens are in its row, so one codegen pass per row
+    * ([[graft.functions.FtsPostings]]) emits its postings: a map-only
+    * frame, no exchange and no aggregate. A document id is one
+    * document: a duplicated id posts each of its rows separately.
     */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).cast(LongType).as("doc_id"),
-                split(col(textCol), " ").as("toks"))
-      .select(col("doc_id"), size(col("toks")).cast(LongType).as("dl"),
-              posexplode(col("toks")).as(Seq("pos", "term")))
-      .groupBy("doc_id", "dl", "term")
-      .agg(count(lit(1)).as("tf"),
-           sort_array(collect_list(col("pos"))).as("positions"))
+                inline(graft.functions.ArrayKernels.ftsPostings(col(textCol))))
+      .select("doc_id", "dl", "term", "tf", "positions")
 
   /** Corpus stats: one row `(n_docs, total_len)`. NULL-text documents are
     * excluded — they post no terms (see [[postings]]), so counting them
@@ -85,7 +85,8 @@ object Fts {
 
   /** Build and persist the inverted index under `indexPath` (three lance
     * datasets — see the object doc). The postings write is the one big job
-    * (a token explode + hash aggregate + range shuffle); everything else is
+    * (the per-document postings kernel + the range shuffle that is the
+    * build's only corpus-sized exchange); everything else is
     * vocabulary-sized or constant.
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
@@ -100,14 +101,13 @@ object Fts {
     * `(doc_id, dl, term, tf, positions)` dataset instead of re-tokenizing
     * the corpus per flavor. The frame is written to `postings.lance`
     * FIRST and the vocabulary + corpus stats derive from the on-disk
-    * copy (column-pruned scans of the skinny columns), so even the
-    * single-build path tokenizes exactly once — the round-10 shape
-    * re-ran the tokenize lineage for postings, terms AND stats.
+    * copy in ONE skinny aggregate ([[writeVocabulary]]), so the
+    * single-build path tokenizes the corpus only for its write.
     *
     * Stats parity: every tokenized document posts ≥ 1 term (split never
-    * returns an empty array) and `dl` is constant per doc, so the
-    * (count, sum-of-dl) over one row per doc equals [[corpusStats]] on
-    * the raw table exactly. Documents with NULL text post no terms and
+    * returns an empty array), exactly one of them at position 0, and its
+    * tfs sum to its `dl`, so (postings at position 0, Σ tf) equals
+    * [[corpusStats]] on the raw table exactly. Documents with NULL text post no terms and
     * are excluded from the statistics everywhere (they can never match
     * a term query); corpora that want them counted must coalesce
     * upstream.
@@ -127,10 +127,7 @@ object Fts {
                                            indexPath: String,
                                            writePartitions: Int): Unit = {
     writePostings(p, indexPath, "overwrite", writePartitions)
-    val staged = spark.read.format("lance").load(s"$indexPath/postings.lance")
-    writeTerms(termDfs(staged), indexPath, writePartitions)
-    postingsStats(staged).coalesce(1)
-      .write.format("lance").mode("overwrite").save(s"$indexPath/stats.lance")
+    writeVocabulary(spark, indexPath, writePartitions)
     // a rebuild over a previously pinned path must retire the stale
     // publish point ITSELF, not just this JVM's cache: built.lance pins
     // the OLD sidecar versions and any other process would keep reading
@@ -163,16 +160,40 @@ object Fts {
       .sortWithinPartitions("term")
       .write.format("lance").mode("overwrite").save(s"$indexPath/terms.lance")
 
-  /** Document frequency per term: postings are one row per (doc, term). */
-  private def termDfs(p: DataFrame): DataFrame =
-    p.groupBy("term").agg(count(lit(1)).as("df"))
+  /** `terms.lance` and `stats.lance` from the [[vocabulary]] of the
+    * written postings, one skinny aggregate. Both commit on the driver
+    * ([[LanceLocal.write]]) when the vocabulary fits the cap; over it,
+    * terms take [[writeTerms]]. */
+  private def writeVocabulary(spark: SparkSession, indexPath: String,
+                              writePartitions: Int): Unit = {
+    val vocab = vocabulary(spark.read.format("lance").load(s"$indexPath/postings.lance"))
+    val (nDocs, totalLen) = LanceLocal.collectWithin(vocab) match {
+      case Some(v) =>
+        val terms = LanceLocal.Rows(StructType(v.schema.take(2)),
+          v.rows.map(r => InternalRow(r.getUTF8String(0), r.getLong(1))))
+        LanceLocal.write(spark, s"$indexPath/terms.lance", terms.sortedBy(Seq("term")), "overwrite")
+        (v.rows.iterator.map(_.getLong(3)).sum, v.rows.iterator.map(_.getLong(2)).sum)
+      case None =>
+        writeTerms(vocab.select("term", "df"), indexPath, writePartitions)
+        corpusOf(vocab)
+    }
+    LanceLocal.write(spark, s"$indexPath/stats.lance",
+      LanceLocal.Rows(StatsSchema, IndexedSeq(InternalRow(nDocs, totalLen))), "overwrite")
+  }
 
-  /** One row (n_docs, total_len) over the documents a postings frame
-    * holds — `dl` is constant per doc; an empty frame gives (0, 0). */
-  private def postingsStats(p: DataFrame): DataFrame =
-    p.groupBy("doc_id").agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).cast(LongType).as("n_docs"),
-           coalesce(sum(col("dl")), lit(0L)).cast(LongType).as("total_len"))
+  /** Per term of a postings frame: `df` (postings are one row per (doc,
+    * term)), `len` = Σ tf and `docs` = its postings at position 0, one per
+    * tokenized document, so the sums of `docs` and `len` over the
+    * vocabulary are the corpus's (n_docs, total_len). */
+  private def vocabulary(p: DataFrame): DataFrame =
+    p.groupBy("term").agg(count(lit(1)).as("df"), sum(col("tf")).as("len"),
+      count_if(col("positions").getItem(0) === 0).as("docs"))
+
+  /** (n_docs, total_len) of a [[vocabulary]]; (0, 0) when empty. */
+  private def corpusOf(vocab: DataFrame): (Long, Long) = {
+    val st = vocab.agg(coalesce(sum("docs"), lit(0L)), coalesce(sum("len"), lit(0L))).head()
+    (st.getLong(0), st.getLong(1))
+  }
 
   /** Sentinel version of a tombstoned publish point. */
   private val NoBuilt = -1L
@@ -540,13 +561,13 @@ object Fts {
         // terms.lance is both input and output; safe because lance is
         // versioned — the scan pins the PUBLISHED version, data files are
         // immutable, and the overwrite commits a NEW version
+        val tailVocab = vocabulary(staged)
         val mergedTerms = sidecar(spark, indexPath, "terms", Some(pub))
-          .unionByName(termDfs(staged))
+          .unionByName(tailVocab.select("term", "df"))
           .groupBy("term").agg(sum(col("df")).as("df"))
         fence.check()
         writeTerms(mergedTerms, indexPath, writePartitions)
-        val ts = postingsStats(staged).head()
-        (ts.getLong(0), ts.getLong(1))
+        corpusOf(tailVocab)
       }
     // a fresh read at the pin, never the cache: a stale cached entry would
     // double- or under-count another process's merged tail
@@ -564,59 +585,51 @@ object Fts {
     headV
   }
 
-  /** The schema [[postingsStats]] gives `stats.lance`. */
+  /** The schema of `stats.lance`: one row (n_docs, total_len). */
   private val StatsSchema = StructType(Seq(
     StructField("n_docs", LongType, nullable = false),
     StructField("total_len", LongType, nullable = false)))
 
   /** [[postings]] of driver rows `(id, text)` (`docId` reads the id) as
-    * plain values, one entry per distinct (doc_id, dl, term) in first-seen
-    * order, with its positions (tf is their count): the same single-space
-    * split (trailing empty tokens kept), and NULL text posts nothing. */
-  private def postingsOf(docs: LanceLocal.Rows, docId: InternalRow => Long)
-      : collection.Map[(Long, Long, String), collection.Seq[Int]] = {
-    val out = scala.collection.mutable.LinkedHashMap
-      .empty[(Long, Long, String), scala.collection.mutable.ArrayBuffer[Int]]
-    docs.rows.withFilter(!_.isNullAt(1)).foreach { r =>
-      val toks = r.getUTF8String(1).toString.split(" ", -1)
-      toks.iterator.zipWithIndex.foreach { case (t, pos) =>
-        out.getOrElseUpdate((docId(r), toks.length.toLong, t),
-          scala.collection.mutable.ArrayBuffer.empty[Int]) += pos
+    * catalyst rows `(doc_id, dl, term, tf, positions)`, by the kernel's
+    * own body ([[graft.functions.FtsPostings.postings]]); NULL text posts
+    * nothing. */
+  private def postingsOf(docs: LanceLocal.Rows,
+                         docId: InternalRow => Long): IndexedSeq[InternalRow] =
+    docs.rows.filter(!_.isNullAt(1)).flatMap { r =>
+      val id = docId(r)
+      val posted = graft.functions.FtsPostings.postings(r.getUTF8String(1))
+      (0 until posted.numElements()).map { i =>
+        val p = posted.getStruct(i, 4)
+        InternalRow(id, p.getLong(0), p.getUTF8String(1), p.getLong(2), p.getArray(3))
       }
     }
-    out
-  }
 
   /** The update's postings, vocabulary and stats delta computed on the
     * driver, with no Spark job: the tail read through [[LanceLocal]] and
     * tokenized by [[postingsOf]]; its postings appended and the
     * vocabulary at its pin merged with the tail dfs and overwritten, each
     * by [[LanceLocal.write]] after a fence. Returns the tail's (n_docs,
-    * total_len) as [[postingsStats]] counts them; None, having committed
+    * total_len) as [[vocabulary]] counts them; None, having committed
     * nothing, when a read or write is over the cap or the id column is
     * not an integer, and the caller runs the DSv2 plan. */
   private def updateLocal(spark: SparkSession, sourcePath: String, indexPath: String,
                           builtV: Long, headV: Long, idCol: String, textCol: String,
                           pub: Published, fence: MaintenanceLock.Fence): Option[(Long, Long)] = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.unsafe.types.UTF8String
     for {
       tail <- LanceLocal.read(spark, sourcePath, Some(headV), Some(builtV), Seq(idCol, textCol))
         .filter(_.schema(textCol).dataType == StringType)
       tailId <- Similarity.idsOf(tail)
       posted = postingsOf(tail, tailId)
       postingRows = LanceLocal.Rows(postings(tail.frame(spark), idCol, textCol).schema,
-        posted.iterator.map { case ((id, dl, t), pos) =>
-          InternalRow(id, dl, UTF8String.fromString(t), pos.length.toLong,
-            new GenericArrayData(pos.sorted.toArray[Any]))
-        }.toIndexedSeq).sortedBy(Seq("term", "doc_id"))
+        posted).sortedBy(Seq("term", "doc_id"))
       if postingRows.fits
       vocab <- LanceLocal.read(spark, s"$indexPath/terms.lance", pub.pin("terms_version"),
         columns = Seq("term", "df"))
       // df_new = df_old + df_tail: every posting is a (doc, term) pair
       merged = LanceLocal.Rows(vocab.schema,
         (vocab.rows.map(r => r.getUTF8String(0) -> r.getLong(1)) ++
-          posted.keysIterator.map(k => UTF8String.fromString(k._3) -> 1L))
+          posted.map(p => p.getUTF8String(2) -> 1L))
           .groupMapReduce(_._1)(_._2)(_ + _)
           .iterator.map { case (t, n) => InternalRow(t, n) }.toIndexedSeq)
         .sortedBy(Seq("term"))
@@ -626,9 +639,7 @@ object Fts {
       LanceLocal.write(spark, s"$indexPath/postings.lance", postingRows, "append")
       fence.check()
       LanceLocal.write(spark, s"$indexPath/terms.lance", merged, "overwrite")
-      val dls = posted.keysIterator.map { case (id, dl, _) => id -> dl }
-        .toSeq.groupMapReduce(_._1)(_._2)(math.max)
-      (dls.size.toLong, dls.valuesIterator.sum)
+      (posted.count(_.getArray(4).getInt(0) == 0).toLong, posted.map(_.getLong(3)).sum)
     }
   }
 
@@ -743,13 +754,11 @@ object Fts {
           t.schema(textCol).dataType == StringType)
       tailId <- Similarity.idsOf(tail)
       // the query terms' posting rows ((doc_id, dl, term), tf): the
-      // index's as stored, the tail's grouped per (doc_id, dl, term)
-      rows = {
-        val tailTf = postingsOf(tail, tailId)
-          .collect { case (key, pos) if wanted(key._3) => key -> pos.length.toLong }
-        post.rows.map(r => ((r.getLong(1), r.getLong(3), r.getUTF8String(0).toString),
-          r.getLong(2))).filter(p => wanted(p._1._3)) ++ tailTf
-      }
+      // index's as stored, the tail's as [[postings]] gives them
+      rows = (post.rows.map(r => ((r.getLong(1), r.getLong(3), r.getUTF8String(0).toString),
+          r.getLong(2))) ++ postingsOf(tail, tailId).map(p =>
+          ((p.getLong(0), p.getLong(1), p.getUTF8String(2).toString), p.getLong(3))))
+        .filter(p => wanted(p._1._3))
       // the vocabulary left join: every df row of a term, 0 when none
       dfs = vocab.rows.groupBy(_.getUTF8String(0).toString)
         .map { case (t, rs) => t -> rs.map(_.getLong(1)) }

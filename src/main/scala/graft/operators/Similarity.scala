@@ -388,16 +388,22 @@ object Similarity {
         .sortWithinPartitions("list_id")
         .write.format("lance").mode("overwrite").save(s"$indexPath/${f.dataName}")
     } finally rows.unpersist(false)
+    // the sidecars are driver rows: committed on the driver as one
+    // fragment when they fit the cap, else by a one-partition DSv2 write
+    def writeSidecar(rows: DataFrame, name: String): Unit =
+      LanceLocal.folded(rows).filter(_.fits) match {
+        case Some(local) => LanceLocal.write(spark, s"$indexPath/$name", local, "overwrite")
+        case None => rows.coalesce(1).write.format("lance").mode("overwrite")
+          .save(s"$indexPath/$name")
+      }
     val cents = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("list_id", "centroid")
-    width.fold(cents)(w => cents.withColumn("default_nprobe", lit(w)))
-      .coalesce(1).write.format("lance").mode("overwrite")
-      .save(s"$indexPath/${f.centroidsName}")
+    writeSidecar(width.fold(cents)(w => cents.withColumn("default_nprobe", lit(w))),
+      f.centroidsName)
     f.codebooksName.foreach { name =>
-      codebooks.zipWithIndex.flatMap { case (cb, s) =>
+      writeSidecar(codebooks.zipWithIndex.flatMap { case (cb, s) =>
         cb.zipWithIndex.map { case (cent, b) => (s, b, cent.map(_.toFloat).toSeq) }
-      }.toSeq.toDF("sub", "code", "centroid").coalesce(1)
-        .write.format("lance").mode("overwrite").save(s"$indexPath/$name")
+      }.toSeq.toDF("sub", "code", "centroid"), name)
     }
     sidecarCache.put(sidecarKey(indexPath, f, None, None),
       Sidecars(centroids, width.getOrElse(DefaultNProbe), codebooks))

@@ -73,6 +73,31 @@ object LanceLocal {
     case _ => None
   }
 
+  /** The rows of `df` on the driver when their unsafe-row bytes are
+    * within [[CapBytes]], from one job; None when over. Each task ships
+    * its partition's rows only while they stay within its share of the
+    * cap, so a large frame never lands on the driver. A frame whose plan
+    * is a (local) checkpoint computes nothing more, and a caller that
+    * gets None runs its distributed plan over the same frame. */
+  def collectWithin(df: DataFrame): Option[Rows] = {
+    val schema = df.schema
+    val rdd = df.queryExecution.toRdd
+    val share = CapBytes / math.max(rdd.getNumPartitions, 1)
+    val parts = rdd.mapPartitions { it =>
+      val unsafe = UnsafeProjection.create(schema)
+      val out = Array.newBuilder[InternalRow]
+      var bytes = 0L
+      while (bytes <= share && it.hasNext) {
+        val r = unsafe(it.next())
+        bytes += r.getSizeInBytes
+        out += r.copy()
+      }
+      Iterator(if (bytes <= share) out.result() else null)
+    }.collect()
+    if (parts.contains(null)) None
+    else Some(Rows(schema, parts.iterator.flatten.toIndexedSeq))
+  }
+
   private val metadataColumns = Seq(
     StructField("_rowaddr", LongType, nullable = false),
     StructField("_rowid", LongType, nullable = false))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Fts
@@ -40,6 +41,91 @@ class FtsSpec extends AnyFunSuite {
     assert(full >= 4, s"expected a multi-fragment index, got $full")
     assert(probed < full,
       s"term probe should prune fragments: planned $probed of $full")
+  }
+
+  /** The former [[Fts.postings]] formulation, kept as its oracle: a token
+    * `posexplode`, a `groupBy(doc_id, dl, term)` and a sorted
+    * `collect_list` of positions. */
+  private def postingsOracle(d: DataFrame): DataFrame =
+    d.select(col("doc_id").cast("bigint").as("doc_id"), split(col("text"), " ").as("toks"))
+      .select(col("doc_id"), size(col("toks")).cast("bigint").as("dl"),
+              posexplode(col("toks")).as(Seq("pos", "term")))
+      .groupBy("doc_id", "dl", "term")
+      .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("positions"))
+
+  /** Document frequency per term of a postings frame: one row per
+    * (doc, term). */
+  private def termDfs(p: DataFrame): DataFrame =
+    p.groupBy("term").agg(count(lit(1)).as("df"))
+
+  /** One row (n_docs, total_len) over the distinct documents of a
+    * postings frame (`dl` is constant per doc). */
+  private def postingsStats(p: DataFrame): DataFrame =
+    p.groupBy("doc_id").agg(max(col("dl")).as("dl"))
+      .agg(count(lit(1)).cast("bigint").as("n_docs"),
+           coalesce(sum(col("dl")), lit(0L)).cast("bigint").as("total_len"))
+
+  /** A frame's rows as a sorted multiset of printed rows. */
+  private def rowsOf(d: DataFrame): Seq[String] =
+    d.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+
+  test("postings kernel ≡ the groupBy/collect_list formulation: rows and schema") {
+    import spark.implicits._
+    val texts = Seq[(Long, String)](
+      (1L, "to be or not to be to"), (2L, "a  b   c"), (3L, "trailing space "),
+      (4L, ""), (5L, null), (6L, "café naïve café 日本 語 ü  ü"), (7L, " lead"),
+      (8L, " "))
+    val intIds = texts.map { case (i, t) => (i.toInt, t) }.toDF("doc_id", "text")
+    Seq(texts.toDF("doc_id", "text"), intIds, docs).foreach { d =>
+      val got = Fts.postings(d, "doc_id", "text")
+      assert(got.schema == postingsOracle(d).schema)
+      assert(rowsOf(got) == rowsOf(postingsOracle(d)))
+      // one pass per document: no exchange, no aggregate
+      val plan = got.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && !plan.contains("Aggregate"), plan)
+    }
+  }
+
+  test("terms.lance and stats.lance equal termDfs/postingsStats of the written postings") {
+    val post = spark.read.format("lance").load(s"$idx/postings.lance")
+    val terms = spark.read.format("lance").load(s"$idx/terms.lance")
+    val stats = spark.read.format("lance").load(s"$idx/stats.lance")
+    assert(rowsOf(terms) == rowsOf(termDfs(post)))
+    assert(rowsOf(stats) == rowsOf(postingsStats(post)))
+    assert(rowsOf(stats) == rowsOf(Fts.corpusStats(docs, "doc_id", "text")))
+    // under the cap the vocabulary commits on the driver, as one fragment
+    assert(terms.rdd.getNumPartitions == 1)
+  }
+
+  test("a vocabulary over the cap takes the DSv2 terms write, same answers") {
+    import spark.implicits._
+    val ix = java.nio.file.Files.createTempDirectory("fts_vocab").toString + "/ix"
+    // 100 docs of 1,000 distinct ~90-byte tokens: a ~13 MiB vocabulary
+    val pad = "x" * 80
+    val big = (0L until 100L).map(i => (i,
+        ((0 until 1000).map(j => s"t${i}_$j$pad") ++ Seq("common", s"tag${i % 5}",
+          if (i % 2 == 0) "common" else "odd")).mkString(" ")))
+      .toDF("doc_id", "text")
+    Fts.buildIndex(big, "doc_id", "text", ix)
+    val post = spark.read.format("lance").load(s"$ix/postings.lance")
+    val terms = spark.read.format("lance").load(s"$ix/terms.lance")
+    // writeTerms' range write: max(8 / 4, 1) = 2 fragments
+    assert(terms.rdd.getNumPartitions == 2)
+    assert(rowsOf(terms) == rowsOf(termDfs(post)))
+    val stats = spark.read.format("lance").load(s"$ix/stats.lance")
+    assert(rowsOf(stats) == rowsOf(postingsStats(post)))
+    // both arms write one schema
+    assert(terms.schema == spark.read.format("lance").load(s"$idx/terms.lance").schema)
+    assert(stats.schema == spark.read.format("lance").load(s"$idx/stats.lance").schema)
+    val q = Seq("common", "tag3", "odd", s"t5_7$pad")
+    val want = Fts.bm25(big, "doc_id", "text", q, 20)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(want.nonEmpty)
+    assert(Fts.searchPersisted(spark, ix, q, 20)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == want)
   }
 
   test("fresh session: stats reload from the sidecar, same results") {

@@ -215,6 +215,93 @@ class DedupSpec extends AnyFunSuite {
     assert(out == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L))
   }
 
+  /** Seeded graphs for the driver-arm differentials: (name, docs' ids,
+    * pairs). Ids are shuffled so a component's minimum sits anywhere. */
+  private lazy val graphs: Seq[(String, Seq[Long], Seq[(Long, Long)])] = {
+    val rnd = new scala.util.Random(17)
+    // ids ascend along the chain: the propagation's pointer jump doubles
+    // each round's reach, so it converges within its rounds (a chain in
+    // random id order does not — see the test after the differentials)
+    val chainIds = (0L until 2000L).map(_ * 7 + 3)
+    val chain = rnd.shuffle(chainIds.sliding(2).map(w => (w(0), w(1))).toSeq)
+    val mega = Seq.fill(3000)((rnd.nextInt(600).toLong, rnd.nextInt(600).toLong))
+      .filter(p => p._1 != p._2).map(p => (p._1 min p._2, p._1 max p._2))
+    // docs 0..199: pairs among some of them, and pairs reaching ids 1000+
+    // that no doc holds; the rest are isolated
+    val mixed = Seq.fill(150)((rnd.nextInt(200).toLong, 1000L + rnd.nextInt(40)))
+      .map(p => (p._1 min p._2, p._1 max p._2)) ++
+      Seq.fill(60)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+        .filter(p => p._1 < p._2)
+    val dups = (0L until 300L).map(i => (i % 120) * 5)
+    val dupPairs = Seq.fill(80)((rnd.nextInt(120).toLong * 5, rnd.nextInt(120).toLong * 5))
+      .filter(p => p._1 < p._2) :+ ((5L, 5L))
+    Seq(("a 2k-node chain", chainIds, chain),
+        ("a mega-component", (0L until 700L), mega),
+        ("isolated and pair-only nodes", (0L until 200L), mixed),
+        ("duplicate doc ids", dups, dupPairs))
+  }
+
+  private def sorted(df: DataFrame): Seq[(java.lang.Long, java.lang.Long)] =
+    df.collect().map(r => (r.get(0).asInstanceOf[java.lang.Long],
+      r.get(1).asInstanceOf[java.lang.Long])).toSeq.sortBy(_.toString)
+
+  test("union-find components ≡ label propagation on seeded graphs") {
+    graphs.foreach { case (name, ids, edges) =>
+      val nodes = ids.toDF("doc_id")
+      val pairs = edges.toDF("doc_a", "doc_b")
+      val rows = graft.sources.lance.LanceLocal.collectWithin(pairs).get
+      val local = sorted(Dedup.componentsLocal(nodes, "doc_id", rows))
+      assert(local == sorted(Dedup.componentsPropagated(nodes, "doc_id", pairs)), name)
+      assert(local == sorted(Dedup.connectedComponents(nodes, "doc_id", pairs)), name)
+    }
+  }
+
+  test("union-find labels a 2k chain in random id order with its minimum") {
+    val ids = new scala.util.Random(23).shuffle((0L until 2000L).map(_ * 7 + 3))
+    val pairs = ids.sliding(2).map(w => (w(0) min w(1), w(0) max w(1))).toSeq
+      .toDF("doc_a", "doc_b")
+    val labels = Dedup.connectedComponents(ids.toDF("doc_id"), "doc_id", pairs)
+      .as[(Long, Long)].collect()
+    assert(labels.length == ids.length && labels.forall(_._2 == 3L))
+  }
+
+  test("the driver decision ≡ the distributed one, left-join multiplicity kept") {
+    graphs.foreach { case (name, ids, edges) =>
+      val nodes = ids.toDF("doc_id")
+      val pairs = edges.toDF("doc_a", "doc_b")
+      val rows = graft.sources.lance.LanceLocal.collectWithin(pairs).get
+      val local = sorted(Dedup.decisionLocal(nodes, "doc_id", rows))
+      assert(local.length == ids.length, name)
+      assert(local == sorted(Dedup.decisionDistributed(nodes, "doc_id", pairs)), name)
+      assert(local == sorted(Dedup.dedupDecision(nodes, "doc_id", pairs)), name)
+    }
+  }
+
+  test("a null pair id falls back to the distributed arms") {
+    val nodes = Seq(0L, 1L, 2L, 3L).toDF("doc_id")
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((0L, 1L), (null, 2L), (2L, 3L))
+      .toDF("doc_a", "doc_b")
+    val cc = sorted(Dedup.connectedComponents(nodes, "doc_id", pairs))
+    assert(cc == sorted(Dedup.componentsPropagated(nodes, "doc_id", pairs)))
+    assert(cc.exists(_._1 == null), "the propagation labels the null endpoint too")
+    assert(sorted(Dedup.dedupDecision(nodes, "doc_id", pairs)) ==
+      sorted(Dedup.decisionDistributed(nodes, "doc_id", pairs)))
+  }
+
+  test("connectedComponents under the cap runs no propagation round") {
+    val (name, ids, edges) = graphs.head
+    val nodes = ids.toDF("doc_id")
+    val pairs = edges.toDF("doc_a", "doc_b")
+    // the probe's one job, then the labels' one aggregate (a map stage
+    // and its result); the propagation runs an edge checkpoint and a
+    // label sum before its first round
+    val (_, local) = TestSpark.jobsOf(Dedup.connectedComponents(nodes, "doc_id", pairs).collect())
+    val (_, propagated) = TestSpark.jobsOf(
+      Dedup.componentsPropagated(nodes, "doc_id", pairs).collect())
+    assert(local <= 3, s"$name: the driver arm ran $local jobs")
+    assert(propagated > 10, s"$name: the propagation ran $propagated jobs")
+  }
+
   test("semanticDedup: fixpoint reps, and no same-cluster survivors above the bar") {
     val emb = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
     val tau = 0.92
